@@ -389,6 +389,24 @@ def compute_baseline_guard(
     }
 
 
+def _digest(times: dict[str, float], budget: int) -> dict[str, float]:
+    """The slowest queries by time, as many as fit in ``budget`` bytes of
+    JSON — capped by BYTES, not count, so the final line always parses
+    whole inside a bounded stdout-tail capture. Each entry is charged
+    ``len(json.dumps({name: secs}))``: the bytes ``json.dumps`` emits for
+    it, plus two that pay for its ``", "`` separator (or, once, for the
+    enclosing braces), so ``used`` is exactly ``len(json.dumps(digest))``."""
+    digest: dict[str, float] = {}
+    used = 0
+    for name, secs in sorted(times.items(), key=lambda kv: -kv[1]):
+        cost = len(json.dumps({name: secs}))
+        if used + cost > budget:
+            break
+        digest[name] = secs
+        used += cost
+    return digest
+
+
 def main() -> None:
     # Optional isolated mode: `python3 bench.py <name>...` benches only the
     # named queries (fresh process = the honest number when the full
@@ -706,24 +724,12 @@ def main() -> None:
         "unit": "sec",
         "sf": sf,
     }
-    # Bounded per-query digest (round-15, verdict ask #7): the driver's
-    # per-query round-over-round diff was empty (PERF n_common=0) because
-    # warm numbers lived only on the detail line, which overflows the
-    # driver's bounded (~2000-byte) stdout-tail window. Emit the TOP warm
-    # queries by time on the contract line itself — additions-only (the
-    # contract keys above are untouched) — capped by BYTES, not count, so
-    # the line always parses whole inside the tail window. Full per-query
-    # numbers remain on the detail line and in BENCH_DETAIL.json.
-    digest: dict[str, float] = {}
-    budget = 1100  # bytes for the digest block; total line stays < ~1400
-    used = 0
-    for name, secs in sorted(times.items(), key=lambda kv: -kv[1]):
-        cost = len(name) + 12  # '"name": 12.3456, '
-        if used + cost > budget:
-            break
-        digest[name] = secs
-        used += cost
-    out["queries"] = digest
+    # Bounded per-query digest: warm numbers on the detail line alone
+    # overflow a bounded (~2000-byte) stdout-tail capture, so the TOP warm
+    # queries by time ride the contract line itself — additions-only (the
+    # contract keys above are untouched). Full per-query numbers remain on
+    # the detail line and in BENCH_DETAIL.json.
+    out["queries"] = _digest(times, budget=1100)  # total line stays < ~1400
     if shared_now is not None:
         # this run vs previous committed run, SAME query set (see above);
         # prev_commit names the run that produced the baseline numbers

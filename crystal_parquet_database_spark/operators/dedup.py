@@ -727,12 +727,11 @@ def minhash_lsh_incremental(
     # signatures would co-bucket every NULL-text doc (see minhash_lsh_dedup).
     # Filter AFTER the checkpoint: pushed below it, the predicate re-runs
     # the whole shingle+hash expression per row (see minhash_lsh_dedup).
-    # NOTE (round-14 optimization): overlapping these two checkpoint jobs
-    # via a thread pool (the §2.6 _trained_ivfpq_literals pattern) was
-    # A/B-measured at 1.17-1.25× SLOWER — both are dense CPU-bound
-    # full-width shingle/hash jobs with no idle stage tail to back-fill,
-    # so concurrency only adds contention. Overlap pays only when one side
-    # is collect-latency/driver-bound (the training case); kept sequential.
+    # The two checkpoints stay serial rather than going through
+    # runtime.concurrently: overlap pays only when one side is driver-bound
+    # (the trained-quantizer collects), while these are both dense
+    # CPU-bound shingle/hash jobs with no idle stage tail to back-fill, so
+    # overlapping them only adds contention (measured 1.17-1.25× slower).
     hs_new = (
         shingle_hashes(df_new, text_col, k, unit)
         .localCheckpoint(eager=True)

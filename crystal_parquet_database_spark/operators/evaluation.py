@@ -58,7 +58,11 @@ def binary_classifier_eval(
     100 TB shape: two linear shuffles (per-score groupBy; range exchange
     over DISTINCT scores — bounded by score cardinality, at worst corpus
     rows but 3 small columns, never text) plus a broadcast of one row per
-    partition. No collect, no cartesian, no Python.
+    partition. No collect, no cartesian, no Python. Not lazy: the scored
+    ``(id, score, label)`` projection is ``localCheckpoint``ed eagerly at
+    construction — one job (the full upstream scoring pass) before the
+    frame is returned — and its blocks stay held until the caller releases
+    them (``runtime.release_all_session_blocks``).
     """
     scored = df.select(
         F.col(id_col).alias("__id"),

@@ -660,15 +660,6 @@ def decontaminate_by_similarity(
 # label_centroid_outliers' docstring; the oracle inlines the same constant
 CENTROID_COMPONENT_DOMAIN = 1_000.0
 
-# _km_assign's packed-codebook ceiling (round-15, verdict ask #8): one
-# group's codebook rides in a SINGLE collect_list row of a broadcast, so
-# bound its element count — 8M doubles ≈ 64 MB a row, comfortably inside
-# single-row/broadcast territory while far above every FAISS-scale codebook
-# (2^16 cells × 768 dims = 50M elems would exceed it and take the
-# aggregation form instead). Callers pass ``packed_elems`` (k·dim per
-# group) to engage the guard; see kmeans_lloyd_assign's docstring.
-KM_PACKED_MAX_ELEMS = 8_000_000
-
 
 def label_centroid_outliers(
     df: DataFrame,
@@ -1326,65 +1317,25 @@ def _km_assign(
     base: DataFrame,
     cent: DataFrame,
     carry_vec: bool = False,
-    packed_elems: int | None = None,
 ) -> DataFrame:
     """One assignment pass: per-(group, row) argmin of sqdist over the
     broadcast centroids of that row's group — min(struct(d2, cell)), ties
     to the smallest cell. Ungrouped training is the constant group, where
     the group equi-join degenerates to the cross join.
 
-    Round-14 optimization (guide §2.4 remove-shuffles + §3.3): the former
-    shape exploded base × centroids into n·k rows, hash-aggregated the
-    argmin back down, then SORT-MERGE-JOINED the winners against ``base``
-    to recover the vectors for the update step — one exchange for the
-    aggregation plus an exchange pair per Lloyd iteration for the re-join.
-    Now each group's centroids are packed into ONE row (k·dim floats — the
-    same broadcast-codebook scale argument as the FAISS train-then-
-    broadcast practice), broadcast, and the argmin is a single
-    ``array_min(transform(...))`` projection per base row: NO exchange at
-    all for assignment, no n·k intermediate rows, and ``carry_vec`` is a
-    free column select instead of a join.
+    Each group's centroids are packed into ONE row (k·dim floats — the
+    FAISS train-then-broadcast practice), broadcast, and the argmin is a
+    single ``array_min(transform(...))`` projection per base row: NO
+    exchange for assignment, no n·k intermediate rows, and ``carry_vec``
+    is a free column select instead of a join. ``array_min`` over
+    ``struct(d2, cell)`` is an order-independent lexicographic min, so
+    collect_list order is irrelevant. Groups with no valid centroid drop
+    their rows in the equi-join.
 
-    Bit-identical to the aggregation form: ``sqdist`` is the same
-    expression, and ``array_min`` over ``struct(d2, cell)`` is the same
-    order-independent lexicographic min — ties to the smallest cell —
-    that ``min(struct(d2, cell))`` computed (collect_list order is
-    irrelevant to a min). Groups with no valid centroid drop their rows in
-    the equi-join exactly as before.
-
-    SIZE GUARD (round-15, verdict ask #8): the packed form puts one
-    group's whole codebook (k·dim doubles) into a SINGLE row of a
-    broadcast — fine at FAISS-scale k·dim (KBs-MBs), unsafe past single-
-    row/broadcast territory (e.g. 2^16 cells × 768 dims ≈ 400 MB a row).
-    ``packed_elems`` is the caller's k·dim-per-group bound; above
-    ``KM_PACKED_MAX_ELEMS`` the argmin falls back to the aggregation form
-    (explode to n·k, min(struct) groupBy) — same lexicographic min, same
-    rows (pinned by test_km_assign_fallback_matches_packed), one extra
-    exchange."""
-    if packed_elems is not None and packed_elems > KM_PACKED_MAX_ELEMS:
-        joined = base.join(F.broadcast(cent), "__grp").select(
-            "__grp",
-            "__id",
-            "__vec",
-            F.struct(
-                sqdist(F.col("__vec"), F.col("__cvec")).alias("d2"),
-                F.col("__cell").alias("cell"),
-            ).alias("__cand"),
-        )
-        aggs = [F.min("__cand").alias("__b")]
-        if carry_vec:
-            # every row of a (__grp, __id) group carries the same __vec
-            # (one base row exploded k ways), so any-value is exact
-            aggs.append(F.first("__vec").alias("__vec"))
-        out = [
-            "__grp",
-            "__id",
-            F.col("__b.cell").alias("cell_id"),
-            F.col("__b.d2").alias("dist2"),
-        ]
-        if carry_vec:
-            out.append("__vec")
-        return joined.groupBy("__grp", "__id").agg(*aggs).select(*out)
+    The packed row holds one group's whole codebook: KBs at every codebook
+    this package trains (the largest is 16 × 64 doubles), but past
+    single-row broadcast territory at production scale (2^16 cells × 768
+    dims ≈ 400 MB a row)."""
     packed = cent.groupBy("__grp").agg(
         F.collect_list(F.struct(F.col("__cell"), F.col("__cvec"))).alias("__cands")
     )
@@ -1421,7 +1372,6 @@ def kmeans_lloyd_centroids(
     scale: int = 10_000_000,
     dim: int | None = None,
     group_col: str | None = None,
-    packed_elems: int | None = None,
 ) -> DataFrame:
     """The TRAINED CODEBOOK half of deterministic Lloyd's k-means: run the
     same ``iters - 1`` fixed-point update rounds as ``kmeans_lloyd_assign``
@@ -1446,9 +1396,7 @@ def kmeans_lloyd_centroids(
     (every aggregation below keys on the group).
     """
     base, cent = _km_frames(df, id_col, vec_col, seeds, dim, group_col)
-    cent = _km_train(
-        base, cent, iters=iters, scale=scale, packed_elems=packed_elems
-    )
+    cent = _km_train(base, cent, iters=iters, scale=scale)
     out = [F.col("__cell").alias("cell_id"), F.col("__cvec").alias("cvec")]
     if group_col:
         out.insert(0, F.col("__grp").alias(group_col))
@@ -1460,17 +1408,13 @@ def _km_train(
     cent: DataFrame,
     iters: int,
     scale: int,
-    packed_elems: int | None = None,
 ) -> DataFrame:
     """The Lloyd update loop over prebuilt ``_km_frames`` — shared by
     ``kmeans_lloyd_centroids`` and ``kmeans_lloyd_assign`` so the assign
-    entry point builds the validity/domain-filtered base lineage ONCE
-    (round-13 ADVICE: it previously re-derived the same frame twice in one
-    plan). Returns the final (__grp, __cell, __cvec) centroid frame."""
+    entry point builds the validity/domain-filtered base lineage ONCE.
+    Returns the final (__grp, __cell, __cvec) centroid frame."""
     for _ in range(max(0, int(iters) - 1)):
-        assigned = _km_assign(
-            base, cent, carry_vec=True, packed_elems=packed_elems
-        )
+        assigned = _km_assign(base, cent, carry_vec=True)
         comp = (
             assigned.select(
                 "__grp", "cell_id", F.posexplode(F.col("__vec")).alias("__pos", "__x")
@@ -1526,7 +1470,6 @@ def kmeans_lloyd_assign(
     iters: int = 2,
     scale: int = 10_000_000,
     dim: int | None = None,
-    packed_elems: int | None = None,
 ) -> DataFrame:
     """Distributed Lloyd's k-means over an embedding column — the TRAINING
     pass behind every quantizer this module otherwise takes as pinned input
@@ -1574,21 +1517,12 @@ def kmeans_lloyd_assign(
     lineage grows linearly with ``iters``; checkpoint between rounds if
     training deep (the cluster-propagation precedent).
 
-    ``packed_elems``: the caller's k·dim-per-group bound. The default
-    assignment packs each group's codebook into ONE broadcast row — pass
-    this when k·dim is production-scale (e.g. 2^16 cells × 768 dims) so
-    values above ``KM_PACKED_MAX_ELEMS`` switch to the row-safe
-    aggregation argmin (bit-identical rows, one extra exchange; see
-    ``_km_assign``). Below the ceiling plans are unchanged.
-
     Reference parity: the reference engine has no ANN/quantizer surface;
     this extends the LLM-pipeline similarity stack (SURVEY §2 extension,
     same status as ivf_topk/pq_topk).
     """
     base, cent = _km_frames(df, id_col, vec_col, seeds, dim)
-    cent = _km_train(
-        base, cent, iters=iters, scale=scale, packed_elems=packed_elems
-    )
-    return _km_assign(base, cent, packed_elems=packed_elems).select(
+    cent = _km_train(base, cent, iters=iters, scale=scale)
+    return _km_assign(base, cent).select(
         F.col("__id").alias(id_col), "cell_id", "dist2"
     )

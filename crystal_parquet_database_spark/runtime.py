@@ -1,6 +1,7 @@
-"""Runtime hygiene helpers shared by long-running paths (streaming ingest,
-repeated SCD2 merges): deterministic release of eager-localCheckpoint RDD
-blocks.
+"""Runtime helpers shared by the query surface and long-running paths
+(streaming ingest, repeated SCD2 merges): deterministic release of
+eager-localCheckpoint RDD blocks, and ``concurrently`` for overlapping
+independent driver-side jobs without leaving the caller's job group.
 
 Why this exists (verified via getRDDStorageInfo): neither
 ``DataFrame.unpersist()`` (which only uncaches CacheManager query entries,
@@ -17,7 +18,32 @@ checkpoints.
 
 from __future__ import annotations
 
+import warnings
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
+
+# inheritable_thread_target without a session warns on every call that
+# session-level tags (SparkSession.addTag) are not inherited; the engine
+# sets none, and the local properties that carry the job group still are
+warnings.filterwarnings(
+    "ignore", "Spark session is not provided", UserWarning, "pyspark.util"
+)
+
+
+def concurrently(*fns):
+    """Run each zero-argument ``fns`` thunk on its own thread and return
+    their results as a tuple in argument order; the first exception raised
+    (in argument order) propagates after every thunk has finished.
+
+    Each thunk is wrapped in ``inheritable_thread_target`` here, on the
+    calling thread, so the Spark jobs it submits carry the caller's local
+    properties — its job group above all — and stay cancellable with it."""
+    targets = [inheritable_thread_target(fn) for fn in fns]
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+        return tuple(f.result() for f in futures)
 
 
 def release_local_checkpoint(df: DataFrame) -> bool:

@@ -17,7 +17,7 @@ read → transform, each skip-if-exists so the pipeline is safe to re-run
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,15 +27,15 @@ from crystal_parquet_database_spark.schema import to_canonical
 
 @dataclass
 class LoaderConfig:
-    """Mirrors the reference LoaderConfig (base.py:55-66)."""
+    """Mirrors the reference LoaderConfig (base.py:55-66), minus its
+    thread-pool size and free-form extras: concurrency here is executor
+    tasks (see the module docstring), and nothing reads extras."""
 
     data_dir: str = "data"
-    num_workers: int = 8
     timeout_seconds: int = 60
     download_from_scratch: bool = False
     ingest_from_scratch: bool = False
     normalize_rows_per_file: int = 1_000_000
-    extra: dict = field(default_factory=dict)
 
 
 class BaseLoader:

@@ -24,7 +24,10 @@ from crystal_parquet_database_spark.functions.portable_hash import (
 from crystal_parquet_database_spark.operators import dedup as D
 from crystal_parquet_database_spark.operators import similarity as S
 from crystal_parquet_database_spark.operators import text as T
-from crystal_parquet_database_spark.runtime import release_local_checkpoint
+from crystal_parquet_database_spark.runtime import (
+    concurrently,
+    release_local_checkpoint,
+)
 from crystal_parquet_database_spark.surface.registry import query
 from crystal_parquet_database_spark.tables import load_table
 
@@ -2674,31 +2677,24 @@ def sim_ivf_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10)
 
-    def _seed_rows_exist() -> bool:
-        # sufficient emptiness test for the degenerate branch below (round-14
-        # ADVICE): no rows in the seed id range ⇒ cent is certainly empty ⇒
-        # truth is never consumed — skip its full-corpus checkpoint. Rows
-        # present but invalid still checkpoint (conservative; rare).
-        return bool(
-            emb.filter(
-                (F.col("vec_id") >= _IVF_SEED_LO)
-                & (F.col("vec_id") < _IVF_SEED_LO + _TIVF_K)
-            )
-            .limit(1)
-            .take(1)
+    def _truth() -> DataFrame | None:
+        # the degenerate branch below discards the truth frame, so a
+        # sufficient emptiness test gates its full-corpus checkpoint: no rows
+        # in the seed id range ⇒ cent is certainly empty. Rows present but
+        # invalid still checkpoint (conservative; rare).
+        seed_rows = emb.filter(
+            (F.col("vec_id") >= _IVF_SEED_LO)
+            & (F.col("vec_id") < _IVF_SEED_LO + _TIVF_K)
         )
-
-    # truth arm is training-independent — materialize it concurrently with
-    # the blocking training collect (§2.6, see _ckpt_during); unlike the
-    # PQ/IVFPQ siblings this query's degenerate branch discards the truth
-    # frame, so the probe gates the checkpoint
-    truth, cent = _ckpt_during(
-        S.cosine_topk(
+        if not seed_rows.limit(1).take(1):
+            return None
+        return S.cosine_topk(
             queries_df, emb, "vec_id", "embedding", k=10, dim=_DIM
-        ).select("query_id", "match_id"),
-        lambda: _trained_ivf_centroids(emb),
-        probe=_seed_rows_exist,
-    )
+        ).select("query_id", "match_id").localCheckpoint(eager=True)
+
+    # the truth arm is training-independent; runtime.concurrently overlaps
+    # its checkpoint with the driver-bound training collect
+    truth, cent = concurrently(_truth, lambda: _trained_ivf_centroids(emb))
     if not cent:
         # no valid seed rows: the oracle's tc1 is empty, so its assign —
         # and therefore BOTH the ivf and truth CTEs, which are built on the
@@ -3533,20 +3529,55 @@ def _sql_sub_l2_t(a: str, c: str, j: int) -> str:
     )
 
 
+def _train_pq_subspaces(
+    corpus: DataFrame, seed_rows: DataFrame, vec_col: str
+) -> list[list[list[float]]]:
+    """Train the m per-subspace PQ codebooks of ``vec_col`` as ONE grouped
+    k-means pass and collect them in (subspace, cell) order — the step both
+    PQ trainers share. ``seed_rows`` are the already-admitted seed rows
+    (vec_id in the pinned seed range); cell ids are their seed offsets.
+
+    The subspaces stack with a ``__sub`` group key and
+    ``kmeans_lloyd_centroids(group_col="__sub")`` trains all m codebooks
+    with a single broadcast + one shuffle family + one collect; per-group
+    results are bit-identical to m separate calls (every training
+    aggregation keys on the group). The stacking is one pass over
+    ``corpus``: posexplode over the array of the m slices emits exactly m
+    rows per input row (F.array of m column expressions is never NULL),
+    ``__sub`` = array position = subspace j."""
+
+    def subs():
+        return F.posexplode(
+            F.array(
+                *[
+                    F.slice(F.col(vec_col), j * _PQ_DSUB + 1, _PQ_DSUB)
+                    for j in range(_PQ_M)
+                ]
+            )
+        )
+
+    stacked = corpus.select("vec_id", subs().alias("__sub", "subvec")).select(
+        "__sub", "vec_id", "subvec"
+    )
+    seeds = seed_rows.select(
+        (F.col("vec_id") - _PQ_SEED_LO).cast("int").alias("cell_id"),
+        subs().alias("__sub", "cvec"),
+    ).select("__sub", "cell_id", "cvec")
+    trained = S.kmeans_lloyd_centroids(
+        stacked, "vec_id", "subvec", seeds,
+        iters=_KM_ITERS, scale=_KM_SCALE, dim=_PQ_DSUB, group_col="__sub",
+    )
+    codebooks: list[list[list[float]]] = [[] for _ in range(_PQ_M)]
+    for r in trained.orderBy("__sub", "cell_id").collect():
+        codebooks[r["__sub"]].append(list(r["cvec"]))
+    return codebooks
+
+
 def _trained_pq_codebooks(emb: DataFrame) -> list[list[list[float]]]:
     """Train the m per-subspace PQ codebooks (one deterministic k-means per
     subvector slice, seeds admitted uniformly on the FULL embedding so all
     m codebooks share one cell set) and collect them in cell order. Shared
-    by the trained-PQ and trained-IVFPQ recall queries.
-
-    The m trainings run as ONE grouped k-means pass: the subvector frames
-    stack with a subspace group key and ``kmeans_lloyd_centroids(
-    group_col=...)`` trains all m codebooks with a single broadcast + one
-    shuffle family + one collect (per-group results bit-identical to m
-    separate calls — every training aggregation keys on the group), instead
-    of m sequential blocking jobs (review-caught wall-clock finding, round
-    13: the sequential form made the trained-PQ/IVFPQ queries the most
-    expensive in the bench suite)."""
+    by the trained-PQ and trained-IVFPQ queries."""
     dom_ok = ~F.exists(
         F.col("embedding"),
         lambda x: x.isNull()
@@ -3561,89 +3592,7 @@ def _trained_pq_codebooks(emb: DataFrame) -> list[list[list[float]]]:
         "embedding",
         _DIM,
     ).where(dom_ok)
-
-    def sub(j: int):
-        return F.slice(F.col("embedding"), j * _PQ_DSUB + 1, _PQ_DSUB)
-
-    # ONE corpus scan, not m (round-15, guide §2.3 fewer passes): the former
-    # m-way unionByName planned m separate scans of embeddings (one per
-    # subspace select). posexplode over the array of the m slices emits the
-    # identical (__sub, vec_id, subvec) rows — exactly m rows per input row
-    # (F.array of m column expressions is never NULL), __sub = array position
-    # = the same int j — from a single pass; row order is irrelevant to the
-    # grouped trainer's aggregations.
-    stacked = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[sub(j) for j in range(_PQ_M)])
-        ).alias("__sub", "subvec"),
-    ).select("__sub", "vec_id", "subvec")
-    seeds = seed_base.select(
-        (F.col("vec_id") - _PQ_SEED_LO).cast("int").alias("cell_id"),
-        F.posexplode(
-            F.array(*[sub(j) for j in range(_PQ_M)])
-        ).alias("__sub", "cvec"),
-    ).select("__sub", "cell_id", "cvec")
-    trained = S.kmeans_lloyd_centroids(
-        stacked, "vec_id", "subvec", seeds,
-        iters=_KM_ITERS, scale=_KM_SCALE, dim=_PQ_DSUB, group_col="__sub",
-    )
-    codebooks: list[list[list[float]]] = [[] for _ in range(_PQ_M)]
-    for r in trained.orderBy("__sub", "cell_id").collect():
-        codebooks[r["__sub"]].append(list(r["cvec"]))
-    return codebooks
-
-
-def _trained_ivfpq_literals(
-    emb: DataFrame,
-) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """Run the coarse-quantizer and PQ-codebook trainings CONCURRENTLY and
-    return (centroids, codebooks). The two trainings are independent Spark
-    jobs that were issued sequentially from the driver (each a blocking
-    collect); submitting them from a two-thread pool lets the second job's
-    stages back-fill the executor slots the first job's tail leaves idle —
-    the guide's overlap-independent-jobs pattern (§2.6). Results are the
-    exact same collected literals as the sequential calls (measured
-    0.75-0.82× whole-query wall-clock for the three both-trainings queries
-    in pinned isolated A/B at sf0.1, round-14 optimization)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cent = pool.submit(_trained_ivf_centroids, emb)
-        f_cb = pool.submit(_trained_pq_codebooks, emb)
-        return f_cent.result(), f_cb.result()
-
-
-def _ckpt_during(df: DataFrame, work, probe=None):
-    """Eagerly localCheckpoint ``df`` from a worker thread while ``work()``
-    (the blocking training collects) runs on this one — the §2.6
-    overlap-independent-jobs pattern `_trained_ivfpq_literals` applies
-    between the two trainings, extended to a query's training-INDEPENDENT
-    arm (the exact-truth companion of the trained recall/MRR queries, the
-    BM25 arm of the trained hybrid). The checkpointed frame is the same
-    deterministic rows its lazy form produced — only WHEN it materializes
-    changes, back-filling executor slots the training's stage tails leave
-    idle. Returns (checkpointed_df, work_result).
-
-    ``probe`` (round-14 ADVICE): an optional cheap gate run ON THE WORKER
-    THREAD before the checkpoint — for callers whose degenerate branch
-    never consumes ``df`` (sim_ivf_trained_recall_at_k returns an empty
-    frame when no seed rows exist), a falsey probe skips the full-corpus
-    truth scan outright and yields (None, work_result). The probe runs
-    concurrently with ``work``, so the normal path pays no extra latency;
-    it must be a SUFFICIENT emptiness test (False only when the caller is
-    guaranteed to take the degenerate branch)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _materialize():
-        if probe is not None and not probe():
-            return None
-        return df.localCheckpoint(eager=True)
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(_materialize)
-        res = work()
-        return fut.result(), res
+    return _train_pq_subspaces(emb, seed_base, "embedding")
 
 
 _TPQ_TRAIN_CTES = ",\n".join(
@@ -3742,10 +3691,10 @@ def sim_pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition is unchanged from the pinned sibling."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = S.valid_vectors(emb.filter(F.col("vec_id") < 10), "embedding", _DIM)
-    # exact-truth arm is training-independent — materialize it concurrently
-    # with the blocking training collect (§2.6, see _ckpt_during)
-    truth, codebooks = _ckpt_during(
-        _l2_truth_top10(queries_df, emb),
+    # the exact-truth arm is training-independent; runtime.concurrently
+    # overlaps its checkpoint with the driver-bound training collect
+    truth, codebooks = concurrently(
+        lambda: _l2_truth_top10(queries_df, emb).localCheckpoint(eager=True),
         lambda: _trained_pq_codebooks(emb),
     )
     if not codebooks[0]:
@@ -3821,14 +3770,6 @@ def _recall_hits(
             F.count(match_col).cast("double") / F.count("*").cast("double")
         ).alias(f"recall_{suffix}"),
     )
-
-
-def _recall_vs_l2_truth(
-    queries_df: DataFrame, emb: DataFrame, approx: DataFrame,
-    match_col: str, suffix: str,
-) -> DataFrame:
-    """`_recall_hits` against the exact-L2 ground truth."""
-    return _recall_hits(_l2_truth_top10(queries_df, emb), approx, match_col, suffix)
 
 
 # ----------------------------------------------------------------------------
@@ -3916,11 +3857,12 @@ def sim_ivfpq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame
     training included) recomputed bit-for-bit by the SQL oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = S.valid_vectors(emb.filter(F.col("vec_id") < 10), "embedding", _DIM)
-    # exact-truth arm is training-independent — materialize it concurrently
-    # with the two training collects (§2.6, see _ckpt_during)
-    truth, (cent, codebooks) = _ckpt_during(
-        _l2_truth_top10(queries_df, emb),
-        lambda: _trained_ivfpq_literals(emb),
+    # the exact-truth arm is training-independent; runtime.concurrently
+    # overlaps its checkpoint with the two driver-bound training collects
+    truth, cent, codebooks = concurrently(
+        lambda: _l2_truth_top10(queries_df, emb).localCheckpoint(eager=True),
+        lambda: _trained_ivf_centroids(emb),
+        lambda: _trained_pq_codebooks(emb),
     )
     if not cent or not codebooks[0]:
         # either training emptied: the oracle's cand/adc/ivfpq chain is
@@ -4026,13 +3968,15 @@ def sim_ivfpq_trained_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     found=false, rr=0.0 (nn is training-independent on both sides)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries_df = S.valid_vectors(emb.filter(F.col("vec_id") < 10), "embedding", _DIM)
-    # true-NN arm is training-independent — materialize it concurrently
-    # with the two training collects (§2.6, see _ckpt_during)
-    nn, (cent, codebooks) = _ckpt_during(
-        _l2_truth_top10(queries_df, emb, with_rank=True)
+    # the true-NN arm is training-independent; runtime.concurrently
+    # overlaps its checkpoint with the two driver-bound training collects
+    nn, cent, codebooks = concurrently(
+        lambda: _l2_truth_top10(queries_df, emb, with_rank=True)
         .filter(F.col("rank") == 1)
-        .select("query_id", F.col("match_id").alias("true_nn")),
-        lambda: _trained_ivfpq_literals(emb),
+        .select("query_id", F.col("match_id").alias("true_nn"))
+        .localCheckpoint(eager=True),
+        lambda: _trained_ivf_centroids(emb),
+        lambda: _trained_pq_codebooks(emb),
     )
     if not cent or not codebooks[0]:
         appr = spark.createDataFrame(
@@ -4704,14 +4648,17 @@ def text_hybrid_rrf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained-trio degenerate class)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     emb = load_table(spark, sf_dir, "embeddings")
-    # the BM25 lexical arm is training-independent — materialize it
-    # concurrently with the two training collects (§2.6, see _ckpt_during)
-    bm, (cent, codebooks) = _ckpt_during(
-        T.bm25_topk(
+    # the BM25 lexical arm is training-independent; runtime.concurrently
+    # overlaps its checkpoint with the two driver-bound training collects
+    bm, cent, codebooks = concurrently(
+        lambda: T.bm25_topk(
             docs, "text", "doc_id", _BM25_QUERIES,
             top_k=_RRF_CAND_K, k1=_BM25_K1, b=_BM25_B,
-        ).select("query_id", "doc_id", F.col("rank").alias("rank_b")),
-        lambda: _trained_ivfpq_literals(emb),
+        )
+        .select("query_id", "doc_id", F.col("rank").alias("rank_b"))
+        .localCheckpoint(eager=True),
+        lambda: _trained_ivf_centroids(emb),
+        lambda: _trained_pq_codebooks(emb),
     )
     if not cent or not codebooks[0]:
         vr = spark.createDataFrame(
@@ -4763,9 +4710,9 @@ def _trained_residual_pq_codebooks(
 ) -> list[list[list[float]]]:
     """Train the m per-subspace PQ codebooks ON RESIDUALS against the
     trained coarse quantizer (FAISS ``by_residual`` training), as one
-    grouped k-means pass (the `_trained_pq_codebooks` machinery over the
-    residual frame). Seed admission is PER-SLICE (the `_km_frames`
-    validity/domain contract on each residual subvector) — deliberately
+    grouped k-means pass (`_train_pq_subspaces` over the residual frame).
+    Seed admission is PER-SLICE (the `_km_frames` validity/domain
+    contract on each residual subvector) — deliberately
     unlike the raw sibling's uniform full-embedding rule, because a clean
     embedding does NOT imply a domain-clean residual (|x|,|c| < D only
     bounds |x-c| < 2D); the oracle applies the identical per-slice
@@ -4781,36 +4728,11 @@ def _trained_residual_pq_codebooks(
     res = S.residual_vectors(emb, "vec_id", "embedding", cent).localCheckpoint(
         eager=True
     )
-
-    def sub(j: int):
-        return F.slice(F.col("rvec"), j * _PQ_DSUB + 1, _PQ_DSUB)
-
-    # ONE pass over the checkpointed residual, not m (round-15, guide §2.3):
-    # same posexplode move as the raw trainer — identical rows, m per input
-    # row, __sub = array position
-    stacked = res.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[sub(j) for j in range(_PQ_M)])
-        ).alias("__sub", "subvec"),
-    ).select("__sub", "vec_id", "subvec")
     seed_res = res.filter(
         (F.col("vec_id") >= _PQ_SEED_LO)
         & (F.col("vec_id") < _PQ_SEED_LO + _PQ_KSUB)
     )
-    seeds = seed_res.select(
-        (F.col("vec_id") - _PQ_SEED_LO).cast("int").alias("cell_id"),
-        F.posexplode(
-            F.array(*[sub(j) for j in range(_PQ_M)])
-        ).alias("__sub", "cvec"),
-    ).select("__sub", "cell_id", "cvec")
-    trained = S.kmeans_lloyd_centroids(
-        stacked, "vec_id", "subvec", seeds,
-        iters=_KM_ITERS, scale=_KM_SCALE, dim=_PQ_DSUB, group_col="__sub",
-    )
-    codebooks: list[list[list[float]]] = [[] for _ in range(_PQ_M)]
-    for r in trained.orderBy("__sub", "cell_id").collect():
-        codebooks[r["__sub"]].append(list(r["cvec"]))
+    codebooks = _train_pq_subspaces(res, seed_res, "rvec")
     # the trained codebooks are now plain Python literals; the residual
     # blocks have no further reader — release them deterministically
     # (runtime.py) instead of waiting for harness-level hygiene
@@ -4977,10 +4899,12 @@ def sim_ivfpq_residual_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFram
         cent = _trained_ivf_centroids(emb)
         return cent, (_trained_residual_pq_codebooks(emb, cent) if cent else [])
 
-    # exact-truth arm is training-independent — materialize it concurrently
-    # with the coarse + residual-PQ training chain (§2.6, see _ckpt_during)
-    truth, (cent, codebooks) = _ckpt_during(
-        _l2_truth_top10(queries_df, emb), _train
+    # the exact-truth arm is training-independent; runtime.concurrently
+    # overlaps its checkpoint with the driver-bound coarse + residual-PQ
+    # training chain
+    truth, (cent, codebooks) = concurrently(
+        lambda: _l2_truth_top10(queries_df, emb).localCheckpoint(eager=True),
+        _train,
     )
     if not cent or not all(codebooks):
         # any empty training empties the oracle's rcodes/radc chain (inner

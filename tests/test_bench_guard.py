@@ -216,3 +216,18 @@ def test_canary_block_clean_and_missing_baselines():
     # probe failure is stamped, never raises
     blk = bench_mod.compute_canary_block({"error": "rc=1"}, prev, 1.4)
     assert blk["self_adjudication"] == "no-canary-baseline" and "error" in blk
+
+
+def test_digest_stays_within_byte_budget():
+    # 111 long names with full-precision times: the digest's serialized
+    # size must never exceed its budget, and it keeps the slowest queries
+    times = {
+        f"query_with_a_deliberately_long_registered_name_{i:03d}": 100.0 - i / 7
+        for i in range(111)
+    }
+    digest = bench_mod._digest(times, budget=1100)
+    assert 0 < len(digest) < len(times)
+    assert len(bench_mod.json.dumps(digest)) <= 1100
+    slowest = sorted(times, key=times.get, reverse=True)[: len(digest)]
+    assert list(digest) == slowest
+    assert bench_mod._digest({}, budget=1100) == {}

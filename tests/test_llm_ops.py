@@ -881,3 +881,70 @@ def test_knn_label_vote_planted_clusters(spark, monkeypatch):
     assert set(out) == set(range(20))  # vec_id < 50 queries present
     for qid, r in out.items():
         assert r["pred_label"] == 1 and r["correct"] and r["n_votes"] == 10
+
+
+def test_concurrently_returns_results_in_argument_order():
+    import time
+
+    from crystal_parquet_database_spark.runtime import concurrently
+
+    # the first thunk finishes last: results still follow argument order
+    assert concurrently(
+        lambda: time.sleep(0.2) or "slow", lambda: "fast", lambda: 3
+    ) == ("slow", "fast", 3)
+
+
+def test_concurrently_propagates_a_thunk_exception():
+    import pytest
+
+    from crystal_parquet_database_spark.runtime import concurrently
+
+    def boom():
+        raise ValueError("thunk failed")
+
+    with pytest.raises(ValueError, match="thunk failed"):
+        concurrently(lambda: 1, boom)
+
+
+def _newest_job_id(sc) -> int:
+    # drain the listener bus first: the status store is fed asynchronously
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def test_trained_queries_keep_every_job_in_the_job_group(spark, sf_dir):
+    """Every Spark job a trained-quantizer query submits — including the
+    truth/BM25 checkpoint and trainer jobs it overlaps on helper threads —
+    belongs to the caller's job group, so cancelling the group stops all of
+    it."""
+    from crystal_parquet_database_spark.runtime import release_all_session_blocks
+    from crystal_parquet_database_spark.surface import QUERIES
+
+    sc = spark.sparkContext
+    names = [
+        "sim_ivf_trained_recall_at_k",
+        "sim_pq_trained_recall_at_k",
+        "sim_ivfpq_trained_recall_at_k",
+        "sim_ivfpq_trained_mrr",
+        "text_hybrid_rrf_trained",
+        "sim_ivfpq_residual_recall_at_k",
+    ]
+    try:
+        for name in names:
+            group = f"jobgroup-test-{name}"
+            before = _newest_job_id(sc)
+            sc.setJobGroup(group, name)
+            QUERIES[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            window = set(range(before + 1, _newest_job_id(sc) + 1))
+            in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+            assert window, name
+            assert sorted(window - in_group) == [], name
+            release_all_session_blocks(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)

@@ -1096,13 +1096,10 @@ def test_lit_matrix_bitwise_equals_loop_form(spark):
     assert row["zero_sign_differs"] is False
 
 
-def test_km_assign_fallback_matches_packed(spark):
-    """The packed-codebook argmin and its size-guard fallback (round-15:
-    packed_elems above KM_PACKED_MAX_ELEMS switches to the explode +
-    min(struct) aggregation form) must produce IDENTICAL assignment rows —
-    including ties (broken to the smallest cell) and carry_vec payloads."""
+def test_km_assign_packed_ties_and_carry_vec(spark):
+    """The packed-codebook argmin breaks an exact distance tie to the
+    smallest cell and, with carry_vec, returns each row's own vector."""
     from crystal_parquet_database_spark.operators.similarity import (
-        KM_PACKED_MAX_ELEMS,
         _km_assign,
         _km_frames,
     )
@@ -1124,12 +1121,6 @@ def test_km_assign_fallback_matches_packed(spark):
         r["__id"]: (r["cell_id"], r["dist2"], list(r["__vec"]))
         for r in _km_assign(base, cent, carry_vec=True).collect()
     }
-    fallback = {
-        r["__id"]: (r["cell_id"], r["dist2"], list(r["__vec"]))
-        for r in _km_assign(
-            base, cent, carry_vec=True,
-            packed_elems=KM_PACKED_MAX_ELEMS + 1,
-        ).collect()
-    }
-    assert packed == fallback
-    assert packed[2][0] == 0  # tie broke to the smallest cell in BOTH forms
+    assert packed[2][0] == 0  # tie broke to the smallest cell
+    assert {i: v[0] for i, v in packed.items()} == {0: 0, 1: 1, 2: 0, 3: 1, 4: 1}
+    assert {i: v[2] for i, v in packed.items()} == dict(rows)
