@@ -496,11 +496,13 @@ def main() -> None:
     finally:
         shutil.rmtree(warm_dir, ignore_errors=True)
 
-    # Two timed passes at the TARGET scale factor. Pass 1 is cold-process
-    # (codegen compiles, file listings, parquet footers, page cache all cold);
-    # pass 2 is steady state — the state a long-running cluster serves queries
-    # from. Both are reported so the methodology is explicit; the headline
-    # `value` is the warm pass, `cold_value`/`cold_queries` the first pass.
+    # Two timed passes at the TARGET scale factor. Pass 1 runs after the
+    # session warm-up above (worker pool, JVM/SQL stack), so it is the first
+    # touch of the bench inputs and of each query's plan: per-query codegen,
+    # file listings, parquet footers and page cache are still cold. Pass 2 is
+    # steady state — the state a long-running cluster serves queries from.
+    # Both are reported so the methodology is explicit; the headline `value`
+    # is the warm pass, `cold_value`/`cold_queries` the first pass.
     # Release each query's eager-localCheckpoint blocks before the next
     # measurement: Python GC lag keeps dereferenced checkpointed RDDs alive,
     # and by query ~60 the accumulated block-manager pressure inflated
@@ -656,7 +658,7 @@ def main() -> None:
         "cold_queries": cold,
         "warm_queries": times,
         "producer": producer,
-        "methodology": "two passes at target sf in one process; value=2nd (steady-state) pass, cold_value=1st pass",
+        "methodology": "two passes at target sf in one process, both after session warm-up (Python worker pool, JVM/SQL stack); value=2nd (steady-state) pass, cold_value=1st pass (first touch of inputs and per-query codegen)",
     }
     if guard is not None:
         detail["baseline_guard"] = guard

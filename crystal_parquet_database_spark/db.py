@@ -291,30 +291,7 @@ class PqDB:
         before the next swap. Single-writer discipline assumed throughout
         (two concurrent writers corrupt any rename scheme without a lock
         service — at cluster scale this rewrite is a table-service job)."""
-        if not self.partition_by and self._partition_dirs_present():
-            # rewriting a hive-partitioned dataset through a PqDB opened
-            # WITHOUT partition_by would silently flatten the layout (data
-            # survives as ordinary columns, partition pruning is lost)
-            raise ValueError(
-                f"dataset at {self.path!r} is hive-partitioned but this PqDB "
-                "was opened without partition_by; open it with the matching "
-                "partition_by before update/delete/normalize"
-            )
-        if self.partition_by and self._has_root_data_files() and self._root_rows() > 0:
-            # the mirror direction: a declared partition_by over a dataset
-            # whose ROWS live in root files would silently restructure the
-            # layout on the next update/delete/normalize — and every other
-            # consumer holding the correct (unpartitioned) open would then
-            # start failing the guard above. Zero-row root files are the
-            # legitimate empty-rewrite marker and stay allowed (that is how
-            # a partitioned dataset rebuilds after delete-all).
-            raise ValueError(
-                f"dataset at {self.path!r} holds unpartitioned data files "
-                f"but this PqDB was opened with partition_by="
-                f"{self.partition_by}; open it without partition_by, or "
-                "migrate explicitly (read -> create into a new partitioned "
-                "dataset)"
-            )
+        self._check_layout_matches()
         # reap BOTH stale sibling kinds before a new swap: __old_* from a
         # kill after the second rename, __tmp_* from a kill during a prior
         # tmp write — the latter otherwise leaks a near-dataset-sized dir
@@ -388,7 +365,7 @@ class PqDB:
         start = 0
         if self.exists:
             existing = self._df()
-            self._check_layout_matches_on_append()
+            self._check_layout_matches()
             start = self._next_id_start(existing)
             old_schema = T.StructType([f for f in existing.schema.fields if f.name != ID_COL])
             merged = unify_schemas([old_schema, df.schema])
@@ -471,33 +448,37 @@ class PqDB:
         except FileNotFoundError:
             return False
 
-    def _check_layout_matches_on_append(self) -> None:
-        """Appending with a ``partition_by`` that disagrees with how the
-        dataset was actually written must fail LOUDLY before any write:
+    def _check_layout_matches(self) -> None:
+        """An append (create) or rewrite (update/delete/normalize) through a
+        ``partition_by`` that disagrees with how the dataset was actually
+        written must fail LOUDLY before any write:
 
-        - declared partition_by over a dataset whose data lives in ROOT
+        - declared partition_by over a dataset whose ROWS live in root
           files: root files are legitimate only as the zero-row
-          empty-rewrite marker, and create()'s marker branch replaces the
-          dataset WHOLESALE — with real rows present that branch would
-          silently destroy them all;
-        - no partition_by over a hive-partitioned dataset: the append would
+          empty-rewrite marker (that is how a partitioned dataset rebuilds
+          after delete-all). With real rows present, create()'s marker
+          branch would replace the dataset WHOLESALE, silently destroying
+          them, and a rewrite would silently restructure the layout under
+          every consumer holding the correct unpartitioned open;
+        - no partition_by over a hive-partitioned dataset: an append would
           lay unpartitioned files next to ``key=value`` dirs, mixing leaf
-          depths so Spark's partition discovery fails on every later read.
+          depths so Spark's partition discovery fails on every later read,
+          and a rewrite would silently flatten the layout (data survives as
+          ordinary columns, partition pruning is lost).
         """
-        if self.partition_by and self._has_root_data_files():
-            if self._root_rows() > 0:
-                raise ValueError(
-                    f"dataset at {self.path!r} holds unpartitioned data files "
-                    f"but this PqDB was opened with partition_by="
-                    f"{self.partition_by}; open it without partition_by, or "
-                    "migrate the layout explicitly (read -> create into a new "
-                    "partitioned dataset)"
-                )
+        if self.partition_by and self._has_root_data_files() and self._root_rows() > 0:
+            raise ValueError(
+                f"dataset at {self.path!r} holds unpartitioned data files "
+                f"but this PqDB was opened with partition_by="
+                f"{self.partition_by}; open it without partition_by, or "
+                "migrate the layout explicitly (read -> create into a new "
+                "partitioned dataset)"
+            )
         if not self.partition_by and self._partition_dirs_present():
             raise ValueError(
                 f"dataset at {self.path!r} is hive-partitioned but this PqDB "
                 "was opened without partition_by; open it with the matching "
-                "partition_by to append"
+                "partition_by"
             )
 
     def _guard_partition_values(self, df: DataFrame) -> DataFrame:

@@ -131,15 +131,31 @@ def cosine(a: Column, b: Column) -> Column:
 
 def _topk(scored: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     """The per-query top-k tail shared by every ANN entry point: rank =
-    row_number over (query_id, order_cols), keep rank ≤ k. ONE definition —
-    four hand copies of this 4-line epilogue had already diverged once: the
-    PQ copy ranked approx_d2 plain-ascending (NULLS FIRST in Spark), so a
-    NULL-distance row (a NULL-coded corpus vector) won rank 1 for EVERY
-    query. Callers pass explicit NULLS-LAST orderings."""
+    row_number over (query_id, order_cols), keep rank ≤ k. Callers pass
+    explicit NULLS-LAST orderings: Spark's plain ascending is NULLS FIRST,
+    so a NULL-distance row (a NULL-coded corpus vector) would otherwise win
+    rank 1 for every query."""
     w = W.partitionBy("query_id").orderBy(*order_cols)
     return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(
         F.col("rank") <= k
     )
+
+
+def _cos_topk(joined: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+    """The cosine scan's tail over (query, candidate) rows carrying
+    qvec/qnorm and cvec/cnorm: cosine from the per-row norms, then the
+    per-query top k by (cos desc, match_id)."""
+    scored = (
+        joined.filter(
+            F.col("match_id") != F.col("query_id") if exclude_self else F.lit(True)
+        ).select(
+            "query_id",
+            "match_id",
+            _cos_div(dot(F.col("qvec"), F.col("cvec")), F.col("qnorm") * F.col("cnorm")).alias("cos"),
+        )
+    )
+    # desc = NULLS LAST in Spark: a zero-norm embedding's NULL cos sinks
+    return _topk(scored, [F.desc("cos"), F.asc("match_id")], k)
 
 
 def cosine_topk(
@@ -176,17 +192,7 @@ def cosine_topk(
         F.col(vec_col).alias("cvec"),
         norm(F.col(vec_col)).alias("cnorm"),
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("match_id") != F.col("query_id") if exclude_self else F.lit(True))
-        .select(
-            "query_id",
-            "match_id",
-            _cos_div(dot(F.col("qvec"), F.col("cvec")), F.col("qnorm") * F.col("cnorm")).alias("cos"),
-        )
-    )
-    # desc = NULLS LAST in Spark: a zero-norm embedding's NULL cos sinks
-    return _topk(scored, [F.desc("cos"), F.asc("match_id")], k)
+    return _cos_topk(c.crossJoin(F.broadcast(q)), k, exclude_self)
 
 
 def _plane_dot(vec: Column, j: int, dim: int) -> Column:
@@ -312,16 +318,7 @@ def ann_lsh_topk(
             hyperplane_bucket(F.col(vec_col), n_planes, dim).alias("bucket"),
         )
     )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("match_id") != F.col("query_id") if exclude_self else F.lit(True))
-        .select(
-            "query_id",
-            "match_id",
-            _cos_div(dot(F.col("qvec"), F.col("cvec")), F.col("qnorm") * F.col("cnorm")).alias("cos"),
-        )
-    )
-    return _topk(scored, [F.desc("cos"), F.asc("match_id")], k)
+    return _cos_topk(c.join(F.broadcast(q), "bucket"), k, exclude_self)
 
 
 def ivf_topk(
@@ -429,17 +426,6 @@ def ivf_topk(
     # aggregate() trees measured several seconds of Catalyst analysis).
     centers_arr = lit_matrix(centers)
 
-    # squared-L2-to-every-centroid is the SAME precision-critical fold the
-    # PQ half uses — one definition (_subspace_dists/_sub_l2), not a local
-    # re-implementation that could drift from it
-    def dists(vec: Column) -> Column:
-        return _subspace_dists(vec, centers_arr)
-
-    def cell_of(vec: Column) -> Column:
-        """argmin over inlined centroids (_argmin_code — the shared
-        first-min tie-break definition)."""
-        return _argmin_code(dists(vec))
-
     # The inverted file IS a materialization (FAISS builds it at add()-time;
     # at 100 TB it's an ingest-time partition key) — checkpointing here both
     # models that and keeps the inlined-centroid trees out of join planning
@@ -449,36 +435,19 @@ def ivf_topk(
         F.col(id_col).alias("match_id"),
         F.col(vec_col).alias("cvec"),
         norm(F.col(vec_col)).alias("cnorm"),
-        cell_of(F.col(vec_col)).alias("cell"),
+        _nearest_cell(F.col(vec_col), centers_arr).alias("cell"),
     ).localCheckpoint(eager=True)
-
-    # n_probe nearest cells per query: sort (dist2, cell) structs and keep
-    # the first n_probe — still pure expressions.
-    def probe_cells(vec: Column) -> Column:
-        entries = F.transform(
-            dists(vec), lambda d, i: F.struct(d.alias("d"), i.alias("cell"))
-        )
-        return F.slice(F.array_sort(entries), 1, n_probe)
 
     q = valid_vectors(queries, vec_col, dim).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         norm(F.col(vec_col)).alias("qnorm"),
-        probe_cells(F.col(vec_col)).alias("__probes"),
+        _probe_cells(F.col(vec_col), centers_arr, n_probe).alias("__probes"),
     )
     probes = q.select(
         "query_id", "qvec", "qnorm", F.explode("__probes.cell").alias("cell")
     ).localCheckpoint(eager=True)
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("match_id") != F.col("query_id") if exclude_self else F.lit(True))
-        .select(
-            "query_id",
-            "match_id",
-            _cos_div(dot(F.col("qvec"), F.col("cvec")), F.col("qnorm") * F.col("cnorm")).alias("cos"),
-        )
-    )
-    return _topk(scored, [F.desc("cos"), F.asc("match_id")], k)
+    return _cos_topk(assigned.join(F.broadcast(probes), "cell"), k, exclude_self)
 
 
 def embedding_near_dup_pairs(
@@ -937,6 +906,70 @@ def _argmin_code(ds: Column) -> Column:
     return (F.array_position(ds, F.array_min(ds)) - 1).cast("int")
 
 
+def _nearest_cell(vec: Column, centers_arr: Column) -> Column:
+    """The coarse-quantizer cell of ``vec``: first-min argmin of its squared
+    L2 to every inlined centroid (the same fold the PQ half uses)."""
+    return _argmin_code(_subspace_dists(vec, centers_arr))
+
+
+def _probe_cells(vec: Column, centers_arr: Column, n_probe: int) -> Column:
+    """The ``n_probe`` nearest cells of ``vec``: sort (d, cell) structs and
+    keep the first n_probe — still pure expressions; ties break to the
+    smaller cell, as in the oracles' ROW_NUMBER(ORDER BY d2, cell_id)."""
+    entries = F.transform(
+        _subspace_dists(vec, centers_arr),
+        lambda d, i: F.struct(d.alias("d"), i.alias("cell")),
+    )
+    return F.slice(F.array_sort(entries), 1, n_probe)
+
+
+def _residual(vec: Column, centers_arr: Column, cell: Column) -> Column:
+    """``vec - centroid[cell]`` element-wise in double (no fold, so exact)."""
+    return F.zip_with(
+        vec,
+        F.element_at(centers_arr, cell + 1),
+        lambda a, b: a.cast("double") - b,
+    )
+
+
+def _subspace_tables(vec: Column, cb_arrs: list[Column], dsub: int) -> list[Column]:
+    """The ADC lookup tables ``__qt{j}``: subspace j of ``vec``'s squared L2
+    to every centroid of codebook j."""
+    return [
+        _subspace_dists(F.slice(vec, j * dsub + 1, dsub), cb).alias(f"__qt{j}")
+        for j, cb in enumerate(cb_arrs)
+    ]
+
+
+def _subspace_codes(vec: Column, cb_arrs: list[Column], dsub: int) -> list[Column]:
+    """The PQ codes ``code{j}``: the nearest centroid of codebook j to
+    subspace j of ``vec``."""
+    return [
+        _argmin_code(_subspace_dists(F.slice(vec, j * dsub + 1, dsub), cb)).alias(
+            f"code{j}"
+        )
+        for j, cb in enumerate(cb_arrs)
+    ]
+
+
+def _adc_topk(joined: DataFrame, m: int, k: int, exclude_self: bool) -> DataFrame:
+    """The ADC scan's tail over (query, candidate) rows carrying the tables
+    ``__qt{j}`` and codes ``code{j}``: approx_d2 = Σ_j table_j[code_j] as an
+    explicit left-to-right m-term addition (fixed FP order — oracle
+    bit-exact), then the per-query top k by (approx_d2, match_id)."""
+    approx = F.element_at(F.col("__qt0"), F.col("code0") + 1)
+    for j in range(1, m):
+        approx = approx + F.element_at(F.col(f"__qt{j}"), F.col(f"code{j}") + 1)
+    scored = joined.select("query_id", "match_id", approx.alias("approx_d2"))
+    if exclude_self:
+        scored = scored.filter(F.col("query_id") != F.col("match_id"))
+    # asc_nulls_last: a NULL-coded corpus row (NULL embedding → NULL codes →
+    # NULL approx_d2) must sink, not win rank 1 for every query — Spark's
+    # plain ascending is NULLS FIRST, unlike the desc orderings of the
+    # cosine-ranked siblings where NULLs already landed last.
+    return _topk(scored, [F.asc_nulls_last("approx_d2"), F.asc("match_id")], k)
+
+
 def pq_encode(
     df: DataFrame,
     id_col: str,
@@ -961,13 +994,8 @@ def pq_encode(
     """
     dsub = len(codebooks[0][0])
     df = valid_vectors(df, vec_col, len(codebooks) * dsub)
-    out = [F.col(id_col)]
-    for j, cb in enumerate(codebooks):
-        cb_arr = lit_matrix(cb)
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        ds = _subspace_dists(sub, cb_arr)
-        out.append(_argmin_code(ds).alias(f"code{j}"))
-    return df.select(*out)
+    cb_arrs = [lit_matrix(cb) for cb in codebooks]
+    return df.select(F.col(id_col), *_subspace_codes(F.col(vec_col), cb_arrs, dsub))
 
 
 def pq_adc_topk(
@@ -994,24 +1022,13 @@ def pq_adc_topk(
     dsub = len(codebooks[0][0])
     # ragged contract: the ADC table is defined for exactly m·dsub dims
     queries = valid_vectors(queries, vec_col, m * dsub)
-    qcols = [F.col(id_col).alias("query_id")]
-    for j, cb in enumerate(codebooks):
-        cb_arr = lit_matrix(cb)
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        qcols.append(_subspace_dists(sub, cb_arr).alias(f"__qt{j}"))
-    q = queries.select(*qcols)
+    cb_arrs = [lit_matrix(cb) for cb in codebooks]
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        *_subspace_tables(F.col(vec_col), cb_arrs, dsub),
+    )
     joined = corpus_codes.withColumnRenamed(id_col, "match_id").crossJoin(F.broadcast(q))
-    approx = F.element_at(F.col("__qt0"), F.col("code0") + 1)
-    for j in range(1, m):
-        approx = approx + F.element_at(F.col(f"__qt{j}"), F.col(f"code{j}") + 1)
-    scored = joined.select("query_id", "match_id", approx.alias("approx_d2"))
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("match_id"))
-    # asc_nulls_last: a NULL-coded corpus row (NULL embedding → NULL codes →
-    # NULL approx_d2) must sink, not win rank 1 for every query — Spark's
-    # plain ascending is NULLS FIRST, unlike the desc orderings of the
-    # cosine-ranked siblings where NULLs already landed last.
-    return _topk(scored, [F.asc_nulls_last("approx_d2"), F.asc("match_id")], k)
+    return _adc_topk(joined, m, k, exclude_self)
 
 
 def ivfpq_adc_topk(
@@ -1046,58 +1063,28 @@ def ivfpq_adc_topk(
     dim = m * dsub
     centers_arr = lit_matrix(centroids)
     cb_arrs = [lit_matrix(cb) for cb in codebooks]
-
-    def dists(vec: Column) -> Column:
-        return _subspace_dists(vec, centers_arr)
-
-    def cell_of(vec: Column) -> Column:
-        return _argmin_code(dists(vec))
+    vec = F.col(vec_col)
 
     # ingest side: cell + codes per corpus vector (checkpointed — the
     # materialization IS the index, and it keeps the inlined-literal trees
     # out of join planning, the ivf_topk lesson)
-    ccols = [
+    assigned = valid_vectors(corpus, vec_col, dim).select(
         F.col(id_col).alias("match_id"),
-        cell_of(F.col(vec_col)).alias("cell"),
-    ]
-    for j in range(m):
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        ds = _subspace_dists(sub, cb_arrs[j])
-        ccols.append(_argmin_code(ds).alias(f"code{j}"))
-    assigned = valid_vectors(corpus, vec_col, dim).select(*ccols).localCheckpoint(
-        eager=True
-    )
+        _nearest_cell(vec, centers_arr).alias("cell"),
+        *_subspace_codes(vec, cb_arrs, dsub),
+    ).localCheckpoint(eager=True)
 
-    def probe_cells(vec: Column) -> Column:
-        entries = F.transform(
-            dists(vec), lambda d, i: F.struct(d.alias("d"), i.alias("cell"))
-        )
-        return F.slice(F.array_sort(entries), 1, n_probe)
-
-    qcols = [
+    q = valid_vectors(queries, vec_col, dim).select(
         F.col(id_col).alias("query_id"),
-        probe_cells(F.col(vec_col)).alias("__probes"),
-    ]
-    for j in range(m):
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        qcols.append(_subspace_dists(sub, cb_arrs[j]).alias(f"__qt{j}"))
-    q = valid_vectors(queries, vec_col, dim).select(*qcols)
+        _probe_cells(vec, centers_arr, n_probe).alias("__probes"),
+        *_subspace_tables(vec, cb_arrs, dsub),
+    )
     probes = q.select(
         "query_id",
         *[f"__qt{j}" for j in range(m)],
         F.explode("__probes.cell").alias("cell"),
     ).localCheckpoint(eager=True)
-
-    joined = assigned.join(F.broadcast(probes), "cell")
-    # explicit left-to-right m-term addition — fixed FP order, the
-    # pq_adc_topk oracle-bit-exactness contract
-    approx = F.element_at(F.col("__qt0"), F.col("code0") + 1)
-    for j in range(1, m):
-        approx = approx + F.element_at(F.col(f"__qt{j}"), F.col(f"code{j}") + 1)
-    scored = joined.select("query_id", "match_id", approx.alias("approx_d2"))
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("match_id"))
-    return _topk(scored, [F.asc_nulls_last("approx_d2"), F.asc("match_id")], k)
+    return _adc_topk(assigned.join(F.broadcast(probes), "cell"), m, k, exclude_self)
 
 
 def ivfpq_residual_adc_topk(
@@ -1136,9 +1123,7 @@ def ivfpq_residual_adc_topk(
     dim = m * dsub
     centers_arr = lit_matrix(centroids)
     cb_arrs = [lit_matrix(cb) for cb in codebooks]
-
-    def dists(vec: Column) -> Column:
-        return _subspace_dists(vec, centers_arr)
+    vec = F.col(vec_col)
 
     # ingest side: cell + RESIDUAL codes per corpus vector. The residual is
     # computed ONCE per row and MATERIALIZED before the m code argmins are
@@ -1147,33 +1132,21 @@ def ivfpq_residual_adc_topk(
     # into every one of the m per-subspace distance transforms made the
     # analyzed tree ~quarter-million nodes and Catalyst analysis dominated
     # the query (measured 60s+ of driver-side planning at sf0.1 vs <1s
-    # execution — round-14 optimization; the ivf_topk "keep inlined-literal
-    # trees out of join planning" lesson applied one level deeper).
-    # slice(x - c) ≡ (slice(x) - slice(c)) element-wise, so the codes are
-    # bit-identical to the previous per-subspace residual construction.
-    cell_col = _argmin_code(dists(F.col(vec_col)))
+    # execution; the ivf_topk "keep inlined-literal trees out of join
+    # planning" lesson applied one level deeper).
+    # slice(x - c) ≡ (slice(x) - slice(c)) element-wise, so the codes equal
+    # a per-subspace residual construction bit for bit.
+    cell_col = _nearest_cell(vec, centers_arr)
     res = valid_vectors(corpus, vec_col, dim).select(
         F.col(id_col).alias("match_id"),
         cell_col.alias("cell"),
-        F.zip_with(
-            F.col(vec_col),
-            F.element_at(centers_arr, cell_col + 1),
-            lambda a, b: a.cast("double") - b,
-        ).alias("__rv"),
+        _residual(vec, centers_arr, cell_col).alias("__rv"),
     ).localCheckpoint(eager=True)
-    ccols = [F.col("match_id"), F.col("cell")]
-    for j in range(m):
-        rsub = F.slice(F.col("__rv"), j * dsub + 1, dsub)
-        ccols.append(_argmin_code(_subspace_dists(rsub, cb_arrs[j])).alias(f"code{j}"))
     # no second checkpoint: over the materialized residual the code argmins
     # are a small-plan map stage the final job runs once
-    assigned = res.select(*ccols)
-
-    def probe_cells(vec: Column) -> Column:
-        entries = F.transform(
-            dists(vec), lambda d, i: F.struct(d.alias("d"), i.alias("cell"))
-        )
-        return F.slice(F.array_sort(entries), 1, n_probe)
+    assigned = res.select(
+        F.col("match_id"), F.col("cell"), *_subspace_codes(F.col("__rv"), cb_arrs, dsub)
+    )
 
     # query side: explode probes FIRST, then build the per-(query, cell)
     # residual ADC tables — the one structural difference vs the
@@ -1182,34 +1155,20 @@ def ivfpq_residual_adc_topk(
     # query residual per (query, probed cell), tables from slices of it.
     q = valid_vectors(queries, vec_col, dim).select(
         F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        probe_cells(F.col(vec_col)).alias("__probes"),
+        vec.alias("__qv"),
+        _probe_cells(vec, centers_arr, n_probe).alias("__probes"),
     )
     exploded = q.select(
         "query_id", "__qv", F.explode("__probes.cell").alias("cell")
     ).select(
         "query_id",
         "cell",
-        F.zip_with(
-            F.col("__qv"),
-            F.element_at(centers_arr, F.col("cell") + 1),
-            lambda a, b: a.cast("double") - b,
-        ).alias("__rq"),
+        _residual(F.col("__qv"), centers_arr, F.col("cell")).alias("__rq"),
     )
-    pcols = [F.col("query_id"), F.col("cell")]
-    for j in range(m):
-        rq = F.slice(F.col("__rq"), j * dsub + 1, dsub)
-        pcols.append(_subspace_dists(rq, cb_arrs[j]).alias(f"__qt{j}"))
-    probes = exploded.select(*pcols).localCheckpoint(eager=True)
-
-    joined = assigned.join(F.broadcast(probes), "cell")
-    approx = F.element_at(F.col("__qt0"), F.col("code0") + 1)
-    for j in range(1, m):
-        approx = approx + F.element_at(F.col(f"__qt{j}"), F.col(f"code{j}") + 1)
-    scored = joined.select("query_id", "match_id", approx.alias("approx_d2"))
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("match_id"))
-    return _topk(scored, [F.asc_nulls_last("approx_d2"), F.asc("match_id")], k)
+    probes = exploded.select(
+        F.col("query_id"), F.col("cell"), *_subspace_tables(F.col("__rq"), cb_arrs, dsub)
+    ).localCheckpoint(eager=True)
+    return _adc_topk(assigned.join(F.broadcast(probes), "cell"), m, k, exclude_self)
 
 
 def residual_vectors(
@@ -1224,14 +1183,9 @@ def residual_vectors(
     ``_argmin_code`` tie-break."""
     dim = len(centroids[0])
     centers_arr = lit_matrix(centroids)
-    cell_col = _argmin_code(_subspace_dists(F.col(vec_col), centers_arr))
+    cell_col = _nearest_cell(F.col(vec_col), centers_arr)
     return valid_vectors(df, vec_col, dim).select(
-        F.col(id_col),
-        F.zip_with(
-            F.col(vec_col),
-            F.element_at(centers_arr, cell_col + 1),
-            lambda a, b: a.cast("double") - b,
-        ).alias("rvec"),
+        F.col(id_col), _residual(F.col(vec_col), centers_arr, cell_col).alias("rvec")
     )
 
 

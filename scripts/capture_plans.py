@@ -7,12 +7,17 @@ bench HEADLINE query). Plan generation is driver-side; queries whose
 construction runs eager jobs (trained codebooks) will execute those, so this
 is not a timing tool — it exists so the optimization round's plan claims are
 checkable without running Spark.
+
+Plans are written normalized: expression ids (``#123``), ``plan_id=123``, RDD
+ids (``MapPartitionsRDD[123]``) and lambda-variable counters (``lambda x_12``)
+become fixed tokens, so two captures of the same plan ``diff`` clean.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -21,6 +26,20 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 from bench import HEADLINE  # noqa: E402
 from crystal_parquet_database_spark.session import get_spark  # noqa: E402
 from crystal_parquet_database_spark.surface import QUERIES  # noqa: E402
+
+# session-global counters that differ between captures of the same plan
+_VOLATILE = [
+    (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1_N"),
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+]
+
+
+def normalize(text: str) -> str:
+    for pattern, token in _VOLATILE:
+        text = pattern.sub(token, text)
+    return text
 
 
 def main() -> None:
@@ -39,7 +58,7 @@ def main() -> None:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            text = buf.getvalue()
+            text = normalize(buf.getvalue())
         except Exception as exc:  # noqa: BLE001 — record, keep capturing
             text = f"EXPLAIN FAILED: {type(exc).__name__}: {exc}\n"
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
