@@ -33,7 +33,7 @@ import math
 import os
 import shutil
 import uuid
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -248,17 +248,6 @@ class PqDB:
             )
 
     @staticmethod
-    def _small_side(u: DataFrame) -> DataFrame | Column:
-        """Broadcast only plausibly-small update frames; a bulk update (more
-        than ~10M keys or an unknown-size plan) goes through the normal
-        shuffle join — forcing a huge broadcast would OOM every executor."""
-        try:
-            n_up = u.limit(10_000_001).count()
-        except Exception:  # pragma: no cover - defensive
-            n_up = None
-        return F.broadcast(u) if n_up is not None and n_up <= 10_000_000 else u
-
-    @staticmethod
     def _next_id_start(existing: DataFrame) -> int:
         m = existing.agg(F.max(ID_COL)).collect()[0][0]
         return (m if m is not None else -1) + 1  # max id 0 is falsy but valid
@@ -428,17 +417,20 @@ class PqDB:
             for f in os.listdir(self.path)
         )
 
-    def _root_rows(self) -> int:
-        """Row count of the ROOT-LEVEL data files, from parquet footers —
-        driver-side metadata only, no Spark job."""
+    @staticmethod
+    def _footer_rows(files: Iterable[str]) -> int:
+        """Row count of ``files`` from their parquet footers — driver-side
+        metadata only, no Spark job."""
         import pyarrow.parquet as pq
 
-        n = 0
-        for f in os.listdir(self.path):
-            fp = os.path.join(self.path, f)
-            if f.endswith(".parquet") and os.path.isfile(fp):
-                n += pq.ParquetFile(fp).metadata.num_rows
-        return n
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+    def _root_rows(self) -> int:
+        """Row count of the ROOT-LEVEL data files."""
+        root = (os.path.join(self.path, f) for f in os.listdir(self.path))
+        return self._footer_rows(
+            fp for fp in root if fp.endswith(".parquet") and os.path.isfile(fp)
+        )
 
     def _partition_dirs_present(self) -> bool:
         """True when hive-style ``key=value`` partition dirs exist at the
@@ -597,11 +589,11 @@ class PqDB:
         merge below) — a deliberate partial-update semantic, since row-dict
         inputs cannot distinguish absent from explicitly-null. To null a
         field, rewrite via read→transform→create."""
-        # persist the update frame: the dup-key guard, the broadcast-size
-        # probe, and the join each execute it — unpersisted, those are
-        # three separate evaluations of a possibly-expensive (or worse,
-        # nondeterministic — sample/rand) lineage, so the guard would not
-        # certify the materialization the join actually consumes
+        # persist the update frame: the dup-key guard and the join both
+        # execute it — unpersisted, those are two separate evaluations of a
+        # possibly-expensive (or worse, nondeterministic — sample/rand)
+        # lineage, so the guard would not certify the materialization the
+        # join actually consumes
         self.recover()  # write entry point: finish any crashed swap first
         up = self._to_df(updates).persist()
         try:
@@ -642,9 +634,9 @@ class PqDB:
                 *[F.col(c).cast(base_types[c]).alias(f"__u_{c}") for c in upd_cols],
             )
             self._check_unique_keys(u, "__u_key", display=on)
-            joined = base.join(
-                self._small_side(u), F.col(on).eqNullSafe(F.col("__u_key")), "left"
-            )
+            # the guard materialized the persisted frame, so the planner
+            # sizes u from the cache and broadcasts it when it is small
+            joined = base.join(u, F.col(on).eqNullSafe(F.col("__u_key")), "left")
             out = joined.select(
                 *[
                     (
@@ -715,7 +707,7 @@ class PqDB:
         """
         self.recover()  # write entry point: finish any crashed swap first
         base = self._df()
-        # persisted: the missing/dup guards, the size probe, the join, and
+        # persisted: the missing/dup guards, the join, and
         # the fresh anti-join all consume this frame — one materialization
         # certifies them all (and stops a nondeterministic update lineage
         # from passing the dup guard on one realization yet presenting a
@@ -771,7 +763,6 @@ class PqDB:
             # long 1 and would close the same current row twice, breaking
             # the one-current-row invariant)
             self._check_unique_keys(u, "__u_key", display=on)
-            u_side = self._small_side(u)
             # NULL-SAFE key match: a NULL-keyed dimension row is unusual but
             # legal, and plain `on` equality never matches NULL=NULL — so an
             # identical replay would re-insert the NULL-key row as a new
@@ -779,7 +770,7 @@ class PqDB:
             # contract and the one-current-row invariant (the same class
             # streaming/ingest.py guards with eqNullSafe).
             j = (
-                current.join(u_side, F.col(on).eqNullSafe(F.col("__u_key")), "left")
+                current.join(u, F.col(on).eqNullSafe(F.col("__u_key")), "left")
                 .drop("__u_key")
                 .localCheckpoint(eager=True)
             )
@@ -895,7 +886,7 @@ class PqDB:
         df = self._guard_partition_values(self._df())  # before the sort —
         # see _rewrite: a post-sort guard projection makes the writer
         # re-sort on partition columns alone, destroying the cluster order
-        n = df.count()
+        n = self._footer_rows(self._data_files())
         n_files = max(1, math.ceil(n / max_rows_per_file))
         pcols = [F.col(c) for c in self.partition_by]
         if cluster_by and layout == "zorder":

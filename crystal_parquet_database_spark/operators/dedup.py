@@ -32,7 +32,6 @@ from crystal_parquet_database_spark.functions.portable_hash import (
     P,
     spark_hash64,
     spark_hash_raw60,
-    spark_shingles,
     spark_word_shingles,
 )
 
@@ -69,8 +68,7 @@ def shingle_hashes(
     df: DataFrame,
     text_col: str,
     k: int = 3,
-    unit: str = "word",
-    parallelism: int | None = None,
+    *,
     full_width: bool = False,
 ) -> DataFrame:
     """Append ``hs``: distinct k-gram shingle hashes (array<bigint> in [0,P);
@@ -80,25 +78,21 @@ def shingle_hashes(
     the mod-P reduction (affine transforms must not overflow int64), so the
     default stays 31-bit).
 
-    ``unit='word'`` (default) shingles over word n-grams — the scalable choice
-    for document dedup: on a shared-vocabulary corpus, char k-gram sets give
-    every pair ~0.2 background Jaccard, which floods LSH with candidate pairs;
-    word n-grams give ~0 background so candidates ≈ true near-dups.
+    Shingles are word n-grams — the scalable choice for document dedup: on
+    a shared-vocabulary corpus, char k-gram sets give every pair ~0.2
+    background Jaccard, which floods LSH with candidate pairs; word n-grams
+    give ~0 background so candidates ≈ true near-dups.
 
     Hashing is CPU-bound, so the input is spread across the cluster first —
     a small parquet file arrives as ONE partition and would otherwise pin the
     whole shingle/MinHash pipeline to a single core. (At 100 TB inputs are
     already many-partitioned; the repartition then just evens skew.)
     """
-    n = parallelism or df.sparkSession.sparkContext.defaultParallelism
-    df = df.repartition(n)
+    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     c = F.col(text_col)
-    if unit == "word":
-        # tokens materialized once per row (see spark_word_shingles PERF note)
-        df = df.withColumn("__toks", F.split(F.trim(c), WS_RE))
-        sh = spark_word_shingles(c, k, toks=F.col("__toks"))
-    else:
-        sh = spark_shingles(c, k)
+    # tokens materialized once per row (see spark_word_shingles PERF note)
+    df = df.withColumn("__toks", F.split(F.trim(c), WS_RE))
+    sh = spark_word_shingles(c, k, toks=F.col("__toks"))
     # SET semantics on the hashed VALUES, not just the shingle strings:
     # distinct strings can collide under the 31-bit mod-P hash, and a
     # duplicate-bearing array breaks the |A|+|B|-|A∩B| union identity every
@@ -208,7 +202,6 @@ def minhash_lsh_dedup(
     k: int = 3,
     n_hashes: int = 32,
     n_bands: int = 8,
-    unit: str = "word",
     max_bucket_size: int | None = None,
     collapse_exact: bool = False,
 ) -> DataFrame:
@@ -250,7 +243,7 @@ def minhash_lsh_dedup(
     # 1.7× slower). Eager localCheckpoint runs it a single time and lets the
     # blocks be GC-cleaned once the result frame is dereferenced, unlike a
     # session-lifetime cache.
-    hs = shingle_hashes(df, text_col, k, unit).localCheckpoint(eager=True)
+    hs = shingle_hashes(df, text_col, k).localCheckpoint(eager=True)
     # Empty shingle sets (NULL text) leave the pipeline HERE: they cannot
     # reach threshold jaccard with anything, and left in they all share the
     # identical all-NULL MinHash signature — one LSH bucket holding every
@@ -278,11 +271,11 @@ def minhash_lsh_dedup(
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, threshold: float, k: int = 3, unit: str = "word"
+    df: DataFrame, text_col: str, id_col: str, threshold: float, k: int = 3
 ) -> DataFrame:
     """Brute-force exact n-gram Jaccard over all pairs (quadratic — the
     correctness baseline for the LSH path; restrict the input for scale)."""
-    hs = shingle_hashes(df, text_col, k, unit).select(F.col(id_col), F.col("hs").alias("shset"))
+    hs = shingle_hashes(df, text_col, k).select(F.col(id_col), F.col("hs").alias("shset"))
     a = hs.alias("a")
     b = hs.alias("b")
     return (
@@ -297,7 +290,7 @@ def ngram_jaccard_pairs(
 
 
 def simhash(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 32, k: int = 3, unit: str = "word"
+    df: DataFrame, text_col: str, id_col: str, bits: int = 32, k: int = 3
 ) -> DataFrame:
     """Per-document SimHash fingerprint: bitwise majority vote over shingle
     hashes. Explode + one aggregation (shuffle on id only). NULL-text docs
@@ -310,12 +303,8 @@ def simhash(
     plain codegen."""
     n = df.sparkSession.sparkContext.defaultParallelism
     c = F.col(text_col)
-    d = df.repartition(n)
-    if unit == "word":
-        d = d.withColumn("__toks", F.split(F.trim(c), WS_RE))
-        sh = spark_word_shingles(c, k, toks=F.col("__toks"))
-    else:
-        sh = spark_shingles(c, k)
+    d = df.repartition(n).withColumn("__toks", F.split(F.trim(c), WS_RE))
+    sh = spark_word_shingles(c, k, toks=F.col("__toks"))
     # full-width hash: a mod-P (31-bit) hash would zero every vote above
     # bit 30, collapsing wide fingerprints (see spark_hash_raw60)
     exploded = (
@@ -699,7 +688,6 @@ def minhash_lsh_incremental(
     k: int = 3,
     n_hashes: int = 32,
     n_bands: int = 8,
-    unit: str = "word",
 ) -> DataFrame:
     """Incremental near-duplicate detection: today's ``df_new`` documents
     against the ``df_old`` corpus — WITHOUT the old×old self-join. The
@@ -733,12 +721,12 @@ def minhash_lsh_incremental(
     # CPU-bound shingle/hash jobs with no idle stage tail to back-fill, so
     # overlapping them only adds contention (measured 1.17-1.25× slower).
     hs_new = (
-        shingle_hashes(df_new, text_col, k, unit)
+        shingle_hashes(df_new, text_col, k)
         .localCheckpoint(eager=True)
         .filter(F.size("hs") > 0)
     )
     hs_old = (
-        shingle_hashes(df_old, text_col, k, unit)
+        shingle_hashes(df_old, text_col, k)
         .localCheckpoint(eager=True)
         .filter(F.size("hs") > 0)
     )
@@ -775,7 +763,6 @@ def prefix_filter_pairs(
     id_col: str,
     threshold: float = 0.7,
     k: int = 3,
-    unit: str = "word",
 ) -> DataFrame:
     """EXACT set-similarity join by prefix filtering (PPJoin family,
     Chaudhuri/Xiao et al.): returns ALL pairs with shingle-Jaccard >=
@@ -799,7 +786,7 @@ def prefix_filter_pairs(
     is what keeps the verify stage linear-ish when token document frequency
     grows with corpus size.
     """
-    hs = shingle_hashes(df, text_col, k, unit).select(
+    hs = shingle_hashes(df, text_col, k).select(
         F.col(id_col).alias("__id"), "hs"
     ).localCheckpoint(eager=True)
     tok = hs.select("__id", F.explode("hs").alias("__h"))

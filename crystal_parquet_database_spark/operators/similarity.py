@@ -326,105 +326,43 @@ def ivf_topk(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
+    centroids: list[list[float]],
     k: int = 10,
-    n_cells: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     exclude_self: bool = True,
-    max_iter: int = 4,
-    train_hint: DataFrame | None = None,
-    centroids: list[list[float]] | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: a k-means coarse quantizer partitions the
-    corpus into cells; each query scans only its ``n_probe`` nearest cells.
+    """IVF (inverted-file) ANN: a coarse quantizer partitions the corpus into
+    cells; each query scans only its ``n_probe`` nearest cells.
 
-    Quantizer training is DRIVER-SIDE numpy over a bounded sample (the FAISS
-    practice — ~256 vectors per cell suffices, so the sample is ≤256·n_cells
-    rows *by construction*, a few MB at any corpus size; this is the one
-    place a collect is the scale-correct design, exactly like building a
-    broadcast literal). Cell assignment is a pure codegen'd expression with
-    the centroids inlined — a map-only stage, no spark.ml, no extra jobs; at
-    100 TB the cell id is computed once at ingest and used as a
+    ``centroids``: the cell centers (list of vectors), owned by the caller —
+    pinned seed rows an external oracle can reproduce, or a codebook trained
+    once by ``kmeans_lloyd_centroids`` and reused across queries (the
+    production IVF shape). Cell assignment is a pure codegen'd expression
+    with the centroids inlined — a map-only stage, no spark.ml, no extra
+    jobs; at 100 TB the cell id is computed once at ingest and used as a
     partition/cluster key, so a query touches ~n_probe/n_cells of the corpus.
-    Seeded ⇒ reproducible (but engine-specific: validated against brute
-    force in tests, not against the SQL oracle).
-
-    ``train_hint``: optional pre-shuffled sample frame (same ``vec_col``) for
-    corpora with strong file-order locality — limit() reads the file head.
-
-    ``centroids``: optional explicit cell centers (list of vectors). Skips
-    quantizer training entirely — the caller owns the codebook, e.g. pinned
-    seed rows that an external oracle can reproduce, or centers trained once
-    at ingest and reused across queries (the production IVF shape).
 
     ``dim``: expected vector length (``valid_vectors``' ragged contract);
-    inferred from an explicit codebook when not given — a vector of another
-    length has no well-defined cell under d-dimensional centroids.
+    inferred from the codebook when not given — a vector of another length
+    has no well-defined cell under d-dimensional centroids.
     """
-    import numpy as np
-
-    if centroids is not None:
-        if dim is None and len(centroids) > 0:
-            dim = len(centroids[0])
-        centers = np.asarray(centroids, dtype=np.float64)
-        if centers.size == 0:
-            # an EMPTY pinned codebook (empty corpus / empty seed slice)
-            # would build a zero-arm assignment expression that fails
-            # analysis — same degenerate case as the empty training
-            # sample below, same answer: the exact search over whatever
-            # corpus there is (empty ⇒ empty result, not a crash)
-            return cosine_topk(
-                queries, corpus, id_col, vec_col, k=k, exclude_self=exclude_self,
-                dim=dim,
-            )
-    else:
-        train_src = train_hint if train_hint is not None else corpus
-        # failed/NULL embedding rows are routine in real pipelines (the
-        # _cos_div contract) and must not abort the job: a single NULL (or
-        # empty) vector in the sample made np.asarray raise on the driver
-        sample = (
-            valid_vectors(train_src.select(vec_col), vec_col, dim)
-            .limit(256 * n_cells)
-            .collect()
+    if not centroids:
+        # an EMPTY codebook (empty corpus / empty seed slice) would build a
+        # zero-arm assignment expression that fails analysis: answer with
+        # the exact search over whatever corpus there is (empty ⇒ empty
+        # result, not a crash)
+        return cosine_topk(
+            queries, corpus, id_col, vec_col, k=k, exclude_self=exclude_self,
+            dim=dim,
         )
-        if not sample:
-            if train_hint is not None:
-                raise ValueError(
-                    "ivf_topk: train_hint has no rows to train the quantizer on"
-                )
-            # empty corpus: no quantizer to train and nothing to search —
-            # return the same empty result the exact siblings produce
-            # (np indexing below would otherwise IndexError on a 1-D (0,)
-            # array instead of returning an empty frame)
-            return cosine_topk(
-                queries, corpus, id_col, vec_col, k=k, exclude_self=exclude_self,
-                dim=dim,
-            )
-        # wrong-length rows (a mixed-model corpus) would still make the
-        # array ragged: train on the sample's dominant dimensionality
-        from collections import Counter
-
-        dims = Counter(len(r[0]) for r in sample)
-        d_major = dims.most_common(1)[0][0]
-        x = np.asarray([r[0] for r in sample if len(r[0]) == d_major], dtype=np.float64)
-
-        rng = np.random.default_rng(seed)
-        centers = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
-        for _ in range(max_iter):
-            # Lloyd over the in-memory sample: assign, then mean per cell
-            # (empty cells keep their previous center).
-            d2 = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            cell = d2.argmin(axis=1)
-            for j in range(len(centers)):
-                m = cell == j
-                if m.any():
-                    centers[j] = x[m].mean(axis=0)
+    if dim is None:
+        dim = len(centroids[0])
 
     # Centroids inlined ONCE as a nested literal array; per-row math is a
     # single transform lambda over it (compact expression tree — 16 separate
     # aggregate() trees measured several seconds of Catalyst analysis).
-    centers_arr = lit_matrix(centers)
+    centers_arr = lit_matrix(centroids)
 
     # The inverted file IS a materialization (FAISS builds it at add()-time;
     # at 100 TB it's an ingest-time partition key) — checkpointing here both
@@ -735,7 +673,7 @@ def semdedup(
     ``seeds`` is a small (cell_id, cvec) frame — the cluster centroids. Here
     they are caller-pinned deterministic vectors so the whole operator is
     oracle-exact; in production they come from a k-means pass (see
-    ``ivf_topk``'s trained quantizer — the same machinery).
+    ``kmeans_lloyd_centroids`` — the same machinery).
 
     Returns one row per input vector: (<id_col>, cell_id, cos_centroid,
     is_removed). ``is_removed`` is True iff some same-cell neighbor with

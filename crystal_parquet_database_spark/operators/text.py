@@ -380,7 +380,7 @@ def ngram_decontaminate(
     # Corpus side: the hash stage feeds two consumers (per-doc gram count and
     # the exploded probe); materialize it once — same reasoning as
     # minhash_lsh_dedup.
-    hs = shingle_hashes(corpus, text_col, k, unit="word", full_width=True).localCheckpoint(
+    hs = shingle_hashes(corpus, text_col, k, full_width=True).localCheckpoint(
         eager=True
     )
     base = hs.select(F.col(id_col), F.size("hs").alias("n_grams"))

@@ -105,7 +105,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return D.minhash_lsh_dedup(
         docs, "text", "doc_id", threshold=_THRESH, k=_K, n_hashes=N_MINHASH,
-        n_bands=_BANDS, unit="word",
+        n_bands=_BANDS,
     )
 
 
@@ -199,7 +199,7 @@ def eval_lsh_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b")
     found = D.minhash_lsh_dedup(
         docs, "text", "doc_id", threshold=_THRESH, k=_K, n_hashes=N_MINHASH,
-        n_bands=_BANDS, unit="word",
+        n_bands=_BANDS,
     ).select(F.col("id_a").alias("__fa"), F.col("id_b").alias("__fb"))
     t = truth.agg(F.count("*").cast("bigint").alias("n_true"))
     f = found.agg(F.count("*").cast("bigint").alias("n_found"))
@@ -323,18 +323,21 @@ _COS = _sql_cos("qvec", "cvec")
 # this predicate too
 _VALID = S.VALID_VEC_SQL("embedding", _DIM)
 
+# the per-query cosine top-10 over the scored pairs `s` (query_id, match_id, cos)
+_COS_RANK_TAIL = """SELECT * FROM (
+  SELECT query_id, match_id, cos,
+         CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, match_id) AS INTEGER) AS rank
+  FROM s
+) WHERE rank <= 10
+"""
+
 _TOPK_ORACLE = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qvec FROM embeddings
            WHERE vec_id < 10 AND {_VALID}),
 c AS (SELECT vec_id AS match_id, embedding AS cvec FROM embeddings WHERE {_VALID}),
 s AS (SELECT query_id, match_id, {_COS} AS cos
       FROM c CROSS JOIN q WHERE match_id <> query_id)
-SELECT * FROM (
-  SELECT query_id, match_id, cos,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, match_id) AS INTEGER) AS rank
-  FROM s
-) WHERE rank <= 10
-"""
+{_COS_RANK_TAIL}"""
 
 
 @query("sim_cosine_topk_bruteforce", _TOPK_ORACLE)
@@ -376,12 +379,7 @@ c AS (SELECT vec_id AS match_id, embedding AS cvec,
       FROM embeddings WHERE {_VALID}),
 s AS (SELECT query_id, match_id, {_COS} AS cos
       FROM c JOIN q USING (bucket) WHERE match_id <> query_id)
-SELECT * FROM (
-  SELECT query_id, match_id, cos,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, match_id) AS INTEGER) AS rank
-  FROM s
-) WHERE rank <= 10
-"""
+{_COS_RANK_TAIL}"""
 
 
 @query("sim_ann_lsh_topk", _ANN_ORACLE)
@@ -389,25 +387,6 @@ def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return S.ann_lsh_topk(
         emb.filter(F.col("vec_id") < 10), emb, "vec_id", "embedding", k=10, n_planes=8, dim=_DIM
-    )
-
-
-# No oracle: the k-means coarse quantizer (Lloyd iterations over a numpy
-# sample) is engine-specific; validated against brute force in
-# tests/test_similarity_ann.py, and its recall is *measured* with an exact
-# integer-count oracle by sim_ivf_recall_at_k below (pinned-seed codebook).
-@query("sim_ivf_topk")
-def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: k-means cells + n_probe nearest-cell search — the other
-    at-scale ANN path besides hyperplane LSH. Training sample pinned by
-    vec_id (TakeOrdered, not bare limit) so the codebook — and therefore the
-    result — is stable across partitionings and file orders."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return S.ivf_topk(
-        emb.filter(F.col("vec_id") < 10), emb, "vec_id", "embedding",
-        k=10, n_cells=16, n_probe=4,
-        train_hint=emb.select("vec_id", "embedding").orderBy("vec_id"),
-        dim=_DIM,
     )
 
 
@@ -494,12 +473,15 @@ _PROBES_CTE = f"""probes AS (
     FROM d WHERE vec_id < 10) WHERE rn <= {_IVF_PROBE}
 )"""
 
+# the assigned corpus, from the `assign` CTE
+_IVF_C_CTE = """c AS (SELECT e.vec_id AS match_id, e.embedding AS cvec, a.cell_id
+      FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id)"""
+
 # probe → candidate join → cosine rank over the assigned corpus, against
 # the cosine truth over that same corpus; follows the `d`/`assign` CTEs
 _IVF_SEARCH = f"""{_PROBES_CTE},
 {_Q_CTE},
-c AS (SELECT e.vec_id AS match_id, e.embedding AS cvec, a.cell_id
-      FROM embeddings e JOIN assign a ON e.vec_id = a.vec_id),
+{_IVF_C_CTE},
 {_sql_cos_top10("ivf", '''c
     JOIN probes p ON c.cell_id = p.cell_id
     JOIN q ON q.query_id = p.query_id
@@ -560,25 +542,19 @@ def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB can recompute the identical cell assignment (argmin of squared L2
     to each seed, first-min tie-break), the identical n_probe=4 probe list,
     and the identical IVF top-10 — making recall@10 integer hit counts, not
-    a rows-only claim. The production path (sim_ivf_topk) keeps its trained
-    quantizer; this query proves the search machinery (assign → probe →
-    candidate join → rank) exact."""
+    a rows-only claim. sim_ivf_topk searches the trained codebook instead;
+    this query proves the search machinery (assign → probe → candidate join
+    → rank) exact over a codebook that needs no training."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = [
-        list(r[0])
-        for r in _seed_rows(emb, _IVF_SEED_LO, _IVF_SEED_N)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    ]
+    seeds = _seed_rows(emb, _IVF_SEED_LO, _IVF_SEED_N).select("vec_id", "embedding")
+    cent = [list(r["embedding"]) for r in sorted(seeds.collect(), key=lambda r: r["vec_id"])]
     queries_df = emb.filter(F.col("vec_id") < 10)
     truth = S.cosine_topk(
         queries_df, emb, "vec_id", "embedding", k=10, dim=_DIM
     ).select("query_id", "match_id")
     ivf = S.ivf_topk(
-        queries_df, emb, "vec_id", "embedding",
-        k=10, n_cells=_IVF_SEED_N, n_probe=_IVF_PROBE, centroids=cent,
-        dim=_DIM,
+        queries_df, emb, "vec_id", "embedding", cent,
+        k=10, n_probe=_IVF_PROBE, dim=_DIM,
     ).select("query_id", F.col("match_id").alias("__ivf_match"))
     return _recall_hits(truth, ivf, "__ivf_match", "ivf")
 
@@ -2400,103 +2376,13 @@ def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KM_SEED_LO, _KM_K, _KM_SCALE, _KM_ITERS = 100, 8, 10_000_000, 2
 
 
-# the k-means vector contract: valid_vectors(dim) PLUS the int64-grid
-# domain guard (NaN / |x| >= 1e3 components — label_centroid_outliers'
-# contract, needed here because the UPDATE step runs on the fixed-point
-# grid; one 1e18 garbage component would overflow the integer sums)
-_KM_VALID = (
-    f"({_VALID} AND len(list_filter(embedding, "
-    f"v -> isnan(CAST(v AS DOUBLE)) "
-    f"OR abs(CAST(v AS DOUBLE)) >= {_CENTROID_DOMAIN!r})) = 0)"
-)
-
-_KMEANS_ORACLE = f"""
-WITH v AS (
-  SELECT vec_id, embedding FROM embeddings WHERE {_KM_VALID}
-),
-c0 AS (
-  SELECT CAST(vec_id - {_KM_SEED_LO} AS INTEGER) AS cell, embedding AS cvec
-  FROM embeddings
-  WHERE vec_id >= {_KM_SEED_LO} AND vec_id < {_KM_SEED_LO + _KM_K}
-    AND {_KM_VALID}
-),
-a1 AS (
-  SELECT vec_id, cell, embedding,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY {_sql_l2('embedding', 'cvec')}, cell) AS rn
-  FROM v CROSS JOIN c0
-),
-m1 AS (SELECT vec_id, cell, embedding FROM a1 WHERE rn = 1),
-x1 AS (
-  SELECT cell,
-         unnest(embedding) AS e,
-         unnest(generate_series(1, len(embedding))) AS pos
-  FROM m1
-),
-s1 AS (
-  SELECT cell, pos,
-         SUM(CAST(FLOOR(CAST(e AS DOUBLE) * {_KM_SCALE}) AS BIGINT)) AS s,
-         COUNT(*) AS n
-  FROM x1 GROUP BY cell, pos
-),
-u1 AS (
-  SELECT cell,
-         list(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / {_KM_SCALE}.0
-              ORDER BY pos) AS arr
-  FROM s1 GROUP BY cell
-),
-c1 AS (
-  SELECT c0.cell, COALESCE(u1.arr, c0.cvec) AS cvec
-  FROM c0 LEFT JOIN u1 USING (cell)
-),
-a2 AS (
-  SELECT vec_id, cell,
-         {_sql_l2('embedding', 'cvec')} AS d2,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY {_sql_l2('embedding', 'cvec')}, cell) AS rn
-  FROM v CROSS JOIN c1
-)
-SELECT vec_id, CAST(cell AS INTEGER) AS cell_id, d2 AS dist2
-FROM a2 WHERE rn = 1
-"""
-
-
-@query("sim_kmeans_train_assign", _KMEANS_ORACLE)
-def sim_kmeans_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic distributed k-means: {iters} Lloyd rounds
-    from {k} pinned seed centroids, returning the final per-vector
-    assignment — the TRAINING pass behind the IVF coarse quantizer, the
-    SemDeDup cells, and the PQ codebooks this module otherwise takes as
-    pinned input (FAISS's train step). Oracle-exact despite being a
-    float-ITERATIVE algorithm: assignments use the sequential sqdist fold
-    (bit-identical cross-engine), centroid updates run on the int64
-    fixed-point grid (exact, order-independent sums; the
-    label_centroid_outliers machinery), so iteration 2 starts from
-    bit-identical centroids in both engines. See
-    operators/similarity.kmeans_lloyd_assign for the per-iteration
-    shuffle budget."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    seeds = _seed_rows(emb, _KM_SEED_LO, _KM_K).select(
-        (F.col("vec_id") - _KM_SEED_LO).cast("int").alias("cell_id"),
-        F.col("embedding").alias("cvec"),
-    )
-    return S.kmeans_lloyd_assign(
-        emb, "vec_id", "embedding", seeds,
-        iters=_KM_ITERS, scale=_KM_SCALE, dim=_DIM,
-    )
-
-
-# ----------------------------------------------------------------------------
-# train → index → search, end to end: the IVF coarse quantizer is TRAINED
-# by the deterministic k-means above and the search runs over the trained
-# centroids, oracle-exact throughout.
-# ----------------------------------------------------------------------------
-
-
 def _sql_km_valid(vec: str, dim: int) -> str:
-    """valid_vectors(dim) + the int64-grid domain guard for an arbitrary
-    vector EXPRESSION — the `_KM_VALID` predicate generalized so subvector
-    slices (the per-subspace PQ training) ride the identical contract."""
+    """The k-means vector contract for an arbitrary vector EXPRESSION:
+    valid_vectors(dim) PLUS the int64-grid domain guard (NaN / |x| >= 1e3
+    components — label_centroid_outliers' contract, needed because the
+    UPDATE step runs on the fixed-point grid; one 1e18 garbage component
+    would overflow the integer sums). Subvector slices (the per-subspace PQ
+    training) ride the identical contract."""
     return (
         f"({S.VALID_VEC_SQL(vec, dim)} AND len(list_filter({vec}, "
         f"v -> isnan(CAST(v AS DOUBLE)) "
@@ -2512,10 +2398,10 @@ def _sql_km_c1(
     """CTE-chain text training ``k`` centroids from the pinned seed rows
     [seed_lo, seed_lo+k) for ONE fixed-point update round (iters=2) over the
     vector EXPRESSION ``vec`` — the SQL mirror of
-    ``operators/similarity.kmeans_lloyd_centroids``, byte-for-byte the
-    `_KMEANS_ORACLE` machinery with the CTE names prefixed ``p`` so several
-    independent trainings (the m PQ subspaces) compose in one WITH. The
-    consumer reads ``{p}c1 (cell, cvec)``. ``seed_valid`` overrides the
+    ``operators/similarity.kmeans_lloyd_centroids``, with the CTE names
+    prefixed ``p`` so several independent trainings (the m PQ subspaces)
+    compose in one WITH. The consumer reads ``{p}v (vec_id, kvec)`` and
+    ``{p}c1 (cell, cvec)``. ``seed_valid`` overrides the
     SEED-row predicate (the PQ trainings admit a seed row uniformly — full
     embedding clean — so all m codebooks share the same cell set).
     ``k_sql``: a scalar-subquery expression replacing the STATIC ``k`` in
@@ -2564,6 +2450,54 @@ def _sql_km_c1(
 )"""
 
 
+_KM_VALID = _sql_km_valid("embedding", _DIM)
+
+_KMEANS_ORACLE = f"""
+WITH {_sql_km_c1("", _KM_SEED_LO, _KM_K, "embedding", _DIM, _KM_SCALE)},
+a2 AS (
+  SELECT vec_id, cell,
+         {_sql_l2('kvec', 'cvec')} AS d2,
+         ROW_NUMBER() OVER (PARTITION BY vec_id
+                            ORDER BY {_sql_l2('kvec', 'cvec')}, cell) AS rn
+  FROM v CROSS JOIN c1
+)
+SELECT vec_id, CAST(cell AS INTEGER) AS cell_id, d2 AS dist2
+FROM a2 WHERE rn = 1
+"""
+
+
+@query("sim_kmeans_train_assign", _KMEANS_ORACLE)
+def sim_kmeans_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic distributed k-means: {iters} Lloyd rounds
+    from {k} pinned seed centroids, returning the final per-vector
+    assignment — the TRAINING pass behind the IVF coarse quantizer, the
+    SemDeDup cells, and the PQ codebooks this module otherwise takes as
+    pinned input (FAISS's train step). Oracle-exact despite being a
+    float-ITERATIVE algorithm: assignments use the sequential sqdist fold
+    (bit-identical cross-engine), centroid updates run on the int64
+    fixed-point grid (exact, order-independent sums; the
+    label_centroid_outliers machinery), so iteration 2 starts from
+    bit-identical centroids in both engines. See
+    operators/similarity.kmeans_lloyd_assign for the per-iteration
+    shuffle budget."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    seeds = _seed_rows(emb, _KM_SEED_LO, _KM_K).select(
+        (F.col("vec_id") - _KM_SEED_LO).cast("int").alias("cell_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    return S.kmeans_lloyd_assign(
+        emb, "vec_id", "embedding", seeds,
+        iters=_KM_ITERS, scale=_KM_SCALE, dim=_DIM,
+    )
+
+
+# ----------------------------------------------------------------------------
+# train → index → search, end to end: the IVF coarse quantizer is TRAINED
+# by the deterministic k-means above and the search runs over the trained
+# centroids, oracle-exact throughout.
+# ----------------------------------------------------------------------------
+
+
 _TIVF_K = 16  # trained coarse-quantizer cells (seeds = the sim_ivf pinned rows)
 
 
@@ -2571,8 +2505,8 @@ def _trained_ivf_centroids(emb: DataFrame) -> list[list[float]]:
     """Train the {_TIVF_K}-cell coarse quantizer from the pinned seed rows
     and collect the codebook in cell order — positional cell ids are a
     monotone renumbering of the oracle's seed-offset cells, so (d2, cell)
-    tie-breaks agree engine-to-engine. Shared by the trained-IVF and
-    trained-IVFPQ recall queries."""
+    tie-breaks agree engine-to-engine. Shared by sim_ivf_topk and the
+    trained-IVF and trained-IVFPQ recall queries."""
     seeds = _seed_rows(emb, _IVF_SEED_LO, _TIVF_K).select(
         (F.col("vec_id") - _IVF_SEED_LO).cast("int").alias("cell_id"),
         F.col("embedding").alias("cvec"),
@@ -2581,7 +2515,7 @@ def _trained_ivf_centroids(emb: DataFrame) -> list[list[float]]:
         emb, "vec_id", "embedding", seeds,
         iters=_KM_ITERS, scale=_KM_SCALE, dim=_DIM,
     )
-    return [list(r["cvec"]) for r in trained.orderBy("cell_id").collect()]
+    return [list(r["cvec"]) for r in sorted(trained.collect(), key=lambda r: r["cell_id"])]
 
 # the trained coarse quantizer (cells `tc1`) and the corpus assignment
 # to it, shared by every trained-IVF oracle
@@ -2608,11 +2542,10 @@ def sim_ivf_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: training is the kmeans_lloyd_centroids budget (one
     broadcast + three linear shuffles per iteration); the k·dim trained
-    codebook collects to a pinned literal exactly like the ivf_topk
-    explicit-centroids path (a broadcast-literal-sized collect — the FAISS
-    practice); the search is the proven ivf_topk machinery (inlined
-    centroid expressions, broadcast probes, cell-key equi-join — no
-    cartesian anywhere). Cell ids are positional over the collected
+    codebook collects to the literal ivf_topk inlines (a
+    broadcast-literal-sized collect — the FAISS practice); the search is
+    the proven ivf_topk machinery (inlined centroid expressions, broadcast
+    probes, cell-key equi-join — no cartesian anywhere). Cell ids are positional over the collected
     codebook: a monotone renumbering of the oracle's seed-offset cells, so
     (d2, cell) tie-breaks agree engine-to-engine."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2641,9 +2574,8 @@ def sim_ivf_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "query_id bigint, n_true bigint, n_hit_ivf bigint, recall_ivf double"
         )
     ivf = S.ivf_topk(
-        queries_df, emb, "vec_id", "embedding",
-        k=10, n_cells=_TIVF_K, n_probe=_IVF_PROBE, centroids=cent,
-        dim=_DIM,
+        queries_df, emb, "vec_id", "embedding", cent,
+        k=10, n_probe=_IVF_PROBE, dim=_DIM,
     ).select("query_id", F.col("match_id").alias("__ivf_match"))
     return _recall_hits(truth, ivf, "__ivf_match", "ivf")
 
@@ -2651,6 +2583,38 @@ def sim_ivf_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 sim_ivf_trained_recall_at_k.__doc__ = sim_ivf_trained_recall_at_k.__doc__.format(
     k=_TIVF_K, p=_IVF_PROBE
 )
+
+
+_IVF_TOPK_ORACLE = f"""
+WITH {_TIVF_C1},
+{_TIVF_ASSIGN},
+{_PROBES_CTE},
+{_Q_CTE},
+{_IVF_C_CTE},
+s AS (SELECT q.query_id, c.match_id, {_COS} AS cos
+      FROM c JOIN probes p ON c.cell_id = p.cell_id
+      JOIN q ON q.query_id = p.query_id
+      WHERE c.match_id <> q.query_id)
+{_COS_RANK_TAIL}"""
+
+
+@query("sim_ivf_topk", _IVF_TOPK_ORACLE)
+def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN top-10 — the other at-scale ANN path besides hyperplane LSH:
+    the trained coarse quantizer of sim_ivf_trained_recall_at_k, then each
+    query scans only its ``_IVF_PROBE`` nearest cells."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    cent = _trained_ivf_centroids(emb)
+    if not cent:
+        # no valid seed rows: the oracle's tc1 is empty, so it emits zero
+        # rows — not ivf_topk's exact-search fallback
+        return spark.createDataFrame(
+            [], "query_id bigint, match_id bigint, cos double, rank int"
+        )
+    return S.ivf_topk(
+        emb.filter(F.col("vec_id") < 10), emb, "vec_id", "embedding", cent,
+        k=10, n_probe=_IVF_PROBE, dim=_DIM,
+    )
 
 
 # ----------------------------------------------------------------------------
@@ -2886,7 +2850,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = docs.filter(F.expr(_INC_OLD))
     return D.minhash_lsh_incremental(
         new, old, "text", "doc_id", threshold=_THRESH, k=_K,
-        n_hashes=N_MINHASH, n_bands=_BANDS, unit="word",
+        n_hashes=N_MINHASH, n_bands=_BANDS,
     )
 
 
@@ -3503,7 +3467,7 @@ def _train_pq_subspaces(
         iters=_KM_ITERS, scale=_KM_SCALE, dim=_PQ_DSUB, group_col="__sub",
     )
     codebooks: list[list[list[float]]] = [[] for _ in range(_PQ_M)]
-    for r in trained.orderBy("__sub", "cell_id").collect():
+    for r in sorted(trained.collect(), key=lambda r: (r["__sub"], r["cell_id"])):
         codebooks[r["__sub"]].append(list(r["cvec"]))
     return codebooks
 
@@ -3897,7 +3861,7 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/dedup.prefix_filter_pairs for the 100 TB shape."""
     docs = load_table(spark, sf_dir, "documents")
     return D.prefix_filter_pairs(
-        docs, "text", "doc_id", threshold=_PREFIX_TAU, k=_K, unit="word"
+        docs, "text", "doc_id", threshold=_PREFIX_TAU, k=_K
     )
 
 

@@ -6,9 +6,10 @@ targeted change can be verified in seconds instead of a 150-query sweep.
 Usage: python3 scripts/check_queries.py <query>...
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 from pyspark.sql import SparkSession

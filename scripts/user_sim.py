@@ -2,7 +2,7 @@
 after switching — build a crystal DB from source files, query it back."""
 
 import bz2, json, os, sys, tempfile
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = (SparkSession.builder.master("local[4]").appName("user-sim")

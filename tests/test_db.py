@@ -74,6 +74,27 @@ def test_update(spark, db):
     assert rows == {0: "old", 1: "old", 2: "new", 3: "old", 4: "new"}
 
 
+def test_update_small_frame_plans_broadcast_join(spark, db, monkeypatch):
+    """A one-row update joins a 5,000-row base through a broadcast with no
+    row-count probe: the dup-key guard materializes the persisted update
+    frame, so the planner sizes it from the cache."""
+    from crystal_parquet_database_spark.plans.inspect import join_strategies
+
+    db.create([{"x": i, "tag": "old"} for i in range(5000)])
+    joins = []
+    rewrite = PqDB._rewrite
+
+    def spy(self, df, *args, **kwargs):
+        joins.append(join_strategies(df))
+        return rewrite(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(PqDB, "_rewrite", spy)
+    db.update([{"id": 4321, "tag": "new"}])
+    assert joins == [["BroadcastHashJoin"]]
+    [row] = db.read(filters="id = 4321").collect()
+    assert row["tag"] == "new" and row["x"] == 4321
+
+
 def test_update_null_key_matches_null_row(spark, db):
     """Regression (round-7 review): the update join used plain `on` equality,
     so a NULL-keyed update row matched nothing (NULL = NULL is NULL) and the

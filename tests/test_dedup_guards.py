@@ -109,7 +109,7 @@ def test_lsh_zero_row_bands_rejected(spark):
     )
     with pytest.raises(ValueError, match="n_bands"):
         D.minhash_lsh_dedup(docs, "text", "doc_id", n_hashes=16, n_bands=32)
-    sig = D.minhash_signature(D.shingle_hashes(docs, "text", 3, "word"), 8)
+    sig = D.minhash_signature(D.shingle_hashes(docs, "text", 3), 8)
     with pytest.raises(ValueError, match="rows_per_band"):
         D.lsh_candidate_pairs(sig, "doc_id", n_bands=4, rows_per_band=0)
 
@@ -125,7 +125,7 @@ def test_null_text_docs_never_pair(spark):
         [(1, None), (2, None), (3, None), (4, "alpha beta gamma delta")],
         "doc_id long, text string",
     )
-    hs = D.shingle_hashes(docs, "text", 3, "word")
+    hs = D.shingle_hashes(docs, "text", 3)
     by_id = {r["doc_id"]: r["hs"] for r in hs.collect()}
     assert by_id[1] == [] and by_id[2] == [] and by_id[3] == []
     assert len(by_id[4]) > 0
@@ -160,6 +160,6 @@ def test_shingle_hashes_distinct_values(spark):
     docs = spark.createDataFrame(
         [(1, "a b c a b c a b c d")], "doc_id long, text string"
     )
-    arr = D.shingle_hashes(docs, "text", 3, "word").collect()[0]["hs"]
+    arr = D.shingle_hashes(docs, "text", 3).collect()[0]["hs"]
     assert len(arr) == len(set(arr))
     assert None not in arr

@@ -146,7 +146,7 @@ def test_prefix_filter_ceil_rounding_boundary(spark):
         [(0, " ".join(a_words)), (1, " ".join(b_words))], "doc_id long, text string"
     )
     got = prefix_filter_pairs(
-        docs, "text", "doc_id", threshold=0.07, k=1, unit="word"
+        docs, "text", "doc_id", threshold=0.07, k=1
     ).collect()
     assert len(got) == 1
     assert (got[0]["id_a"], got[0]["id_b"]) == (0, 1)

@@ -9,6 +9,7 @@ from crystal_parquet_database_spark.operators.similarity import (
     ann_lsh_topk,
     cosine_topk,
     ivf_topk,
+    kmeans_lloyd_centroids,
 )
 from crystal_parquet_database_spark.tables import load_table
 
@@ -20,23 +21,43 @@ def _topk_sets(df):
     return out
 
 
+def _trained_cells(corpus, n_cells=16, dim=64):
+    """An IVF codebook: ``kmeans_lloyd_centroids`` over ``corpus`` from the
+    seed rows vec_id 100..100+n_cells, in cell order."""
+    seeds = corpus.filter(
+        (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + n_cells)
+    ).select(
+        (F.col("vec_id") - 100).cast("int").alias("cell_id"),
+        F.col("embedding").alias("cvec"),
+    )
+    trained = kmeans_lloyd_centroids(corpus, "vec_id", "embedding", seeds, dim=dim)
+    return [list(r["cvec"]) for r in sorted(trained.collect(), key=lambda r: r["cell_id"])]
+
+
 def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     exact = _topk_sets(cosine_topk(q, emb, "vec_id", "embedding", k=10))
     approx = _topk_sets(
-        ivf_topk(q, emb, "vec_id", "embedding", k=10, n_cells=16, n_probe=8)
+        ivf_topk(q, emb, "vec_id", "embedding", _trained_cells(emb), k=10, n_probe=8)
     )
     recalls = [len(exact[qid] & approx.get(qid, set())) / 10 for qid in exact]
     assert sum(recalls) / len(recalls) >= 0.5  # n_probe=8/16 cells → decent recall
 
 
 def test_ivf_is_deterministic(spark, sf_dir):
+    """The trained codebook does not depend on partitioning, and a search
+    over it is reproducible."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 3)
-    a = sorted(map(tuple, ivf_topk(q, emb, "vec_id", "embedding", k=5).select("query_id", "match_id", "rank").collect()))
-    b = sorted(map(tuple, ivf_topk(q, emb, "vec_id", "embedding", k=5).select("query_id", "match_id", "rank").collect()))
-    assert a == b
+    cent = _trained_cells(emb)
+    assert _trained_cells(emb.repartition(7)) == cent
+
+    def run():
+        out = ivf_topk(q, emb, "vec_id", "embedding", cent, k=5)
+        return sorted(map(tuple, out.select("query_id", "match_id", "rank").collect()))
+
+    assert run() == run()
 
 
 def test_lsh_returns_bucket_constrained_topk(spark, sf_dir):
@@ -118,16 +139,14 @@ def test_ivf_explicit_centroids_skip_training(spark, sf_dir):
         .select("embedding")
         .collect()
     ]
-    out = ivf_topk(
-        q, emb, "vec_id", "embedding", k=5, n_cells=16, n_probe=4, centroids=cent
-    )
+    out = ivf_topk(q, emb, "vec_id", "embedding", centroids=cent, k=5, n_probe=4)
     rows = out.collect()
     assert {r["query_id"] for r in rows} == {0, 1, 2}
     assert all(1 <= r["rank"] <= 5 for r in rows)
     # caller-owned codebook ⇒ identical output on rerun and across repartition
     again = ivf_topk(
         q.repartition(5), emb.repartition(7), "vec_id", "embedding",
-        k=5, n_cells=16, n_probe=4, centroids=cent,
+        centroids=cent, k=5, n_probe=4,
     )
     assert sorted(map(tuple, out.select("query_id", "match_id", "rank").collect())) == \
         sorted(map(tuple, again.select("query_id", "match_id", "rank").collect()))
@@ -304,21 +323,18 @@ def test_pq_invalid_vector_excluded_and_ranks_stay_real(spark):
 
 
 def test_ivf_empty_corpus_returns_empty_not_crash(spark):
-    """Regression (round-7 review): an empty corpus used to IndexError on
-    the driver (1-D (0,) numpy array indexed as 2-D in the Lloyd step)
-    instead of returning the empty frame the exact siblings produce; an
-    empty train_hint over a non-empty corpus is a caller error and raises."""
-    import pytest
-
-    from crystal_parquet_database_spark.operators.similarity import ivf_topk
-
+    """An empty corpus trains an empty codebook; searching it (or any
+    codebook) over the empty corpus returns the empty frame the exact
+    siblings produce instead of failing analysis on a zero-arm cell
+    expression."""
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     q = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
-    out = ivf_topk(q, empty, "vec_id", "embedding", k=3)
-    assert out.count() == 0
-    assert set(out.columns) == {"query_id", "match_id", "cos", "rank"}
-    with pytest.raises(ValueError, match="train_hint"):
-        ivf_topk(q, q, "vec_id", "embedding", k=3, train_hint=empty)
+    cent = _trained_cells(empty, dim=2)
+    assert cent == []
+    for codebook in (cent, [[1.0, 0.0]]):
+        out = ivf_topk(q, empty, "vec_id", "embedding", codebook, k=3)
+        assert out.count() == 0
+        assert set(out.columns) == {"query_id", "match_id", "cos", "rank"}
 
 
 def test_zero_norm_vector_nulls_out_instead_of_crashing(spark):
@@ -343,15 +359,16 @@ def test_zero_norm_vector_nulls_out_instead_of_crashing(spark):
 
 
 def test_ivf_tolerates_null_and_ragged_embeddings(spark, sf_dir):
-    """Round-8 review: a NULL (or wrong-length) embedding in the quantizer
-    training sample made np.asarray raise on the DRIVER — the whole job
-    aborted on the exact failed-encoder rows the _cos_div contract says
-    must degrade, not abort."""
+    """NULL, empty and wrong-length embeddings in the corpus (failed-encoder
+    rows, which the _cos_div contract says must degrade, not abort) are
+    left out of both the codebook training and the search."""
     from pyspark.sql import types as T
 
-    from crystal_parquet_database_spark.operators.similarity import ivf_topk
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding").limit(200)
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .filter(F.col("vec_id") < 200)
+    )
     bad = spark.createDataFrame(
         [(90001, None), (90002, []), (90003, [1.0, 2.0])],
         T.StructType(
@@ -363,10 +380,12 @@ def test_ivf_tolerates_null_and_ragged_embeddings(spark, sf_dir):
     )
     corpus = emb.unionByName(bad)
     q = emb.filter(F.col("vec_id") < 3)
-    out = ivf_topk(q, corpus, "vec_id", "embedding", k=5, n_cells=4, n_probe=2)
+    cent = _trained_cells(corpus, n_cells=4)
+    assert len(cent) == 4 and all(len(c) == 64 for c in cent)
+    out = ivf_topk(q, corpus, "vec_id", "embedding", cent, k=5, n_probe=2)
     got = out.collect()  # must not raise
     assert len(got) > 0
-    assert all(r["match_id"] not in (90001, 90002) for r in got)
+    assert all(r["match_id"] not in (90001, 90002, 90003) for r in got)
 
 
 def test_embedding_near_dup_lsh_null_vectors_no_pairs(spark):
