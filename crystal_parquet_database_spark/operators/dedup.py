@@ -114,20 +114,15 @@ def minhash_signature(df: DataFrame, n_hashes: int = 32) -> DataFrame:
     """Append ``sig``: MinHash signature (array<bigint>, length n_hashes).
 
     Pure JVM expression tree — one pass over the shingle array per hash
-    function, no Python, no shuffle.
+    function, no Python, no shuffle. The tree is built from ONE SQL string:
+    through the Column API every hash term costs ~80 py4j round-trips on
+    the driver, and the parsed tree is the same.
     """
-    coeffs = minhash_coeffs(n_hashes)
-
-    # NB: closures, not lambda default-args — PySpark's higher-order-function
-    # bridge reflects on the lambda arity, so extra (defaulted) parameters
-    # would be misread as additional lambda variables.
-    def affine_min(a: int, b: int) -> Column:
-        return F.array_min(
-            F.transform(F.col("hs"), lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(P))
-        )
-
-    sig = F.array(*[affine_min(a, b) for a, b in coeffs])
-    return df.withColumn("sig", sig)
+    sig = ", ".join(
+        f"array_min(transform(hs, h -> ({a} * h + {b}) % {P}))"
+        for a, b in minhash_coeffs(n_hashes)
+    )
+    return df.withColumn("sig", F.expr(f"array({sig})"))
 
 
 def lsh_candidate_pairs(
@@ -491,13 +486,10 @@ def connected_components(
     adversarially long chains, which dedup graphs don't produce.
     """
     e = edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    # NOTE (round-14 optimization): pre-partitioning this frame on "src"
-    # before the checkpoint (guide §2.4 share-one-exchange, hoping each
-    # round's propagation join would then exchange only the label side)
-    # was A/B-measured SLOWER (~5.2-6.1 vs 4.7-5.6 s steady) — the
-    # checkpointed LogicalRDD does not surface a partitioning the join
-    # planner exploits here, so the upfront repartition is a pure extra
-    # shuffle of 2|E| rows. Kept unpartitioned.
+    # Not pre-partitioned on "src": the checkpointed LogicalRDD does not
+    # surface a partitioning the propagation join can exploit, so an
+    # upfront repartition only adds a shuffle of 2|E| rows (A/B-measured
+    # slower, ~5.2-6.1 vs 4.7-5.6 s steady).
     e = e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
@@ -659,24 +651,16 @@ def _band_explode(sig_df: DataFrame, id_col: str, n_bands: int, rows_per_band: i
             f"n_bands={n_bands} and rows_per_band={rows_per_band} must be >= 1 "
             "(rows_per_band == 0 typically means n_bands > n_hashes)"
         )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.array_join(
-                    F.transform(
-                        F.slice("sig", i * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                    "-",
-                ).alias("key"),
-            )
-            for i in range(n_bands)
-        ]
+    # one SQL string, like minhash_signature's, for the same reason
+    bands = ", ".join(
+        f"struct({i} AS band, array_join(transform("
+        f"slice(sig, {i * rows_per_band + 1}, {rows_per_band}), "
+        "x -> CAST(x AS STRING)), '-') AS key)"
+        for i in range(n_bands)
     )
-    return sig_df.select(F.col(id_col), F.explode(bands).alias("b")).select(
-        id_col, "b.band", "b.key"
-    )
+    return sig_df.selectExpr(
+        id_col, f"explode(array({bands})) AS b"
+    ).selectExpr(id_col, "b.band", "b.key")
 
 
 def minhash_lsh_incremental(
@@ -989,7 +973,7 @@ def edit_distance_near_dup_pairs(
     low-entropy fixture vocabulary a single first-block value ("spark ")
     was shared by ~190 of 5 000 docs — C(190,2) pairs per hot value,
     416k candidates total, and the hot set grows quadratically with
-    corpus size. Knobs: see the round-11 sensitivity table in SCALE.md
+    corpus size. Knobs: see the edit-distance sensitivity table in SCALE.md
     (produced by scripts/edit_distance_sensitivity.py — the one source of
     truth for these numbers): (block_w=6, df=64) 6.96 s at the full
     7-substitution guarantee, (8, 32) 1.64 s at recall 1.00 on all 256
@@ -1014,20 +998,19 @@ def edit_distance_near_dup_pairs(
     identical semantics in both engines); the codepoint path stays
     Spark-only and is asserted in pytest, not the oracle.
 
-    ``full_text=True`` (round-12, the verdict-6 extension): the head stays
-    the BLOCKING key, but verification runs on the FULL trimmed text —
-    PassJoin's filter-verify split (Li et al. 2011 partition the full
-    string; here the head is a deliberate blocking proxy, so the recall
-    contract is "pairs whose HEADS survive the banding" — a pair whose
-    first ``head_len`` chars differ by more substitutions than the
-    pigeonhole bound is not a candidate regardless of the tail; see the
-    mode-choice note in SCALE.md round-12). Verification cost is bounded
-    two ways: the exact full-length |len diff| <= max_dist prefilter, and
-    Spark's THRESHOLDED levenshtein (banded DP, O(max_dist * len) not
-    O(len^2) — returns -1 past the threshold, so the filter is
-    ``dist != -1`` and the reported distance is exact for every emitted
-    pair). Full text rides the candidate join only (candidates are banded
-    and df-capped — bounded), never the banding shuffle.
+    ``full_text=True``: the head stays the BLOCKING key, but verification
+    runs on the FULL trimmed text — PassJoin's filter-verify split (Li et
+    al. 2011 partition the full string; here the head is a deliberate
+    blocking proxy, so the recall contract is "pairs whose HEADS survive the
+    banding" — a pair whose first ``head_len`` chars differ by more
+    substitutions than the pigeonhole bound is not a candidate regardless of
+    the tail; see the full-text edit-distance note in SCALE.md).
+    Verification cost is bounded two ways: the exact full-length |len diff|
+    <= max_dist prefilter, and Spark's THRESHOLDED levenshtein (banded DP,
+    O(max_dist * len) not O(len^2) — returns -1 past the threshold, so the
+    filter is ``dist != -1`` and the reported distance is exact for every
+    emitted pair). Full text rides the candidate join only (candidates are
+    banded and df-capped — bounded), never the banding shuffle.
 
     100 TB shape: block keys distribute like LSH band keys (bounded bucket
     populations on real text; a boilerplate-hot block behaves like a hot
@@ -1041,8 +1024,8 @@ def edit_distance_near_dup_pairs(
     ascii_ok = F.octet_length(t) == F.length(t)
     trimmed = F.trim(t)
     head = F.substring(trimmed, 1, head_len)
-    # head mode keeps the exact round-11 plan (the frozen driver-gated
-    # query). In full-text mode __h carries the FULL trimmed text instead:
+    # __h is the head in head mode, so that mode verifies exactly what it
+    # blocks on. In full-text mode __h carries the FULL trimmed text instead:
     # the banding stage below reads only positions 1..head_len of __h, and
     # those chars are identical whether __h is the head or the full text —
     # so blocking is shared verbatim and only the verify join changes.

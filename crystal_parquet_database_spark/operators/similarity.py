@@ -14,6 +14,8 @@ Two paths:
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -32,15 +34,14 @@ def _w(j: int, k: int, dim: int = 64) -> int:
 
 def valid_vectors(df: DataFrame, vec_col: str, dim: int | None = None) -> DataFrame:
     """THE invalid-vector contract, one definition: a vector that is NULL,
-    EMPTY, or carries a NULL ELEMENT (one failed encoder dimension — round
-    9's element-NULL probe showed the engines disagree on where such a
-    vector lands in dot products, quantizer cells and LSH buckets) is
-    excluded from every similarity operator up front. Oracles mirror it
-    via ``VALID_VEC_SQL``.
+    EMPTY, or carries a NULL ELEMENT (one failed encoder dimension — the
+    engines disagree on where such a vector lands in dot products,
+    quantizer cells and LSH buckets) is excluded from every similarity
+    operator up front. Oracles mirror it via ``VALID_VEC_SQL``.
 
-    ``dim`` extends the contract to RAGGED vectors (round 10's disclosed
-    class): a vector whose length differs from the corpus dimension — one
-    32-dim row from an older encoder in a 64-dim corpus, routine when
+    ``dim`` extends the contract to RAGGED vectors: a vector whose length
+    differs from the corpus dimension — one 32-dim row from an older
+    encoder in a 64-dim corpus, routine when
     encoder versions mix in a real 100 TB pipeline — is excluded too. The
     engines disagree on what a partial distance even IS (Spark's zip_with
     pads the short side with NULLs so the fold nulls out; DuckDB's indexed
@@ -79,37 +80,30 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def _lit_f64(v: float) -> str:
-    """One double as a SQL literal token. ``repr`` is Python's shortest
-    round-trip decimal and ``Double.parseDouble`` is correctly rounded, so
-    the parsed value is bit-identical to ``v``; non-finite values (which
-    ``repr`` prints as inf/nan — not SQL) go through an explicit cast."""
-    f = float(v)
-    if f != f:  # NaN
-        return "CAST('NaN' AS DOUBLE)"
-    if f in (float("inf"), float("-inf")):
-        return f"CAST('{'-' if f < 0 else ''}Infinity' AS DOUBLE)"
-    return f"{f!r}D"
+def _lit_array(value: list, ddl: str) -> Column:
+    """A constant array as ONE string literal that the JVM decodes, instead
+    of one py4j ``lit()`` per element or one SQL-parser token per element.
+    ``from_json`` of a literal is foldable, so the optimizer turns it into
+    one array ``Literal``: plans show a constant, never a per-row parse.
+    ``json.dumps`` writes Python's shortest round-trip decimal (and
+    ``NaN``/``Infinity``, which Spark's JSON reader accepts) and Jackson
+    parses it correctly rounded, so every element is bit-identical.
+    FAILFAST makes a literal that does not decode raise instead of
+    becoming NULL."""
+    return F.from_json(F.lit(json.dumps(value)), ddl, {"mode": "FAILFAST"})
 
 
 def lit_vector(vec: list[float]) -> Column:
-    """array<double> literal built as ONE JVM-parsed SQL expression instead
-    of ``len(vec)`` py4j ``lit()`` round-trips. The parsed tree is the same
-    ``array(...)`` of double literals the loop form built — element-wise
-    bit-identical (see ``_lit_f64``) — so plans, codegen and results are
-    unchanged; only driver-side construction gets cheap. Round-14
-    measurement at the PQ shape (16×64 + 4×16×16 doubles): 2.47 s → 13 ms
-    per codebook-set build."""
-    return F.expr("array(" + ",".join(_lit_f64(v) for v in vec) + ")")
+    """array<double> literal (see ``_lit_array``)."""
+    return _lit_array([float(v) for v in vec], "array<double>")
 
 
 def lit_matrix(mat: list[list[float]]) -> Column:
-    """array<array<double>> literal — ``lit_vector``'s nested form, the
-    shape every inlined centroid table / PQ codebook uses."""
-    rows = ",".join(
-        "array(" + ",".join(_lit_f64(v) for v in row) + ")" for row in mat
+    """array<array<double>> literal — the shape every inlined centroid
+    table / PQ codebook uses (see ``_lit_array``)."""
+    return _lit_array(
+        [[float(v) for v in row] for row in mat], "array<array<double>>"
     )
-    return F.expr(f"array({rows})")
 
 
 def norm(a: Column) -> Column:
@@ -602,7 +596,7 @@ def label_centroid_outliers(
     component are EXCLUDED from the audit up front — the same
     invalid-vector contract as the IVF quantizer sample and LSH banding;
     without it ONE 1e18 garbage component ANSI-aborts the whole job
-    (round-9 extreme-values sweep).
+    (``scripts/extreme_sweep.py`` injects such components).
     """
     bad = F.exists(
         F.col(vec_col),
@@ -711,11 +705,10 @@ def semdedup(
         F.col("cvec").alias("__cvec"),
         norm(F.col("cvec")).alias("__cn"),
     )
-    # dim: the ragged contract (round 10's disclosed class — THE probe that
-    # motivated it: one 32-dim vector among 64-dim diverged 445/500 rows
-    # here, because its partial centroid distance is NULL in Spark's padded
-    # zip_with fold but a NUMBER in DuckDB's NULL-skipping list fold, so the
-    # engines put it in different cells)
+    # dim: the ragged contract — a 32-dim vector among 64-dim ones has a
+    # partial centroid distance that is NULL in Spark's padded zip_with fold
+    # but a NUMBER in DuckDB's NULL-skipping list fold, so the engines would
+    # put it in different cells (one such vector diverged 445/500 rows)
     base = valid_vectors(df, vec_col, dim).select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__vec"),
@@ -1194,9 +1187,9 @@ def _km_frames(
         )
     )
     if group_col:
-        # Round-13 ADVICE: a NULL-group SEED never matches the update
-        # equi-join, so it would ride through every iteration untouched
-        # and emerge in the codebook with a NULL group — enforce the
+        # A NULL-group SEED never matches the update equi-join, so it
+        # would ride through every iteration untouched and emerge in the
+        # codebook with a NULL group — enforce the
         # documented "NULL group rows are excluded" contract on the cent
         # side too (base NULL-group rows already vanish in the assign
         # equi-join; the filter just prunes them at the scan).

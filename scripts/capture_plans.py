@@ -8,9 +8,11 @@ construction runs eager jobs (trained codebooks) will execute those, so this
 is not a timing tool — it exists so the optimization round's plan claims are
 checkable without running Spark.
 
-Plans are written normalized: expression ids (``#123``), ``plan_id=123``, RDD
-ids (``MapPartitionsRDD[123]``) and lambda-variable counters (``lambda x_12``)
-become fixed tokens, so two captures of the same plan ``diff`` clean.
+Plans are written normalized: expression ids (``#123``), ``plan_id=123`` and
+RDD ids (``MapPartitionsRDD[123]``) become fixed tokens, and lambda variables
+are renamed ``v1, v2, …`` in order of first appearance, so two captures of the
+same plan ``diff`` clean — also when one built its lambdas from SQL text
+(``lambda h``) and the other with the Column API (``lambda x_190``).
 """
 
 from __future__ import annotations
@@ -29,14 +31,22 @@ from crystal_parquet_database_spark.surface import QUERIES  # noqa: E402
 
 # session-global counters that differ between captures of the same plan
 _VOLATILE = [
-    (re.compile(r"(lambda [A-Za-z]+)_\d+"), r"\1_N"),
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
 ]
+_LAMBDA_VAR = re.compile(r"lambda (\w+)#(\d+)")
 
 
 def normalize(text: str) -> str:
+    # one name per (name, expression id) pair, before the ids are erased
+    names: dict[tuple[str, str], str] = {}
+
+    def canonical(m: re.Match) -> str:
+        name = names.setdefault(m.groups(), f"v{len(names) + 1}")
+        return f"lambda {name}#{m.group(2)}"
+
+    text = _LAMBDA_VAR.sub(canonical, text)
     for pattern, token in _VOLATILE:
         text = pattern.sub(token, text)
     return text

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from crystal_parquet_database_spark.functions.portable_hash import P, minhash_coeffs
 from crystal_parquet_database_spark.operators import dedup as D
 from crystal_parquet_database_spark.plans.inspect import formatted_plan
 from crystal_parquet_database_spark.tables import load_table
@@ -112,6 +113,97 @@ def test_lsh_zero_row_bands_rejected(spark):
     sig = D.minhash_signature(D.shingle_hashes(docs, "text", 3), 8)
     with pytest.raises(ValueError, match="rows_per_band"):
         D.lsh_candidate_pairs(sig, "doc_id", n_bands=4, rows_per_band=0)
+
+
+def _minhash_bands_column_api(hs, id_col, n_hashes, n_bands, rows_per_band):
+    """The Column-API construction of the MinHash signature and LSH band
+    keys — the reference the SQL-string form must reproduce."""
+
+    def affine_min(a, b):
+        return F.array_min(
+            F.transform("hs", lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(P))
+        )
+
+    sig = hs.withColumn(
+        "sig", F.array(*[affine_min(a, b) for a, b in minhash_coeffs(n_hashes)])
+    )
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("band"),
+                F.array_join(
+                    F.transform(
+                        F.slice("sig", i * rows_per_band + 1, rows_per_band),
+                        lambda x: x.cast("string"),
+                    ),
+                    "-",
+                ).alias("key"),
+            )
+            for i in range(n_bands)
+        ]
+    )
+    exploded = sig.select(F.col(id_col), F.explode(bands).alias("b"))
+    return sig, exploded.select(id_col, "b.band", "b.key")
+
+
+def _minhash_frame(spark):
+    # non-empty, empty and NULL shingle sets, next to caller columns named
+    # like the SQL lambda variables (h, x): a lambda that resolved to the
+    # column instead of its own variable would change every value
+    return spark.createDataFrame(
+        [
+            (1, [5, P - 1, 77, 123456789], 11, "q"),
+            (2, [P - 2], 12, "r"),
+            (3, [], 13, "s"),
+            (4, None, None, None),
+        ],
+        "doc_id long, hs array<bigint>, h bigint, x string",
+    )
+
+
+def test_minhash_sql_string_matches_column_api(spark):
+    hs = _minhash_frame(spark)
+    ref_sig, ref_bands = _minhash_bands_column_api(hs, "doc_id", 32, 8, 4)
+    sig = D.minhash_signature(hs, 32)
+    bands = D._band_explode(sig, "doc_id", 8, 4)
+    assert sig.schema.simpleString() == ref_sig.schema.simpleString()
+    assert bands.schema.simpleString() == ref_bands.schema.simpleString()
+    assert sorted(sig.collect()) == sorted(ref_sig.collect())
+    assert sorted(bands.collect()) == sorted(ref_bands.collect())
+    keys = {r["doc_id"]: r["key"] for r in bands.where("band = 0").collect()}
+    assert keys[1].count("-") == 3 and keys[3] == "" and keys[4] == ""
+
+
+def test_minhash_construction_py4j_round_trips(spark, monkeypatch):
+    """Building the signature and band keys costs a fixed handful of py4j
+    calls — the DataFrame plumbing — not a batch of calls per hash or band
+    term (~80 per hash through the Column API, ~3,800 for 32 hashes and
+    8 bands)."""
+    import gc
+
+    import py4j.clientserver
+    import py4j.java_gateway
+
+    hs = _minhash_frame(spark)
+    gc.collect()
+    sent: list[str] = []
+    for conn in (
+        py4j.clientserver.ClientServerConnection,
+        py4j.java_gateway.GatewayConnection,
+    ):
+
+        def counting(self, command, _send=conn.send_command):
+            # deferred garbage-collection notices are not construction work
+            if not command.startswith("m\n"):
+                sent.append(command)
+            return _send(self, command)
+
+        monkeypatch.setattr(conn, "send_command", counting)
+    D._band_explode(D.minhash_signature(hs, 32), "doc_id", 8, 4)
+    small = len(sent)
+    D._band_explode(D.minhash_signature(hs, 64), "doc_id", 16, 4)
+    monkeypatch.undo()
+    assert len(sent) - small == small <= 25, (small, len(sent) - small)
 
 
 def test_null_text_docs_never_pair(spark):

@@ -1062,30 +1062,41 @@ def test_ivfpq_residual_plan_no_cartesian(spark):
 
 
 def test_lit_matrix_bitwise_equals_loop_form(spark):
-    """lit_matrix/lit_vector (round-14: one JVM-parsed expression instead of
+    """lit_matrix/lit_vector (one string literal the JVM decodes, instead of
     k*dim py4j lit() round-trips) must produce element-wise bit-identical
     arrays to the F.array(F.lit(...)) loop form for round-trip-hostile
-    values (long reprs, exponents, negatives, signed zero)."""
+    values (long reprs, exponents, negatives, signed zero, NaN, infinities,
+    the smallest denormal and the largest double), fold to a plain literal
+    in the optimized plan, and raise on a literal that does not decode."""
     import random
 
+    import pytest
+
     from crystal_parquet_database_spark.operators.similarity import (
+        _lit_array,
         lit_matrix,
         lit_vector,
     )
+    from crystal_parquet_database_spark.plans.inspect import formatted_plan
 
     rng = random.Random(20260817)
     mat = [
         [rng.uniform(-1e3, 1e3) for _ in range(7)] for _ in range(5)
-    ] + [[1e-307, -1e307, 0.0, -0.0, 1.5e-5, 3.0, 0.1]]
+    ] + [
+        [1e-307, -1e307, 0.0, -0.0, 1.5e-5, 3.0, 0.1],
+        [
+            float("nan"), float("inf"), float("-inf"), 5e-324,
+            1.7976931348623157e308, -5e-324, 2.0,
+        ],
+    ]
     loop_mat = F.array(
         *[F.array(*[F.lit(float(v)) for v in row]) for row in mat]
     )
-    loop_vec = F.array(*[F.lit(float(v)) for v in mat[0]])
+    loop_vec = F.array(*[F.lit(float(v)) for v in mat[-1]])
 
-    # BIT-level equality, not Spark `==` (round-14 ADVICE: `==` treats -0.0
-    # equal to 0.0, so the signed-zero fixture element was not actually
-    # exercised as a bitwise check). Compare the raw IEEE-754 bit patterns
-    # via Double.doubleToLongBits — the literal definition of "bit-identical".
+    # BIT-level equality, not Spark `==`: `==` treats -0.0 equal to 0.0.
+    # Compare the IEEE-754 bit patterns via Double.doubleToLongBits — the
+    # literal definition of "bit-identical".
     def bits_eq(x, y):
         return F.reflect(
             F.lit("java.lang.Double"), F.lit("doubleToLongBits"), x
@@ -1102,7 +1113,7 @@ def test_lit_matrix_bitwise_equals_loop_form(spark):
             F.forall(
                 F.zip_with(lit_matrix(mat), loop_mat, vec_eq), lambda v: v
             ).alias("m_eq"),
-            vec_eq(lit_vector(mat[0]), loop_vec).alias("v_eq"),
+            vec_eq(lit_vector(mat[-1]), loop_vec).alias("v_eq"),
             # the sign check itself must be live: flipping the zero sign
             # on one side must FAIL the element-wise comparison
             vec_eq(
@@ -1113,6 +1124,19 @@ def test_lit_matrix_bitwise_equals_loop_form(spark):
     )
     assert row["m_eq"] and row["v_eq"]
     assert row["zero_sign_differs"] is False
+
+    # the JSON decode is constant-folded away: no per-row parse in the plan
+    plan = formatted_plan(
+        spark.range(1).select(
+            lit_matrix(mat).alias("m"), lit_vector(mat[-1]).alias("v")
+        )
+    )
+    assert "from_json" not in plan and "JsonToStructs" not in plan
+
+    # FAILFAST: a literal that does not decode raises instead of becoming
+    # a NULL array
+    with pytest.raises(Exception):
+        spark.range(1).select(_lit_array(["oops"], "array<double>")).collect()
 
 
 def test_km_assign_packed_ties_and_carry_vec(spark):
