@@ -21,19 +21,32 @@ DuckDB oracle bit-for-bit.
 
 from __future__ import annotations
 
-import pandas as pd
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from crystal_parquet_database_spark.functions.portable_hash import (
     WS_RE,
+    _gram,
     minhash_coeffs,
     P,
     spark_hash64,
     spark_hash_raw60,
     spark_word_shingles,
 )
+
+
+def content_digest(text_col: str, id_col: str) -> Column:
+    """md5 of the text; NULL text gets a per-row ``'nulltext:<id>'`` key
+    instead (the prefix cannot collide with a 32-hex digest), so no-content
+    rows pair with nothing and never share one partition key."""
+    return F.coalesce(
+        F.md5(F.col(text_col)),
+        F.concat(F.lit("nulltext:"), F.col(id_col).cast("string")),
+    )
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -47,16 +60,12 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     duplicate set — pipeline.dedup_exact would silently delete all but one
     of them — AND ship that whole corpus-scale NULL cohort to a single
     reducer. Each NULL-content row gets its own partition key instead
-    (the 'nulltext:' prefix cannot collide with a 32-hex digest).
+    (``content_digest``).
 
     Scale note: the window shuffles on the 32-hex digest — uniformly
     distributed, no skew; at 100 TB this is the standard dedup shuffle.
     """
-    pkey = F.coalesce(
-        F.md5(F.col(text_col)),
-        F.concat(F.lit("nulltext:"), F.col(id_col).cast("string")),
-    )
-    w = W.partitionBy(pkey)
+    w = W.partitionBy(content_digest(text_col, id_col))
     return df.select(
         F.col(id_col),
         F.min(id_col).over(w).alias("canonical_id"),
@@ -154,18 +163,55 @@ def lsh_candidate_pairs(
         exploded = exploded.withColumn("__n", bucket_n).filter(
             F.col("__n") <= max_bucket_size
         ).drop("__n")
-    left = exploded.alias("l")
-    right = exploded.alias("r")
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
+        bucket_pairs(exploded, id_col, ["band", "key"])
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
+
+
+def bucket_pairs(exploded: DataFrame, id_col: str, keys: list[str]) -> DataFrame:
+    """Banded self-join: every two rows of ``exploded`` equal on all ``keys``
+    (one bucket), the smaller ``id_col`` first; no keys is all pairs. The
+    sides are aliased ``a`` and ``b``; callers select ``a.<col>``/``b.<col>``."""
+    a, b = exploded.alias("a"), exploded.alias("b")
+    conds = [F.col(f"a.{key}") == F.col(f"b.{key}") for key in keys]
+    return a.join(b, reduce(operator.and_, [*conds, F.col(f"a.{id_col}") < F.col(f"b.{id_col}")]))
+
+
+def _rows_per_band(n_hashes: int, n_bands: int) -> int:
+    """Signature rows per LSH band; raises before any Spark job when a band
+    would be empty (n_bands > n_hashes): empty bands put every document in
+    one bucket and the candidate join turns all-pairs."""
+    rows_per_band = n_hashes // n_bands
+    if rows_per_band < 1:
+        raise ValueError(
+            f"n_bands={n_bands} exceeds n_hashes={n_hashes}: each band needs "
+            "at least one signature row (empty bands put every document in "
+            "one bucket and the candidate join turns all-pairs)"
+        )
+    return rows_per_band
+
+
+def _lsh_sets(df: DataFrame, text_col: str, k: int) -> DataFrame:
+    """Non-empty shingle sets (``hs``) of the MinHash LSH paths, computed once.
+
+    Eager localCheckpoint: the CPU-bound shingle/hash stage has several
+    consumers (signature → bands, both sides of the verify join) that would
+    each recompute it — AQE does not reliably reuse the exchange here
+    (measured 1.7× slower). Unlike a session-lifetime cache, the blocks are
+    GC-cleaned once the result frame is dereferenced.
+
+    Empty sets (NULL text) cannot reach a threshold Jaccard with anything,
+    and left in they all share the identical all-NULL signature — one LSH
+    bucket holding every NULL-text doc, a quadratic candidate explosion at
+    scale. The filter sits AFTER the checkpoint: placed before it, Catalyst
+    substitutes the whole shingle+hash expression into the pushed-down
+    predicate and evaluates the pipeline twice per row (measured 5× on
+    ``dedup_minhash_lsh`` at sf0.1); on checkpointed arrays it is a free scan.
+    """
+    hs = shingle_hashes(df, text_col, k).localCheckpoint(eager=True)
+    return hs.filter(F.size("hs") > 0)
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -218,36 +264,14 @@ def minhash_lsh_dedup(
     recipe, and the cap bounds the worst bucket regardless of input shape.
     """
     if collapse_exact:
-        digest = F.md5(F.col(text_col))
-        w = W.partitionBy(digest)
+        w = W.partitionBy(content_digest(text_col, id_col))
         df = (
             df.withColumn("__canon", F.min(id_col).over(w))
             .filter(F.col(id_col) == F.col("__canon"))
             .drop("__canon")
         )
-    rows_per_band = n_hashes // n_bands
-    if rows_per_band < 1:
-        raise ValueError(
-            f"n_bands={n_bands} exceeds n_hashes={n_hashes}: each band needs "
-            "at least one signature row (empty bands put every document in "
-            "one bucket and the candidate join turns all-pairs)"
-        )
-    # Materialize the CPU-bound shingle/hash stage ONCE: three consumers hang
-    # off it (signature→bands, both sides of the verify join) and would each
-    # recompute it (AQE does not reliably reuse the exchange here — measured
-    # 1.7× slower). Eager localCheckpoint runs it a single time and lets the
-    # blocks be GC-cleaned once the result frame is dereferenced, unlike a
-    # session-lifetime cache.
-    hs = shingle_hashes(df, text_col, k).localCheckpoint(eager=True)
-    # Empty shingle sets (NULL text) leave the pipeline HERE: they cannot
-    # reach threshold jaccard with anything, and left in they all share the
-    # identical all-NULL MinHash signature — one LSH bucket holding every
-    # NULL-text doc in the corpus, a quadratic candidate explosion at scale.
-    # The filter sits AFTER the checkpoint: placed before it, Catalyst
-    # substitutes the whole shingle+hash expression into the pushed-down
-    # predicate and evaluates the pipeline twice per row (measured 5×
-    # on this query at sf0.1); on checkpointed arrays it is a free scan.
-    hs = hs.filter(F.size("hs") > 0)
+    rows_per_band = _rows_per_band(n_hashes, n_bands)
+    hs = _lsh_sets(df, text_col, k)
     sig = minhash_signature(hs, n_hashes)
     cand = lsh_candidate_pairs(sig, id_col, n_bands, rows_per_band, max_bucket_size)
     sets_ = hs.select(F.col(id_col), F.col("hs").alias("shset"))
@@ -271,10 +295,8 @@ def ngram_jaccard_pairs(
     """Brute-force exact n-gram Jaccard over all pairs (quadratic — the
     correctness baseline for the LSH path; restrict the input for scale)."""
     hs = shingle_hashes(df, text_col, k).select(F.col(id_col), F.col("hs").alias("shset"))
-    a = hs.alias("a")
-    b = hs.alias("b")
     return (
-        a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        bucket_pairs(hs, id_col, [])
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -330,74 +352,6 @@ def simhash(
     return agg.select(F.col(id_col), fp.alias("simhash"))
 
 
-def minhash_lsh_ml(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.8,
-    k: int = 3,
-    num_hash_tables: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Alternative near-dup path on spark.ml's MinHashLSH (approxSimilarityJoin).
-
-    Same shingling as the native pipeline; shingle-hash sets become binary
-    sparse vectors. Jaccard DISTANCE threshold = 1 - similarity threshold.
-    Seeded, so results are reproducible — but the hash family is Spark-ML's
-    own, so this variant is validated against the native exact pipeline in
-    tests rather than against the DuckDB oracle.
-    """
-    from pyspark.ml.feature import MinHashLSH
-    from pyspark.ml.linalg import VectorUDT
-
-    hs = shingle_hashes(df, text_col, k).select(F.col(id_col), F.col("hs"))
-    # shingle_hashes emits a NULL-free DISTINCT hash set; NULL text arrives
-    # as hs=[] — an empty set would become an empty vector, which MinHashLSH
-    # rejects outright. Rows with no shingle hash cannot pair with anything,
-    # so drop them up front (same filter as the native LSH entry points).
-    hs = hs.filter(F.size("hs") > 0)
-
-    # MinHashLSH requires dim < ~2.04e9 (its internal hash prime); fold the
-    # 31-bit shingle hashes into 2^30 — collision odds are negligible for
-    # per-doc set sizes and only perturb the ML variant, not the native path.
-    dim = 1 << 30
-
-    # Arrow-batched conversion to ml sparse vectors. A pandas_udf with a UDT
-    # return type emits the UDT's *storage struct* — for VectorUDT that is
-    # (type, size, indices, values) with type=0 meaning sparse.
-    @F.pandas_udf(VectorUDT())
-    def to_vec(arrs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for arr in arrs:
-            # hs is NULL-free by shingle_hashes' contract; the mod just
-            # folds 31-bit hashes into the LSH dimension
-            idx = sorted({int(h) % dim for h in arr})
-            rows.append((0, dim, idx, [1.0] * len(idx)))
-        return pd.DataFrame(rows, columns=["type", "size", "indices", "values"])
-
-    vecs = hs.select(F.col(id_col), to_vec("hs").alias("features")).cache()
-    try:
-        mh = MinHashLSH(
-            inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
-        )
-        model = mh.fit(vecs)
-        pairs = model.approxSimilarityJoin(vecs, vecs, 1.0 - threshold, distCol="dist")
-        out = (
-            pairs.filter(F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}"))
-            .select(
-                F.col(f"datasetA.{id_col}").alias("id_a"),
-                F.col(f"datasetB.{id_col}").alias("id_b"),
-                (F.lit(1.0) - F.col("dist")).alias("jaccard"),
-            )
-        )
-        # materialize the (small) pair set so the big vector cache can be
-        # released before returning — otherwise every call leaks a cached
-        # 2^30-dim sparse-vector frame for the session lifetime
-        return out.localCheckpoint(eager=True)
-    finally:
-        vecs.unpersist()
-
-
 def simhash_near_pairs(
     sim_df: DataFrame, id_col: str, max_hamming: int = 4, bits: int = 32
 ) -> DataFrame:
@@ -433,16 +387,9 @@ def simhash_near_pairs(
     exploded = sim_df.select(
         F.col(id_col), F.col("simhash"), F.explode(F.array(*bands)).alias("b")
     ).select(id_col, "simhash", "b.band", "b.val")
-    a = exploded.alias("a")
-    b = exploded.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
+        bucket_pairs(exploded, id_col, ["band", "val"])
         .filter(ham <= max_hamming)
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
@@ -547,11 +494,9 @@ def simhash_near_pairs_bruteforce(
 ) -> DataFrame:
     """All-pairs Hamming comparison (quadratic) — the correctness oracle for
     the banded path; restrict the input for scale."""
-    a = sim_df.alias("a")
-    b = sim_df.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
-        a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        bucket_pairs(sim_df, id_col, [])
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -689,31 +634,14 @@ def minhash_lsh_incremental(
 
     Returns (id_new, id_old, jaccard) with jaccard >= threshold.
     """
-    rows_per_band = n_hashes // n_bands
-    if rows_per_band < 1:
-        raise ValueError(
-            f"n_bands={n_bands} exceeds n_hashes={n_hashes}: each band needs "
-            "at least one signature row"
-        )
-    # drop empty shingle sets (NULL text) before banding — all-NULL
-    # signatures would co-bucket every NULL-text doc (see minhash_lsh_dedup).
-    # Filter AFTER the checkpoint: pushed below it, the predicate re-runs
-    # the whole shingle+hash expression per row (see minhash_lsh_dedup).
+    rows_per_band = _rows_per_band(n_hashes, n_bands)
     # The two checkpoints stay serial rather than going through
     # runtime.concurrently: overlap pays only when one side is driver-bound
     # (the trained-quantizer collects), while these are both dense
     # CPU-bound shingle/hash jobs with no idle stage tail to back-fill, so
     # overlapping them only adds contention (measured 1.17-1.25× slower).
-    hs_new = (
-        shingle_hashes(df_new, text_col, k)
-        .localCheckpoint(eager=True)
-        .filter(F.size("hs") > 0)
-    )
-    hs_old = (
-        shingle_hashes(df_old, text_col, k)
-        .localCheckpoint(eager=True)
-        .filter(F.size("hs") > 0)
-    )
+    hs_new = _lsh_sets(df_new, text_col, k)
+    hs_old = _lsh_sets(df_old, text_col, k)
     bands_new = _band_explode(
         minhash_signature(hs_new, n_hashes), id_col, n_bands, rows_per_band
     ).select(F.col(id_col).alias("id_new"), "band", "key")
@@ -880,8 +808,6 @@ def duplicate_token_spans(
         .select(F.col(id_col).alias("__id"), toks.alias("__w"))
         .where(F.size(F.col("__w")) >= k)
     )
-    from crystal_parquet_database_spark.functions.portable_hash import _gram
-
     grams = base.select(
         "__id",
         F.posexplode(

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from crystal_parquet_database_spark.operators.dedup import bucket_pairs
+
 # Deterministic "random" hyperplane component: w(j, k) for hyperplane j,
 # dimension k — an LCG step mapped to [-1000, 1000]. Integer-exact in both
 # engines; cast to double only at the multiply. The index stride is DIM,
@@ -474,19 +476,12 @@ def embedding_near_dup_lsh(
         "__id", "__vec", "__norm", F.explode(F.array(*bands)).alias("b")
     ).select("__id", "__vec", "__norm", "b.band", "b.key").localCheckpoint(eager=True)
 
-    a = exploded.alias("a")
-    b = exploded.alias("b")
     cos = _cos_div(
         dot(F.col("a.__vec"), F.col("b.__vec")),
         F.col("a.__norm") * F.col("b.__norm"),
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
+        bucket_pairs(exploded, "__id", ["band", "key"])
         .select(
             F.col("a.__id").alias("id_a"),
             F.col("b.__id").alias("id_b"),

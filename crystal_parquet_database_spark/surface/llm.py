@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from crystal_parquet_database_spark.functions.portable_hash import (
     N_MINHASH,
     P,
+    _sql_gram,
     minhash_coeffs,
     sql_hash64,
     sql_hash_raw60,
@@ -35,10 +36,15 @@ from crystal_parquet_database_spark.tables import load_table
 # dedup: exact
 # ----------------------------------------------------------------------------
 
-_EXACT_ORACLE = """
+# NULL text gets a per-row sentinel digest (D.content_digest): md5(NULL) is
+# NULL, and a NULL digest would either group every no-content row into one
+# duplicate set or drop it from an equi-join; no content pairs with nothing.
+_NULLTEXT_DIGEST = "COALESCE(md5(text), 'nulltext:' || CAST(doc_id AS VARCHAR))"
+
+_EXACT_ORACLE = f"""
 SELECT doc_id,
-       MIN(doc_id) OVER (PARTITION BY COALESCE(md5(text), 'nulltext:' || CAST(doc_id AS VARCHAR))) AS canonical_id,
-       doc_id <> MIN(doc_id) OVER (PARTITION BY COALESCE(md5(text), 'nulltext:' || CAST(doc_id AS VARCHAR))) AS is_dup
+       MIN(doc_id) OVER (PARTITION BY {_NULLTEXT_DIGEST}) AS canonical_id,
+       doc_id <> MIN(doc_id) OVER (PARTITION BY {_NULLTEXT_DIGEST}) AS is_dup
 FROM documents
 """
 
@@ -80,33 +86,61 @@ _JACC = (
     " - len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS DOUBLE)"
 )
 
-_MINHASH_ORACLE = f"""
-WITH {_HS_CTE},
-sig AS (SELECT doc_id, hs, [{_SIG_LIST}] AS sig FROM hs),
+
+def _sql_jaccard_pairs(cols: str, source: str, tau: float) -> str:
+    """Verify select: ``cols`` plus the exact Jaccard of the shingle sets
+    ``a.hs``/``b.hs`` that ``source`` joins, for pairs at or above ``tau``."""
+    return f"""SELECT * FROM (
+  SELECT {cols}, {_JACC} AS jaccard
+  FROM {source}
+) WHERE jaccard >= {tau}"""
+
+
+def _sql_brute_pairs(tau: float) -> str:
+    """All-pairs exact Jaccard over ``hs`` — the quadratic baseline."""
+    return _sql_jaccard_pairs(
+        "a.doc_id AS id_a, b.doc_id AS id_b", "hs a JOIN hs b ON a.doc_id < b.doc_id", tau
+    )
+
+
+# MinHash signature and LSH band keys over ``hs`` (minhash_signature and
+# _band_explode in operators/dedup.py)
+_BANDS_CTES = f"""sig AS (SELECT doc_id, hs, [{_SIG_LIST}] AS sig FROM hs),
 bands AS (
   SELECT doc_id, g.i AS band,
          array_to_string(list_transform(list_slice(sig, g.i*{_ROWS}+1, g.i*{_ROWS}+{_ROWS}),
                                         x -> CAST(x AS VARCHAR)), '-') AS key
   FROM sig, generate_series(0, {_BANDS - 1}) g(i)
-),
-cand AS (
+)"""
+
+_LSH_PAIRS = """cand AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
+)"""
+
+_LSH_VERIFY = _sql_jaccard_pairs(
+    "id_a, id_b", "cand JOIN hs a ON cand.id_a = a.doc_id JOIN hs b ON cand.id_b = b.doc_id",
+    _THRESH,
 )
-SELECT * FROM (
-  SELECT id_a, id_b, {_JACC} AS jaccard
-  FROM cand JOIN hs a ON cand.id_a = a.doc_id JOIN hs b ON cand.id_b = b.doc_id
-) WHERE jaccard >= {_THRESH}
+
+_MINHASH_ORACLE = f"""
+WITH {_HS_CTE},
+{_BANDS_CTES},
+{_LSH_PAIRS}
+{_LSH_VERIFY}
 """
 
 
-@query("dedup_minhash_lsh", _MINHASH_ORACLE)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+def _minhash_pairs(docs: DataFrame) -> DataFrame:
     return D.minhash_lsh_dedup(
         docs, "text", "doc_id", threshold=_THRESH, k=_K, n_hashes=N_MINHASH,
         n_bands=_BANDS,
     )
+
+
+@query("dedup_minhash_lsh", _MINHASH_ORACLE)
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _minhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
 # ----------------------------------------------------------------------------
@@ -115,10 +149,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NGRAM_ORACLE = f"""
 WITH {_HS_CTE}
-SELECT * FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, {_JACC} AS jaccard
-  FROM hs a JOIN hs b ON a.doc_id < b.doc_id
-) WHERE jaccard >= 0.7
+{_sql_brute_pairs(0.7)}
 """
 
 
@@ -131,38 +162,18 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# dedup-config evaluation (round 13, registered below the fold → first
-# driver row at the round-14 head per the r5 precedent): banding recall of
-# the MinHash-LSH pair search against exact all-pairs Jaccard truth at the
-# SAME threshold — the (bands, rows) S-curve check a pipeline runs before
-# trusting its dedup config, the dedup counterpart of recall@k for ANN.
+# dedup-config evaluation: banding recall of the MinHash-LSH pair search
+# against exact all-pairs Jaccard truth at the SAME threshold — the
+# (bands, rows) S-curve check a pipeline runs before trusting its dedup
+# config, the dedup counterpart of recall@k for ANN.
 # ----------------------------------------------------------------------------
 
 _LSH_EVAL_ORACLE = f"""
 WITH {_HS_CTE},
-truth AS (
-  SELECT id_a, id_b FROM (
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, {_JACC} AS jaccard
-    FROM hs a JOIN hs b ON a.doc_id < b.doc_id
-  ) WHERE jaccard >= {_THRESH}
-),
-sig AS (SELECT doc_id, hs, [{_SIG_LIST}] AS sig FROM hs),
-bands AS (
-  SELECT doc_id, g.i AS band,
-         array_to_string(list_transform(list_slice(sig, g.i*{_ROWS}+1, g.i*{_ROWS}+{_ROWS}),
-                                        x -> CAST(x AS VARCHAR)), '-') AS key
-  FROM sig, generate_series(0, {_BANDS - 1}) g(i)
-),
-cand AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id
-),
-found AS (
-  SELECT id_a, id_b FROM (
-    SELECT id_a, id_b, {_JACC} AS jaccard
-    FROM cand JOIN hs a ON cand.id_a = a.doc_id JOIN hs b ON cand.id_b = b.doc_id
-  ) WHERE jaccard >= {_THRESH}
-),
+truth AS (SELECT id_a, id_b FROM ({_sql_brute_pairs(_THRESH)})),
+{_BANDS_CTES},
+{_LSH_PAIRS},
+found AS (SELECT id_a, id_b FROM ({_LSH_VERIFY})),
 t AS (SELECT COUNT(*) AS n_true FROM truth),
 f AS (SELECT COUNT(*) AS n_found FROM found),
 h AS (SELECT COUNT(*) AS n_hit
@@ -182,7 +193,7 @@ FROM t, f, h
 
 @query("eval_lsh_pair_recall", _LSH_EVAL_ORACLE)
 def eval_lsh_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured LSH banding quality (round 13): exact all-pairs Jaccard ≥ τ
+    """Measured LSH banding quality: exact all-pairs Jaccard ≥ τ
     is the pair ground truth; the production MinHash-LSH path (same
     threshold, same shingles) is the approximation; output is ONE row of
     exact confusion counts plus recall/precision of the banded search —
@@ -197,10 +208,7 @@ def eval_lsh_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = D.ngram_jaccard_pairs(
         docs, "text", "doc_id", threshold=_THRESH, k=_K
     ).select("id_a", "id_b")
-    found = D.minhash_lsh_dedup(
-        docs, "text", "doc_id", threshold=_THRESH, k=_K, n_hashes=N_MINHASH,
-        n_bands=_BANDS,
-    ).select(F.col("id_a").alias("__fa"), F.col("id_b").alias("__fb"))
+    found = _minhash_pairs(docs).select(F.col("id_a").alias("__fa"), F.col("id_b").alias("__fb"))
     t = truth.agg(F.count("*").cast("bigint").alias("n_true"))
     f = found.agg(F.count("*").cast("bigint").alias("n_found"))
     h = truth.join(
@@ -269,23 +277,45 @@ def dedup_simhash_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.simhash(docs, "text", "doc_id", bits=_BITS, k=_K)
 
 
-_SIMHASH_PAIRS_ORACLE = f"""
-WITH {_SIMHASH_CTES.strip()}
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+# fingerprint pairs within Hamming radius _HAM (simhash_near_pairs)
+_SIMHASH_NEAR = f"""SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAM}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAM}"""
+
+_SIMHASH_PAIRS_ORACLE = f"""
+WITH {_SIMHASH_CTES.strip()}
+{_SIMHASH_NEAR}
 """
 
 
-@query("dedup_simhash_near_pairs", _SIMHASH_PAIRS_ORACLE)
-def dedup_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+def _sql_components(nodes: str) -> str:
+    """``ed``/``reach`` CTEs of connected_components: min-label propagation
+    over the pair CTE ``p`` (id_a, id_b), every ``doc_id`` of ``nodes``
+    seeding its own label. Needs ``WITH RECURSIVE``; ``_CC`` is the tail."""
+    return f"""ed AS (SELECT id_a AS src, id_b AS dst FROM p
+       UNION ALL SELECT id_b, id_a FROM p),
+reach(id, lab) AS (
+  SELECT doc_id, doc_id FROM {nodes}
+  UNION
+  SELECT ed.dst, reach.lab FROM reach JOIN ed ON ed.src = reach.id
+)"""
+
+
+_CC = "SELECT id AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY id"
+
+
+def _simhash_pairs(docs: DataFrame) -> DataFrame:
     # Both sides of the banded self-join consume the fingerprint subtree;
     # Spark's ReusedExchange computes it once (verified — an explicit
     # localCheckpoint barrier measured no faster).
     fp = D.simhash(docs, "text", "doc_id", bits=_BITS, k=_K)
     return D.simhash_near_pairs(fp, "doc_id", max_hamming=_HAM, bits=_BITS)
+
+
+@query("dedup_simhash_near_pairs", _SIMHASH_PAIRS_ORACLE)
+def dedup_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _simhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
 # ----------------------------------------------------------------------------
@@ -920,19 +950,9 @@ def text_repetition_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CC_ORACLE = f"""
 WITH RECURSIVE {_SIMHASH_CTES.strip()},
-p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAM}
-),
-ed AS (SELECT id_a AS src, id_b AS dst FROM p
-       UNION ALL SELECT id_b, id_a FROM p),
-reach(id, lab) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT ed.dst, reach.lab FROM reach JOIN ed ON ed.src = reach.id
-)
-SELECT id AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY id
+p AS ({_SIMHASH_NEAR}),
+{_sql_components("documents")}
+{_CC}
 """
 
 
@@ -943,9 +963,7 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     min doc_id in its component; singletons label themselves). The keep-one
     policy of a dedup pipeline is then `WHERE doc_id = cluster_id`."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = D.simhash(docs, "text", "doc_id", bits=_BITS, k=_K)
-    pairs = D.simhash_near_pairs(fp, "doc_id", max_hamming=_HAM, bits=_BITS)
-    return D.connected_components(pairs, docs.select("doc_id"), "doc_id")
+    return D.connected_components(_simhash_pairs(docs), docs.select("doc_id"), "doc_id")
 
 
 # ----------------------------------------------------------------------------
@@ -1864,20 +1882,17 @@ def sim_label_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _INCR_CUT = 250  # doc_id < cut = "historical corpus"; >= cut = "new batch"
 
-# COALESCE per-row sentinel for NULL text (the exact_dedup convention):
-# md5(NULL) is NULL, and the plain digest equi-joins below would silently
-# DROP every NULL-text new-batch doc from the audit output (the inner join
-# to first_in_batch never matches NULL) — exactly the rows a curation run
-# most needs flagged. The sentinel makes each no-content doc its own
-# digest: present in the audit as 'kept', never cross-matched to another
-# no-content doc (no content pairs with nothing).
+# _NULLTEXT_DIGEST, not bare md5: the inner join to first_in_batch never
+# matches a NULL digest, so NULL-text new-batch docs would silently drop out
+# of the audit — exactly the rows a curation run most needs flagged. With
+# the sentinel each is its own digest, 'kept', never cross-matched.
 _INCR_ORACLE = f"""
 WITH old_idx AS (
-  SELECT DISTINCT COALESCE(md5(text), 'nulltext:' || CAST(doc_id AS VARCHAR)) AS digest
+  SELECT DISTINCT {_NULLTEXT_DIGEST} AS digest
   FROM documents WHERE doc_id < {_INCR_CUT}
 ),
 new_batch AS (
-  SELECT doc_id, COALESCE(md5(text), 'nulltext:' || CAST(doc_id AS VARCHAR)) AS digest
+  SELECT doc_id, {_NULLTEXT_DIGEST} AS digest
   FROM documents WHERE doc_id >= {_INCR_CUT}
 ),
 first_in_batch AS (
@@ -1902,11 +1917,7 @@ def dedup_incremental_new_vs_index(spark: SparkSession, sf_dir: str) -> DataFram
     digest-bucketed sort-merge join; history is never rescanned. Statuses:
     kept / dup_of_history / dup_within_batch."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # per-row NULL sentinel — see the oracle comment above
-    digest = F.coalesce(
-        F.md5(F.col("text")),
-        F.concat(F.lit("nulltext:"), F.col("doc_id").cast("string")),
-    )
+    digest = D.content_digest("text", "doc_id")
     old_idx = (
         docs.filter(F.col("doc_id") < _INCR_CUT)
         .select(digest.alias("digest"))
@@ -2817,24 +2828,17 @@ _INC_OLD = "doc_id % 10 <> 0"
 
 _MINHASH_INC_ORACLE = f"""
 WITH {_HS_CTE},
-sig AS (SELECT doc_id, hs, [{_SIG_LIST}] AS sig FROM hs),
-bands AS (
-  SELECT doc_id, g.i AS band,
-         array_to_string(list_transform(list_slice(sig, g.i*{_ROWS}+1, g.i*{_ROWS}+{_ROWS}),
-                                        x -> CAST(x AS VARCHAR)), '-') AS key
-  FROM sig, generate_series(0, {_BANDS - 1}) g(i)
-),
+{_BANDS_CTES},
 cand AS (
   SELECT DISTINCT n.doc_id AS id_new, o.doc_id AS id_old
   FROM bands n JOIN bands o ON n.band = o.band AND n.key = o.key
   WHERE n.{_INC_NEW} AND o.{_INC_OLD}
 )
-SELECT * FROM (
-  SELECT id_new, id_old,
-         {_JACC}
-           AS jaccard
-  FROM cand JOIN hs a ON cand.id_new = a.doc_id JOIN hs b ON cand.id_old = b.doc_id
-) WHERE jaccard >= {_THRESH}
+{_sql_jaccard_pairs(
+    "id_new, id_old",
+    "cand JOIN hs a ON cand.id_new = a.doc_id JOIN hs b ON cand.id_old = b.doc_id",
+    _THRESH,
+)}
 """
 
 
@@ -3004,19 +3008,9 @@ _QUAL_EXPR_SQL = rf"""
 
 _CC_REP_ORACLE = rf"""
 WITH RECURSIVE {_SIMHASH_CTES.strip()},
-p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAM}
-),
-ed AS (SELECT id_a AS src, id_b AS dst FROM p
-       UNION ALL SELECT id_b, id_a FROM p),
-reach(id, lab) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT ed.dst, reach.lab FROM reach JOIN ed ON ed.src = reach.id
-),
-comp AS (SELECT id AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY id),
+p AS ({_SIMHASH_NEAR}),
+{_sql_components("documents")},
+comp AS ({_CC}),
 qf AS (
   SELECT doc_id,
          CAST(LEN(STRING_SPLIT_REGEX(TRIM(text, ' '), '\s+')) AS INTEGER) AS n_words,
@@ -3049,17 +3043,15 @@ def dedup_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     a ``max(struct)`` aggregate — map-side partials, no per-cluster window
     over the full corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = D.simhash(docs, "text", "doc_id", bits=_BITS, k=_K)
-    pairs = D.simhash_near_pairs(fp, "doc_id", max_hamming=_HAM, bits=_BITS)
-    comp = D.connected_components(pairs, docs.select("doc_id"), "doc_id")
+    comp = D.connected_components(_simhash_pairs(docs), docs.select("doc_id"), "doc_id")
     q = T.quality_features(docs.select("doc_id", "text"), "text", _STOPWORDS).select(
         "doc_id", "quality_score"
     )
     # Materialize (doc_id, cluster_id, quality_score) ONCE (guide §3.3):
     # two consumers below (the per-cluster argmax and the final join back)
     # otherwise each re-run the quality text scan AND the component
-    # singleton anti-join — the round-15 before-plan shows the whole
-    # subtree duplicated (two parquet scans of documents).
+    # singleton anti-join (the unmaterialized plan holds the whole subtree
+    # twice: two parquet scans of documents).
     j = comp.join(q, "doc_id").localCheckpoint(eager=True)
     best = j.groupBy("cluster_id").agg(
         F.max(
@@ -3844,10 +3836,7 @@ _PREFIX_TAU = 0.7
 
 _PREFIX_ORACLE = f"""
 WITH {_HS_CTE}
-SELECT * FROM (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, {_JACC} AS jaccard
-  FROM hs a JOIN hs b ON a.doc_id < b.doc_id
-) WHERE jaccard >= {_PREFIX_TAU}
+{_sql_brute_pairs(_PREFIX_TAU)}
 """
 
 
@@ -3866,18 +3855,10 @@ def dedup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# dedup: exact-substring span dedup (Lee et al. 2022) + edit-distance
-# near-dup — NEW in round 11; registered past the frozen 50-query window,
-# so their first driver rows land in round 12 (the r5 new-query precedent);
-# until then both are covered by the six sweep corpora (every oracle-paired
-# query runs in every sweep) and pytest.
+# dedup: exact-substring span dedup (Lee et al. 2022) + edit-distance near-dup
 # ----------------------------------------------------------------------------
 
 _SPAN_K = 5
-
-from crystal_parquet_database_spark.functions.portable_hash import (  # noqa: E402
-    _sql_gram,
-)
 
 _SPAN_GRAM_HASH = sql_hash_raw60(_sql_gram(_SPAN_K))
 
@@ -3955,7 +3936,7 @@ FROM base b LEFT JOIN dup d USING (doc_id)
 
 @query("text_duplication_fraction", _DUP_FRAC_ORACLE)
 def text_duplication_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document duplicated-token fraction (round 12) — the FILTER signal
+    """Per-document duplicated-token fraction — the FILTER signal
     Lee et al. 2022 actually act on: the maximal duplicate spans from
     text_duplicate_spans summed per document over its token count (spans
     are disjoint after the island merge, so the sum is the exact duplicated
@@ -3992,10 +3973,14 @@ _ED_BLOCK_LIST = ", ".join(
     for i in range(_ED_HEAD // _ED_BLOCK)
 )
 
-_EDIT_DIST_ORACLE = f"""
-WITH d AS (
-  SELECT doc_id, substr(trim(text, ' '), 1, {_ED_HEAD}) AS h,
-         length(substr(trim(text, ' '), 1, {_ED_HEAD})) AS l
+
+def _sql_ed_cands(h: str) -> str:
+    """PassJoin CTEs of edit_distance_near_dup_pairs: ``d`` holds each
+    ASCII document's verify text ``h`` (an expression over ``text``) and its
+    length; ``cand`` the pairs sharing a df-capped block of its first
+    _ED_HEAD chars. ``_ED_VERIFY`` is the matching verify select."""
+    return f"""d AS (
+  SELECT doc_id, {h} AS h, length({h}) AS l
   FROM documents
   WHERE text IS NOT NULL AND strlen(text) = length(text)
 ),
@@ -4014,49 +3999,39 @@ cand AS (
   SELECT DISTINCT a.doc_id AS id_a, x.doc_id AS id_b
   FROM blk a JOIN blk x
     ON a.bi = x.bi AND a.blk = x.blk AND a.doc_id < x.doc_id
-)
-SELECT c.id_a, c.id_b, CAST(levenshtein(da.h, dx.h) AS INTEGER) AS dist
+)"""
+
+
+_ED_VERIFY = f"""SELECT c.id_a, c.id_b, CAST(levenshtein(da.h, dx.h) AS INTEGER) AS dist
 FROM cand c
 JOIN d da ON da.doc_id = c.id_a
 JOIN d dx ON dx.doc_id = c.id_b
-WHERE abs(da.l - dx.l) <= {_ED_DIST} AND levenshtein(da.h, dx.h) <= {_ED_DIST}
-"""
+WHERE abs(da.l - dx.l) <= {_ED_DIST} AND levenshtein(da.h, dx.h) <= {_ED_DIST}"""
 
+_ED_HEAD_TEXT = f"substr(trim(text, ' '), 1, {_ED_HEAD})"
+
+_EDIT_DIST_ORACLE = f"""
+WITH {_sql_ed_cands(_ED_HEAD_TEXT)}
+{_ED_VERIFY}
+"""
 
 _EDIT_DIST_FULL_ORACLE = f"""
-WITH d AS (
-  SELECT doc_id, trim(text, ' ') AS h, length(trim(text, ' ')) AS l
-  FROM documents
-  WHERE text IS NOT NULL AND strlen(text) = length(text)
-),
-blk0 AS (
-  SELECT doc_id,
-         unnest(generate_series(0, {_ED_HEAD // _ED_BLOCK - 1})) AS bi,
-         unnest([{_ED_BLOCK_LIST}]) AS blk
-  FROM d
-),
-blk1 AS (SELECT * FROM blk0 WHERE blk <> ''),
-bc AS (
-  SELECT bi, blk FROM blk1 GROUP BY bi, blk HAVING COUNT(*) <= {_ED_MAX_DF}
-),
-blk AS (SELECT b.* FROM blk1 b JOIN bc USING (bi, blk)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, x.doc_id AS id_b
-  FROM blk a JOIN blk x
-    ON a.bi = x.bi AND a.blk = x.blk AND a.doc_id < x.doc_id
-)
-SELECT c.id_a, c.id_b, CAST(levenshtein(da.h, dx.h) AS INTEGER) AS dist
-FROM cand c
-JOIN d da ON da.doc_id = c.id_a
-JOIN d dx ON dx.doc_id = c.id_b
-WHERE abs(da.l - dx.l) <= {_ED_DIST} AND levenshtein(da.h, dx.h) <= {_ED_DIST}
+WITH {_sql_ed_cands("trim(text, ' ')")}
+{_ED_VERIFY}
 """
+
+
+def _ed_pairs(docs: DataFrame, full_text: bool = False) -> DataFrame:
+    return D.edit_distance_near_dup_pairs(
+        docs, "doc_id", "text", max_dist=_ED_DIST, head_len=_ED_HEAD,
+        block_w=_ED_BLOCK, max_df=_ED_MAX_DF, full_text=full_text,
+    )
 
 
 @query("dedup_edit_distance_full", _EDIT_DIST_FULL_ORACLE)
 def dedup_edit_distance_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-text edit-distance near-dup pairs (round-12, the verdict-6
-    extension of dedup_edit_distance_pairs): the 48-char head stays the
+    """Full-text edit-distance near-dup pairs (the full-text mode of
+    dedup_edit_distance_pairs): the 48-char head stays the
     PassJoin blocking key, but candidates are verified with Levenshtein
     over the FULL trimmed document — PassJoin's filter-verify split (Li et
     al. 2011). Two bounds keep verification linear-ish: the exact
@@ -4067,61 +4042,22 @@ def dedup_edit_distance_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     block-frequency cap as the head query; the oracle reproduces the
     identical head banding, so the result is bit-deterministic. The head
     query remains the product default for title/boilerplate near-dup
-    (SCALE.md round-12 records the mode-choice note and the measured 10x
-    replica point for this mode)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return D.edit_distance_near_dup_pairs(
-        docs, "doc_id", "text",
-        max_dist=_ED_DIST, head_len=_ED_HEAD, block_w=_ED_BLOCK,
-        max_df=_ED_MAX_DF, full_text=True,
-    )
+    (SCALE.md records the mode-choice note and the measured 10x replica
+    point for this mode)."""
+    return _ed_pairs(load_table(spark, sf_dir, "documents"), full_text=True)
 
 
 _EDIT_CC_ORACLE = f"""
-WITH RECURSIVE d AS (
-  SELECT doc_id, substr(trim(text, ' '), 1, {_ED_HEAD}) AS h,
-         length(substr(trim(text, ' '), 1, {_ED_HEAD})) AS l
-  FROM documents
-  WHERE text IS NOT NULL AND strlen(text) = length(text)
-),
-blk0 AS (
-  SELECT doc_id,
-         unnest(generate_series(0, {_ED_HEAD // _ED_BLOCK - 1})) AS bi,
-         unnest([{_ED_BLOCK_LIST}]) AS blk
-  FROM d
-),
-blk1 AS (SELECT * FROM blk0 WHERE blk <> ''),
-bc AS (
-  SELECT bi, blk FROM blk1 GROUP BY bi, blk HAVING COUNT(*) <= {_ED_MAX_DF}
-),
-blk AS (SELECT b.* FROM blk1 b JOIN bc USING (bi, blk)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, x.doc_id AS id_b
-  FROM blk a JOIN blk x
-    ON a.bi = x.bi AND a.blk = x.blk AND a.doc_id < x.doc_id
-),
-p AS (
-  SELECT c.id_a, c.id_b
-  FROM cand c
-  JOIN d da ON da.doc_id = c.id_a
-  JOIN d dx ON dx.doc_id = c.id_b
-  WHERE abs(da.l - dx.l) <= {_ED_DIST}
-    AND levenshtein(da.h, dx.h) <= {_ED_DIST}
-),
-ed AS (SELECT id_a AS src, id_b AS dst FROM p
-       UNION ALL SELECT id_b, id_a FROM p),
-reach(id, lab) AS (
-  SELECT doc_id, doc_id FROM d
-  UNION
-  SELECT ed.dst, reach.lab FROM reach JOIN ed ON ed.src = reach.id
-)
-SELECT id AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY id
+WITH RECURSIVE {_sql_ed_cands(_ED_HEAD_TEXT)},
+p AS ({_ED_VERIFY}),
+{_sql_components("d")}
+{_CC}
 """
 
 
 @query("dedup_edit_distance_clusters", _EDIT_CC_ORACLE)
 def dedup_edit_distance_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typo-level dedup GROUPS (round 12): the PassJoin-banded edit-distance
+    """Typo-level dedup GROUPS: the PassJoin-banded edit-distance
     pair graph collapsed to connected components — near-identical heads
     chained through intermediate variants land in ONE cluster (A~B, B~C
     groups A,B,C even when A-C exceeds max_dist alone), which is what the
@@ -4131,11 +4067,7 @@ def dedup_edit_distance_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents the pair stage scans, so singletons label themselves and
     excluded (non-ASCII / NULL) docs are absent on BOTH sides."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.edit_distance_near_dup_pairs(
-        docs, "doc_id", "text",
-        max_dist=_ED_DIST, head_len=_ED_HEAD, block_w=_ED_BLOCK,
-        max_df=_ED_MAX_DF,
-    ).select("id_a", "id_b")
+    pairs = _ed_pairs(docs).select("id_a", "id_b")
     t = F.col("text")
     nodes = docs.where(
         t.isNotNull() & (F.octet_length(t) == F.length(t))
@@ -4148,9 +4080,9 @@ def dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typo-level near-duplicate pairs: Levenshtein <= {dist} over the
     48-char document head. Candidates via PassJoin-style fixed-position
     BLOCK banding — one equi-join on (block_index, 8-char block content),
-    the MinHash-LSH plan family; the first (length-bucket) design
-    degenerated to all-pairs on the 10x replica because truncated heads
-    all share one length, caught and replaced the same round. Pigeonhole:
+    the MinHash-LSH plan family; length buckets would degenerate to
+    all-pairs (measured on the 10x replica) because truncated heads all
+    share one length. Pigeonhole:
     substitution-only pairs touching <=5 of the 6 blocks share >=1 —
     guaranteed candidates; indel recall approximate but the banding is
     reproduced EXACTLY by this oracle, so the result is bit-deterministic
@@ -4164,12 +4096,7 @@ def dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates from 5k docs without it on the low-entropy fixture
     vocabulary; corpus-hot blocks identify the language, not the
     document)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return D.edit_distance_near_dup_pairs(
-        docs, "doc_id", "text",
-        max_dist=_ED_DIST, head_len=_ED_HEAD, block_w=_ED_BLOCK,
-        max_df=_ED_MAX_DF,
-    )
+    return _ed_pairs(load_table(spark, sf_dir, "documents"))
 
 
 # ----------------------------------------------------------------------------

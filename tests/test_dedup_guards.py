@@ -80,6 +80,27 @@ def test_lsh_collapse_exact_keeps_near_dup_pairs(spark):
     assert {(r["id_a"], r["id_b"]) for r in out} == {(0, 100_000)}
 
 
+def test_lsh_collapse_exact_partitions_on_null_safe_digest(spark, monkeypatch):
+    """collapse_exact partitions its window on content_digest, not bare
+    md5(text): md5(NULL) is NULL, which would send every NULL-text row to
+    one reducer (the skew exact_dedup's per-row sentinel avoids). The
+    collapsed frame is read where it enters the eager shingle checkpoint,
+    since the returned plan starts after that checkpoint."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, None)], "doc_id long, text string"
+    )
+    seen = []
+    real = D.shingle_hashes
+
+    def recording(df, *args, **kwargs):
+        seen.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(D, "shingle_hashes", recording)
+    D.minhash_lsh_dedup(docs, "text", "doc_id", collapse_exact=True)
+    assert len(seen) == 1 and "nulltext:" in seen[0]
+
+
 def test_connected_components_raises_on_nonconvergence(spark):
     """Regression: a chain longer than max_iter hops must RAISE, not return
     silently split clusters (duplicates kept with no error)."""
@@ -101,15 +122,31 @@ def test_connected_components_raises_on_nonconvergence(spark):
 def test_lsh_zero_row_bands_rejected(spark):
     """Regression guard: n_bands > n_hashes makes rows_per_band 0, every
     band key '' and the candidate join all-pairs — must raise, not
-    silently degenerate to the quadratic join LSH exists to avoid."""
+    silently degenerate to the quadratic join LSH exists to avoid. Both
+    MinHash entry points raise before any Spark job (the eager shingle
+    checkpoint), so a bad config costs nothing."""
     import pytest
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "alpha beta gamma epsilon")],
         "doc_id long, text string",
     )
-    with pytest.raises(ValueError, match="n_bands"):
-        D.minhash_lsh_dedup(docs, "text", "doc_id", n_hashes=16, n_bands=32)
+    sc = spark.sparkContext
+    group = "lsh-zero-row-bands"
+    try:
+        sc.setJobGroup(group, group)
+        with pytest.raises(ValueError, match="n_bands"):
+            D.minhash_lsh_dedup(docs, "text", "doc_id", n_hashes=16, n_bands=32)
+        with pytest.raises(ValueError, match="n_bands"):
+            D.minhash_lsh_incremental(
+                docs, docs, "text", "doc_id", n_hashes=16, n_bands=32
+            )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
     sig = D.minhash_signature(D.shingle_hashes(docs, "text", 3), 8)
     with pytest.raises(ValueError, match="rows_per_band"):
         D.lsh_candidate_pairs(sig, "doc_id", n_bands=4, rows_per_band=0)

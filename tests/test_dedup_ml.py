@@ -1,30 +1,11 @@
-"""Spark-ML MinHashLSH variant vs the native exact pipeline: candidates the
-ML path emits must be true near-dups, and recall on the planted high-Jaccard
-pairs must be high (seeded, so this is deterministic)."""
+"""Behavior tests for the near-dup operators beyond MinHash/SimHash:
+asymmetric containment and its stop-shingle cap, quality-aware cluster
+representatives, prefix filtering (equal to the brute force, including the
+ceil rounding boundary), exact-dedup NULL handling, duplicate token spans and
+the duplication fraction, and edit-distance pairs (head and full-text modes,
+codepoint semantics, cluster transitivity)."""
 
 from __future__ import annotations
-
-from crystal_parquet_database_spark.operators.dedup import (
-    minhash_lsh_ml,
-    ngram_jaccard_pairs,
-)
-from crystal_parquet_database_spark.tables import load_table
-
-
-def test_ml_lsh_agrees_with_exact(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    exact = {
-        (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.8).collect()
-    }
-    ml = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_ml(docs, "text", "doc_id", threshold=0.8).collect()
-    }
-    assert ml <= exact  # approxSimilarityJoin verifies exact distance → no false positives
-    assert exact  # fixture has planted near-dups
-    recall = len(ml & exact) / len(exact)
-    assert recall >= 0.9
 
 
 def test_containment_pairs_asymmetric(spark):
@@ -151,27 +132,6 @@ def test_prefix_filter_ceil_rounding_boundary(spark):
     assert len(got) == 1
     assert (got[0]["id_a"], got[0]["id_b"]) == (0, 1)
     assert got[0]["jaccard"] == 0.07
-
-
-def test_ml_lsh_null_text_rows_skipped(spark):
-    """NULL text is in-contract: its shingle fallback is [NULL], which used
-    to crash the vectorizing UDF at int(None) (and an empty vector would be
-    rejected by MinHashLSH). NULL-text rows must drop out of the pair
-    search, exactly as they no-match through the native pipeline."""
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "alpha beta gamma delta epsilon eta"),
-            (3, None),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_lsh_ml(docs, "text", "doc_id", threshold=0.5).collect()
-    }
-    assert (1, 2) in pairs
-    assert all(3 not in p for p in pairs)
 
 
 def test_exact_dedup_null_text_pairs_with_nothing(spark):
