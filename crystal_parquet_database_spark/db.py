@@ -16,9 +16,11 @@ Design departures (Spark-first, SURVEY.md §7):
 
 - Nested data is stored natively nested; parquetdb's flatten-on-write and
   ``rebuild_nested_struct`` on read have no equivalent here.
-- Contiguous ids are assigned per ingest batch, offset by max(id)+1 — the
-  scalable pattern (per-partition counts + broadcast offsets), not a global
-  row_number sort. Gap-free ids under concurrent writers are a non-goal.
+- Contiguous ids are assigned per ingest batch, offset by max(id)+1 read
+  from the id column's footer statistics: one per-partition count, then
+  a projection in the write's own stage (partition offset + row index) — no
+  global sort, window or join. Gap-free ids under concurrent writers are a
+  non-goal.
 - Type-widening schema evolution rewrites the dataset to the promoted schema
   (column *additions* evolve cheaply via mergeSchema reads).
 - In-place rewrites go through a temp directory + swap: Spark cannot
@@ -38,10 +40,10 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from crystal_parquet_database_spark.operators.similarity import _lit_array
 from crystal_parquet_database_spark.runtime import release_local_checkpoint
 from crystal_parquet_database_spark.schema import cast_to_schema, leaf_types, unify_schemas
 
@@ -49,41 +51,43 @@ ID_COL = "id"
 
 
 def assign_contiguous_ids_with_count(
-    df: DataFrame, start: int = 0, id_col: str = ID_COL
+    df: DataFrame, start: int = 0, id_col: str = ID_COL, partition_by: Iterable[str] = ()
 ) -> tuple[DataFrame, int]:
-    """Assign contiguous ids start..start+n-1 without a global sort; also
-    return n (already known from the offsets computation — callers should
-    not pay a separate count()).
+    """Assign contiguous ids start..start+n-1 without a sort, a window or a
+    join; also return n (already known from the counts pass — callers
+    should not pay a separate count()).
 
-    Per-partition row_number + driver-side cumulative partition offsets (the
-    offsets table is one row per partition — tiny at any scale). This is the
+    One aggregation counts the rows of each input partition; the driver
+    turns the counts into cumulative per-partition offsets and inlines them
+    as one array literal. The id is then one projection in the write's own stage:
+    ``start + offset[spark_partition_id()] + row index in the partition``,
+    where the row index is the low 33 bits of ``monotonically_increasing_id``
+    (``partition << 33 | row index``). The ids equal a per-partition
+    ``row_number`` ordered by that id, offset the same way. This is the
     distributed equivalent of parquetdb's auto-increment id (SURVEY.md §7).
 
-    The input is evaluated twice (offsets pass + downstream action), so it is
+    The frame ends in a ``rebalance`` hint (on ``partition_by`` for
+    hive-partitioned writes), so AQE sizes the output files: a small
+    batch writes one file, not one per input partition.
+
+    The input is evaluated twice (counts pass + downstream action), so it is
     persisted for the duration — otherwise nondeterministic lineage (sample,
     rand filters) could change partition contents between passes and corrupt
     the ids. Caller must trigger its action before the frame is unpersisted;
     PqDB.create does (it writes immediately).
     """
     df = df.persist()
-    d = df.withColumn("__pid", F.spark_partition_id()).withColumn(
-        "__mid", F.monotonically_increasing_id()
-    )
-    counts = [(r["__pid"], r["cnt"]) for r in d.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()]
-    counts.sort()
+    counts = dict(df.groupBy(F.spark_partition_id()).count().collect())
     offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    spark = df.sparkSession
-    odf = spark.createDataFrame(offsets or [(0, 0)], schema="__pid int, __offset long")
-    w = W.partitionBy("__pid").orderBy("__mid")
-    out = (
-        d.join(F.broadcast(odf), "__pid")
-        .withColumn(id_col, F.row_number().over(w).cast("long") - 1 + F.col("__offset") + F.lit(start))
-        .drop("__pid", "__mid", "__offset")
+    for pid in range(max(counts, default=-1) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    row_in_partition = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    out = df.withColumn(
+        id_col,
+        F.lit(start) + _lit_array(offsets, "array<bigint>")[F.spark_partition_id()] + row_in_partition,
     )
-    return out, acc
+    return out.hint("rebalance", *partition_by), acc
 
 
 def assign_contiguous_ids(df: DataFrame, start: int = 0, id_col: str = ID_COL) -> DataFrame:
@@ -203,8 +207,10 @@ class PqDB:
             for d in olds + tmps[:-1]:
                 shutil.rmtree(d, ignore_errors=True)
 
-    def _df(self) -> DataFrame:
-        if not self.exists:
+    def _require_data_files(self) -> list[str]:
+        """The data files; raises when the dataset holds none."""
+        files = self._data_files()
+        if not files:
             esc = glob.escape(self.path)
             hint = (
                 " (a crashed rewrite left swap siblings — call recover() "
@@ -216,6 +222,10 @@ class PqDB:
                 f"PqDB at {self.path!r} is empty — call create() before "
                 f"read()/update()/delete(){hint}"
             )
+        return files
+
+    def _df(self) -> DataFrame:
+        self._require_data_files()
         return self.spark.read.option("mergeSchema", "true").parquet(self.path)
 
     @staticmethod
@@ -247,10 +257,29 @@ class PqDB:
                 "update keys must be unique"
             )
 
-    @staticmethod
-    def _next_id_start(existing: DataFrame) -> int:
-        m = existing.agg(F.max(ID_COL)).collect()[0][0]
-        return (m if m is not None else -1) + 1  # max id 0 is falsy but valid
+    def _next_id_start(self) -> int:
+        """max(id) + 1 (0 for a dataset without rows), read on the driver
+        from the id column's row-group max statistics in the data files'
+        footers — no Spark job. Falls back to a ``max(id)`` aggregate when a
+        non-empty row group carries no min/max statistics for ``id`` (a
+        file written without statistics, or without the column)."""
+        import pyarrow.parquet as pq
+
+        top = -1
+        for f in self._data_files():
+            md = pq.read_metadata(f)
+            leaves = [md.schema.column(i).path for i in range(md.num_columns)]
+            col = leaves.index(ID_COL) if ID_COL in leaves else None
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                if rg.num_rows == 0:
+                    continue
+                stats = None if col is None else rg.column(col).statistics
+                if stats is None or not stats.has_min_max:
+                    m = self._df().agg(F.max(ID_COL)).collect()[0][0]
+                    return (m if m is not None else -1) + 1  # max id 0 is falsy but valid
+                top = max(top, stats.max)
+        return top + 1
 
     def _to_df(self, data: Any, schema: T.StructType | None = None) -> DataFrame:
         if isinstance(data, DataFrame):
@@ -355,7 +384,7 @@ class PqDB:
         if self.exists:
             existing = self._df()
             self._check_layout_matches()
-            start = self._next_id_start(existing)
+            start = self._next_id_start()
             old_schema = T.StructType([f for f in existing.schema.fields if f.name != ID_COL])
             merged = unify_schemas([old_schema, df.schema])
             if merged != old_schema:
@@ -378,7 +407,7 @@ class PqDB:
         # write) must still release the blocks — unpersist on a never-
         # persisted frame is a harmless no-op
         try:
-            df, n = assign_contiguous_ids_with_count(df, start=start)
+            df, n = assign_contiguous_ids_with_count(df, start=start, partition_by=self.partition_by)
             if self.partition_by and self._has_root_data_files():
                 # The dataset is the empty-rewrite marker: a delete() that
                 # matched every row left ONE unpartitioned schema-only file
@@ -815,9 +844,11 @@ class PqDB:
             inserts = changed_new.unionByName(fresh_cast).withColumn(
                 self.VALID_FROM, F.lit(effective_ts).cast("timestamp")
             ).withColumn(self.VALID_TO, F.lit(None).cast("timestamp"))
-            start = self._next_id_start(base)
+            start = self._next_id_start()
             id_src = inserts.select(*[c for c in base.columns if c != ID_COL])
-            inserts, _ = assign_contiguous_ids_with_count(id_src, start=start)
+            inserts, _ = assign_contiguous_ids_with_count(
+                id_src, start=start, partition_by=self.partition_by
+            )
             out = closed_hist.unionByName(kept).unionByName(
                 inserts.select(*base.columns)
             )
@@ -923,7 +954,8 @@ class PqDB:
 
     @property
     def n_rows(self) -> int:
-        return self._df().count()
+        """Row count from the data files' footers — no Spark job."""
+        return self._footer_rows(self._require_data_files())
 
     @property
     def n_columns(self) -> int:

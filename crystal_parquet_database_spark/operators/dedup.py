@@ -856,6 +856,16 @@ def duplicate_token_spans(
     )
 
 
+def ed_ascii_contract(text_col: str) -> Column:
+    """The rows the edit-distance stages scan: non-NULL text whose byte
+    length equals its character length. Spark's levenshtein counts
+    codepoints and DuckDB's counts bytes, so the two agree only on this
+    subset; the pair stage and any node set built beside it (connected
+    components) must use this one predicate or their rows disagree."""
+    t = F.col(text_col)
+    return t.isNotNull() & (F.octet_length(t) == F.length(t))
+
+
 def edit_distance_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -946,9 +956,7 @@ def edit_distance_near_dup_pairs(
     exact |len diff| prefilter.
     """
     n_blocks = head_len // block_w
-    t = F.col(text_col)
-    ascii_ok = F.octet_length(t) == F.length(t)
-    trimmed = F.trim(t)
+    trimmed = F.trim(F.col(text_col))
     head = F.substring(trimmed, 1, head_len)
     # __h is the head in head mode, so that mode verifies exactly what it
     # blocks on. In full-text mode __h carries the FULL trimmed text instead:
@@ -956,7 +964,7 @@ def edit_distance_near_dup_pairs(
     # those chars are identical whether __h is the head or the full text —
     # so blocking is shared verbatim and only the verify join changes.
     verify = trimmed if full_text else head
-    base = df.where(t.isNotNull() & ascii_ok).select(
+    base = df.where(ed_ascii_contract(text_col)).select(
         F.col(id_col).alias("__id"),
         verify.alias("__h"),
         F.length(verify).alias("__l"),

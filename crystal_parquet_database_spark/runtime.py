@@ -51,17 +51,18 @@ def release_local_checkpoint(df: DataFrame) -> bool:
 
     Call ONLY after every action that reads ``df`` has completed — a
     localCheckpointed RDD has truncated lineage and cannot be recomputed.
-    Returns True if a checkpoint RDD was found and unpersisted; silently
-    returns False for non-checkpoint frames (best-effort by design, so call
-    sites never fail on internal-API drift across Spark versions).
+    Returns True if a checkpoint RDD was found and unpersisted, False for
+    non-checkpoint frames. Best-effort by design, so call sites never fail
+    on internal-API drift across Spark versions: a failure is reported as
+    a warning and returns False.
     """
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getName().endswith("LogicalRDD"):
             plan.rdd().unpersist(False)
             return True
-    except Exception:
-        pass
+    except Exception as e:
+        _warn_swallowed("release_local_checkpoint", e)
     return False
 
 
@@ -77,7 +78,7 @@ def release_all_session_blocks(spark) -> int:
     again: a released localCheckpoint has truncated lineage and cannot be
     recomputed (a released persist()/cache() merely recomputes). Returns the
     number of RDDs unpersisted; best-effort, never raises — block release is
-    hygiene, not correctness.
+    hygiene, not correctness — but warns with what it could not release.
     """
     n = 0
     try:
@@ -85,10 +86,14 @@ def release_all_session_blocks(spark) -> int:
         while it.hasNext():
             it.next().unpersist(False)
             n += 1
-    except Exception:
-        pass
+    except Exception as e:
+        _warn_swallowed("release_all_session_blocks: unpersist", e)
     try:
         spark.catalog.clearCache()
-    except Exception:
-        pass
+    except Exception as e:
+        _warn_swallowed("release_all_session_blocks: clearCache", e)
     return n
+
+
+def _warn_swallowed(where: str, e: Exception) -> None:
+    warnings.warn(f"{where} skipped: {type(e).__name__}: {e}", RuntimeWarning, stacklevel=3)

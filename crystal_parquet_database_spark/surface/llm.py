@@ -1454,7 +1454,7 @@ _PIPE_ORACLE = rf"""
 WITH t AS (
   SELECT doc_id, source,
          CAST(LEN(STRING_SPLIT_REGEX(TRIM(text, ' '), '\s+')) AS INTEGER) AS n_tokens,
-         md5(text) AS dg,
+         {_NULLTEXT_DIGEST} AS dg,
          ({sql_hash64("'budget:' || CAST(doc_id AS VARCHAR)")}) AS h
   FROM documents
 ),
@@ -1501,8 +1501,9 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus. All four stages are deterministic and content/hash-keyed, so the
     whole chain is one exact SQL oracle.
 
-    100 TB shape, stage by stage: digest window (uniform md5 key, NULL-safe
-    — NULL digests form one small group); map-side
+    100 TB shape, stage by stage: digest window (uniform md5 key; NULL
+    text gets a per-row key, so it pairs with nothing and no NULL cohort
+    meets on one reducer — ``D.content_digest``); map-side
     length filter; per-source rank among survivors (skew refinement as in
     sample_source_cap); two-phase distributed prefix sum for the budget
     (operators/text.token_budget_per_group — never a single-task global
@@ -1520,13 +1521,10 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(
             F.col("text").isNotNull(), F.size(T.ws_tokens(F.col("text")))
         ).alias("n_tokens"),
-        F.md5("text").alias("__dg"),
+        D.content_digest("text", "doc_id").alias("__dg"),
     )
-    # first-doc-per-digest via a window, NOT a groupBy + re-join: a plain
-    # equality join on __dg silently drops NULL-digest rows (md5(NULL) =
-    # NULL never matches), losing NULL-text documents from the audit trail
-    # entirely — while the window partitions NULL digests into one group,
-    # exactly matching the oracle's PARTITION BY dg. Same single shuffle.
+    # first-doc-per-digest via a window: one shuffle of the input, where a
+    # groupBy + re-join on __dg would shuffle it twice
     wdg = W.partitionBy("__dg")
     s2 = base.withColumn("__first", F.min("doc_id").over(wdg)).select(
         "doc_id",
@@ -4068,10 +4066,7 @@ def dedup_edit_distance_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded (non-ASCII / NULL) docs are absent on BOTH sides."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = _ed_pairs(docs).select("id_a", "id_b")
-    t = F.col("text")
-    nodes = docs.where(
-        t.isNotNull() & (F.octet_length(t) == F.length(t))
-    ).select("doc_id")
+    nodes = docs.where(D.ed_ascii_contract("text")).select("doc_id")
     return D.connected_components(pairs, nodes, "doc_id")
 
 

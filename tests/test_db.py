@@ -198,6 +198,174 @@ def test_assign_contiguous_ids_multipartition(spark):
     assert ids == list(range(100, 1100))
 
 
+def _jobs_run(spark, fn):
+    """(fn's result, number of Spark jobs fn launched) — counted in a job
+    group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pqdb-jobs-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
+# (partitions, predicate): empty partitions at the front, in the middle and
+# in runs; spark.range splits are deterministic, so the frame can be
+# evaluated again by the reference below
+_ID_INPUTS = [
+    (1, "true"),
+    (4, "v >= 100"),                # partition 0 empty
+    (7, "v < 100 OR v >= 400"),     # partitions 1-3 empty
+    (100, "v % 200 < 100"),         # every other run of 10 empty
+]
+
+
+def _id_input(spark, n_parts):
+    return spark.range(0, 100 * n_parts, 1, n_parts).withColumnRenamed("id", "v")
+
+
+def _row_number_ids(frame, start):
+    """{v: id} by the per-partition row_number formula: rows ordered by
+    monotonically_increasing_id within their partition, each partition
+    offset by the row counts of the partitions before it."""
+    rows = frame.select(
+        "v", F.spark_partition_id().alias("p"), F.monotonically_increasing_id().alias("m")
+    ).collect()
+    counts = {}
+    for r in rows:
+        counts[r["p"]] = counts.get(r["p"], 0) + 1
+    offsets, acc = {}, start
+    for p in sorted(counts):
+        offsets[p], acc = acc, acc + counts[p]
+    by_part = {}
+    for r in sorted(rows, key=lambda r: (r["p"], r["m"])):
+        by_part.setdefault(r["p"], []).append(r["v"])
+    return {v: offsets[p] + i for p, vs in by_part.items() for i, v in enumerate(vs)}
+
+
+@pytest.mark.parametrize("n_parts,pred", _ID_INPUTS)
+def test_ids_equal_row_number_formula(spark, tmp_path, n_parts, pred):
+    """assign_contiguous_ids and create (appending after 17 rows, so the
+    next id comes from the footers) give every row the id the
+    per-partition row_number formula gives it; the small create writes
+    exactly one file, and every file holds at least one row group."""
+    import pyarrow.parquet as pq
+
+    src = _id_input(spark, n_parts).filter(pred)
+    want = _row_number_ids(src, 17)
+    got = assign_contiguous_ids(src, start=17)
+    assert {r["v"]: r["id"] for r in got.collect()} == want
+
+    db = PqDB(spark, str(tmp_path / "db"))
+    db.create([{"v": -1 - i} for i in range(17)])
+    first = set(db._data_files())
+    assert db.create(src) == len(want)
+    back = {r["v"]: r["id"] for r in db.read().collect() if r["v"] >= 0}
+    assert back == want
+    assert len(set(db._data_files()) - first) == 1
+    assert all(pq.ParquetFile(f).num_row_groups >= 1 for f in db._data_files())
+
+
+def test_create_write_plan_has_no_window_or_broadcast_join(spark, db, monkeypatch):
+    """The ids are one projection of the persisted input: the frame create
+    writes has no Window and no BroadcastHashJoin, and its only exchange is
+    the rebalance that sizes the output files."""
+    from crystal_parquet_database_spark import db as db_module
+    from crystal_parquet_database_spark.plans.inspect import _numbered_nodes
+
+    written = []
+    assign = db_module.assign_contiguous_ids_with_count
+
+    def spy(*args, **kwargs):
+        out = assign(*args, **kwargs)
+        written.append([op for _i, op in _numbered_nodes(out[0])])
+        return out
+
+    monkeypatch.setattr(db_module, "assign_contiguous_ids_with_count", spy)
+    db.create([{"x": i} for i in range(50)])
+    [ops] = written
+    assert "Window" not in ops and "BroadcastHashJoin" not in ops
+    assert ops.count("Exchange") == 1
+
+
+def test_appending_create_job_budget(spark, db):
+    """An appending create runs the schema open, the per-partition count
+    and the write — at most 6 jobs; the next id and the row count come
+    from footers without a job."""
+    db.create([{"x": i} for i in range(20)])
+    n, jobs = _jobs_run(spark, lambda: db.create([{"x": i} for i in range(20, 30)]))
+    assert n == 10 and jobs <= 6
+    rows, jobs = _jobs_run(spark, lambda: db.n_rows)
+    assert rows == 30 and jobs == 0
+
+
+def test_next_id_start_from_footers(spark, tmp_path):
+    """_next_id_start is max(id) + 1: from footer statistics with no job,
+    through the max(id) aggregate for a file written without statistics,
+    and 0 on the empty-rewrite marker."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    db = PqDB(spark, str(tmp_path / "stats"))
+    db.create([{"x": i} for i in range(7)])
+    db.create([{"x": i} for i in range(5)])
+    db.delete(ids=[11])
+    top = db.read().agg(F.max("id")).collect()[0][0]
+    start, jobs = _jobs_run(spark, db._next_id_start)
+    assert (start, jobs) == (top + 1, 0) == (11, 0)
+
+    plain = tmp_path / "nostats"
+    plain.mkdir()
+    pq.write_table(
+        pa.table({"id": pa.array([3, 41, 5], pa.int64()), "x": [1, 2, 3]}),
+        str(plain / "part-0.parquet"),
+        write_statistics=False,
+    )
+    nostats = PqDB(spark, str(plain))
+    assert not pq.read_metadata(str(plain / "part-0.parquet")).row_group(0).column(0).is_stats_set
+    assert nostats._next_id_start() == 42
+    nostats.create([{"x": 4}])
+    assert nostats.read(filters="x = 4").collect()[0]["id"] == 42
+
+    db.delete(where="true")  # leaves the zero-row marker file
+    assert db._data_files() and db._next_id_start() == 0
+
+
+def test_n_rows_matches_count(spark, tmp_path):
+    """n_rows (footers) equals read().count() through every write path,
+    the empty-rewrite marker and a hive-partitioned dataset."""
+
+    def same(d):
+        assert d.n_rows == d.read().count()
+
+    db = PqDB(spark, str(tmp_path / "flat"))
+    db.create([{"x": i} for i in range(9)])
+    same(db)
+    db.create([{"x": i, "y": "new"} for i in range(4)])
+    same(db)
+    db.delete(where="x < 3")
+    same(db)
+    db.normalize(max_rows_per_file=3)
+    same(db)
+    db.delete(where="true")
+    same(db)
+    assert db.n_rows == 0
+
+    part = PqDB(spark, str(tmp_path / "hive"), partition_by=["lang"])
+    part.create([{"k": i, "lang": ["en", "de", "fr"][i % 3]} for i in range(10)])
+    same(part)
+    part.delete(where="lang = 'de'")
+    same(part)
+    assert part.n_rows == 7
+
+
 def test_normalize_cluster_by_narrows_file_stats(spark, db):
     """cluster_by rewrite → per-file min/max ranges on the cluster column are
     narrow and non-overlapping, so footer stats can skip files for point or
@@ -602,6 +770,36 @@ def test_fresh_dir_wipes_stale_prior_process_root(monkeypatch, tmp_path):
     open(marker, "w").write("x")
     scratch.fresh_dir(name)  # second invocation must not wipe the first's
     assert os.path.exists(marker)
+
+
+def test_release_helpers_warn_instead_of_swallowing():
+    """The best-effort release helpers keep their return values on failure
+    but report the exception type and message as a warning."""
+    from crystal_parquet_database_spark.runtime import (
+        release_all_session_blocks,
+        release_local_checkpoint,
+    )
+
+    class Broken:
+        @property
+        def _jdf(self):
+            raise RuntimeError("no plan")
+
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no context")
+
+        @property
+        def catalog(self):
+            raise RuntimeError("no catalog")
+
+    with pytest.warns(RuntimeWarning, match="release_local_checkpoint.*RuntimeError: no plan"):
+        assert release_local_checkpoint(Broken()) is False
+    with pytest.warns(RuntimeWarning) as caught:
+        assert release_all_session_blocks(Broken()) == 0
+    msgs = [str(w.message) for w in caught]
+    assert any("RuntimeError: no context" in m for m in msgs)
+    assert any("RuntimeError: no catalog" in m for m in msgs)
 
 
 def test_scratch_reap_clears_tree_and_restarts_clean():

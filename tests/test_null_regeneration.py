@@ -68,8 +68,24 @@ def null_sf_dir(tmp_path_factory):
         "window_sessionize_events",     # NULL-ts sessionizer parity (r7)
         "sim_cosine_topk_bruteforce",   # NULL embedding sinks via _topk
         "sim_pq_recall_at_k",           # NULL embedding sinks in TRUTH ranking too
+        "llm_corpus_pipeline",          # NULL text is never a dup, both sides
     ],
 )
 def test_null_corpus_matches_oracle(spark, null_sf_dir, name):
     ok, msg = compare_query(spark, name, null_sf_dir)
     assert ok, msg
+
+
+def test_corpus_pipeline_null_text_is_not_dup(spark, null_sf_dir):
+    """No content pairs with nothing (dedup_exact_text's contract): none of
+    the four NULL-text documents is labeled 'dup' by the pipeline's exact
+    dedup stage."""
+    from crystal_parquet_database_spark.surface import QUERIES
+
+    out = QUERIES["llm_corpus_pipeline"](spark, null_sf_dir)
+    status = {
+        r["doc_id"]: r["status"]
+        for r in out.filter("doc_id IN (7, 301, 10001, 10002)").collect()
+    }
+    assert len(status) == 4
+    assert "dup" not in status.values()
