@@ -21,8 +21,11 @@ Design departures (Spark-first, SURVEY.md §7):
   a projection in the write's own stage (partition offset + row index) — no
   global sort, window or join. Gap-free ids under concurrent writers are a
   non-goal.
-- Type-widening schema evolution rewrites the dataset to the promoted schema
-  (column *additions* evolve cheaply via mergeSchema reads).
+- Type-widening schema evolution rewrites the dataset to the promoted schema.
+  Column *additions* need no rewrite: every open folds the data files'
+  footer schemas on the driver (``tables.read_parquet``, no Spark job) and
+  reads older files null-padded to the merged schema. The footers are read
+  on driver threads, one per data file per open.
 - In-place rewrites go through a temp directory + swap: Spark cannot
   overwrite a path it is lazily reading. On object stores this becomes
   write-new-prefix + pointer swap.
@@ -46,6 +49,7 @@ from pyspark.sql import types as T
 from crystal_parquet_database_spark.operators.similarity import _lit_array
 from crystal_parquet_database_spark.runtime import release_local_checkpoint
 from crystal_parquet_database_spark.schema import cast_to_schema, leaf_types, unify_schemas
+from crystal_parquet_database_spark.tables import data_files, read_parquet
 
 ID_COL = "id"
 
@@ -142,14 +146,10 @@ class PqDB:
     # ----------------------------------------------------------------- helpers
 
     def _data_files(self) -> list[str]:
-        out = []
-        for root, dirs, files in os.walk(self.path):
-            # a write killed mid-job leaves committer scratch under
-            # _temporary/ — those part-files are NOT data; counting them
-            # makes `exists` true for a dataset that holds no committed rows
-            dirs[:] = [d for d in dirs if d != "_temporary"]
-            out.extend(os.path.join(root, f) for f in files if f.endswith(".parquet"))
-        return sorted(out)
+        # a write killed mid-job leaves committer scratch under _temporary/
+        # — those part-files are NOT data (data_files skips them); counting
+        # them would make `exists` true for a dataset with no committed rows
+        return data_files(self.path)
 
     @property
     def exists(self) -> bool:
@@ -225,8 +225,10 @@ class PqDB:
         return files
 
     def _df(self) -> DataFrame:
-        self._require_data_files()
-        return self.spark.read.option("mergeSchema", "true").parquet(self.path)
+        """The dataset as one scan whose schema is every data file's footer
+        schema merged (older files read null-padded) — planned without a
+        Spark job."""
+        return read_parquet(self.spark, self.path, self._require_data_files())
 
     @staticmethod
     def destroy(path: str) -> None:
@@ -372,9 +374,9 @@ class PqDB:
         """Append records; infer/evolve schema; assign contiguous ids.
         Returns the number of rows written.
 
-        Column additions evolve cheaply (old files are null-padded at read
-        via mergeSchema); type *widenings* trigger a one-time dataset rewrite
-        to the promoted schema.
+        Column additions evolve cheaply (old files are null-padded at read:
+        the open merges every file's footer schema); type *widenings*
+        trigger a one-time dataset rewrite to the promoted schema.
         """
         self.recover()  # write entry point: finish any crashed swap first
         df = self._to_df(data, schema)
@@ -390,7 +392,8 @@ class PqDB:
             if merged != old_schema:
                 # Only genuine TYPE changes at paths the old data already has
                 # force a rewrite; column/field ADDITIONS (even nested ones)
-                # evolve cheaply — mergeSchema null-pads old files on read.
+                # evolve cheaply — the footer-merged read schema null-pads
+                # old files.
                 old_leaves = leaf_types(old_schema)
                 merged_leaves = leaf_types(merged)
                 widened = any(
@@ -505,10 +508,11 @@ class PqDB:
     def _guard_partition_values(self, df: DataFrame) -> DataFrame:
         """Hive layout cannot represent an EMPTY-STRING partition value: Spark
         writes both '' and NULL as ``__HIVE_DEFAULT_PARTITION__``, so '' rows
-        silently come back as NULL — a key-corruption round-trip the round-10
-        degenerate-corpus sweep caught in the compaction gate (every other
-        shape round-trips: whitespace, slashes and non-ASCII are dir-escaped
-        faithfully, and NULL reads back as NULL). Fail LOUDLY instead, with
+        silently come back as NULL — a key-corruption round-trip that
+        ``scripts/degenerate_sweep.py`` (''-keyed rows) exposes in the
+        ``pqdb_normalize_compaction`` gate (every other shape round-trips:
+        whitespace, slashes and non-ASCII are dir-escaped faithfully, and
+        NULL reads back as NULL). Fail LOUDLY instead, with
         zero extra passes: the check rides the write itself as a raise_error
         branch on each string partition column. Callers who want hive
         semantics normalize explicitly (``NULLIF(col, '')``) so the coercion
@@ -832,7 +836,6 @@ class PqDB:
             fresh = up.join(
                 matched_keys, F.col(on).eqNullSafe(F.col("__mk")), "left_anti"
             )
-            n_new = fresh.count()
             changed_new = (
                 j.filter(changed)
                 .select(on, *[F.col(f"__u_{c}").alias(c) for c in tracked])
@@ -846,7 +849,8 @@ class PqDB:
             ).withColumn(self.VALID_TO, F.lit(None).cast("timestamp"))
             start = self._next_id_start()
             id_src = inserts.select(*[c for c in base.columns if c != ID_COL])
-            inserts, _ = assign_contiguous_ids_with_count(
+            # the id pass counts the inserts: changed keys plus fresh ones
+            inserts, n_inserted = assign_contiguous_ids_with_count(
                 id_src, start=start, partition_by=self.partition_by
             )
             out = closed_hist.unionByName(kept).unionByName(
@@ -870,7 +874,7 @@ class PqDB:
                 release_local_checkpoint(j)
         return {
             "closed": n_changed,
-            "inserted": n_changed + n_new,
+            "inserted": n_inserted,
             "unchanged": n_unchanged,
         }
 

@@ -70,12 +70,11 @@ def parse_cif_minimal(text: str) -> dict | None:
         if not m:
             return None
         cell[name] = float(m.group(1))
-    # Scan loop_ blocks STRUCTURALLY (round-8 review). The old single regex
-    # bound the FIRST loop whose headers start with _atom_site — an
+    # Scan loop_ blocks STRUCTURALLY. A single regex binding the FIRST loop
+    # whose headers start with _atom_site fails silently three ways: an
     # anisotropic-displacement loop (_atom_site_aniso_*) listed before the
-    # main site loop dropped the whole file, a blank line inside the body
-    # truncated the sites after it, and a line-wrapped row was skipped
-    # per-line — all silent. CIF newlines are plain whitespace: headers are
+    # main site loop drops the whole file, a blank line inside the body
+    # truncates the sites after it, and a line-wrapped row is skipped. CIF newlines are plain whitespace: headers are
     # the consecutive `_tag` lines after `loop_`; the body is every
     # whitespace token until the next loop_/data_/_tag keyword, chunked by
     # header count (wrapped rows and interior blank lines both fine).

@@ -41,7 +41,7 @@ from crystal_parquet_database_spark.operators.skew import (
 )
 from crystal_parquet_database_spark.surface.registry import query
 from crystal_parquet_database_spark.surface.scratch import fresh_dir
-from crystal_parquet_database_spark.tables import load_table
+from crystal_parquet_database_spark.tables import data_files, load_table, read_parquet
 
 _BUCKETED_ORACLE = """
 SELECT c_mktsegment AS segment,
@@ -80,10 +80,10 @@ def pqdb_normalize_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Builds a hive-partitioned PqDB (partition_by=lang) from three separate
     ``create()`` appends — each append lays down its own files per partition
     value, so the dataset starts fragmented the way an incrementally loaded
-    corpus does — then runs the partitioned compaction path rewritten in
-    round 7 (``_rewrite`` hash-clusters on the partition columns so each
-    value lands in ONE task; round-robin repartition emitted n_files×n_values
-    tiny files), and reads back through the pushdown read. A compaction that
+    corpus does — then runs the partitioned compaction path (``_rewrite``
+    hash-clusters on the partition columns so each value lands in ONE task;
+    a round-robin repartition would emit n_files×n_values tiny files), and
+    reads back through the pushdown read. A compaction that
     drops/duplicates rows, mixes partition values across dirs, or mangles
     the partition-column read-back flips the hash. The file-count and
     per-partition-layout asserts stay in tests/test_db.py; here only a
@@ -161,7 +161,7 @@ def layout_zorder_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).parquet(zdir)
 
-    rewritten = spark.read.parquet(zdir)
+    rewritten = read_parquet(spark, zdir, data_files(zdir))
     write_bucketed(
         rewritten,
         orders_tbl,

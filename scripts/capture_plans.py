@@ -8,8 +8,9 @@ construction runs eager jobs (trained codebooks) will execute those, so this
 is not a timing tool — it exists so the optimization round's plan claims are
 checkable without running Spark.
 
-Plans are written normalized: expression ids (``#123``), ``plan_id=123`` and
-RDD ids (``MapPartitionsRDD[123]``) become fixed tokens, and lambda variables
+Plans are written normalized: expression ids (``#123``), ``plan_id=123``,
+RDD ids (``MapPartitionsRDD[123]``) and the process id in the scratch root
+(``pqdb_gate_123``) become fixed tokens, and lambda variables
 are renamed ``v1, v2, …`` in order of first appearance, so two captures of the
 same plan ``diff`` clean — also when one built its lambdas from SQL text
 (``lambda h``) and the other with the Column API (``lambda x_190``).
@@ -34,6 +35,8 @@ _VOLATILE = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    # the per-process scratch root of PqDB/layout queries (surface/scratch.py)
+    (re.compile(r"pqdb_gate_\d+"), "pqdb_gate_N"),
 ]
 _LAMBDA_VAR = re.compile(r"lambda (\w+)#(\d+)")
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import tempfile
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from crystal_parquet_database_spark.db import PqDB, assign_contiguous_ids
@@ -304,6 +305,48 @@ def test_appending_create_job_budget(spark, db):
     assert n == 10 and jobs <= 6
     rows, jobs = _jobs_run(spark, lambda: db.n_rows)
     assert rows == 30 and jobs == 0
+
+
+def test_opens_run_no_job(spark, sf_dir, db):
+    """A table open and a PqDB open read the schema from the footers on
+    the driver: load_table, read() construction, get_schema and n_columns
+    launch no Spark job."""
+    from crystal_parquet_database_spark.tables import load_table
+
+    for name in ("orders", "events"):
+        _, jobs = _jobs_run(spark, lambda: load_table(spark, sf_dir, name))
+        assert jobs == 0, name
+    db.create([{"x": i, "s": Row(a=i)} for i in range(5)])
+    db.create([{"x": 5, "s": Row(a=5, b="new"), "y": 1.5}])
+    for fn in (db.read, db.get_schema, lambda: db.n_columns):
+        _, jobs = _jobs_run(spark, fn)
+        assert jobs == 0
+    assert db.n_columns == 4
+
+
+def test_appending_create_runs_at_most_five_jobs(spark, db):
+    """With the open job-free, an appending create is the per-partition
+    count and the write."""
+    db.create([{"x": i} for i in range(20)])
+    n, jobs = _jobs_run(spark, lambda: db.create([{"x": i} for i in range(20, 30)]))
+    assert n == 10 and jobs <= 5
+
+
+def test_scd2_merge_job_budget(spark, tmp_path):
+    """One SCD2 merge runs at most 15 jobs: the open is job-free and the
+    insert count comes from the id pass, not from a count() of the fresh
+    keys (17 jobs when both ran)."""
+    db = PqDB(spark, str(tmp_path / "scd2_jobs"))
+    db.create_versioned(
+        [{"sku": "a", "p": 1}, {"sku": "b", "p": 2}, {"sku": "c", "p": 3}],
+        "2024-01-01 00:00:00",
+    )
+    ups = [{"sku": "a", "p": 10}, {"sku": "b", "p": 2}, {"sku": "d", "p": 4}]
+    stats, jobs = _jobs_run(
+        spark, lambda: db.upsert_scd2(ups, on="sku", effective_ts="2024-02-01 00:00:00")
+    )
+    assert stats == {"closed": 1, "inserted": 2, "unchanged": 2}
+    assert jobs <= 15
 
 
 def test_next_id_start_from_footers(spark, tmp_path):
