@@ -29,6 +29,14 @@ Design departures (Spark-first, SURVEY.md §7):
 - In-place rewrites go through a temp directory + swap: Spark cannot
   overwrite a path it is lazily reading. On object stores this becomes
   write-new-prefix + pointer swap.
+- Each public call lists the dataset's data files once (the write entry
+  points after crash recovery) and hands that list to every step that
+  needs the dataset's state: the open, the layout check, the next id, the
+  rewrite and the row count. Only a type-widening ``create`` lists again,
+  after its rewrite.
+- ``create`` has two write paths: an append into a dataset that has data
+  files, or a whole-dataset write through the temp-dir swap — for a new
+  dataset, and for the zero-row marker a partitioned delete-all leaves.
 """
 
 from __future__ import annotations
@@ -108,19 +116,22 @@ def assign_contiguous_ids(df: DataFrame, start: int = 0, id_col: str = ID_COL) -
     return out
 
 
-def _sorted_by_mtime(paths: list[str]) -> list[str]:
-    """Sort by mtime, DROPPING entries that vanish between the glob and the
-    stat (a concurrent ``PqDB.destroy`` or another process's reap): a plain
-    ``sorted(key=os.path.getmtime)`` raises FileNotFoundError out of whatever
-    innocent call triggered the listing, and keeping a vanished path could
-    elect it as the newest tmp and fail the restoring rename.
+def _siblings(path: str, kind: str) -> list[str]:
+    """The ``__tmp_*`` (``kind="tmp"``) or ``__old_*`` (``kind="old"``)
+    swap siblings of ``path``, oldest first by mtime.
+
+    An entry that vanishes between the glob and the stat (a concurrent
+    ``PqDB.destroy`` or another process's reap) is dropped: a plain
+    ``sorted(key=os.path.getmtime)`` raises FileNotFoundError out of
+    whatever innocent call triggered the listing, and keeping a vanished
+    path could elect it as the newest tmp and fail the restoring rename.
 
     ONLY the vanished-path case is swallowed: a transient stat failure of any
     other kind (EPERM/EIO) on the newest ``__tmp_*`` sibling would otherwise
     silently elect an older tmp or skip recovery — restoring stale state with
     no signal — so every other OSError propagates to the caller."""
     keyed = []
-    for p in paths:
+    for p in glob.glob(f"{glob.escape(path)}__{kind}_*"):  # a '[2024]' in the path is a literal
         try:
             keyed.append((os.path.getmtime(p), p))
         except FileNotFoundError:
@@ -162,7 +173,7 @@ class PqDB:
         renames must not "finish" the live swap and delete the sibling the
         writer is about to rename (the old lazy-recovery form made every
         read a potential mutator and broke the single-writer guarantee
-        for the writer itself)."""
+        for the writer itself). One listing of the dataset."""
         return bool(self._data_files())
 
     def recover(self) -> bool:
@@ -170,65 +181,64 @@ class PqDB:
         ``exists`` afterwards. Write entry points call this implicitly; a
         read-only process that finds ``exists`` false after a hard kill
         calls it explicitly (it is the single mutating step, so run it
-        under the same single-writer discipline as any write)."""
-        if not self._data_files():
-            self._recover_interrupted_swap()
-        return self.exists
+        under the same single-writer discipline as any write). One listing
+        of the dataset, a second only after a swap was finished."""
+        return bool(self._recover())
 
-    def _recover_interrupted_swap(self) -> None:
-        """Finish a ``_rewrite`` swap a hard kill interrupted. The swap is
-        write-tmp → rename(path, old) → rename(tmp, path) → rmtree(old); a
-        kill between the renames leaves ``path`` missing with BOTH siblings
-        present. The tmp dir is always complete in that window (it is fully
-        written before the first rename), so restoring the newest tmp is
-        restoring the committed new state; a kill DURING the tmp write
-        leaves ``path`` intact, so this branch — path missing, BOTH
-        leftovers present — uniquely identifies the between-renames window.
+    def _recover(self) -> list[str]:
+        """``recover()`` for the write entry points: the data files after
+        any crashed swap is finished. This is the call's one listing; every
+        step that needs the dataset's state takes it from here.
+
+        The ``_rewrite`` swap is write-tmp → rename(path, old) →
+        rename(tmp, path) → rmtree(old); a kill between the renames leaves
+        ``path`` missing with BOTH siblings present. The tmp dir is always
+        complete in that window (it is fully written before the first
+        rename), so restoring the newest tmp is restoring the committed new
+        state; a kill DURING the tmp write leaves ``path`` intact, so this
+        branch — path missing, BOTH leftovers present — uniquely identifies
+        the between-renames window.
         An ``__old_*`` WITHOUT a tmp is never restored: the two-rename
         sequence cannot produce that state, so it means a human deleted the
         canonical dir next to a stale crash leftover — resurrecting data
         the user just removed (and having a later create() append onto it)
         would be far worse than staying empty. Use ``PqDB.destroy`` to
         remove a dataset AND its crash siblings together."""
-        esc = glob.escape(self.path)  # a '[2024]' in the path is a literal
-        tmps = _sorted_by_mtime(glob.glob(f"{esc}__tmp_*"))
-        olds = _sorted_by_mtime(glob.glob(f"{esc}__old_*"))
-        if not (tmps or olds):
-            return
-        # the canonical path holds no data files here (caller checked); it
-        # may still exist as the empty dir __init__ pre-creates — clear it
-        # so the restoring rename can land
-        if os.path.exists(self.path) and not self._data_files():
+        files = self._data_files()
+        if files:
+            return files
+        tmps, olds = _siblings(self.path, "tmp"), _siblings(self.path, "old")
+        if tmps or olds:
+            # the canonical path holds no data files; it may still exist as
+            # the empty dir __init__ pre-creates — clear it so the
+            # restoring rename can land
             shutil.rmtree(self.path, ignore_errors=True)
-        if os.path.exists(self.path):  # pragma: no cover - defensive
-            return
         if tmps and olds:
             os.rename(tmps[-1], self.path)
             for d in olds + tmps[:-1]:
                 shutil.rmtree(d, ignore_errors=True)
+            files = self._data_files()
+        return files
 
-    def _require_data_files(self) -> list[str]:
-        """The data files; raises when the dataset holds none."""
-        files = self._data_files()
+    def _df(self, files: list[str] | None = None) -> DataFrame:
+        """The dataset as one scan whose schema is every data file's footer
+        schema merged (older files read null-padded) — planned without a
+        Spark job. ``files`` is the call's listing (listed here when not
+        given); raises when the dataset holds no data file."""
+        if files is None:
+            files = self._data_files()
         if not files:
-            esc = glob.escape(self.path)
             hint = (
                 " (a crashed rewrite left swap siblings — call recover() "
                 "to restore the committed state)"
-                if glob.glob(f"{esc}__tmp_*") and glob.glob(f"{esc}__old_*")
+                if _siblings(self.path, "tmp") and _siblings(self.path, "old")
                 else ""
             )
             raise FileNotFoundError(
                 f"PqDB at {self.path!r} is empty — call create() before "
                 f"read()/update()/delete(){hint}"
             )
-        return files
-
-    def _df(self) -> DataFrame:
-        """The dataset as one scan whose schema is every data file's footer
-        schema merged (older files read null-padded) — planned without a
-        Spark job."""
-        return read_parquet(self.spark, self.path, self._require_data_files())
+        return read_parquet(self.spark, self.path, files)
 
     @staticmethod
     def destroy(path: str) -> None:
@@ -238,8 +248,7 @@ class PqDB:
         PqDB touch could recover state the caller meant to delete — a
         create() would then silently APPEND onto resurrected rows."""
         shutil.rmtree(path, ignore_errors=True)
-        esc = glob.escape(path)
-        for d in glob.glob(f"{esc}__old_*") + glob.glob(f"{esc}__tmp_*"):
+        for d in _siblings(path, "old") + _siblings(path, "tmp"):
             shutil.rmtree(d, ignore_errors=True)
 
     def _check_unique_keys(self, up: DataFrame, on: str, display: str | None = None) -> None:
@@ -259,16 +268,17 @@ class PqDB:
                 "update keys must be unique"
             )
 
-    def _next_id_start(self) -> int:
+    def _next_id_start(self, files: list[str]) -> int:
         """max(id) + 1 (0 for a dataset without rows), read on the driver
-        from the id column's row-group max statistics in the data files'
-        footers — no Spark job. Falls back to a ``max(id)`` aggregate when a
-        non-empty row group carries no min/max statistics for ``id`` (a
-        file written without statistics, or without the column)."""
+        from the id column's row-group max statistics in the footers of
+        ``files`` (the data files) — no Spark job. Falls back to a
+        ``max(id)`` aggregate when a non-empty row group carries no min/max
+        statistics for ``id`` (a file written without statistics, or
+        without the column)."""
         import pyarrow.parquet as pq
 
         top = -1
-        for f in self._data_files():
+        for f in files:
             md = pq.read_metadata(f)
             leaves = [md.schema.column(i).path for i in range(md.num_columns)]
             col = leaves.index(ID_COL) if ID_COL in leaves else None
@@ -278,7 +288,7 @@ class PqDB:
                     continue
                 stats = None if col is None else rg.column(col).statistics
                 if stats is None or not stats.has_min_max:
-                    m = self._df().agg(F.max(ID_COL)).collect()[0][0]
+                    m = self._df(files).agg(F.max(ID_COL)).collect()[0][0]
                     return (m if m is not None else -1) + 1  # max id 0 is falsy but valid
                 top = max(top, stats.max)
         return top + 1
@@ -295,31 +305,30 @@ class PqDB:
     def _rewrite(
         self,
         df: DataFrame,
+        files: list[str],
         n_files: int | None = None,
         max_records_per_file: int | None = None,
         partition_values_guarded: bool = False,
     ) -> None:
         """Materialize ``df`` to a temp dir, then swap it in via two renames.
+        ``files`` is the dataset's current listing (empty for a new one).
 
         The swap is crash-RECOVERABLE, not atomic: a hard kill between the
         two renames leaves ``self.path`` missing with the complete new state
         in ``__tmp_*`` and the old state in ``__old_*`` —
-        ``_recover_interrupted_swap`` (run from every write entry point
-        and the explicit ``recover()`` — never from reads) finishes the
-        swap. Stale ``__old_*``
-        leftovers from a kill after the second rename are reaped here
-        before the next swap. Single-writer discipline assumed throughout
+        ``_recover`` (run from every write entry point and the explicit
+        ``recover()`` — never from reads) finishes the swap. Stale
+        ``__old_*`` leftovers from a kill after the second rename are
+        reaped here before the next swap. Single-writer discipline assumed throughout
         (two concurrent writers corrupt any rename scheme without a lock
         service — at cluster scale this rewrite is a table-service job)."""
-        self._check_layout_matches()
+        self._check_layout_matches(files)
         # reap BOTH stale sibling kinds before a new swap: __old_* from a
         # kill after the second rename, __tmp_* from a kill during a prior
         # tmp write — the latter otherwise leaks a near-dataset-sized dir
         # per crash AND could be mistaken for committed state by recovery
         # (single-writer: any sibling existing here is garbage)
-        for stale in glob.glob(f"{glob.escape(self.path)}__old_*") + glob.glob(
-            f"{glob.escape(self.path)}__tmp_*"
-        ):
+        for stale in _siblings(self.path, "old") + _siblings(self.path, "tmp"):
             shutil.rmtree(stale, ignore_errors=True)
         tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
         if n_files:
@@ -349,21 +358,19 @@ class PqDB:
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(tmp)
-        if self.partition_by and not any(
-            f.endswith(".parquet")
-            for _root, _dirs, files in os.walk(tmp)
-            for f in files
-        ):
-            # A dynamic-partition write of an EMPTY frame emits only
-            # _SUCCESS — no schema-bearing parquet file — so swapping it in
-            # would destroy the dataset (exists→False, schema lost,
-            # FileNotFoundError on every later call). delete() matching all
-            # rows is a legitimate operation: re-write the empty frame
-            # unpartitioned, which produces the schema-only file an empty
-            # non-partitioned dataset gets (partition dirs carry no data to
+        if not data_files(tmp):
+            # A write of an EMPTY frame can emit only _SUCCESS — always for
+            # a dynamic-partition write — with no schema-bearing parquet
+            # file, so swapping it in would destroy the dataset
+            # (exists→False, schema lost, FileNotFoundError on every later
+            # call). delete() matching all rows and an empty first create()
+            # are legitimate: re-write the empty frame unpartitioned, which
+            # leaves the schema-only file (partition dirs carry no data to
             # prune anyway when there are zero rows).
             df.limit(0).write.mode("overwrite").parquet(tmp)
         old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
+        # recovery clears an empty canonical dir next to stale siblings
+        os.makedirs(self.path, exist_ok=True)
         os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old)
@@ -377,16 +384,22 @@ class PqDB:
         Column additions evolve cheaply (old files are null-padded at read:
         the open merges every file's footer schema); type *widenings*
         trigger a one-time dataset rewrite to the promoted schema.
+
+        Two write paths: an append into a dataset that has data files, or
+        a whole-dataset write through ``_rewrite`` for a new dataset (and
+        for the zero-row marker of a partitioned one). The dataset is
+        listed once, after recovery, and again only after a widening
+        rewrite.
         """
-        self.recover()  # write entry point: finish any crashed swap first
+        files = self._recover()  # write entry point: finish any crashed swap first
         df = self._to_df(data, schema)
         if ID_COL in df.columns:
             df = df.drop(ID_COL)  # engine-owned column (reference: mc3d.py:125-126)
         start = 0
-        if self.exists:
-            existing = self._df()
-            self._check_layout_matches()
-            start = self._next_id_start()
+        if files:
+            existing = self._df(files)
+            self._check_layout_matches(files)
+            start = self._next_id_start(files)
             old_schema = T.StructType([f for f in existing.schema.fields if f.name != ID_COL])
             merged = unify_schemas([old_schema, df.schema])
             if merged != old_schema:
@@ -401,8 +414,8 @@ class PqDB:
                     for path, t in merged_leaves.items()
                 )
                 if widened:
-                    base = cast_to_schema(existing, merged, keep_extra=True)
-                    self._rewrite(base)
+                    self._rewrite(cast_to_schema(existing, merged, keep_extra=True), files)
+                    files = self._data_files()  # the rewrite replaced every file
             df = cast_to_schema(df, merged, keep_extra=False)
         source = df
         # the try opens BEFORE id assignment: assign_contiguous_ids_with_count
@@ -411,43 +424,24 @@ class PqDB:
         # persisted frame is a harmless no-op
         try:
             df, n = assign_contiguous_ids_with_count(df, start=start, partition_by=self.partition_by)
-            if self.partition_by and self._has_root_data_files():
-                # The dataset is the empty-rewrite marker: a delete() that
-                # matched every row left ONE unpartitioned schema-only file
-                # at the root (_rewrite's empty-frame fallback). Appending
-                # hive dirs NEXT to it would mix leaf depths and make Spark
-                # partition discovery fail on every later read — replace the
-                # zero-row dataset wholesale instead.
-                self._rewrite(df)
-            else:
+            if files and not (self.partition_by and self._root_files(files)):
                 writer = self._guard_partition_values(df).write.mode("append")
                 if self.partition_by:
                     writer = writer.partitionBy(*self.partition_by)
                 writer.parquet(self.path)
-                if n == 0 and not self.exists:
-                    # An EMPTY first batch must still CREATE the dataset —
-                    # the append writer emits no data file for zero rows,
-                    # so exists stayed False and every later
-                    # read()/update()/normalize() raised FileNotFoundError.
-                    # Write the schema-only marker the empty-rewrite path
-                    # uses (unpartitioned: partition dirs carry no data to
-                    # prune when there are zero rows).
-                    df.limit(0).write.mode("overwrite").parquet(self.path)
+            else:
+                # A new dataset, or the empty-rewrite marker: a delete()
+                # that matched every row of a partitioned dataset left ONE
+                # unpartitioned schema-only file at the root. Appending
+                # hive dirs NEXT to it would mix leaf depths and make Spark
+                # partition discovery fail on every later read — replace
+                # the zero-row dataset wholesale instead. An empty first
+                # batch still creates the dataset: _rewrite leaves the
+                # schema-only file for an empty frame.
+                self._rewrite(df, files)
         finally:
             source.unpersist()
         return n
-
-    def _has_root_data_files(self) -> bool:
-        """True when .parquet files sit directly in the dataset root — for a
-        hive-partitioned dataset that only happens via _rewrite's empty-frame
-        fallback (all data lives under partition dirs otherwise)."""
-        if not self.exists:
-            return False
-        return any(
-            f.endswith(".parquet")
-            and os.path.isfile(os.path.join(self.path, f))
-            for f in os.listdir(self.path)
-        )
 
     @staticmethod
     def _footer_rows(files: Iterable[str]) -> int:
@@ -455,27 +449,17 @@ class PqDB:
         metadata only, no Spark job."""
         import pyarrow.parquet as pq
 
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        return sum(pq.read_metadata(f).num_rows for f in files)
 
-    def _root_rows(self) -> int:
-        """Row count of the ROOT-LEVEL data files."""
-        root = (os.path.join(self.path, f) for f in os.listdir(self.path))
-        return self._footer_rows(
-            fp for fp in root if fp.endswith(".parquet") and os.path.isfile(fp)
-        )
+    def _root_files(self, files: list[str]) -> list[str]:
+        """The data files directly in the dataset root — for a
+        hive-partitioned dataset only _rewrite's empty-frame marker."""
+        return [f for f in files if os.sep not in os.path.relpath(f, self.path)]
 
-    def _partition_dirs_present(self) -> bool:
-        """True when hive-style ``key=value`` partition dirs exist at the
-        dataset root — the dataset was written with a partition_by."""
-        try:
-            return any(e.is_dir() and "=" in e.name for e in os.scandir(self.path))
-        except FileNotFoundError:
-            return False
-
-    def _check_layout_matches(self) -> None:
+    def _check_layout_matches(self, files: list[str]) -> None:
         """An append (create) or rewrite (update/delete/normalize) through a
-        ``partition_by`` that disagrees with how the dataset was actually
-        written must fail LOUDLY before any write:
+        ``partition_by`` that disagrees with how the dataset (``files``) was
+        actually written must fail LOUDLY before any write:
 
         - declared partition_by over a dataset whose ROWS live in root
           files: root files are legitimate only as the zero-row
@@ -484,13 +468,14 @@ class PqDB:
           branch would replace the dataset WHOLESALE, silently destroying
           them, and a rewrite would silently restructure the layout under
           every consumer holding the correct unpartitioned open;
-        - no partition_by over a hive-partitioned dataset: an append would
-          lay unpartitioned files next to ``key=value`` dirs, mixing leaf
-          depths so Spark's partition discovery fails on every later read,
-          and a rewrite would silently flatten the layout (data survives as
-          ordinary columns, partition pruning is lost).
+        - no partition_by over a hive-partitioned dataset (data files under
+          ``key=value`` dirs): an append would lay unpartitioned files next
+          to those dirs, mixing leaf depths so Spark's partition discovery
+          fails on every later read, and a rewrite would silently flatten
+          the layout (data survives as ordinary columns, partition pruning
+          is lost).
         """
-        if self.partition_by and self._has_root_data_files() and self._root_rows() > 0:
+        if self.partition_by and self._footer_rows(self._root_files(files)) > 0:
             raise ValueError(
                 f"dataset at {self.path!r} holds unpartitioned data files "
                 f"but this PqDB was opened with partition_by="
@@ -498,7 +483,10 @@ class PqDB:
                 "migrate the layout explicitly (read -> create into a new "
                 "partitioned dataset)"
             )
-        if not self.partition_by and self._partition_dirs_present():
+        if not self.partition_by and any(
+            "=" in os.path.relpath(os.path.dirname(f), self.path).split(os.sep)[0]
+            for f in files
+        ):
             raise ValueError(
                 f"dataset at {self.path!r} is hive-partitioned but this PqDB "
                 "was opened without partition_by; open it with the matching "
@@ -627,10 +615,10 @@ class PqDB:
         # possibly-expensive (or worse, nondeterministic — sample/rand)
         # lineage, so the guard would not certify the materialization the
         # join actually consumes
-        self.recover()  # write entry point: finish any crashed swap first
+        files = self._recover()  # write entry point: finish any crashed swap first
         up = self._to_df(updates).persist()
         try:
-            base = self._df()
+            base = self._df(files)
             if on not in base.columns:
                 raise ValueError(
                     f"update key {on!r} does not exist in the dataset "
@@ -680,15 +668,15 @@ class PqDB:
                     for c in base.columns
                 ]
             )
-            self._rewrite(out)
+            self._rewrite(out, files)
         finally:
             up.unpersist()
 
     def delete(self, ids: list | None = None, where: str | Column | None = None) -> None:
         """Delete rows where the predicate is TRUE (SQL DELETE semantics:
         rows where it evaluates to NULL are kept, not deleted)."""
-        self.recover()  # write entry point: finish any crashed swap first
-        base = self._df()
+        files = self._recover()  # write entry point: finish any crashed swap first
+        base = self._df(files)
         if ids is not None:
             cond = F.col(ID_COL).isin(ids)
         elif where is not None:
@@ -698,7 +686,7 @@ class PqDB:
         # keep rows where cond is FALSE or NULL — a bare ~cond would drop
         # NULL-predicate rows (NULL → ~NULL = NULL → filtered out)
         out = base.filter(~F.coalesce(cond, F.lit(False)))
-        self._rewrite(out)
+        self._rewrite(out, files)
 
     # ------------------------------------------------- versioned (SCD2) history
 
@@ -738,8 +726,8 @@ class PqDB:
         closed + unchanged = the pre-merge current-row count; unchanged is
         NOT "matched and identical" alone).
         """
-        self.recover()  # write entry point: finish any crashed swap first
-        base = self._df()
+        files = self._recover()  # write entry point: finish any crashed swap first
+        base = self._df(files)
         # persisted: the missing/dup guards, the join, and
         # the fresh anti-join all consume this frame — one materialization
         # certifies them all (and stops a nondeterministic update lineage
@@ -847,7 +835,7 @@ class PqDB:
             inserts = changed_new.unionByName(fresh_cast).withColumn(
                 self.VALID_FROM, F.lit(effective_ts).cast("timestamp")
             ).withColumn(self.VALID_TO, F.lit(None).cast("timestamp"))
-            start = self._next_id_start()
+            start = self._next_id_start(files)
             id_src = inserts.select(*[c for c in base.columns if c != ID_COL])
             # the id pass counts the inserts: changed keys plus fresh ones
             inserts, n_inserted = assign_contiguous_ids_with_count(
@@ -857,7 +845,7 @@ class PqDB:
                 inserts.select(*base.columns)
             )
             n_unchanged = int(n_current) - n_changed
-            self._rewrite(out)
+            self._rewrite(out, files)
         finally:
             # A long-running service merges repeatedly: release the per-call
             # resources that would otherwise accumulate for the session
@@ -916,50 +904,55 @@ class PqDB:
 
         Locally this is repartition + maxRecordsPerFile; at 100 TB the same
         rewrite runs as a distributed compaction job (AQE balances the
-        shuffle)."""
-        self.recover()  # write entry point: finish any crashed swap first
-        df = self._guard_partition_values(self._df())  # before the sort —
+        shuffle). Raises ValueError for an unknown ``layout``, a z-order
+        without ``cluster_by`` and a ``max_rows_per_file`` below 1."""
+        if layout not in ("linear", "zorder"):
+            raise ValueError(f"unknown layout {layout!r}; one of 'linear', 'zorder'")
+        if layout == "zorder" and not cluster_by:
+            raise ValueError("layout='zorder' needs cluster_by columns to interleave")
+        if max_rows_per_file < 1:
+            raise ValueError(f"max_rows_per_file must be at least 1, got {max_rows_per_file}")
+        files = self._recover()  # write entry point: finish any crashed swap first
+        df = self._guard_partition_values(self._df(files))  # before the sort —
         # see _rewrite: a post-sort guard projection makes the writer
         # re-sort on partition columns alone, destroying the cluster order
-        n = self._footer_rows(self._data_files())
-        n_files = max(1, math.ceil(n / max_rows_per_file))
-        pcols = [F.col(c) for c in self.partition_by]
-        if cluster_by and layout == "zorder":
+        n_files = max(1, math.ceil(self._footer_rows(files) / max_rows_per_file))
+        if not cluster_by:
+            self._rewrite(df, files, n_files=n_files, max_records_per_file=max_rows_per_file, partition_values_guarded=True)
+            return
+        keys = [F.col(c) for c in cluster_by]
+        if layout == "zorder":
             from crystal_parquet_database_spark.operators.skew import zorder_key
 
-            keyed, key = zorder_key(df, cluster_by)
-            if self.partition_by:
-                # Hive-partitioned: cluster on the PARTITION columns first
-                # (each partition value in ONE task — a range-partition on
-                # the cluster key alone spreads every value over all
-                # n_files tasks and the partitioned writer then emits up to
-                # n_files × n_values tiny files, the same anti-compaction
-                # pathology _rewrite's n_files path guards against), then
-                # sort (partition cols, cluster key) within tasks so each
-                # per-value file is still written in cluster-key order —
-                # maxRecordsPerFile splits preserve the sort, so per-file
-                # min/max stats stay narrow on the clustered dimensions.
-                keyed = keyed.repartition(n_files, *pcols).sortWithinPartitions(
-                    *pcols, key
-                )
-            else:
-                keyed = keyed.repartitionByRange(n_files, F.col(key)).sortWithinPartitions(key)
-            self._rewrite(keyed.drop(key), max_records_per_file=max_rows_per_file, partition_values_guarded=True)
-        elif cluster_by:
-            cols = [F.col(c) for c in cluster_by]
-            if self.partition_by:
-                # same reasoning as the zorder branch above
-                df = df.repartition(n_files, *pcols).sortWithinPartitions(*pcols, *cols)
-            else:
-                df = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
-            self._rewrite(df, max_records_per_file=max_rows_per_file, partition_values_guarded=True)
+            df, key = zorder_key(df, cluster_by)
+            keys = [F.col(key)]
+        if self.partition_by:
+            # Hive-partitioned: cluster on the PARTITION columns first (each
+            # partition value in ONE task — a range-partition on the cluster
+            # key alone spreads every value over all n_files tasks and the
+            # partitioned writer then emits up to n_files × n_values tiny
+            # files, the same anti-compaction pathology _rewrite's n_files
+            # path guards against), then sort (partition cols, cluster key)
+            # within tasks so each per-value file is still written in
+            # cluster-key order — maxRecordsPerFile splits preserve the
+            # sort, so per-file min/max stats stay narrow on the clustered
+            # dimensions.
+            pcols = [F.col(c) for c in self.partition_by]
+            df = df.repartition(n_files, *pcols).sortWithinPartitions(*pcols, *keys)
         else:
-            self._rewrite(df, n_files=n_files, max_records_per_file=max_rows_per_file, partition_values_guarded=True)
+            df = df.repartitionByRange(n_files, *keys).sortWithinPartitions(*keys)
+        if layout == "zorder":
+            df = df.drop(key)
+        self._rewrite(df, files, max_records_per_file=max_rows_per_file, partition_values_guarded=True)
 
     @property
     def n_rows(self) -> int:
-        """Row count from the data files' footers — no Spark job."""
-        return self._footer_rows(self._require_data_files())
+        """Row count from the data files' footers — no Spark job. Raises
+        like ``read()`` on a dataset without data files."""
+        files = self._data_files()
+        if not files:
+            self._df(files)  # raises the empty-dataset error
+        return self._footer_rows(files)
 
     @property
     def n_columns(self) -> int:
@@ -974,14 +967,14 @@ class PqDB:
     def get_number_of_row_groups_per_file(self) -> dict[str, int]:
         import pyarrow.parquet as pq
 
-        return {f: pq.ParquetFile(f).num_row_groups for f in self._data_files()}
+        return {f: pq.read_metadata(f).num_row_groups for f in self._data_files()}
 
     def get_n_rows_per_row_group_per_file(self) -> dict[str, list[int]]:
         import pyarrow.parquet as pq
 
         out = {}
         for f in self._data_files():
-            md = pq.ParquetFile(f).metadata
+            md = pq.read_metadata(f)
             out[f] = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
         return out
 
@@ -990,6 +983,6 @@ class PqDB:
 
         out = {}
         for f in self._data_files():
-            md = pq.ParquetFile(f).metadata
+            md = pq.read_metadata(f)
             out[f] = [md.row_group(i).total_byte_size for i in range(md.num_row_groups)]
         return out

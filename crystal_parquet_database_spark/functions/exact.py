@@ -93,9 +93,9 @@ def dsum_of_double(c: Column | str, cast_to: str = HI) -> Column:
 # decimal it is fixed at, or the ANSI cast aborts the whole job on ONE bad
 # upstream value — exactly the failure a 100 TB feed with occasional
 # sensor garbage (1e308, ±inf, NaN) must survive. Values outside the
-# domain join NaN/±inf/NULL in the MISSING class (round-8's NaN-as-missing
-# contract, extended to huge-finite in round 9 after the extreme-values
-# sweep crashed three queries on 1.7e308). The bound for decimal(18,6) is
+# domain join NaN/±inf/NULL in the MISSING class (the NaN-as-missing
+# contract, extended to huge-finite values after the extreme-values sweep
+# crashed three queries on 1.7e308). The bound for decimal(18,6) is
 # 1e12 (12 integer digits); rounding at scale 6 cannot push a
 # representable double below the bound across it (double spacing at 1e12
 # is ~2.4e-4, far coarser than the 5e-7 rounding increment).

@@ -75,7 +75,7 @@ def sql_shingles(expr: str, k: int = 5) -> str:
 # which is exactly RE2's \s set, so the '\s+' the generated SQL uses means
 # the same thing.
 #
-# TRIM is the same trap one function over (caught by the round-10
+# TRIM is the same trap one function over (caught by the
 # tokenizer-parity property test on random strings): DuckDB's ONE-ARG
 # trim() strips UNICODE whitespace (NBSP and friends — routine padding in
 # scraped HTML) while Spark's F.trim strips the ASCII space only, so a

@@ -73,7 +73,7 @@ def binary_classifier_eval(
     # it below (the per-score groupBy and the global top-k) and each would
     # otherwise re-derive the upstream scoring pass — for the AUC query that
     # is the full tokenize-and-score scan of the corpus, re-run per consumer
-    # (round-15 optimization: 3 scoring passes → 1; the n_scored count is
+    # (3 scoring passes → 1; the n_scored count is
     # derived from the per-score totals instead of a third corpus scan —
     # exact under the documented 0/1 label contract, since every scored row
     # contributes to exactly one of n_pos / n_neg).

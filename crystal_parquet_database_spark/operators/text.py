@@ -215,7 +215,7 @@ def repetition_features(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # token projection materialized ONCE: the per-row n-gram branch and the
     # top-word explode branch below both consume __toks — left lazy, each
     # branch re-runs the regex split over the whole corpus (A/B-measured,
-    # SCALE.md round-10 table); only (id, tokens) is checkpointed, source
+    # see SCALE.md); only (id, tokens) is checkpointed, source
     # columns are projected away first
     df = (
         _spread(df)
@@ -817,7 +817,7 @@ def dedup_chunks_keep_first(
     # base materialized: two consumers (the chunk explode below and the
     # final reassembly join) otherwise EACH re-run the tokenize→slice over
     # the raw corpus — the most expensive expression in the plan
-    # (A/B-measured, SCALE.md round-10 table)
+    # (A/B-measured, see SCALE.md)
     base = d.select(
         F.col(id_col), tail.alias("__tail"), chunks.alias("__c")
     ).localCheckpoint(eager=True)
@@ -1152,7 +1152,7 @@ def bm25_topk(
     # agg, the tf explode, and the per-doc dl join) — left lazy, each one
     # re-runs the regex split over the whole corpus, so the checkpoint
     # trades one token-array materialization for two repeated full-corpus
-    # tokenize passes (A/B-measured win, SCALE.md round-10 table)
+    # tokenize passes (A/B-measured win, see SCALE.md)
     base = (
         _spread(df)
         .withColumn("__toks", ws_tokens(F.col(text_col)))
@@ -1387,7 +1387,7 @@ def importance_reweight(
 
 
 # ----------------------------------------------------------------------------
-# Gopher structural quality rules (Rae et al. 2021, Table A1) — round 14
+# Gopher structural quality rules (Rae et al. 2021, Table A1)
 # ----------------------------------------------------------------------------
 
 # the Gopher paper's stop-word presence set ("must contain >= 2 of ...")

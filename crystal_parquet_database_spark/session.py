@@ -42,7 +42,7 @@ def get_spark(
     # latency-sensitive JVMs: every heap page is faulted in once during
     # startup, so G1 heap expansion mid-query never stalls on first-touch
     # page faults and the committed heap is never uncommitted/refaulted.
-    # Measured on the round-14 harness (a microVM whose first-touch faults
+    # Measured on a microVM whose first-touch faults
     # degrade to ~17 MB/s past a few-GB burst budget): with the default
     # lazy heap, heap-growth events mid-suite stalled individual queries
     # 2-5x (e.g. pqdb_normalize_compaction 14-18 s vs 7-11 s, see
@@ -79,13 +79,13 @@ def get_spark(
         # surface, or any long-running cluster re-serving a workload) evicts
         # every entry between two runs of the same query, so each run pays
         # full Janino+JIT recompilation of every codegen unit — pure
-        # driver-side serialized time. Measured (round-14 optimization,
-        # sf0.1): the 8 literal-heavy trained-quantizer queries ran 51.6 s
-        # steady-state, then 184.5 s after 50 other queries had cycled the
-        # default cache (sim_ivfpq_residual 9.1 -> 76.7 s); with this cap
+        # driver-side serialized time. Measured (sf0.1): the 8
+        # literal-heavy trained-quantizer queries ran 51.6 s steady-state,
+        # then 184.5 s after 50 other queries had cycled the default cache
+        # (sim_ivfpq_residual 9.1 -> 76.7 s); with this cap
         # the same interleaved sequence stayed at 53.5 s. Memory cost is
         # bounded by the DISTINCT codegen units actually compiled (a few
-        # hundred here), not the cap. NOTE (round-14 ADVICE): this is a
+        # hundred here), not the cap. NOTE: this is a
         # STATIC SQL conf — like the driver-memory setting above it only
         # takes effect at JVM/session creation, so getOrCreate() against a
         # session some embedding context already built silently ignores it

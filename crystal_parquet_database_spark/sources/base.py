@@ -157,11 +157,11 @@ class BaseLoader:
         started = self._ingest_started_marker()
         pqdb = PqDB(self.spark, self.interim_db_dir)
         # ingest is a write path: finish any crashed swap BEFORE the
-        # skip-if-complete check (`exists` is read-only now; without this a
+        # skip-if-complete check (`exists` is read-only; without this a
         # corpus parked in swap siblings would look absent and be
-        # re-ingested on top of the recovered rows as duplicates)
-        pqdb.recover()
-        if pqdb.exists:
+        # re-ingested on top of the recovered rows as duplicates).
+        # recover() returns `exists`: one listing, not two
+        if pqdb.recover():
             if not self.config.ingest_from_scratch and not os.path.exists(started):
                 return pqdb
             # REBUILD (explicit from-scratch, or our own interrupted run):

@@ -129,7 +129,7 @@ def stream_ingest_into_pqdb(
         try:
             # the sink owns the dataset (single writer): finish any crashed
             # swap before deciding whether an existing-keys anti-join is
-            # needed (`exists` is read-only now — a dataset parked in swap
+            # needed (`exists` is read-only — a dataset parked in swap
             # siblings would otherwise skip the dedup and re-append its
             # whole history)
             if db.recover():  # returns `exists`; one directory walk, not two

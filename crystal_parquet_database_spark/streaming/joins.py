@@ -82,8 +82,8 @@ def enrich_with_customer(
     ``event_cols`` is the event-side projection (the default is the compact
     analytic shape the registered query pins). Pass ``None`` to keep EVERY
     event column — an enrichment that silently dropped the payload it was
-    meant to enrich (``value``, ``props``) is the round-8-review trap this
-    parameter closes; only ``user_id`` is actually required."""
+    meant to enrich (``value``, ``props``) is the trap this parameter
+    closes; only ``user_id`` is actually required."""
     dim = customer.select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_name"),

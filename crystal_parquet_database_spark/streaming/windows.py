@@ -35,8 +35,8 @@ def tumbling_counts(
     AND huge-finite values outside the decimal(18,6) domain (|v| >= 1e12)
     become NULL before the decimal-routed sum — under ANSI mode the cast
     would otherwise abort the whole streaming query on the first bad
-    upstream value (round 9's extreme-values sweep crashed this on a
-    single 1.7e308 row)."""
+    upstream value (``scripts/extreme_sweep.py`` crashed this on a single
+    1.7e308 row)."""
     df = with_watermark(df, ts_col, watermark)
     df = df.withColumn("value", missing_outside_domain("value"))
     return (

@@ -283,7 +283,7 @@ def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     history. Decimal sums keep every level bit-exact against the oracle
     (floats would drift under re-aggregation order).
 
-    Plan shape (the round-8 re-measure, SCALE.md): two shuffles, no cache.
+    Plan shape (measured, see SCALE.md): two shuffles, no cache.
     The previous ladder (minute → hour → day as three cached frames under a
     3-way union) needed the minute partials materialized for its three
     consumers; both materialization forms measurably cost more than they
@@ -482,7 +482,7 @@ _HIST_WIDTH = 50
 # bucket ids live in INT32; a value whose bucket would overflow it (or NaN,
 # or ±inf) lands in ONE shared NULL "unbucketable" bin instead of
 # ANSI-aborting the job — the monitoring semantic a garbage-bearing feed
-# needs (the round-9 extreme-values sweep crashed this on a 1.7e308 row:
+# needs (scripts/extreme_sweep.py crashed this on a 1.7e308 row:
 # floor() saturated to LONG MAX and the int cast overflowed)
 _HIST_BUCKETABLE = float(_HIST_WIDTH) * 2.0**31
 

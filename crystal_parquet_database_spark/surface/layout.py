@@ -10,7 +10,7 @@ surface; bucketing and z-ordering are the Spark-native layout levers the
 reference lacks.
 
 The query z-orders the orders table over (o_orderdate, o_totalprice) — the
-date dimension exercises the datetime normalization added in round 6 —
+date dimension exercises zorder_key's datetime normalization —
 rewrites it to scratch parquet, reads it back, bucket-writes both join sides
 on the customer key, runs the shuffle-free bucketed join, and aggregates to
 plain decimal-exact values the oracle recomputes directly from the fixtures.

@@ -814,7 +814,7 @@ def multimodal_image_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # len//8, energy = mean byte value) — recomputed BYTE-exactly by slicing
 # the hex encoding of the UTF-8 bytes (2 hex digits per byte). The first
 # form sliced CHARACTERS with a byte-derived step and used ord() as the
-# byte value — exact only while the corpus is pure ASCII; the round-9
+# byte value — exact only while the corpus is pure ASCII; the
 # unicode sweep showed 442/4000 rows diverging on multilingual text
 # (multi-byte chars make char offsets ≠ byte offsets and code points ≠
 # byte values). Empty tail chunks mirror the fake's b"\\x00" placeholder
@@ -1615,7 +1615,7 @@ def text_dedup_chunks_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# cross-corpus boilerplate removal (round 13): remove EVERY occurrence of a
+# cross-corpus boilerplate removal: remove EVERY occurrence of a
 # block frequent across documents — C4's repeated-span discard / RefinedWeb's
 # line dedup, vs the keep-first rule above.
 # ----------------------------------------------------------------------------
@@ -1664,7 +1664,7 @@ FROM base b LEFT JOIN k USING (doc_id)
 
 @query("text_boilerplate_chunks", _BP_ORACLE)
 def text_boilerplate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus boilerplate removal (round 13): any {w}-token block
+    """Cross-corpus boilerplate removal: any {w}-token block
     whose exact text occurs in >= {m} distinct documents is removed from
     EVERY document (C4's repeated-span discard; RefinedWeb's line dedup) —
     the complement of text_dedup_chunks_keep_first's keep-first rule.
@@ -1720,7 +1720,7 @@ def sample_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# sampling: temperature-resampled mixture weights (round 13) — mT5-style
+# sampling: temperature-resampled mixture weights — mT5-style
 # α-sampling at the one oracle-exact temperature (α = 1/2: IEEE sqrt is
 # correctly rounded; pow/exp/ln are not — the DSIR log-free argument).
 # ----------------------------------------------------------------------------
@@ -1753,7 +1753,7 @@ FROM (
 
 @query("sample_temperature_mixture", _TEMP_ORACLE)
 def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-resampled language mixture (round 13): per-language
+    """Temperature-resampled language mixture: per-language
     sampling weight = sqrt(token_count) normalized over languages (mT5
     α-sampling, α = 1/2 — the one temperature IEEE guarantees correctly
     rounded, hence oracle-exact), plus the per-language document allocation
@@ -2314,7 +2314,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# sampling: DSIR-style hashed-feature importance reweighting (round 12)
+# sampling: DSIR-style hashed-feature importance reweighting
 # ----------------------------------------------------------------------------
 
 # target exemplars: documents mentioning the anchor term — the fixture's
@@ -2364,7 +2364,7 @@ FROM base b LEFT JOIN scored s USING (doc_id)
 
 @query("sample_importance_reweight", _IR_ORACLE)
 def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance reweighting (round 12): every document scored
+    """DSIR-style importance reweighting: every document scored
     by how target-like its hashed token distribution is (target exemplars:
     documents mentioning the anchor term — see _IR_TAU's note on why the
     fixture's lang labels cannot anchor a lexical target), keep iff
@@ -2627,7 +2627,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# evaluation: does the quality score actually separate classes? (round 12)
+# evaluation: does the quality score actually separate classes?
 # ----------------------------------------------------------------------------
 
 _EVAL_K = 100
@@ -2683,7 +2683,7 @@ FROM n, t, k
 
 @query("eval_classifier_auc", _CLF_EVAL_ORACLE)
 def eval_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-scale classifier evaluation (round 12): tie-corrected rank-sum
+    """Corpus-scale classifier evaluation: tie-corrected rank-sum
     ROC-AUC + deterministic precision@{k} of the hashed-linear quality
     score against the language-ID proxy label (is-English) — the check a
     pipeline runs BEFORE committing a filter threshold. The AUC numerator
@@ -2745,7 +2745,7 @@ FROM r GROUP BY 1
 
 @query("eval_classifier_calibration", _CLF_CALIB_ORACLE)
 def eval_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calibration table (round 12) companion to eval_classifier_auc: the
+    """Calibration table companion to eval_classifier_auc: the
     quality score's rows cut into 10 equal-population rank bins (total
     order (score, id) — ties never straddle a boundary engine-dependently),
     per-bin population / positive rate / score range. The rank is the
@@ -4095,11 +4095,11 @@ def dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------------
-# dedup: TRAINED SemDeDup (round 14) — the last pinned-codebook consumer
+# dedup: TRAINED SemDeDup — the pinned-codebook SemDeDup
 # composed with the deterministic k-means trainer: centroids are no longer
 # pinned embedding rows but a kmeans_lloyd_centroids product, K ∝ corpus,
 # and the whole train→cluster→prune loop is recomputed bit-for-bit by the
-# oracle (the round-13 trained-quantizer move applied to semantic dedup).
+# oracle (the trained-quantizer pattern applied to semantic dedup).
 # ----------------------------------------------------------------------------
 
 _SEMT_COSC = _sql_cos("e.embedding", "t.cvec")
@@ -4137,8 +4137,7 @@ FROM asg g LEFT JOIN rm r USING (vec_id)
 
 @query("dedup_semantic_semdedup_trained", _SEMDEDUP_TRAINED_ORACLE)
 def dedup_semantic_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup with a TRAINED codebook (round 14 — the verdict's last
-    uncomposed-path ask): the cluster centroids are k-means products
+    """SemDeDup with a TRAINED codebook: the cluster centroids are k-means products
     (kmeans_lloyd_centroids over the corpus, initialized from the same
     seed-row scheme as the pinned sibling, K = max({k}, 4n/500) GROWING
     WITH THE CORPUS per the paper's ~125-vectors-per-cell design), then the
@@ -4460,7 +4459,7 @@ def sim_ivfpq_residual_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # ----------------------------------------------------------------------------
-# text: CCNet-style per-language perplexity bucketing (round 14) — split
+# text: CCNet-style per-language perplexity bucketing — split
 # every language's corpus into head/middle/tail thirds by the (log-free)
 # LM fluency signal, the Wenzek et al. 2020 curation move that LLaMA's
 # CommonCrawl pipeline reused. Bucketing is rank arithmetic over an
@@ -4517,7 +4516,7 @@ def text_ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ----------------------------------------------------------------------------
-# evaluation: k-NN label vote (round 14) — the standard embedding-quality
+# evaluation: k-NN label vote — the standard embedding-quality
 # probe: if an embedding space is good, a vector's exact nearest neighbors
 # share its label. Majority vote over the exact cosine top-k, reported per
 # query with the prediction and correctness — the eval a pipeline runs
@@ -4622,7 +4621,7 @@ sim_knn_label_vote.__doc__ = sim_knn_label_vote.__doc__.format(k=_KNN_K)
 
 
 # ----------------------------------------------------------------------------
-# text: Gopher structural quality rules (round 14) — the MassiveText
+# text: Gopher structural quality rules — the MassiveText
 # document-level gate (Rae et al. 2021, Table A1). The repetition half
 # already ships as text_repetition_features; this adds the structural
 # rules + per-rule flags + the conjunction, all exact-integer arithmetic.

@@ -32,8 +32,8 @@ _ELS = ["Si", "O", "Fe", "Al"]
 
 # Array outputs are serialized to comma-joined strings on BOTH sides: the
 # driver's canonicalizer sorts pandas rows with raw cell values, and list
-# cells are unhashable/unorderable there (the round-1 lesson re-learned in
-# round 6 — see relational.py's agg_collect_sorted_list for the pattern).
+# cells are unhashable/unorderable there (see registry.py's complex-column
+# guard and relational.py's agg_collect_sorted_list for the pattern).
 
 _CIF_ORACLE = f"""
 SELECT doc_id AS cif_id,

@@ -19,9 +19,9 @@ def assert_driver_safe_schema(name: str, df: DataFrame) -> None:
 
     The driver sorts result rows with pandas ``sort_values`` over RAW cell
     values, so a top-level Array/Map/Struct column dies with ``TypeError:
-    unhashable type: 'list'`` before any comparison happens.  This bit us in
-    round 1 (``agg_collect_sorted_list``) and AGAIN in round 6
-    (``cif_parse_real``/``nested_struct_ops_real``) — serialize complex
+    unhashable type: 'list'`` before any comparison happens (it broke
+    ``agg_collect_sorted_list``, ``cif_parse_real`` and
+    ``nested_struct_ops_real`` before this guard existed) — serialize complex
     outputs with ``F.array_join``/``F.to_json`` and mirror with
     ``array_to_string``/``to_json`` in the DuckDB oracle instead.
     """
@@ -34,7 +34,7 @@ def assert_driver_safe_schema(name: str, df: DataFrame) -> None:
         raise TypeError(
             f"query {name!r} returns complex-typed top-level columns "
             f"({'; '.join(bad)}) — the driver's canonicalizer cannot sort "
-            "these (round-1 and round-6 failures); serialize with "
+            "these; serialize with "
             "array_join/to_json on BOTH the Spark and oracle sides"
         )
 

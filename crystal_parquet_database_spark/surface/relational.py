@@ -330,7 +330,7 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 -- input exposes: ANSI (and DuckDB) emit the grand-total grouping-set row
 -- over an empty relation; Spark's rollup/cube/grouping-sets emit nothing.
 -- Every populated grouping row has COUNT(*) >= 1, so this is value-
--- identical on any non-empty input (scripts/empty_sweep round-8 catch).
+-- identical on any non-empty input (scripts/empty_sweep.py checks it).
 HAVING COUNT(*) > 0
 """
 
@@ -358,7 +358,7 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 -- input exposes: ANSI (and DuckDB) emit the grand-total grouping-set row
 -- over an empty relation; Spark's rollup/cube/grouping-sets emit nothing.
 -- Every populated grouping row has COUNT(*) >= 1, so this is value-
--- identical on any non-empty input (scripts/empty_sweep round-8 catch).
+-- identical on any non-empty input (scripts/empty_sweep.py checks it).
 HAVING COUNT(*) > 0
 """
 
@@ -547,7 +547,7 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact=0 (empty relation) ⇒ the sketch cannot be off: TRUE,
             # matching the oracle's literal — and the CASE guards the ANSI
             # division (when() short-circuits per row, so the divide never
-            # evaluates for the zero row; round-8 empty-corpus sweep)
+            # evaluates for the zero row; scripts/empty_sweep.py)
             F.when(
                 F.col("exact_parts") == 0, F.col("__approx") == 0
             ).otherwise(

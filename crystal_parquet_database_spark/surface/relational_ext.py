@@ -36,7 +36,7 @@ GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 -- input exposes: ANSI (and DuckDB) emit the grand-total grouping-set row
 -- over an empty relation; Spark's rollup/cube/grouping-sets emit nothing.
 -- Every populated grouping row has COUNT(*) >= 1, so this is value-
--- identical on any non-empty input (scripts/empty_sweep round-8 catch).
+-- identical on any non-empty input (scripts/empty_sweep.py checks it).
 HAVING COUNT(*) > 0
 """
 
@@ -790,7 +790,7 @@ def agg_hll_error_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound = lambda approx, exact: (  # noqa: E731
         # exact=0 (empty relation) ⇒ sketch can't be off: TRUE per the
         # oracle's literal; when() short-circuits so the ANSI division
-        # never evaluates for the zero row (round-8 empty-corpus sweep)
+        # never evaluates for the zero row (scripts/empty_sweep.py)
         F.when(exact == 0, F.coalesce(approx, F.lit(0.0)) == 0.0).otherwise(
             F.abs(approx - exact.cast("double")) / exact.cast("double") <= F.lit(0.05)
         )

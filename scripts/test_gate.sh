@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
-# End-of-round TEST GATE, sharded (round-13, verdict ask #6): the full suite
+# Full TEST GATE, sharded: the full suite
 # grew past ~11 min in one process, and by the late files the accumulated
 # JVM/block-manager pressure both inflates runtimes and — when the gate is
-# run beside the bench — contaminates the bench baseline (the round-12
-# incident, SCALE.md). This script runs the suite as two FRESH-PROCESS
+# run beside the bench — contaminates the bench baseline (see
+# SCALE.md). This script runs the suite as two FRESH-PROCESS
 # shards, sequentially (never in parallel with each other or with bench.py:
 # bench's quiet-machine guard now refuses a baseline stamped while any
 # pytest is alive). Exit code is non-zero if either shard fails.
@@ -14,7 +14,7 @@ cd "$(dirname "$0")/.."
 
 mapfile -t FILES < <(ls tests/test_*.py | sort)
 N=${#FILES[@]}
-# Round-13 ADVICE: if the glob ever matches nothing (unexpected cwd, moved
+# If the glob ever matches nothing (unexpected cwd, moved
 # tree), shard A would run pytest with NO file args and silently collect
 # everything while shard B runs nothing — fail loudly instead.
 if [ "$N" -eq 0 ]; then

@@ -297,9 +297,9 @@ def test_create_write_plan_has_no_window_or_broadcast_join(spark, db, monkeypatc
 
 
 def test_appending_create_job_budget(spark, db):
-    """An appending create runs the schema open, the per-partition count
-    and the write — at most 6 jobs; the next id and the row count come
-    from footers without a job."""
+    """An appending create runs the per-partition count and the write —
+    at most 6 jobs; the next id and the row count come from footers
+    without a job."""
     db.create([{"x": i} for i in range(20)])
     n, jobs = _jobs_run(spark, lambda: db.create([{"x": i} for i in range(20, 30)]))
     assert n == 10 and jobs <= 6
@@ -332,6 +332,75 @@ def test_appending_create_runs_at_most_five_jobs(spark, db):
     assert n == 10 and jobs <= 5
 
 
+def test_each_call_lists_the_dataset_once(spark, tmp_path, monkeypatch):
+    """Every public call lists the dataset's data files once and reads each
+    data file's footer at most once (listing _rewrite's temp dir is not a
+    listing of the dataset)."""
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from crystal_parquet_database_spark import db as db_mod
+
+    listed, footers = Counter(), Counter()
+    list_files, read_metadata = db_mod.data_files, pq.read_metadata
+
+    def counting_list(path):
+        listed[path] += 1
+        return list_files(path)
+
+    def counting_read(where, *args, **kwargs):
+        footers[where] += 1
+        return read_metadata(where, *args, **kwargs)
+
+    monkeypatch.setattr(db_mod, "data_files", counting_list)
+    monkeypatch.setattr(pq, "read_metadata", counting_read)
+
+    def once(db, name, fn):
+        listed.clear()
+        footers.clear()
+        fn()
+        assert listed[db.path] == 1, (name, db.partition_by, listed[db.path])
+        assert max(footers.values(), default=0) <= 1, (name, footers)
+
+    def rows(lo, hi):
+        return [{"k": i, "lang": ["en", "de"][i % 2], "v": i} for i in range(lo, hi)]
+
+    for db in (
+        PqDB(spark, str(tmp_path / "flat")),
+        PqDB(spark, str(tmp_path / "hive"), partition_by=["lang"]),
+    ):
+        db.create(rows(0, 6))
+        once(db, "create", lambda: db.create(rows(6, 9)))
+        once(db, "update", lambda: db.update([{"k": 1, "v": 10}], on="k"))
+        once(db, "delete", lambda: db.delete(where="k = 2"))
+        once(db, "normalize", lambda: db.normalize(max_rows_per_file=4))
+        once(db, "read", db.read)
+        once(db, "n_rows", lambda: db.n_rows)
+        once(db, "recover", db.recover)
+
+    dim = PqDB(spark, str(tmp_path / "scd2"))
+    dim.create_versioned([{"sku": "a", "p": 1}], "2024-01-01 00:00:00")
+    once(
+        dim,
+        "upsert_scd2",
+        lambda: dim.upsert_scd2([{"sku": "a", "p": 2}], on="sku", effective_ts="2024-02-01 00:00:00"),
+    )
+
+
+@pytest.mark.parametrize("partition_by", [[], ["lang"]])
+def test_empty_first_create_makes_the_dataset(spark, tmp_path, partition_by):
+    """An empty first batch still creates the dataset: one unpartitioned
+    schema-only file, then appends continue from id 0."""
+    db = PqDB(spark, str(tmp_path / "empty"), partition_by=partition_by)
+    assert db.create(spark.createDataFrame([], "k int, lang string")) == 0
+    assert db.exists and db.n_rows == 0
+    assert db._root_files(db._data_files()) == db._data_files()
+    assert set(db.get_schema().fieldNames()) == {"k", "lang", "id"}
+    db.create([{"k": 1, "lang": "en"}])
+    assert [(r["id"], r["k"]) for r in db.read().collect()] == [(0, 1)]
+
+
 def test_scd2_merge_job_budget(spark, tmp_path):
     """One SCD2 merge runs at most 15 jobs: the open is job-free and the
     insert count comes from the id pass, not from a count() of the fresh
@@ -361,7 +430,7 @@ def test_next_id_start_from_footers(spark, tmp_path):
     db.create([{"x": i} for i in range(5)])
     db.delete(ids=[11])
     top = db.read().agg(F.max("id")).collect()[0][0]
-    start, jobs = _jobs_run(spark, db._next_id_start)
+    start, jobs = _jobs_run(spark, lambda: db._next_id_start(db._data_files()))
     assert (start, jobs) == (top + 1, 0) == (11, 0)
 
     plain = tmp_path / "nostats"
@@ -373,12 +442,13 @@ def test_next_id_start_from_footers(spark, tmp_path):
     )
     nostats = PqDB(spark, str(plain))
     assert not pq.read_metadata(str(plain / "part-0.parquet")).row_group(0).column(0).is_stats_set
-    assert nostats._next_id_start() == 42
+    assert nostats._next_id_start(nostats._data_files()) == 42
     nostats.create([{"x": 4}])
     assert nostats.read(filters="x = 4").collect()[0]["id"] == 42
 
     db.delete(where="true")  # leaves the zero-row marker file
-    assert db._data_files() and db._next_id_start() == 0
+    files = db._data_files()
+    assert files and db._next_id_start(files) == 0
 
 
 def test_n_rows_matches_count(spark, tmp_path):
@@ -443,6 +513,21 @@ def test_normalize_cluster_by_narrows_file_stats(spark, db):
     # rewrite preserved the data
     got = sorted(r["x"] for r in db.read(columns=["x"]).collect())
     assert got == sorted(vals)
+
+
+def test_normalize_rejects_bad_input(spark, db):
+    """A layout typo, a z-order without cluster columns and a zero file
+    size raise before anything is rewritten."""
+    db.create([{"x": i, "y": i} for i in range(5)])
+    files = db._data_files()
+    for kwargs, msg in (
+        ({"cluster_by": ["x", "y"], "layout": "zorde"}, "unknown layout"),
+        ({"layout": "zorder"}, "needs cluster_by"),
+        ({"max_rows_per_file": 0}, "at least 1"),
+    ):
+        with pytest.raises(ValueError, match=msg):
+            db.normalize(**kwargs)
+    assert db._data_files() == files
 
 
 def test_normalize_zorder_narrows_both_dims(spark, db):

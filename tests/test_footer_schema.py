@@ -86,7 +86,7 @@ def test_pqdb_partitioned_and_marker_match_inference(spark, tmp_path):
     assert db.get_schema().fieldNames()[-1] == "lang"  # discovered, appended
     assert "PartitionFilters: [isnotnull(lang" in _plan(db.read(filters="lang = 'fr'"))
     db.delete(where="true")  # leaves the unpartitioned zero-row marker
-    assert db._has_root_data_files()
+    assert db._root_files(db._data_files())
     _assert_pqdb_matches(spark, db)
 
 
