@@ -54,7 +54,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crystal_parquet_database_spark.operators.similarity import _lit_array
+from crystal_parquet_database_spark.functions.literals import lit_array
 from crystal_parquet_database_spark.runtime import release_local_checkpoint
 from crystal_parquet_database_spark.schema import cast_to_schema, leaf_types, unify_schemas
 from crystal_parquet_database_spark.tables import data_files, read_parquet
@@ -97,7 +97,7 @@ def assign_contiguous_ids_with_count(
     row_in_partition = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
     out = df.withColumn(
         id_col,
-        F.lit(start) + _lit_array(offsets, "array<bigint>")[F.spark_partition_id()] + row_in_partition,
+        F.lit(start) + lit_array(offsets, "array<bigint>")[F.spark_partition_id()] + row_in_partition,
     )
     return out.hint("rebalance", *partition_by), acc
 

@@ -14,12 +14,11 @@ Two paths:
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from crystal_parquet_database_spark.functions.literals import lit_matrix, lit_vector
 from crystal_parquet_database_spark.operators.dedup import bucket_pairs
 
 # Deterministic "random" hyperplane component: w(j, k) for hyperplane j,
@@ -79,32 +78,6 @@ def dot(a: Column, b: Column) -> Column:
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-
-
-def _lit_array(value: list, ddl: str) -> Column:
-    """A constant array as ONE string literal that the JVM decodes, instead
-    of one py4j ``lit()`` per element or one SQL-parser token per element.
-    ``from_json`` of a literal is foldable, so the optimizer turns it into
-    one array ``Literal``: plans show a constant, never a per-row parse.
-    ``json.dumps`` writes Python's shortest round-trip decimal (and
-    ``NaN``/``Infinity``, which Spark's JSON reader accepts) and Jackson
-    parses it correctly rounded, so every element is bit-identical.
-    FAILFAST makes a literal that does not decode raise instead of
-    becoming NULL."""
-    return F.from_json(F.lit(json.dumps(value)), ddl, {"mode": "FAILFAST"})
-
-
-def lit_vector(vec: list[float]) -> Column:
-    """array<double> literal (see ``_lit_array``)."""
-    return _lit_array([float(v) for v in vec], "array<double>")
-
-
-def lit_matrix(mat: list[list[float]]) -> Column:
-    """array<array<double>> literal — the shape every inlined centroid
-    table / PQ codebook uses (see ``_lit_array``)."""
-    return _lit_array(
-        [[float(v) for v in row] for row in mat], "array<array<double>>"
     )
 
 

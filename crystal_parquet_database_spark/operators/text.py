@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from crystal_parquet_database_spark.functions.literals import lit_frame
 from crystal_parquet_database_spark.functions.portable_hash import (
     WS_RE,
     spark_hash64,
@@ -169,8 +170,14 @@ def quality_score_pandas_udf(df: DataFrame, text_col: str, stopwords: list[str])
 
     Exists to (a) demonstrate the Arrow-batched scalar-UDF path and (b) pin
     its equivalence to the pure-expression version in tests. The expression
-    version stays the production path (JVM codegen, no Python); reach for
-    pandas_udf only when an operator genuinely can't be expressed in columns.
+    version stays the production path (JVM codegen, no Python).
+
+    The package's rule: Python workers run only where a row needs Python
+    code — CIF and media decode, this reference query, user rows handed
+    to ``PqDB`` and stateful streaming. Every Python task pays the worker's per-task set-up (about
+    0.2 s of CPU, SCALE.md "Python worker tax"), so constant frames are
+    built on the JVM (``functions.literals.lit_frame``), never with
+    ``createDataFrame``; ``tests/test_python_workers.py`` enforces it.
     """
     import re
 
@@ -1146,7 +1153,7 @@ def bm25_topk(
         for qid, terms in queries.items()
         for idx, term in enumerate(terms)
     ]
-    qdf = spark.createDataFrame(qrows, "query_id string, term string, idx int")
+    qdf = lit_frame(spark, qrows, "query_id string, term string, idx int")
 
     # tokens materialized ONCE: three consumers read base (the corpus-stats
     # agg, the tf explode, and the per-doc dl join) — left lazy, each one

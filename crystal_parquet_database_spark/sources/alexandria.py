@@ -57,7 +57,7 @@ def _tmp_name(name: str) -> str:
     """In-flight download temp name: dot-PREFIXED so Spark/Hadoop readers
     (which skip hidden files) and BaseLoader's pre-placed-corpus check (which
     ignores '.'-prefixed entries) never mistake a partial fetch for content;
-    a suffixed 'x.json.bz2.part' would match the _read_raw glob '*.json*'."""
+    a suffixed 'x.json.bz2.part' would match _read_raw's filter '*.json*'."""
     return "." + name + ".part"
 
 
@@ -113,8 +113,8 @@ class AlexandriaLoader(BaseLoader):
             # mid-download must not leave a truncated file that every later
             # run (os.path.exists) treats as complete forever. The temp name
             # is dot-PREFIXED (not suffixed): Spark readers skip hidden
-            # files, and a suffixed "x.json.bz2.part" would match the
-            # _read_raw glob "*.json*" and feed truncated bz2 to the job.
+            # files, and a suffixed "x.json.bz2.part" would match
+            # _read_raw's filter "*.json*" and feed truncated bz2 to the job.
             tmp = os.path.join(raw_dir, _tmp_name(name))
             with urllib.request.urlopen(url, timeout=self.config.timeout_seconds) as r, open(
                 tmp, "wb"
@@ -124,9 +124,14 @@ class AlexandriaLoader(BaseLoader):
             os.replace(tmp, dest)
 
     def _read_raw(self, spark: SparkSession, raw_dir: str) -> DataFrame:
-        """A4: one row per entry. Codec inferred from extension (.bz2 ok)."""
-        files = os.path.join(raw_dir, "*.json*")
-        raw = spark.read.option("multiLine", "true").json(files)
+        """A4: one row per entry. Codec inferred from extension (.bz2 ok).
+        The directory is read with a file-name filter, not as a glob path:
+        Spark stats a glob as a literal path first and logs the failure."""
+        raw = (
+            spark.read.option("multiLine", "true")
+            .option("pathGlobFilter", "*.json*")
+            .json(raw_dir)
+        )
         return raw.select(F.explode("entries").alias("e")).select("e.data", "e.structure")
 
     def _transform(self, df: DataFrame) -> DataFrame:

@@ -12,8 +12,6 @@ Transform parity (mp.py:106-179) including the deliberate alias
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -72,7 +70,13 @@ class MPLoader(BaseLoader):
         raise NotImplementedError("live MP fetch requires an API key and network access")
 
     def _read_raw(self, spark: SparkSession, raw_dir: str) -> DataFrame:
-        return spark.read.option("multiLine", "true").json(os.path.join(raw_dir, "*.json"))
+        # a file-name filter on the directory, not a glob path (see
+        # AlexandriaLoader._read_raw)
+        return (
+            spark.read.option("multiLine", "true")
+            .option("pathGlobFilter", "*.json")
+            .json(raw_dir)
+        )
 
     def _transform(self, df: DataFrame) -> DataFrame:
         sites = F.col("structure.sites")

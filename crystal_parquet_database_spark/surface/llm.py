@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from crystal_parquet_database_spark.functions.literals import lit_frame
 from crystal_parquet_database_spark.functions.portable_hash import (
     N_MINHASH,
     P,
@@ -2579,8 +2580,8 @@ def sim_ivf_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         # assigned corpus — emit zero rows. Must NOT fall through to
         # ivf_topk's exact-search fallback, which would emit recall-1.0
         # rows the oracle never produces.
-        return spark.createDataFrame(
-            [], "query_id bigint, n_true bigint, n_hit_ivf bigint, recall_ivf double"
+        return lit_frame(
+            spark, [], "query_id bigint, n_true bigint, n_hit_ivf bigint, recall_ivf double"
         )
     ivf = S.ivf_topk(
         queries_df, emb, "vec_id", "embedding", cent,
@@ -2617,9 +2618,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not cent:
         # no valid seed rows: the oracle's tc1 is empty, so it emits zero
         # rows — not ivf_topk's exact-search fallback
-        return spark.createDataFrame(
-            [], "query_id bigint, match_id bigint, cos double, rank int"
-        )
+        return lit_frame(spark, [], "query_id bigint, match_id bigint, cos double, rank int")
     return S.ivf_topk(
         emb.filter(F.col("vec_id") < 10), emb, "vec_id", "embedding", cent,
         k=10, n_probe=_IVF_PROBE, dim=_DIM,
@@ -3389,8 +3388,8 @@ def sim_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         # oracle's CTEs are all empty too; return the empty result with
         # the exact output schema instead of IndexError-ing on
         # codebooks[0][0]
-        return spark.createDataFrame(
-            [], "query_id bigint, n_true bigint, n_hit_pq bigint, recall_pq double"
+        return lit_frame(
+            spark, [], "query_id bigint, n_true bigint, n_hit_pq bigint, recall_pq double"
         )
     codebooks = [
         [list(r[0])[j * _PQ_DSUB : (j + 1) * _PQ_DSUB] for r in seed_rows]
@@ -3547,7 +3546,7 @@ def sim_pq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         # truth rows with ZERO hits, not an empty frame. Uniform seed
         # admission means cell sets match across subspaces, so checking
         # subspace 0 checks them all.
-        no_hits = spark.createDataFrame([], "query_id bigint, __pq_match bigint")
+        no_hits = lit_frame(spark, [], "query_id bigint, __pq_match bigint")
         return _recall_hits(truth, no_hits, "__pq_match", "pq")
     codes = S.pq_encode(emb, "vec_id", "embedding", codebooks).localCheckpoint(
         eager=True
@@ -3619,7 +3618,7 @@ def sim_ivfpq_trained_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame
         # sibling's reasoning; the trained-IVF sibling differs: ITS oracle
         # truth ranks only the ASSIGNED corpus, so there the empty frame is
         # correct).
-        no_hits = spark.createDataFrame([], "query_id bigint, __ivfpq_match bigint")
+        no_hits = lit_frame(spark, [], "query_id bigint, __ivfpq_match bigint")
         return _recall_hits(truth, no_hits, "__ivfpq_match", "ivfpq")
     approx = S.ivfpq_adc_topk(
         queries_df, emb, "vec_id", "embedding", cent, codebooks,
@@ -3673,9 +3672,7 @@ def sim_ivfpq_trained_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _trained_pq_codebooks(emb),
     )
     if not cent or not codebooks[0]:
-        appr = spark.createDataFrame(
-            [], "query_id bigint, match_id bigint, rank int"
-        )
+        appr = lit_frame(spark, [], "query_id bigint, match_id bigint, rank int")
     else:
         appr = S.ivfpq_adc_topk(
             queries_df, emb, "vec_id", "embedding", cent, codebooks,
@@ -3784,7 +3781,7 @@ def text_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", _BM25_QUERIES,
         top_k=_RRF_CAND_K, k1=_BM25_K1, b=_BM25_B,
     ).select("query_id", "doc_id", F.col("rank").alias("rank_b"))
-    qmap = spark.createDataFrame(_RRF_QVEC, "qid string, qvid long")
+    qmap = lit_frame(spark, _RRF_QVEC, "qid string, qvid long")
     qv = qmap.join(emb, qmap.qvid == emb.vec_id).select(
         F.col("qid").alias("vec_id"), "embedding"
     )
@@ -4268,11 +4265,9 @@ def text_hybrid_rrf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _trained_pq_codebooks(emb),
     )
     if not cent or not codebooks[0]:
-        vr = spark.createDataFrame(
-            [], "query_id string, doc_id bigint, rank_v int"
-        )
+        vr = lit_frame(spark, [], "query_id string, doc_id bigint, rank_v int")
     else:
-        qmap = spark.createDataFrame(_RRF_QVEC, "qid string, qvid long")
+        qmap = lit_frame(spark, _RRF_QVEC, "qid string, qvid long")
         qv = qmap.join(emb, qmap.qvid == emb.vec_id).select(
             F.col("qid").alias("vec_id"), "embedding"
         )
@@ -4449,7 +4444,7 @@ def sim_ivfpq_residual_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFram
         # any empty training empties the oracle's rcodes/radc chain (inner
         # joins), but its truth CTE is training-independent: truth rows,
         # zero hits
-        no_hits = spark.createDataFrame([], "query_id bigint, __r_match bigint")
+        no_hits = lit_frame(spark, [], "query_id bigint, __r_match bigint")
         return _recall_hits(truth, no_hits, "__r_match", "rivfpq")
     approx = S.ivfpq_residual_adc_topk(
         queries_df, emb, "vec_id", "embedding", cent, codebooks,

@@ -11,11 +11,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 from pyspark.sql import SparkSession
 
 from crystal_parquet_database_spark.surface import ORACLES, QUERIES
-from crystal_parquet_database_spark.testing import compare_query
+from crystal_parquet_database_spark.testing import compare_query, duckdb_connection
 
 SF = "/root/testdata/sf0.01"
 
@@ -32,14 +31,7 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
+    con = duckdb_connection(SF)
     fails = []
     for name in names:
         if name not in ORACLES or ORACLES[name] is None:

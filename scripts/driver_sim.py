@@ -28,12 +28,10 @@ print(f"entry(): {len(rows)} rows, schema: {[f.name for f in df.schema.fields]}"
 assert len(rows) > 0
 
 # 2) full contract at sf0.01 vs duckdb
-import duckdb
+from crystal_parquet_database_spark.testing import duckdb_connection
 
 SF = "/root/testdata/sf0.01"
-con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+con = duckdb_connection(SF)
 
 # ONE comparison protocol, shared with the in-package harness: schema
 # guard, column check, canon, and equality all live in

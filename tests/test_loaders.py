@@ -771,3 +771,63 @@ def test_run_skips_download_when_interim_complete(spark, data_dir):
     out = loader.run()
     assert calls == []  # download stage skipped entirely
     assert out.count() == 1
+
+
+@pytest.mark.parametrize(
+    "source, dataset, pattern, matching, stray",
+    [
+        ("alex", "3d", "*.json*", ["alexandria_000.json", "alexandria_001.json.bz2"], ["notes.txt"]),
+        ("materials_project", "summary", "*.json", ["summary_a.json", "summary_b.json"],
+         ["notes.txt", "summary_c.json.bz2"]),
+    ],
+)
+def test_read_raw_filters_directory_like_the_glob(spark, data_dir, source, dataset, pattern, matching, stray):
+    """The JSON loaders read their raw directory with a file-name filter
+    instead of a glob path (a glob is first stat'ed as a literal path, which
+    fails and logs a stack trace). The file set must stay the glob's: the
+    matching files only, never a dot-prefixed ``.part`` download temp, a
+    ``_DOWNLOAD_*`` sentinel or a non-matching file."""
+    from pyspark.sql import functions as F
+
+    loader = get_loader(spark, source, dataset, LoaderConfig(data_dir=data_dir))
+    raw = loader.raw_dir
+    os.makedirs(raw)
+
+    def write(name: str, tag: str) -> None:
+        entries = [
+            {"data": {"mat_id": f"agm-{tag}-{j}"}, "structure": _structure(n_sites=2 + j, seed=j)}
+            for j in range(2)
+        ]
+        doc = (
+            {"entries": entries}
+            if source == "alex"
+            else [{"material_id": f"mp-{tag}-{j}", "band_gap": 0.5 * j, "structure": e["structure"]}
+                  for j, e in enumerate(entries)]
+        )
+        opener = bz2.open if name.endswith(".bz2") else open
+        with opener(os.path.join(raw, name), "wt") as f:
+            json.dump(doc, f)
+
+    for name in matching:
+        write(name, name)
+    # files outside the set hold valid documents too, so reading any of
+    # them would add rows: an in-flight download, non-matching names and
+    # both sentinels
+    write("." + matching[0] + ".part", "part")
+    for name in stray:
+        write(name, name)
+    for sentinel in ("_DOWNLOAD_STARTED", "_DOWNLOAD_COMPLETE"):
+        with open(os.path.join(raw, sentinel), "w") as f:
+            f.write("{}\n")
+
+    glob_read = spark.read.option("multiLine", "true").json(os.path.join(raw, pattern))
+    if source == "alex":
+        glob_read = glob_read.select(F.explode("entries").alias("e")).select("e.data", "e.structure")
+    got = loader._read_raw(spark, raw)
+
+    def rows(df):
+        return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in df.collect())
+
+    assert got.schema == glob_read.schema
+    assert rows(got) == rows(glob_read)
+    assert len(rows(got)) == 2 * len(matching)

@@ -1072,8 +1072,8 @@ def test_lit_matrix_bitwise_equals_loop_form(spark):
 
     import pytest
 
-    from crystal_parquet_database_spark.operators.similarity import (
-        _lit_array,
+    from crystal_parquet_database_spark.functions.literals import (
+        lit_array,
         lit_matrix,
         lit_vector,
     )
@@ -1136,7 +1136,7 @@ def test_lit_matrix_bitwise_equals_loop_form(spark):
     # FAILFAST: a literal that does not decode raises instead of becoming
     # a NULL array
     with pytest.raises(Exception):
-        spark.range(1).select(_lit_array(["oops"], "array<double>")).collect()
+        spark.range(1).select(lit_array(["oops"], "array<double>")).collect()
 
 
 def test_km_assign_packed_ties_and_carry_vec(spark):
