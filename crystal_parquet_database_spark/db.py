@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 from crystal_parquet_database_spark.functions.literals import lit_array
 from crystal_parquet_database_spark.runtime import release_local_checkpoint
 from crystal_parquet_database_spark.schema import cast_to_schema, leaf_types, unify_schemas
+from crystal_parquet_database_spark.schema import sql_ident, sql_type
 from crystal_parquet_database_spark.tables import data_files, read_parquet
 
 ID_COL = "id"
@@ -650,21 +651,19 @@ class PqDB:
             # see as duplicates. Guard AFTER the cast, on the key the join
             # actually consumes; a lossy key value fails the ANSI cast
             # loudly instead of corrupting the merge.
-            u = up.select(
-                F.col(on).cast(base_types[on]).alias("__u_key"),
-                *[F.col(c).cast(base_types[c]).alias(f"__u_{c}") for c in upd_cols],
+            pairs = [(on, "__u_key")] + [(c, f"__u_{c}") for c in upd_cols]
+            u = up.selectExpr(
+                *[f"CAST({sql_ident(c)} AS {sql_type(base_types[c])}) AS {sql_ident(a)}" for c, a in pairs]
             )
             self._check_unique_keys(u, "__u_key", display=on)
             # the guard materialized the persisted frame, so the planner
             # sizes u from the cache and broadcasts it when it is small
-            joined = base.join(u, F.col(on).eqNullSafe(F.col("__u_key")), "left")
-            out = joined.select(
+            joined = base.join(u, F.expr(f"{sql_ident(on)} <=> __u_key"), "left")
+            out = joined.selectExpr(
                 *[
-                    (
-                        F.coalesce(F.col(f"__u_{c}"), F.col(c)).alias(c)
-                        if c in upd_cols
-                        else F.col(c)
-                    )
+                    f"coalesce({sql_ident('__u_' + c)}, {sql_ident(c)}) AS {sql_ident(c)}"
+                    if c in upd_cols
+                    else sql_ident(c)
                     for c in base.columns
                 ]
             )

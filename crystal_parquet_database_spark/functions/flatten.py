@@ -14,8 +14,9 @@ reference's behavior of leaving list offsets intact).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from crystal_parquet_database_spark.schema import sql_ident, sql_str
 
 SEP = "."
 
@@ -42,7 +43,8 @@ def _leaf_paths(schema: T.StructType, prefix: str = "") -> list[str]:
 
 
 def flatten_structs(df: DataFrame) -> DataFrame:
-    """Struct fields → top-level dotted columns (`lattice.a`, ...).
+    """Struct fields → top-level dotted columns (`lattice.a`, ...), as one
+    SQL expression per column (schema.py's rule for generated trees).
 
     Input must be the NESTED layout: a top-level column whose name itself
     contains ``.`` (i.e. already-flat data) would be mis-split into a struct
@@ -55,14 +57,11 @@ def flatten_structs(df: DataFrame) -> DataFrame:
             f"input already has dotted top-level columns {dotted[:3]} — it is "
             "in the flat layout; flatten_structs expects the nested layout"
         )
-    cols = []
-    for path in _leaf_paths(df.schema):
-        parts = path.split(SEP)
-        c = F.col(parts[0])
-        for p in parts[1:]:
-            c = c.getField(p)
-        cols.append(c.alias(path))
-    return df.select(*cols)
+    def ref(path: str) -> str:
+        top, *fields = path.split(SEP)
+        return sql_ident(top) + "".join(f"[{sql_str(f)}]" for f in fields)
+
+    return df.selectExpr(*[f"{ref(p)} AS {sql_ident(p)}" for p in _leaf_paths(df.schema)])
 
 
 def unflatten_structs(df: DataFrame) -> DataFrame:
@@ -90,9 +89,9 @@ def unflatten_structs(df: DataFrame) -> DataFrame:
             )
         node[parts[-1]] = name
 
-    def build(node, path: str):
+    def build(node) -> str:
         if isinstance(node, str):
-            return F.col(f"`{node}`")
-        return F.struct(*[build(v, f"{path}.{k}").alias(k) for k, v in node.items()])
+            return sql_ident(node)
+        return "struct(" + ", ".join(f"{build(v)} AS {sql_ident(k)}" for k, v in node.items()) + ")"
 
-    return df.select(*[build(v, k).alias(k) for k, v in tree.items()])
+    return df.selectExpr(*[f"{build(v)} AS {sql_ident(k)}" for k, v in tree.items()])

@@ -3,13 +3,16 @@
 The reference implements these with pyarrow.compute kernels + manual offset
 arithmetic (struct_field, list_flatten, ListArray.from_arrays); in Spark every
 one is a built-in column expression or higher-order function — JVM-side,
-codegen'd, no offset bookkeeping.
+codegen'd, no offset bookkeeping. Column arguments are dotted paths
+(``"structure.sites"``); lambdas are SQL text, per schema.py's rule.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from crystal_parquet_database_spark.schema import sql_ident, sql_str
 
 
 def struct_field(col: Column | str, *path: str) -> Column:
@@ -21,14 +24,24 @@ def struct_field(col: Column | str, *path: str) -> Column:
     return c
 
 
-def list_struct_field(list_col: Column | str, field: str) -> Column:
+def list_struct_field_sql(list_col: str, field: str) -> str:
+    """SQL text of ``list_struct_field``, for a caller's ``selectExpr``."""
+    return f"transform({sql_ident(*list_col.split('.'))}, s -> s[{sql_str(field)}])"
+
+
+def list_struct_field(list_col: str, field: str) -> Column:
     """A10: list<struct> → list<field>, offsets preserved per row.
     (Reference: get_listArray_struct_fields — utils/pyarrow_utils.py:5-19.)"""
-    c = F.col(list_col) if isinstance(list_col, str) else list_col
-    return F.transform(c, lambda s: s.getField(field))
+    return F.expr(list_struct_field_sql(list_col, field))
 
 
-def site_elements(sites_col: Column | str) -> Column:
+def site_elements_sql(sites_col: str) -> str:
+    """SQL text of ``site_elements``, for a caller's ``selectExpr``."""
+    sites = sql_ident(*sites_col.split("."))
+    return f"transform({sites}, s -> try_element_at(s['species'], 1)['element'])"
+
+
+def site_elements(sites_col: str) -> Column:
     """A11: per-site element symbol from sites[].species[].element.
 
     The reference extracts this by recursively flattening
@@ -45,19 +58,14 @@ def site_elements(sites_col: Column | str) -> Column:
     INVALID_ARRAY_INDEX_IN_ELEMENT_AT and abort the whole loader job —
     the documented graceful divergence is a NULL element for that site.
     """
-    c = F.col(sites_col) if isinstance(sites_col, str) else sites_col
-    return F.transform(
-        c, lambda s: F.try_element_at(s.getField("species"), F.lit(1)).getField("element")
-    )
+    return F.expr(site_elements_sql(sites_col))
 
 
-def site_elements_flat(sites_col: Column | str) -> Column:
+def site_elements_flat(sites_col: str) -> Column:
     """All species elements across all sites, fully flattened (what the
     reference's recursive list_flatten actually produces before re-wrapping)."""
-    c = F.col(sites_col) if isinstance(sites_col, str) else sites_col
-    return F.flatten(
-        F.transform(c, lambda s: F.transform(s.getField("species"), lambda sp: sp.getField("element")))
-    )
+    sites = sql_ident(*sites_col.split("."))
+    return F.expr(f"flatten(transform({sites}, s -> transform(s['species'], sp -> sp['element'])))")
 
 
 def pack_struct(df: DataFrame, cols: list[str], name: str, drop: bool = True) -> DataFrame:

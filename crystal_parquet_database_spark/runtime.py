@@ -22,14 +22,7 @@ import warnings
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame
-
-# inheritable_thread_target without a session warns on every call that
-# session-level tags (SparkSession.addTag) are not inherited; the engine
-# sets none, and the local properties that carry the job group still are
-warnings.filterwarnings(
-    "ignore", "Spark session is not provided", UserWarning, "pyspark.util"
-)
+from pyspark.sql import DataFrame, SparkSession
 
 
 def concurrently(*fns):
@@ -37,12 +30,13 @@ def concurrently(*fns):
     their results as a tuple in argument order; the first exception raised
     (in argument order) propagates after every thunk has finished.
 
-    Each thunk is wrapped in ``inheritable_thread_target`` here, on the
-    calling thread, so the Spark jobs it submits carry the caller's local
-    properties — its job group above all — and stay cancellable with it."""
-    targets = [inheritable_thread_target(fn) for fn in fns]
-    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
-        futures = [pool.submit(t) for t in targets]
+    Each thunk is wrapped in ``inheritable_thread_target(<caller's session>)``
+    here, on the calling thread, so the Spark jobs it submits carry the
+    caller's job group and session tags (``addTag``) and stay cancellable
+    with either (``cancelJobGroup``, ``interruptTag``)."""
+    wrap = inheritable_thread_target(SparkSession.active())
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(wrap(fn)) for fn in fns]
         return tuple(f.result() for f in futures)
 
 

@@ -17,8 +17,7 @@ recursively through structs and arrays.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 # --- struct types (db.py:5-109) ------------------------------------------------------
@@ -324,49 +323,71 @@ def leaf_types(schema: T.DataType, prefix: str = "") -> dict[str, str]:
     return out
 
 
-def _null_of(dt: T.DataType) -> Column:
-    return F.lit(None).cast(dt)
+def sql_ident(*parts: str) -> str:
+    """SQL text for a column path: backtick-quoted parts joined by dots."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
-def _cast_to(col: Column, src: T.DataType, dst: T.DataType) -> Column:
-    """Recursive cast with null-padding of missing struct fields."""
+def sql_str(text: str) -> str:
+    """A SQL string literal, e.g. the field name in ``ref['name']``."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_type(dt: T.DataType) -> str:
+    """DDL text for ``dt``, NOT NULL on non-nullable struct fields. SQL cannot
+    say ``containsNull``/``valueContainsNull`` false: both read back true."""
+    if isinstance(dt, T.StructType):
+        fields = (
+            f"{sql_ident(f.name)}: {sql_type(f.dataType)}{'' if f.nullable else ' NOT NULL'}"
+            for f in dt.fields
+        )
+        return f"STRUCT<{', '.join(fields)}>"
+    if isinstance(dt, T.ArrayType):
+        return f"ARRAY<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{sql_type(dt.keyType)}, {sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def _cast_sql(ref: str, src: T.DataType | None, dst: T.DataType, depth: int = 0) -> str:
+    """SQL text casting ``ref`` (a column, field or lambda variable) from
+    ``src`` to ``dst``; ``src`` None means the field is missing."""
+    if src is None:
+        return f"CAST(NULL AS {sql_type(dst)})"
     if src == dst:
-        return col
+        return ref
     if isinstance(dst, T.StructType) and isinstance(src, T.StructType):
-        src_by_name = {f.name: f for f in src.fields}
-        parts = []
-        for f in dst.fields:
-            if f.name in src_by_name:
-                parts.append(
-                    _cast_to(col.getField(f.name), src_by_name[f.name].dataType, f.dataType).alias(
-                        f.name
-                    )
-                )
-            else:
-                parts.append(_null_of(f.dataType).alias(f.name))
-        # struct itself must stay null when the source struct is null
-        return F.when(col.isNotNull(), F.struct(*parts)).otherwise(_null_of(dst))
+        src_types = {f.name: f.dataType for f in src.fields}
+        parts = ", ".join(
+            f"{_cast_sql(f'{ref}[{sql_str(f.name)}]', src_types.get(f.name), f.dataType, depth)}"
+            f" AS {sql_ident(f.name)}"
+            for f in dst.fields
+        )
+        # the struct itself stays NULL when the source struct is NULL
+        return f"CASE WHEN {ref} IS NOT NULL THEN struct({parts}) ELSE {_cast_sql(ref, None, dst)} END"
     if isinstance(dst, T.ArrayType) and isinstance(src, T.ArrayType):
-        return F.transform(col, lambda x: _cast_to(x, src.elementType, dst.elementType))
-    return col.cast(dst)
+        v = f"x{depth}"
+        return f"transform({ref}, {v} -> {_cast_sql(v, src.elementType, dst.elementType, depth + 1)})"
+    return f"CAST({ref} AS {sql_type(dst)})"
 
 
 def cast_to_schema(df: DataFrame, target: T.StructType, keep_extra: bool = True) -> DataFrame:
     """Cast a DataFrame to ``target``: missing columns (at any nesting depth)
     become nulls, matching columns are recursively cast, extra columns are
     kept (permissive) or dropped. (Reference: table_schema_cast semantics at
-    loaders/base.py:215-216.)"""
-    src_by_name = {f.name: f for f in df.schema.fields}
-    cols: list[Column] = []
-    for f in target.fields:
-        if f.name in src_by_name:
-            cols.append(_cast_to(F.col(f.name), src_by_name[f.name].dataType, f.dataType).alias(f.name))
-        else:
-            cols.append(_null_of(f.dataType).alias(f.name))
+    loaders/base.py:215-216.)
+
+    Generated expression trees are one SQL string per tree, here one per
+    top-level column in one ``selectExpr``: a Column tree costs a py4j
+    round trip per node (SCALE.md, "py4j round-trip tax")."""
+    src_types = {f.name: f.dataType for f in df.schema.fields}
+    exprs = [
+        f"{_cast_sql(sql_ident(f.name), src_types.get(f.name), f.dataType)} AS {sql_ident(f.name)}"
+        for f in target.fields
+    ]
     if keep_extra:
-        target_names = {f.name for f in target.fields}
-        cols.extend(F.col(f.name) for f in df.schema.fields if f.name not in target_names)
-    return df.select(*cols)
+        exprs += [sql_ident(n) for n in df.columns if n not in target.fieldNames()]
+    return df.selectExpr(*exprs)
 
 
 def to_canonical(df: DataFrame) -> DataFrame:

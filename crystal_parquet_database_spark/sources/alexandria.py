@@ -17,14 +17,25 @@ from __future__ import annotations
 import os
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from crystal_parquet_database_spark.functions.nested import (
-    list_struct_field,
-    site_elements,
-)
+from crystal_parquet_database_spark.schema import sql_ident
 from crystal_parquet_database_spark.sources.base import BaseLoader
+
+_ALEX_DATA_MAP = [  # source data field → canonical data_struct field
+    ("band_gap_ind", "band_gap_ind"),
+    ("band_gap_dir", "band_gap_dir"),
+    ("dos_ef", "dos_ef"),
+    ("energy_total", "energy_total"),
+    ("energy_total", "energy_uncorrected"),  # deliberate alias (alexandria.py:170)
+    ("energy_corrected", "energy_corrected"),
+    ("e_form", "energy_formation"),
+    ("e_above_hull", "energy_above_hull"),
+    ("e_phase_separation", "energy_phase_seperation"),
+    ("total_mag", "total_magnetization"),
+]
 
 # Non-greedy over a single token: [^"<>\s] stops at the href's closing quote
 # or the anchor text boundary. A greedy `.*` would match ACROSS the quote on
@@ -135,48 +146,19 @@ class AlexandriaLoader(BaseLoader):
         return raw.select(F.explode("entries").alias("e")).select("e.data", "e.structure")
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        from pyspark.sql import types as T
-
-        sites = F.col("structure.sites")
         # null-pad missing data.* fields instead of raising FIELD_NOT_FOUND —
         # partial dumps (a 1d/2d drop lacking a property, a trimmed test
         # fixture) infer a narrower JSON schema, and the canonical-schema
         # cast null-fills downstream anyway; same guarantee the MP loader
         # makes for its flat summary fields (mp.py)
-        data_type = next((f.dataType for f in df.schema.fields if f.name == "data"), None)
-        present = (
-            {sf.name for sf in data_type.fields}
-            if isinstance(data_type, T.StructType)
-            else set()
-        )
+        data_type = df.schema["data"].dataType if "data" in df.columns else None
+        present = set(data_type.fieldNames()) if isinstance(data_type, T.StructType) else set()
 
-        def dcol(src: str) -> Column:
-            return F.col(f"data.{src}") if src in present else F.lit(None)
+        def dcol(src: str) -> str:
+            return sql_ident("data", src) if src in present else "NULL"
 
-        data = F.struct(
-            dcol("band_gap_ind").alias("band_gap_ind"),
-            dcol("band_gap_dir").alias("band_gap_dir"),
-            dcol("dos_ef").alias("dos_ef"),
-            dcol("energy_total").alias("energy_total"),
-            # deliberate reference alias (alexandria.py:170)
-            dcol("energy_total").alias("energy_uncorrected"),
-            dcol("energy_corrected").alias("energy_corrected"),
-            dcol("e_form").alias("energy_formation"),
-            dcol("e_above_hull").alias("energy_above_hull"),
-            dcol("e_phase_separation").alias("energy_phase_seperation"),
-            dcol("total_mag").alias("total_magnetization"),
-        )
-        return df.select(
-            F.lit(self.source_database).alias("source_database"),
-            F.lit(self.source_dataset).alias("source_dataset"),
-            dcol("mat_id").alias("source_id"),
-            site_elements(sites).alias("species"),
-            list_struct_field(sites, "xyz").alias("cart_coords"),
-            list_struct_field(sites, "abc").alias("frac_coords"),
-            F.col("structure.lattice").alias("lattice"),
-            F.col("structure").alias("structure"),
-            data.alias("data"),
-        )
+        data = ", ".join(f"{dcol(src)} AS {sql_ident(dst)}" for src, dst in _ALEX_DATA_MAP)
+        return df.selectExpr(*self._structure_projection(dcol("mat_id")), f"struct({data}) AS data")
 
 
 class Alexandria2DLoader(AlexandriaLoader):

@@ -22,7 +22,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from crystal_parquet_database_spark.db import PqDB
-from crystal_parquet_database_spark.schema import to_canonical
+from crystal_parquet_database_spark.functions.nested import list_struct_field_sql, site_elements_sql
+from crystal_parquet_database_spark.schema import sql_str, to_canonical
 
 
 @dataclass
@@ -224,3 +225,17 @@ class BaseLoader:
 
     def _transform(self, df: DataFrame) -> DataFrame:
         raise NotImplementedError
+
+    def _structure_projection(self, source_id: str) -> list[str]:
+        """SQL text for the canonical columns that Alexandria and MP derive
+        alike from a pymatgen ``structure`` column, for one ``selectExpr``."""
+        return [
+            f"{sql_str(self.source_database)} AS source_database",
+            f"{sql_str(self.source_dataset)} AS source_dataset",
+            f"{source_id} AS source_id",
+            f"{site_elements_sql('structure.sites')} AS species",
+            f"{list_struct_field_sql('structure.sites', 'xyz')} AS cart_coords",
+            f"{list_struct_field_sql('structure.sites', 'abc')} AS frac_coords",
+            "`structure`.`lattice` AS lattice",
+            "`structure` AS structure",
+        ]

@@ -22,10 +22,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crystal_parquet_database_spark.schema import lattice_struct, structure_struct
+from crystal_parquet_database_spark.schema import lattice_struct, sql_str, structure_struct
 from crystal_parquet_database_spark.sources.base import BaseLoader
 
 _CELL_KEYS = {
@@ -296,9 +295,9 @@ class MC3DLoader(BaseLoader):
     def _transform(self, df: DataFrame) -> DataFrame:
         if "id" in df.columns:  # engine column must not re-ingest (mc3d.py:125-126)
             df = df.drop("id")
-        return df.select(
-            F.lit(self.source_database).alias("source_database"),
-            F.lit(self.source_dataset).alias("source_dataset"),
+        return df.selectExpr(
+            f"{sql_str(self.source_database)} AS source_database",
+            f"{sql_str(self.source_dataset)} AS source_dataset",
             "source_id",
             "species",
             "cart_coords",

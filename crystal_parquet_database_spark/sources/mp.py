@@ -12,13 +12,9 @@ Transform parity (mp.py:106-179) including the deliberate alias
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from crystal_parquet_database_spark.functions.nested import (
-    list_struct_field,
-    site_elements,
-)
+from crystal_parquet_database_spark.schema import sql_ident
 from crystal_parquet_database_spark.sources.base import BaseLoader
 
 # source field → canonical data_struct field (mp.py:131-160)
@@ -79,31 +75,18 @@ class MPLoader(BaseLoader):
         )
 
     def _transform(self, df: DataFrame) -> DataFrame:
-        sites = F.col("structure.sites")
         present = set(df.columns)
-        data = F.struct(
-            *[
-                (F.col(src) if src in present else F.lit(None)).alias(dst)
-                for src, dst in _MP_DATA_MAP
-            ]
-        )
         # guard the top-level columns the same way as the data fields —
         # partial summary dumps (the exact case the per-field fallback
         # exists for) may lack symmetry/has_props and must null-pad, not
         # raise UNRESOLVED_COLUMN
-        def opt(name: str) -> Column:
-            return F.col(name) if name in present else F.lit(None)
+        def opt(name: str) -> str:
+            return sql_ident(name) if name in present else "NULL"
 
-        return df.select(
-            F.lit(self.source_database).alias("source_database"),
-            F.lit(self.source_dataset).alias("source_dataset"),
-            F.col("material_id").alias("source_id"),
-            site_elements(sites).alias("species"),
-            list_struct_field(sites, "xyz").alias("cart_coords"),
-            list_struct_field(sites, "abc").alias("frac_coords"),
-            F.col("structure.lattice").alias("lattice"),
-            F.col("structure").alias("structure"),
-            data.alias("data"),
-            opt("symmetry").alias("symmetry"),
-            opt("has_props").alias("has_props"),
+        data = ", ".join(f"{opt(src)} AS {sql_ident(dst)}" for src, dst in _MP_DATA_MAP)
+        return df.selectExpr(
+            *self._structure_projection("`material_id`"),
+            f"struct({data}) AS data",
+            f"{opt('symmetry')} AS symmetry",
+            f"{opt('has_props')} AS has_props",
         )

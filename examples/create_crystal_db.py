@@ -196,7 +196,7 @@ def main(work_dir: str | None = None, n_per_source: int = 50) -> PqDB:
     per_source = df.groupBy("source_database").count()
     per_source.show()
     element_freq = (
-        df.select(F.explode(site_elements(F.col("structure.sites"))).alias("element"))
+        df.select(F.explode(site_elements("structure.sites")).alias("element"))
         .groupBy("element")
         .count()
         .orderBy(F.desc("count"))

@@ -33,3 +33,34 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return TEST_SF_DIR
+
+
+@pytest.fixture()
+def py4j_commands(monkeypatch):
+    """Call ``py4j_commands(fn)`` to run ``fn`` and return how many py4j
+    commands it sent to the JVM, not counting the deferred
+    garbage-collection notices (``m\\n`` commands)."""
+    import gc
+
+    import py4j.clientserver
+    import py4j.java_gateway
+
+    def count(fn) -> int:
+        gc.collect()  # flush notices owed by earlier work
+        sent = []
+        with monkeypatch.context() as m:
+            for conn in (
+                py4j.clientserver.ClientServerConnection,
+                py4j.java_gateway.GatewayConnection,
+            ):
+
+                def counting(self, command, _send=conn.send_command):
+                    if not command.startswith("m\n"):
+                        sent.append(command)
+                    return _send(self, command)
+
+                m.setattr(conn, "send_command", counting)
+            fn()
+        return len(sent)
+
+    return count

@@ -836,6 +836,22 @@ def test_update_preserves_base_column_type(spark, tmp_path):
     assert rows[2]["cnt"] == 20
 
 
+def test_update_quotes_names_and_fails_lossy_values(spark, tmp_path):
+    """The update's casts and merge are SQL text: any column name works as
+    key or value, and a value the base type cannot hold fails the ANSI
+    cast loudly instead of being truncated."""
+    from crystal_parquet_database_spark.db import PqDB
+
+    db = PqDB(spark, str(tmp_path / "upd_names"))
+    key, val = "k.e`y", "it's a \\ v@l"
+    db.create(spark.createDataFrame([(1, 10), (2, 20)], f"`k.e``y` long, `{val}` int"))
+    db.update(spark.createDataFrame([(1, 99)], f"`k.e``y` long, `{val}` long"), on=key)
+    assert {r[key]: r[val] for r in db.read(load_format="dataset").collect()} == {1: 99, 2: 20}
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        db.update(spark.createDataFrame([(2, 2**40)], f"`k.e``y` long, `{val}` long"), on=key)
+    assert {r[key]: r[val] for r in db.read(load_format="dataset").collect()} == {1: 99, 2: 20}
+
+
 def test_release_all_session_blocks(spark):
     """Harness hygiene: the between-queries release must free BOTH
     localCheckpoint blocks and plain persists, and be safe to call twice."""

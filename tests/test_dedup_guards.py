@@ -211,36 +211,15 @@ def test_minhash_sql_string_matches_column_api(spark):
     assert keys[1].count("-") == 3 and keys[3] == "" and keys[4] == ""
 
 
-def test_minhash_construction_py4j_round_trips(spark, monkeypatch):
+def test_minhash_construction_py4j_round_trips(spark, py4j_commands):
     """Building the signature and band keys costs a fixed handful of py4j
     calls — the DataFrame plumbing — not a batch of calls per hash or band
     term (~80 per hash through the Column API, ~3,800 for 32 hashes and
     8 bands)."""
-    import gc
-
-    import py4j.clientserver
-    import py4j.java_gateway
-
     hs = _minhash_frame(spark)
-    gc.collect()
-    sent: list[str] = []
-    for conn in (
-        py4j.clientserver.ClientServerConnection,
-        py4j.java_gateway.GatewayConnection,
-    ):
-
-        def counting(self, command, _send=conn.send_command):
-            # deferred garbage-collection notices are not construction work
-            if not command.startswith("m\n"):
-                sent.append(command)
-            return _send(self, command)
-
-        monkeypatch.setattr(conn, "send_command", counting)
-    D._band_explode(D.minhash_signature(hs, 32), "doc_id", 8, 4)
-    small = len(sent)
-    D._band_explode(D.minhash_signature(hs, 64), "doc_id", 16, 4)
-    monkeypatch.undo()
-    assert len(sent) - small == small <= 25, (small, len(sent) - small)
+    small = py4j_commands(lambda: D._band_explode(D.minhash_signature(hs, 32), "doc_id", 8, 4))
+    large = py4j_commands(lambda: D._band_explode(D.minhash_signature(hs, 64), "doc_id", 16, 4))
+    assert large == small <= 25, (small, large)
 
 
 def test_null_text_docs_never_pair(spark):

@@ -883,7 +883,7 @@ def test_knn_label_vote_planted_clusters(spark, monkeypatch):
         assert r["pred_label"] == 1 and r["correct"] and r["n_votes"] == 10
 
 
-def test_concurrently_returns_results_in_argument_order():
+def test_concurrently_returns_results_in_argument_order(spark):
     import time
 
     from crystal_parquet_database_spark.runtime import concurrently
@@ -894,7 +894,7 @@ def test_concurrently_returns_results_in_argument_order():
     ) == ("slow", "fast", 3)
 
 
-def test_concurrently_propagates_a_thunk_exception():
+def test_concurrently_propagates_a_thunk_exception(spark):
     import pytest
 
     from crystal_parquet_database_spark.runtime import concurrently
@@ -912,6 +912,31 @@ def _newest_job_id(sc) -> int:
     jsc.listenerBus().waitUntilEmpty()
     jobs = jsc.statusStore().jobsList(None)
     return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def test_concurrently_jobs_carry_the_callers_session_tags(spark):
+    """A session tag set by the caller (``spark.addTag``) reaches every job
+    a ``concurrently`` thunk launches, so ``spark.interruptTag`` can cancel
+    the helper threads' jobs too."""
+    from crystal_parquet_database_spark.runtime import concurrently
+
+    sc = spark.sparkContext
+    before = _newest_job_id(sc)
+    spark.addTag("concurrently-tag-test")
+    try:
+        concurrently(lambda: spark.range(10).count(), lambda: spark.range(5).collect())
+    finally:
+        spark.removeTag("concurrently-tag-test")
+    _newest_job_id(sc)  # drains the listener bus
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    tags = {
+        jobs.apply(i).jobId(): jobs.apply(i).jobTags().mkString("|").split("|")
+        for i in range(jobs.size())
+        if jobs.apply(i).jobId() > before
+    }
+    assert tags
+    for job_id, job_tags in tags.items():
+        assert any(t.endswith("-concurrently-tag-test") for t in job_tags), (job_id, job_tags)
 
 
 def test_trained_queries_keep_every_job_in_the_job_group(spark, sf_dir):

@@ -831,3 +831,26 @@ def test_read_raw_filters_directory_like_the_glob(spark, data_dir, source, datas
     assert got.schema == glob_read.schema
     assert rows(got) == rows(glob_read)
     assert len(rows(got)) == 2 * len(matching)
+
+
+def test_transform_construction_py4j_round_trips(spark, data_dir, py4j_commands):
+    """Each loader's ``transform`` (its ``_transform`` projection and the
+    canonical cast) is SQL text in ``selectExpr``s: a few dozen py4j
+    commands, not one or more per nested field (the Column-API projection
+    and cast sent thousands per loader run)."""
+    alex = {"data": {"mat_id": "a-0", "e_form": -1.0}, "structure": _structure(2, 0)}
+    mp = {"material_id": "mp-0", "band_gap": 0.5, "structure": _structure(2, 1)}
+    raws = {
+        ("alex", "3d"): ("alexandria_000.json", json.dumps({"entries": [alex]})),
+        ("materials_project", "summary"): ("summary_docs.json", json.dumps([mp])),
+        ("materialscloud", "mc3d"): ("mc3d-0.cif", _CIF),
+    }
+    for (source, dataset), (name, text) in raws.items():
+        raw = os.path.join(data_dir, source, dataset, "raw")
+        os.makedirs(raw)
+        with open(os.path.join(raw, name), "w") as f:
+            f.write(text)
+        loader = get_loader(spark, source, dataset, LoaderConfig(data_dir=data_dir))
+        df = loader._read_raw(spark, raw)
+        n = py4j_commands(lambda: loader.transform(df))
+        assert n <= 40, (source, n)

@@ -11,6 +11,7 @@ from crystal_parquet_database_spark.schema import (
     cast_to_schema,
     crystal_schema,
     promote_type,
+    sql_type,
     to_canonical,
     unify_schemas,
 )
@@ -284,3 +285,207 @@ def test_pack_struct_rejects_name_collision(spark):
         pack_struct(df, ["a", "b"], name="a", drop=True)
     ok = pack_struct(df, ["a", "b"], name="a", drop=False)  # keep-mode fine
     assert set(ok.columns) == {"a", "b"}
+
+
+# --- the SQL-text cast: schemas (nullability included) and rows -------------------------
+
+
+def _cast(spark, rows, ddl, target, keep_extra=False):
+    df = spark.createDataFrame(rows, ddl)
+    out = cast_to_schema(df, target, keep_extra=keep_extra)
+    return out.schema, [r.asDict(recursive=True) for r in out.collect()]
+
+
+def _st(*fields):
+    return T.StructType([T.StructField(n, t) for n, t in fields])
+
+
+def test_cast_widens_numeric_decimal_and_temporal(spark):
+    import datetime
+    from decimal import Decimal
+
+    target = _st(
+        ("i", T.LongType()),
+        ("l", T.DoubleType()),
+        ("d", T.DoubleType()),
+        ("dt", T.TimestampType()),
+    )
+    schema, rows = _cast(
+        spark,
+        [(7, 2**53, Decimal("1.25"), datetime.date(2020, 1, 2)), (None, None, None, None)],
+        "i int, l long, d decimal(10,2), dt date",
+        target,
+    )
+    assert schema == target
+    assert rows == [
+        {"i": 7, "l": float(2**53), "d": 1.25, "dt": datetime.datetime(2020, 1, 2)},
+        {"i": None, "l": None, "d": None, "dt": None},
+    ]
+
+
+def test_cast_map_values(spark):
+    target = _st(("m", T.MapType(T.StringType(), T.DoubleType())))
+    schema, rows = _cast(spark, [({"a": 1, "b": None},), (None,)], "m map<string,int>", target)
+    assert schema == target
+    assert rows == [{"m": {"a": 1.0, "b": None}}, {"m": None}]
+
+
+def test_cast_arrays_of_structs_three_deep(spark):
+    def level(inner_name, inner_type):
+        return T.ArrayType(_st((inner_name, inner_type), ("pad", T.StringType())))
+
+    target = _st(("deep", level("a", level("b", level("c", T.DoubleType())))))
+    ddl = "deep array<struct<a: array<struct<b: array<struct<c: int>>>>>>"
+    deep = [{"a": [{"b": [{"c": 1}, None, {"c": None}]}, {"b": None}]}, None]
+    schema, rows = _cast(spark, [(deep,), (None,)], ddl, target)
+    assert schema == target
+    assert rows == [
+        {
+            "deep": [
+                {
+                    "a": [
+                        {"b": [{"c": 1.0, "pad": None}, None, {"c": None, "pad": None}], "pad": None},
+                        {"b": None, "pad": None},
+                    ],
+                    "pad": None,
+                },
+                None,
+            ]
+        },
+        {"deep": None},
+    ]
+
+
+def test_cast_null_structs_stay_null_and_missing_fields_pad(spark):
+    inner = _st(("x", T.DoubleType()), ("missing", T.ArrayType(T.StringType())))
+    target = _st(("s", _st(("inner", inner), ("b", T.StringType()))), ("absent", inner))
+    schema, rows = _cast(
+        spark,
+        [({"inner": {"x": 1}},), ({"inner": None},), (None,)],
+        "s struct<inner: struct<x: int>>",
+        target,
+    )
+    assert schema == target
+    assert rows == [
+        {"s": {"inner": {"x": 1.0, "missing": None}, "b": None}, "absent": None},
+        {"s": {"inner": None, "b": None}, "absent": None},
+        {"s": None, "absent": None},
+    ]
+
+
+def test_cast_keeps_declared_non_nullable_fields(spark):
+    """A struct field declared NOT NULL keeps the flag through the
+    null-padding ELSE branch (DDL ``NOT NULL``)."""
+    target = T.StructType(
+        [
+            T.StructField(
+                "s",
+                T.StructType(
+                    [T.StructField("a", T.LongType(), False), T.StructField("b", T.StringType())]
+                ),
+            )
+        ]
+    )
+    out = cast_to_schema(spark.sql("SELECT named_struct('a', 1) AS s"), target)
+    assert out.schema == target
+    assert out.collect()[0]["s"].asDict() == {"a": 1, "b": None}
+
+
+def test_cast_extra_columns_follow_keep_extra(spark):
+    target = _st(("a", T.LongType()), ("new", T.StringType()))
+    ddl = "a int, `extra col` string, z double"
+    schema, rows = _cast(spark, [(1, "e", 2.5)], ddl, target, keep_extra=True)
+    assert schema == _st(
+        ("a", T.LongType()), ("new", T.StringType()), ("extra col", T.StringType()), ("z", T.DoubleType())
+    )
+    assert rows == [{"a": 1, "new": None, "extra col": "e", "z": 2.5}]
+    schema, rows = _cast(spark, [(1, "e", 2.5)], ddl, target, keep_extra=False)
+    assert schema == target
+    assert rows == [{"a": 1, "new": None}]
+
+
+_HOSTILE = ["back`tick", "it's", "back\\slash", "dot.ted", "sp ace", "@module", "caf\u00e9 \u7d50\u6676"]
+
+
+def test_cast_hostile_field_names(spark):
+    """Names are backtick-quoted identifiers, and field lookups are escaped
+    string literals: every hostile name survives as a top-level column, a
+    cast struct field, a null-padded struct field and an extra column."""
+    src_fields = [T.StructField(n, T.IntegerType()) for n in _HOSTILE]
+    src = T.StructType(
+        [T.StructField(n, T.IntegerType()) for n in _HOSTILE]
+        + [T.StructField("s", T.StructType(src_fields)), T.StructField("extra " + _HOSTILE[0], T.StringType())]
+    )
+    wide = T.StructType(
+        [T.StructField(n, T.LongType()) for n in _HOSTILE]
+        + [T.StructField("new " + n, T.StringType()) for n in _HOSTILE]
+    )
+    target = T.StructType(
+        [T.StructField(n, T.LongType()) for n in _HOSTILE]
+        + [T.StructField("s", wide), T.StructField("absent", wide)]
+    )
+    values = list(range(len(_HOSTILE)))
+    df = spark.createDataFrame([(*values, tuple(values), "x")], src)
+    out = cast_to_schema(df, target, keep_extra=True)
+    assert out.schema == T.StructType(target.fields + [src.fields[-1]])
+    row = out.collect()[0].asDict(recursive=True)
+    s = {n: v for n, v in zip(_HOSTILE, values)}
+    s.update({"new " + n: None for n in _HOSTILE})
+    assert row == {**dict(zip(_HOSTILE, values)), "s": s, "absent": None, "extra " + _HOSTILE[0]: "x"}
+    # the DDL text round-trips through Spark's parser with every name intact
+    ddl = sql_type(target)
+    assert spark.sql(f"SELECT CAST(NULL AS {ddl}) AS t").schema["t"].dataType == target
+
+
+def test_cast_ansi_invalid_value_still_raises(spark):
+    import pytest
+
+    df = spark.createDataFrame([("abc",)], "v string")
+    out = cast_to_schema(df, _st(("v", T.IntegerType())))
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        out.collect()
+
+
+def _widen(dt, n):
+    """``dt`` with every struct repeated ``n`` times wider (fields
+    ``f``, ``f_1``, … ``f_{n-1}``)."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name + (f"_{i}" if i else ""), _widen(f.dataType, n))
+                for f in dt.fields
+                for i in range(n)
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_widen(dt.elementType, n))
+    return dt
+
+
+def _narrow(dt):
+    """``dt`` with doubles as floats and each struct's last field gone, so
+    a cast back to ``dt`` both converts and null-pads at every level."""
+    if isinstance(dt, T.StructType):
+        return T.StructType([T.StructField(f.name, _narrow(f.dataType)) for f in dt.fields[:-1]])
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_narrow(dt.elementType))
+    return T.FloatType() if isinstance(dt, T.DoubleType) else dt
+
+
+def test_cast_construction_py4j_round_trips(spark, py4j_commands):
+    """``to_canonical`` and ``cast_to_schema`` build their projection as one
+    SQL string per top-level column: the py4j commands they send do not
+    grow with the nesting width (the Column-API cast sent one command or
+    more per leaf — thousands for the crystal schema)."""
+    wide = T.StructType(
+        [T.StructField(f.name, _widen(f.dataType, 2)) for f in crystal_schema.fields]
+    )
+    counts = {}
+    for name, target in (("crystal", crystal_schema), ("wide", wide)):
+        top = T.StructType([T.StructField(f.name, _narrow(f.dataType)) for f in target.fields])
+        df = spark.createDataFrame([], top)
+        df.schema  # fetched once; not construction work
+        counts[name, "cast"] = py4j_commands(lambda: cast_to_schema(df, target))
+        counts[name, "canonical"] = py4j_commands(lambda: to_canonical(df))
+    assert counts["crystal", "cast"] == counts["wide", "cast"] <= 20, counts
+    assert counts["crystal", "canonical"] == counts["wide", "canonical"] <= 20, counts
