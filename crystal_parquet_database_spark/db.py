@@ -57,7 +57,7 @@ from pyspark.sql import types as T
 from crystal_parquet_database_spark.functions.literals import lit_array
 from crystal_parquet_database_spark.runtime import release_local_checkpoint
 from crystal_parquet_database_spark.schema import cast_to_schema, leaf_types, unify_schemas
-from crystal_parquet_database_spark.schema import sql_ident, sql_type
+from crystal_parquet_database_spark.schema import sql_ident, sql_str, sql_type
 from crystal_parquet_database_spark.tables import data_files, read_parquet
 
 ID_COL = "id"
@@ -772,11 +772,17 @@ class PqDB:
             # column type dataset-wide through the insert-side unionByName
             # coercion — even on a no-op replay, breaking both the
             # replay-idempotence contract and create()'s evolution gate.
+            # Casts, matches and projections are SQL text (as in update()),
+            # so any column name works as key or tracked column.
             base_types = {f.name: f.dataType for f in base.schema.fields}
-            u = up.select(
-                F.col(on).cast(base_types[on]).alias("__u_key"),
-                F.lit(True).alias("__matched"),
-                *[F.col(c).cast(base_types[c]).alias(f"__u_{c}") for c in tracked],
+
+            def cast(c: str, alias: str) -> str:
+                return f"CAST({sql_ident(c)} AS {sql_type(base_types[c])}) AS {sql_ident(alias)}"
+
+            u = up.selectExpr(
+                cast(on, "__u_key"),
+                "true AS __matched",
+                *[cast(c, "__u_" + c) for c in tracked],
             )
             # guard on the CAST key — the key the join consumes (see
             # _check_unique_keys: raw string keys '1'/'01' both cast to
@@ -790,58 +796,51 @@ class PqDB:
             # contract and the one-current-row invariant (the same class
             # streaming/ingest.py guards with eqNullSafe).
             j = (
-                current.join(u, F.col(on).eqNullSafe(F.col("__u_key")), "left")
+                current.join(u, F.expr(f"{sql_ident(on)} <=> __u_key"), "left")
                 .drop("__u_key")
                 .localCheckpoint(eager=True)
             )
-            matched = F.coalesce(F.col("__matched"), F.lit(False))
-            same = F.lit(True)
-            for c in tracked:
-                same = same & F.col(c).eqNullSafe(F.col(f"__u_{c}"))
-            changed = matched & ~same
+            matched = "coalesce(__matched, false)"
+            same = " AND ".join(
+                ["true", *[f"{sql_ident(c)} <=> {sql_ident('__u_' + c)}" for c in tracked]]
+            )
+            changed = f"{matched} AND NOT ({same})"
             # current rows: close the changed ones, keep the rest as-is
-            kept = j.select(
+            kept = j.selectExpr(
                 *[
-                    (
-                        F.when(changed, F.lit(effective_ts).cast("timestamp")).alias(
-                            self.VALID_TO
-                        )
-                        if c == self.VALID_TO
-                        else F.col(c)
-                    )
+                    f"CASE WHEN {changed} THEN CAST({sql_str(effective_ts)} AS TIMESTAMP) END"
+                    f" AS {sql_ident(c)}"
+                    if c == self.VALID_TO
+                    else sql_ident(c)
                     for c in base.columns
                 ]
             )
             # one aggregation pass over the (checkpointed) join for both counts
             n_changed, n_current = j.agg(
-                F.sum(changed.cast("long")), F.count(F.lit(1))
+                F.sum(F.expr(changed).cast("long")), F.count(F.lit(1))
             ).collect()[0]
             n_changed = int(n_changed or 0)
-            matched_keys = j.filter(matched).select(F.col(on).alias("__mk"))
+            matched_keys = j.filter(matched).selectExpr(f"{sql_ident(on)} AS __mk")
             # reuse the persisted `up` (not a second _to_df conversion), and
             # match NULL-safely for the same replay-safety reason as above
             fresh = up.join(
-                matched_keys, F.col(on).eqNullSafe(F.col("__mk")), "left_anti"
+                matched_keys, F.expr(f"{sql_ident(on)} <=> __mk"), "left_anti"
             )
-            changed_new = (
-                j.filter(changed)
-                .select(on, *[F.col(f"__u_{c}").alias(c) for c in tracked])
+            changed_new = j.filter(changed).selectExpr(
+                sql_ident(on), *[f"{sql_ident('__u_' + c)} AS {sql_ident(c)}" for c in tracked]
             )
-            fresh_cast = fresh.select(
-                F.col(on).cast(base_types[on]).alias(on),
-                *[F.col(c).cast(base_types[c]).alias(c) for c in tracked],
-            )
+            fresh_cast = fresh.selectExpr(*[cast(c, c) for c in [on, *tracked]])
             inserts = changed_new.unionByName(fresh_cast).withColumn(
                 self.VALID_FROM, F.lit(effective_ts).cast("timestamp")
             ).withColumn(self.VALID_TO, F.lit(None).cast("timestamp"))
             start = self._next_id_start(files)
-            id_src = inserts.select(*[c for c in base.columns if c != ID_COL])
+            id_src = inserts.selectExpr(*[sql_ident(c) for c in base.columns if c != ID_COL])
             # the id pass counts the inserts: changed keys plus fresh ones
             inserts, n_inserted = assign_contiguous_ids_with_count(
                 id_src, start=start, partition_by=self.partition_by
             )
             out = closed_hist.unionByName(kept).unionByName(
-                inserts.select(*base.columns)
+                inserts.selectExpr(*map(sql_ident, base.columns))
             )
             n_unchanged = int(n_current) - n_changed
             self._rewrite(out, files)

@@ -16,8 +16,10 @@ final division, with the identical expression shape on the oracle side.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from crystal_parquet_database_spark.operators.prefix import exclusive_prefix
 
 
 def binary_classifier_eval(
@@ -42,11 +44,9 @@ def binary_classifier_eval(
     + neg(s))) / (2 * n_pos * n_neg). The per-score (pos, neg) table comes
     from one groupBy on the score — a parallel shuffle, NOT a global rank
     window (``Window.orderBy`` with no partition key plans a
-    single-partition exchange — the one shape this module bans; see
-    text.pack_sequences for the precedent). ``neg_below`` is the classic
-    two-phase prefix sum over that (much smaller) table: range-partition
-    by score, per-partition running sum, broadcast per-partition base
-    offsets. The doubled numerator is an exact bigint (ties contribute the
+    single-partition exchange — the one shape this module bans).
+    ``neg_below`` is ``prefix.exclusive_prefix`` over that (much smaller)
+    table. The doubled numerator is an exact bigint (ties contribute the
     integer pos*neg instead of a .5 term); only the final division runs in
     double, with the identical expression on the oracle side.
 
@@ -85,48 +85,13 @@ def binary_classifier_eval(
         F.sum(F.lit(1) - F.col("__y")).alias("__neg"),
     )
 
-    # two-phase prefix sum of negatives strictly below each score
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    d = (
-        g.repartitionByRange(n_part, F.col("__s").asc())
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partitioning: 2 consumers below
-    )
-    within = F.coalesce(
-        F.sum("__neg").over(
-            W.partitionBy("__pid").orderBy(F.col("__s").asc())
-            .rowsBetween(W.unboundedPreceding, -1)
-        ),
-        F.lit(0),
-    )
-    psums = (
-        d.groupBy("__pid")
-        .agg(F.sum("__neg").alias("__p"))
-        .withColumn(
-            "__base",
-            F.coalesce(
-                F.sum("__p").over(
-                    W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("__pid", "__base")
-    )
-    ranked = (
-        d.withColumn("__below_in_part", within)
-        .join(F.broadcast(psums), "__pid")
-        .select(
-            "__pos",
-            "__neg",
-            (F.col("__below_in_part") + F.col("__base")).alias("__neg_below"),
-        )
-    )
+    # negatives strictly below each score
+    ranked = exclusive_prefix(g, [F.col("__s").asc()], F.col("__neg"))
     totals = ranked.agg(
         F.sum("__pos").alias("n_pos"),
         F.sum("__neg").alias("n_neg"),
         F.sum(
-            F.col("__pos") * (F.lit(2) * F.col("__neg_below") + F.col("__neg"))
+            F.col("__pos") * (F.lit(2) * F.col("__before") + F.col("__neg"))
         ).alias("__won_x2"),
     )
 
@@ -190,10 +155,8 @@ def binary_classifier_calibration(
     bin index floor((rank-1)*bins/n) divides exact integers in double
     (both < 2^53, one correctly-rounded division — identical both sides).
 
-    100 TB shape: the rank is the two-phase prefix sum again — range
-    exchange on (score, id), per-partition ROW_NUMBER, one-row-per-
-    partition offsets broadcast back (carrying the global total in the
-    same tiny frame); then one ``bins``-row groupBy. NO global
+    100 TB shape: the rank and the total come from
+    ``prefix.exclusive_prefix``; then one ``bins``-row groupBy. NO global
     single-partition rank window, NO NTILE (Spark plans both as a
     SinglePartition exchange of the corpus).
     """
@@ -203,39 +166,12 @@ def binary_classifier_calibration(
         F.col(label_col).cast("bigint").alias("__y"),
     ).where(F.col("__s").isNotNull() & F.col("__y").isNotNull())
 
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    d = (
-        scored.repartitionByRange(n_part, F.col("__s").asc(), F.col("__id").asc())
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partitioning: 2 consumers below
-    )
-    within = F.row_number().over(
-        W.partitionBy("__pid").orderBy(F.col("__s").asc(), F.col("__id").asc())
-    )
-    counts = d.groupBy("__pid").agg(F.count("*").alias("__c"))
-    psums = counts.select(
-        "__pid",
-        F.coalesce(
-            F.sum("__c").over(W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("__base"),
-        F.sum("__c").over(
-            W.orderBy("__pid").rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-        ).alias("__n"),
-    )
-    ranked = (
-        d.withColumn("__w", within)
-        .join(F.broadcast(psums), "__pid")
-        .select(
-            "__s",
-            "__y",
-            (F.col("__w") + F.col("__base")).alias("__rk"),
-            "__n",
-        )
+    ranked = exclusive_prefix(
+        scored, [F.col("__s").asc(), F.col("__id").asc()], F.lit(1)
     )
     bin_col = F.floor(
-        ((F.col("__rk") - 1) * F.lit(int(bins))).cast("double")
-        / F.col("__n").cast("double")
+        (F.col("__before") * F.lit(int(bins))).cast("double")
+        / F.col("__total").cast("double")
     ).cast("int")
     return (
         ranked.groupBy(bin_col.alias("bin"))

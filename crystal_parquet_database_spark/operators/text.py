@@ -21,6 +21,7 @@ from crystal_parquet_database_spark.functions.portable_hash import (
     spark_shingles,
     spark_word_ngrams,
 )
+from crystal_parquet_database_spark.operators.prefix import exclusive_prefix
 
 # BPE-ish tokenizer: letter runs, digit runs, single non-space symbols.
 # The whitespace class is SPELLED OUT, never \s: the pattern runs under
@@ -421,15 +422,8 @@ def pack_sequences(
     Emits per doc: token count, the bin it starts in, its offset there, and
     whether it spans a bin boundary.
 
-    The core is a GLOBAL running token sum — the one window Spark cannot do
-    scalably as `Window.orderBy` (that plans a single-partition exchange). The
-    scalable form is the classic two-phase prefix sum: range-partition by id,
-    run the window WITHIN each partition, and add per-partition base offsets
-    computed from the (tiny, one row per partition) partial-sum table
-    broadcast back. The only driver-side data is that partition-sum table —
-    bounded by partition count, not data size. Values are independent of
-    where the range boundaries land, so the op is deterministic even though
-    range sampling isn't guaranteed to be.
+    The bin of each doc comes from the global running token sum before it,
+    ``prefix.exclusive_prefix`` (no single-partition window).
     """
     return _pack_and_chop(df, text_col, id_col, capacity, order_keys=[id_col])
 
@@ -444,9 +438,7 @@ def pack_sequences_sorted(
     (Under chop semantics the boundary-span RATE is order-invariant — what
     sorting buys is within-bin length homogeneity, which the test asserts.)
 
-    Scale shape is identical to ``pack_sequences``: range-partition by the
-    sort key, per-partition window, broadcast per-partition base offsets —
-    no single-partition global window anywhere.
+    Scale shape is identical to ``pack_sequences``.
     """
     return _pack_and_chop(df, text_col, id_col, capacity, order_keys=["n_tokens", id_col])
 
@@ -454,64 +446,34 @@ def pack_sequences_sorted(
 def _pack_and_chop(
     df: DataFrame, text_col: str, id_col: str, capacity: int, order_keys: list[str]
 ) -> DataFrame:
-    """Shared two-phase-prefix-sum body of the pack variants: range-partition
-    by ``order_keys``, per-partition running sum, broadcast per-partition
-    base offsets, then chop the global cumulative position into bins. The
-    variants differ ONLY in the global document order."""
-    n_part = df.sparkSession.sparkContext.defaultParallelism
-    d = (
-        df.select(
-            F.col(id_col),
-            # NULL-text guard (module convention): size(NULL) is -1 on a
-            # legacy-sizeOfNull session — an unguarded -1 here shifts EVERY
-            # later document's cumulative position corpus-wide
-            F.when(
-                F.col(text_col).isNotNull(), F.size(ws_tokens(F.col(text_col)))
-            ).alias("n_tokens"),
-        )
-        # asc_nulls_last on EVERY order key (range partitioner AND window):
-        # the sorted variant orders by the nullable n_tokens, and Spark's
-        # plain asc puts a NULL-token (no-content) doc FIRST while the
-        # oracle's DuckDB default puts it LAST — shifting every document's
-        # bin assignment. NULLS LAST both sides: no-content docs pack at
-        # the tail, consuming zero capacity.
-        .repartitionByRange(n_part, *[F.col(k).asc_nulls_last() for k in order_keys])
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partitioning: 3 consumers below
+    """Shared body of the pack variants: the running token sum before each
+    document in ``order_keys`` order, chopped into bins. The variants differ
+    ONLY in the global document order."""
+    d = df.select(
+        F.col(id_col),
+        # NULL-text guard (module convention): size(NULL) is -1 on a
+        # legacy-sizeOfNull session — an unguarded -1 here shifts EVERY
+        # later document's cumulative position corpus-wide
+        F.when(
+            F.col(text_col).isNotNull(), F.size(ws_tokens(F.col(text_col)))
+        ).alias("n_tokens"),
     )
-    within = F.sum("n_tokens").over(
-        W.partitionBy("__pid")
-        .orderBy(*[F.col(k).asc_nulls_last() for k in order_keys])
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    psums = (
-        d.groupBy("__pid")
-        .agg(F.sum("n_tokens").alias("__psum"))
-        .withColumn(
-            "__base",
-            F.coalesce(
-                F.sum("__psum").over(
-                    W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("__pid", "__base")
-    )
-    cum = F.coalesce(F.col("__w"), F.lit(0)) + F.col("__base")
-    return (
-        d.withColumn("__w", within)
-        .join(F.broadcast(psums), "__pid")
-        .select(
-            F.col(id_col),
-            F.col("n_tokens"),
-            # bigint: an int bin_id caps the packer at 2^31 bins (~1.1e12
-            # tokens at capacity 512) — under ANSI the cast ABORTS past
-            # that, and a 100 TB corpus holds ~25T tokens
-            F.floor(cum / capacity).cast("bigint").alias("bin_id"),
-            (cum % capacity).cast("int").alias("bin_offset"),
-            ((cum % capacity) + F.col("n_tokens") > capacity).alias("spans_boundary"),
-        )
+    # asc_nulls_last on EVERY order key: the sorted variant orders by the
+    # nullable n_tokens, and Spark's plain asc puts a NULL-token (no-content)
+    # doc FIRST while the oracle's DuckDB default puts it LAST — shifting
+    # every document's bin assignment. NULLS LAST both sides: no-content
+    # docs pack at the tail, consuming zero capacity.
+    order = [F.col(k).asc_nulls_last() for k in order_keys]
+    cum = F.col("__before")
+    return exclusive_prefix(d, order, F.col("n_tokens")).select(
+        F.col(id_col),
+        F.col("n_tokens"),
+        # bigint: an int bin_id caps the packer at 2^31 bins (~1.1e12
+        # tokens at capacity 512) — under ANSI the cast ABORTS past
+        # that, and a 100 TB corpus holds ~25T tokens
+        F.floor(cum / capacity).cast("bigint").alias("bin_id"),
+        (cum % capacity).cast("int").alias("bin_offset"),
+        ((cum % capacity) + F.col("n_tokens") > capacity).alias("spans_boundary"),
     )
 
 
@@ -530,85 +492,34 @@ def token_budget_per_group(
     rather than document counts — the unit a pretraining recipe actually
     budgets.
 
-    The running sum is a per-group prefix sum. A plain
+    The running sum is a per-group ``prefix.exclusive_prefix``: a plain
     ``Window.partitionBy(group)`` would put one whole group on one task —
-    with a handful of sources over 100 TB that's the worst skew possible. So
-    the prefix sum is two-phase like ``pack_sequences``, generalized per
-    group: range-partition by (group, hash, id) so each partition holds a
-    contiguous slice of one-or-more groups' hash order, window WITHIN the
-    partition, then add per-(partition, group) base offsets computed from the
-    tiny partial-sum table (≤ partitions × groups-crossing-boundaries rows)
-    broadcast back. Every group can span many partitions; no task ever sees
-    more than ~1/n_part of a group.
+    with a handful of sources over 100 TB that's the worst skew possible —
+    while the helper spreads every group over many partitions.
 
     Output: (id, group, n_tokens, cum_before) for kept documents.
     """
-    n_part = df.sparkSession.sparkContext.defaultParallelism
     h = spark_hash64(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    d = (
-        df.select(
-            F.col(id_col),
-            F.col(group_col).alias("__grp"),
-            # NULL-text guard: see _pack_and_chop (an unguarded size(NULL)
-            # = -1 corrupts the budget prefix sums on legacy sessions)
-            F.when(
-                F.col(text_col).isNotNull(), F.size(ws_tokens(F.col(text_col)))
-            ).alias("n_tokens"),
-            h.alias("__h"),
-        )
-        .repartitionByRange(n_part, F.col("__grp"), F.col("__h"), F.col(id_col))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partitioning: 3 consumers below
-    )
-    within = F.sum("n_tokens").over(
-        W.partitionBy("__pid", "__grp")
-        .orderBy("__h", id_col)
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    psums = (
-        d.groupBy("__pid", "__grp")
-        .agg(F.sum("n_tokens").alias("__psum"))
-        .withColumn(
-            "__base",
-            F.coalesce(
-                F.sum("__psum").over(
-                    W.partitionBy("__grp")
-                    .orderBy("__pid")
-                    .rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("__pid", "__grp", "__base")
-    )
-    cum = F.coalesce(F.col("__w"), F.lit(0)) + F.col("__base")
-    # NULL-SAFE group key in the re-join: the windows and the psums
-    # aggregate all treat a NULL group as its own group, but a plain
-    # ["__pid", "__grp"] equi-join never matches NULL — every NULL-group
-    # document silently vanished from the output while the oracle's
-    # PARTITION BY kept them (the same dropped-NULL-key trap as the
-    # llm_corpus_pipeline digest join)
-    p = F.broadcast(
-        psums.select(
-            F.col("__pid").alias("__ppid"),
-            F.col("__grp").alias("__pgrp"),
-            "__base",
-        )
+    d = df.select(
+        F.col(id_col),
+        F.col(group_col).alias("__grp"),
+        # NULL-text guard: see _pack_and_chop (an unguarded size(NULL)
+        # = -1 corrupts the budget prefix sums on legacy sessions)
+        F.when(
+            F.col(text_col).isNotNull(), F.size(ws_tokens(F.col(text_col)))
+        ).alias("n_tokens"),
+        h.alias("__h"),
     )
     return (
-        d.withColumn("__w", within)
-        .join(
-            p,
-            (F.col("__pid") == F.col("__ppid"))
-            & F.col("__grp").eqNullSafe(F.col("__pgrp")),
+        exclusive_prefix(
+            d, [F.col("__h"), F.col(id_col)], F.col("n_tokens"), group="__grp"
         )
-        .withColumn("cum_before", cum)
-        .filter(F.col("cum_before") < budget)
+        .filter(F.col("__before") < budget)
         .select(
             F.col(id_col),
             F.col("__grp").alias(group_col),
             F.col("n_tokens"),
-            F.col("cum_before"),
+            F.col("__before").alias("cum_before"),
         )
     )
 
@@ -741,45 +652,14 @@ def global_shuffle_rank(df: DataFrame, id_col: str, salt: str = "shuffle:") -> D
     """Deterministic global pretraining-order shuffle: every row ranked by a
     portable salted hash of its id (doc_id tie-break for collisions).
 
-    A bare ``Window.orderBy`` global row_number plans a single-partition
-    exchange — the whole corpus through one reducer. This is the scalable
-    form (same two-phase prefix sum as ``pack_sequences``): range-partition
-    by the sort key, rank WITHIN each partition, add per-partition base
-    offsets from the one-row-per-partition count table broadcast back. The
-    output is independent of where range boundaries land (the (hash, id) key
-    is unique), so the rank is deterministic even though range sampling
-    isn't guaranteed to be.
+    The rank is one plus the number of rows before each one in (hash, id)
+    order, from ``prefix.exclusive_prefix``; a bare ``Window.orderBy``
+    row_number would send the whole corpus through one task.
     """
-    n_part = df.sparkSession.sparkContext.defaultParallelism
     h = spark_hash64(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    d = (
-        df.select(F.col(id_col), h.alias("__h"))
-        .repartitionByRange(n_part, F.col("__h"), F.col(id_col))
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partitioning: two consumers below
-    )
-    rn = F.row_number().over(W.partitionBy("__pid").orderBy("__h", id_col))
-    bases = (
-        d.groupBy("__pid")
-        .agg(F.count("*").alias("__cnt"))
-        .withColumn(
-            "__base",
-            F.coalesce(
-                F.sum("__cnt").over(
-                    W.orderBy("__pid").rowsBetween(W.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("__pid", "__base")
-    )
-    return (
-        d.withColumn("__rn", rn)
-        .join(F.broadcast(bases), "__pid")
-        .select(
-            F.col(id_col),
-            (F.col("__rn") + F.col("__base")).cast("bigint").alias("shuffle_pos"),
-        )
+    d = df.select(F.col(id_col), h.alias("__h"))
+    return exclusive_prefix(d, [F.col("__h"), F.col(id_col)], F.lit(1)).select(
+        F.col(id_col), (F.col("__before") + 1).alias("shuffle_pos")
     )
 
 

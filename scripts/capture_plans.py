@@ -37,6 +37,16 @@ _VOLATILE = [
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     # the per-process scratch root of PqDB/layout queries (surface/scratch.py)
     (re.compile(r"pqdb_gate_\d+"), "pqdb_gate_N"),
+    # an ExistingRDD's creation site "<op> at <call site>": the call site
+    # flips between NativeMethodAccessorImpl.java:0 and <unknown>:0, and on a
+    # runtime.concurrently thread a stale Python call site ("wrapped at
+    # .../concurrent/futures/thread.py:58", left by pyspark's process-wide
+    # call-site depth counter) replaces both parts. The package makes its
+    # ExistingRDDs with localCheckpoint, so that is the op the stale label hid.
+    (
+        re.compile(r"RDD\[N\] at (?:wrapped at \S+?thread\.py:\d+|(\w+) at [^\s,]+)"),
+        lambda m: f"RDD[N] at {m.group(1) or 'localCheckpoint'} at <callsite>",
+    ),
 ]
 _LAMBDA_VAR = re.compile(r"lambda (\w+)#(\d+)")
 

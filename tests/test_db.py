@@ -97,11 +97,10 @@ def test_update_small_frame_plans_broadcast_join(spark, db, monkeypatch):
 
 
 def test_update_null_key_matches_null_row(spark, db):
-    """Regression (round-7 review): the update join used plain `on` equality,
-    so a NULL-keyed update row matched nothing (NULL = NULL is NULL) and the
-    call silently no-opped — while upsert_scd2 and stream ingest were made
-    NULL-safe in the same changeset. update() must honor the same contract:
-    NULL is one addressable key."""
+    """Regression: an update join on plain `on` equality matches no NULL-keyed
+    update row (NULL = NULL is NULL), so the call silently no-ops. update()
+    keeps the contract of upsert_scd2 and stream ingest: NULL is one
+    addressable key."""
     db.create(
         spark.createDataFrame(
             [("a", 1.0), (None, 2.0), ("b", 3.0)], "sku string, price double"
@@ -776,7 +775,7 @@ def test_delete_all_rows_partitioned_dataset_survives(spark, tmp_path):
     # the re-create must also RETIRE the unpartitioned schema-only marker
     # file the empty rewrite left at the root: appending hive dirs next to
     # it leaves a mixed-depth layout whose readability depends on Spark
-    # partition-discovery internals (round-7 review) — the recovery path
+    # partition-discovery internals — the recovery path
     # replaces the zero-row dataset wholesale, so only partition dirs remain
     import os as _os
 
@@ -790,7 +789,7 @@ def test_delete_all_rows_partitioned_dataset_survives(spark, tmp_path):
 
 
 def test_normalize_partitioned_compacts_not_explodes(spark, tmp_path):
-    """Regression (round-7 review): normalize() on a hive-partitioned
+    """Regression: normalize() on a hive-partitioned
     dataset used a round-robin repartition(n_files), spreading every
     partition VALUE across all n tasks — the partitioned writer then emitted
     one file per (task, value) pair, up to n_files × n_values tiny files:
@@ -811,7 +810,7 @@ def test_normalize_partitioned_compacts_not_explodes(spark, tmp_path):
 
 
 def test_update_preserves_base_column_type(spark, tmp_path):
-    """Regression (round-7 review): the update merge's coalesce type-coerces
+    """Regression: the update merge's coalesce type-coerces
     to the common type, so an update column that arrived WIDER (double vs
     stored float, long vs stored int) silently rewrote the stored column
     type for the whole dataset, bypassing create()'s evolution gate. Update
@@ -852,6 +851,41 @@ def test_update_quotes_names_and_fails_lossy_values(spark, tmp_path):
     assert {r[key]: r[val] for r in db.read(load_format="dataset").collect()} == {1: 99, 2: 20}
 
 
+def test_scd2_upsert_quotes_names(spark, tmp_path):
+    """upsert_scd2's casts, key match and projections are SQL text too: a
+    key with a dot and a backtick and a dotted tracked column merge like any
+    other, and a lossy value still fails the ANSI cast."""
+    from crystal_parquet_database_spark.db import PqDB
+
+    db = PqDB(spark, str(tmp_path / "scd2_names"))
+    key, val = "k.e`y", "a.b"
+    ddl = "`k.e``y` long, `a.b` int"
+    db.create_versioned(
+        spark.createDataFrame([(1, 10), (2, 20), (3, 30)], ddl),
+        effective_ts="2024-01-01 00:00:00",
+    )
+    stats = db.upsert_scd2(
+        spark.createDataFrame([(1, 11), (2, 20), (4, 40)], "`k.e``y` long, `a.b` long"),
+        on=key,
+        effective_ts="2024-02-01 00:00:00",
+    )
+    assert stats == {"closed": 1, "inserted": 2, "unchanged": 2}
+
+    def asof(ts):
+        return {r[key]: r[val] for r in db.read_asof(ts).collect()}
+
+    assert asof("2024-01-15 00:00:00") == {1: 10, 2: 20, 3: 30}
+    assert asof("2024-02-15 00:00:00") == {1: 11, 2: 20, 3: 30, 4: 40}
+    assert dict(db.read(load_format="dataset").dtypes)[val] == "int"
+    with pytest.raises(Exception, match="CAST_OVERFLOW"):
+        db.upsert_scd2(
+            spark.createDataFrame([(2, 2**40)], "`k.e``y` long, `a.b` long"),
+            on=key,
+            effective_ts="2024-03-01 00:00:00",
+        )
+    assert asof("2024-03-15 00:00:00") == {1: 11, 2: 20, 3: 30, 4: 40}
+
+
 def test_release_all_session_blocks(spark):
     """Harness hygiene: the between-queries release must free BOTH
     localCheckpoint blocks and plain persists, and be safe to call twice."""
@@ -871,7 +905,7 @@ def test_release_all_session_blocks(spark):
 
 
 def test_scd2_replay_preserves_base_column_types(spark, tmp_path):
-    """Regression (round-7 review): upsert_scd2 lacked update()'s base-type
+    """Regression: upsert_scd2 lacked update()'s base-type
     cast, so a wider-typed update frame (Python ints -> long vs stored int)
     silently rewrote the stored column type through the insert-side
     unionByName coercion -- even on a NO-OP replay."""
@@ -960,7 +994,7 @@ def test_scratch_reap_clears_tree_and_restarts_clean():
 
 
 def test_create_partition_by_over_rooted_dataset_refuses(spark, tmp_path):
-    """Round-8 review: opening a root-file dataset with partition_by and
+    """Regression: opening a root-file dataset with partition_by and
     calling create() used to hit the empty-marker branch and replace the
     WHOLE dataset with just the new batch — silent total data loss."""
     from crystal_parquet_database_spark.db import PqDB
@@ -997,7 +1031,7 @@ def test_create_unpartitioned_over_hive_dataset_refuses(spark, tmp_path):
 
 
 def test_update_cast_colliding_keys_rejected(spark, tmp_path):
-    """Round-8 review: string keys '1' and '01' are distinct to a raw-key
+    """Regression: string keys '1' and '01' are distinct to a raw-key
     guard but the join coerces both to numeric 1 — both matched the same
     base row and the merge duplicated it. The guard now runs on the CAST
     key."""
@@ -1044,10 +1078,10 @@ def test_scd2_extra_columns_rejected_like_update(spark, tmp_path):
 
 
 def test_normalize_cluster_by_on_partitioned_dataset_compacts(spark, tmp_path):
-    """Round-8 review: normalize(cluster_by=...) on a hive-partitioned
+    """Regression: normalize(cluster_by=...) on a hive-partitioned
     dataset range-partitioned on the CLUSTER key, spreading every partition
     value over all n_files tasks — up to n_files x n_values tiny files, the
-    exact pathology the no-cluster branch was fixed for in round 7. Both
+    exact pathology of the no-cluster branch's round-robin spread. Both
     cluster branches now cluster on the partition columns first."""
     from crystal_parquet_database_spark.db import PqDB
 
@@ -1096,7 +1130,7 @@ def test_interrupted_swap_recovers_new_state(spark, tmp_path):
     """Simulate a kill between _rewrite's two renames: path missing, old
     state in __old_*, COMPLETE new state in __tmp_*. The next WRITE touch
     (or an explicit recover()) must finish the swap; a mere `exists` probe
-    must NOT — round-9 advice: lazy recovery from `exists` let a reader
+    must NOT: lazy recovery from `exists` let a reader
     complete the swap and delete the sibling a live writer was about to
     rename."""
     import os
@@ -1147,7 +1181,7 @@ def test_write_entry_points_recover_crashed_swap(spark, tmp_path):
 
 
 def test_destroy_clears_crash_siblings_no_resurrection(spark, tmp_path):
-    """Round-8 review of the review: a stale __old_* surviving a bare
+    """Regression: a stale __old_* surviving a bare
     rmtree was 'recovered' into the emptied path, and the next create()
     appended onto resurrected rows. destroy() clears siblings; recovery
     never restores an old without a tmp."""
@@ -1187,7 +1221,7 @@ def test_rewrite_guards_partition_by_over_rooted_dataset(spark, tmp_path):
 def test_empty_string_partition_value_fails_loudly(spark, tmp_path):
     """Hive layout writes '' and NULL partition values to the SAME
     ``__HIVE_DEFAULT_PARTITION__`` directory, so an empty-string key would
-    silently read back as NULL (the round-10 degenerate-corpus find). The
+    silently read back as NULL (a degenerate-corpus find). The
     engine must refuse it loudly — while every representable shape
     (whitespace, slashes, NULL itself) still round-trips faithfully."""
     path = str(tmp_path / "emptykey")

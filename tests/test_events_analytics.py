@@ -1,4 +1,4 @@
-"""Event-analytics (funnel, retention) + round-3 LLM-op tests: oracle
+"""Event-analytics (funnel, retention) and LLM-op tests: oracle
 equivalence lives in tests/test_oracle.py's registry sweep; these check the
 semantics and the scale-shape properties directly."""
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from crystal_parquet_database_spark.operators import similarity as S
 from crystal_parquet_database_spark.operators import text as T
-from crystal_parquet_database_spark.plans.inspect import formatted_plan
 from crystal_parquet_database_spark.surface import QUERIES
 from crystal_parquet_database_spark.tables import load_table
 
@@ -46,11 +45,6 @@ def test_token_budget_respected_per_group(spark, sf_dir):
         assert g["cum_before"].is_unique
 
 
-def test_token_budget_no_single_partition_window(spark, sf_dir):
-    plan = formatted_plan(QUERIES["sample_token_budget_mixture"](spark, sf_dir))
-    assert plan.count("Exchange SinglePartition") <= 1
-
-
 def test_sorted_packing_homogenizes_bin_lengths(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     plain = T.pack_sequences(docs, "text", "doc_id", capacity=512)
@@ -71,11 +65,6 @@ def test_sorted_packing_homogenizes_bin_lengths(spark, sf_dir):
         plain.agg(F.sum("n_tokens")).first()[0]
         == srt.agg(F.sum("n_tokens")).first()[0]
     )
-
-
-def test_sorted_packing_no_single_partition_window(spark, sf_dir):
-    plan = formatted_plan(QUERIES["text_pack_sequences_sorted"](spark, sf_dir))
-    assert plan.count("Exchange SinglePartition") <= 1
 
 
 def test_centroid_outliers_shape_and_rank(spark, sf_dir):

@@ -3,6 +3,7 @@ These are the checks that keep the engine honest at 100 TB."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crystal_parquet_database_spark.plans.inspect import (
@@ -120,43 +121,70 @@ def test_mixture_and_split_are_pure_map_stages(spark, sf_dir):
     assert num_shuffles(QUERIES["sample_train_val_test_split"](spark, sf_dir)) == 0
 
 
-def test_pack_sequences_no_global_single_partition_window(spark, sf_dir):
-    """The packing prefix sum must not funnel the corpus through one
-    partition: the only SinglePartition exchange allowed is the tiny
-    per-partition-sums table (one row per partition)."""
+@pytest.mark.parametrize(
+    "query, max_single",
+    [
+        ("text_pack_sequences", 1),
+        ("text_pack_sequences_sorted", 1),
+        ("sample_token_budget_mixture", 1),
+        ("llm_corpus_pipeline", 0),
+        ("sample_global_shuffle", 1),
+        ("eval_classifier_auc", 4),
+        ("eval_classifier_calibration", 1),
+    ],
+)
+def test_prefix_sum_queries_no_single_partition_corpus_window(
+    spark, sf_dir, query, max_single
+):
+    """Running sums and ranks must come from the two-phase prefix sum
+    (operators/prefix.py), never a bare global Window.orderBy that sends the
+    whole corpus through one partition. Allowed SinglePartition exchanges:
+    the one-row-per-partition base table and, for the AUC, the one-row
+    aggregates joined at the end — each reads an aggregate, never rows."""
+    import re
+
     from crystal_parquet_database_spark.plans.inspect import formatted_plan
 
-    df = QUERIES["text_pack_sequences"](spark, sf_dir)
-    plan = formatted_plan(df)
-    assert plan.count("Exchange SinglePartition") <= 1
+    plan = formatted_plan(QUERIES[query](spark, sf_dir))
+    # explain("formatted") names an exchange's partitioning in the node's
+    # detail block, and the operator it reads on the next line of the tree
+    single = re.findall(r"^\((\d+)\) Exchange\n.*\nArguments: SinglePartition", plan, re.M)
+    assert len(single) <= max_single
+    tree = plan.splitlines()
+    for node in single:
+        at = next(i for i, line in enumerate(tree) if line.endswith(f"- Exchange ({node})"))
+        assert re.search(r"- HashAggregate \(\d+\)$", tree[at + 1]), tree[at + 1]
+    if query == "eval_classifier_auc":
+        # the top-k must be TakeOrderedAndProject, not a global Sort
+        assert "TakeOrderedAndProject" in plan
 
 
-def test_global_shuffle_rank_no_single_partition_corpus_window(spark, sf_dir):
-    """The shuffle-order rank must use the two-phase prefix sum, not a bare
-    global Window.orderBy (single-partition exchange of the whole corpus).
-    Allowed SinglePartition exchange: the one-row-per-partition base table."""
-    from crystal_parquet_database_spark.plans.inspect import formatted_plan
+def test_capture_plans_normalizes_rdd_call_sites():
+    """A checkpoint RDD's creation-site label depends on the thread that
+    made it, not on the plan: the three labels seen for the same
+    localCheckpoint normalize to one text, and the op name survives."""
+    import importlib.util
+    import os
 
-    df = QUERIES["sample_global_shuffle"](spark, sf_dir)
-    plan = formatted_plan(df)
-    assert plan.count("Exchange SinglePartition") <= 1
+    spec = importlib.util.spec_from_file_location(
+        "capture_plans",
+        os.path.join(os.path.dirname(__file__), "..", "scripts", "capture_plans.py"),
+    )
+    capture_plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(capture_plans)
 
-
-def test_classifier_eval_no_single_partition_corpus_window(spark, sf_dir):
-    """The AUC rank sum must come from the per-score groupBy + two-phase
-    prefix sum, never a global rank Window over the corpus. Allowed
-    SinglePartition exchanges: the one-row-per-partition base-offset table
-    and the final three one-row aggregates (n/totals/topk) being joined."""
-    from crystal_parquet_database_spark.plans.inspect import formatted_plan
-
-    df = QUERIES["eval_classifier_auc"](spark, sf_dir)
-    plan = formatted_plan(df)
-    # the corpus-wide stages: scan -> per-score groupBy -> range exchange;
-    # every SinglePartition exchange must sit above an aggregation that has
-    # already reduced to bounded rows. TakeOrderedAndProject (not a global
-    # Sort) must serve the top-k.
-    assert "TakeOrderedAndProject" in plan
-    assert plan.count("Exchange SinglePartition") <= 4
+    line = "Arguments: [id#7L], MapPartitionsRDD[{}] at {}, ExistingRDD, UnknownPartitioning(0)"
+    sites = [
+        "localCheckpoint at NativeMethodAccessorImpl.java:0",
+        "localCheckpoint at <unknown>:0",
+        "wrapped at /usr/lib/python3.11/concurrent/futures/thread.py:58",
+    ]
+    got = {capture_plans.normalize(line.format(i, s)) for i, s in enumerate(sites)}
+    assert len(got) == 1 and "at localCheckpoint at" in got.pop()
+    other = capture_plans.normalize(
+        line.format(3, "applySchemaToPythonRDD at NativeMethodAccessorImpl.java:0")
+    )
+    assert "at applySchemaToPythonRDD at" in other
 
 
 def test_upsample_is_pure_map_stage(spark, sf_dir):
@@ -303,7 +331,7 @@ def test_scd2_asof_read_pushdown(spark, tmp_path):
 
 
 def test_pushed_filters_survives_stray_paren_in_value():
-    """Regression (round-7 review): filter VALUES are printed unquoted, so a
+    """Regression: filter VALUES are printed unquoted, so a
     stray ')' inside a value used to close the whole PushedFilters list and
     silently drop every later filter — a pushed-filter assertion then fails
     spuriously (or a count assertion passes against the wrong list)."""
@@ -321,12 +349,10 @@ def test_pushed_filters_survives_stray_paren_in_value():
 
 
 def test_scan_read_schemas_raises_on_truncation():
-    """Regression (round-7 review): Spark clips scan metadata at
+    """Regression: Spark clips scan metadata at
     spark.sql.maxMetadataStringLength, and a clipped ReadSchema makes
     'col not in schema' pruning assertions pass because the column was cut
     off, not pruned. Truncated schemas must raise instead."""
-    import pytest
-
     from crystal_parquet_database_spark.plans.inspect import scan_read_schemas
 
     ok = "ReadSchema: struct<a:int,b:string>"
@@ -340,12 +366,13 @@ def test_scan_read_schemas_raises_on_truncation():
 
 
 def test_round11_dedup_ops_plan_no_cartesian(spark, sf_dir):
-    """The round-11 operators must keep their banded equi-join shape: the
-    edit-distance op's FIRST design degenerated to an effective all-pairs
-    join at 10x (length-bucketed truncated heads all landed in one
-    bucket) — this asserts the replacement (block banding + df cap) and
-    the span op's gram join never regress to a cartesian/broadcast-nested
-    plan, the same guard the LSH family carries."""
+    """The span and edit-distance dedup operators must keep their banded
+    equi-join shape: the edit-distance op's FIRST design degenerated to an
+    effective all-pairs join at 10x (length-bucketed truncated heads all
+    landed in one bucket) — this asserts the replacement (block banding +
+    df cap) and the span op's gram join never regress to a
+    cartesian/broadcast-nested plan, the same guard the LSH family
+    carries."""
     from crystal_parquet_database_spark.operators.dedup import (
         duplicate_token_spans,
         edit_distance_near_dup_pairs,
@@ -368,7 +395,7 @@ def test_round11_dedup_ops_plan_no_cartesian(spark, sf_dir):
 
 
 def test_trained_quantizer_queries_no_cartesian(spark, sf_dir):
-    """The round-13 trained compositions (k-means -> IVF / PQ / IVF-PQ
+    """The trained compositions (k-means -> IVF / PQ / IVF-PQ
     search): training is the kmeans broadcast loop, search is the proven
     inlined-literal machinery — no CartesianProduct may appear anywhere in
     the final (post-checkpoint) search+recall plan."""
@@ -384,7 +411,7 @@ def test_trained_quantizer_queries_no_cartesian(spark, sf_dir):
 
 
 def test_round14_trained_compositions_plan_shape(spark, sf_dir, monkeypatch):
-    """Round-14 compositions: trained SemDeDup's assignment must broadcast
+    """Trained SemDeDup's assignment must broadcast
     the TRAINED centroid frame (BroadcastNestedLoopJoin, never a data-sized
     CartesianProduct), and the trained-hybrid RRF's probe/candidate joins
     stay equi-joins like the trained trio. Checkpoint stubbed to identity
