@@ -37,6 +37,7 @@ from crystal_parquet_database_spark.functions.portable_hash import (
     spark_hash_raw60,
     spark_word_shingles,
 )
+from crystal_parquet_database_spark.operators.spread import spread
 
 
 def content_digest(text_col: str, id_col: str) -> Column:
@@ -92,12 +93,10 @@ def shingle_hashes(
     background Jaccard, which floods LSH with candidate pairs; word n-grams
     give ~0 background so candidates ≈ true near-dups.
 
-    Hashing is CPU-bound, so the input is spread across the cluster first —
-    a small parquet file arrives as ONE partition and would otherwise pin the
-    whole shingle/MinHash pipeline to a single core. (At 100 TB inputs are
-    already many-partitioned; the repartition then just evens skew.)
+    Hashing is CPU-bound, so the input is spread across the cores first
+    (``operators.spread``).
     """
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    df = spread(df)
     c = F.col(text_col)
     # tokens materialized once per row (see spark_word_shingles PERF note)
     df = df.withColumn("__toks", F.split(F.trim(c), WS_RE))
@@ -318,9 +317,8 @@ def simhash(
     that is then exploded gets re-evaluated per emitted element (measured
     ~30× slower); as a post-explode scalar it hashes each shingle once in
     plain codegen."""
-    n = df.sparkSession.sparkContext.defaultParallelism
     c = F.col(text_col)
-    d = df.repartition(n).withColumn("__toks", F.split(F.trim(c), WS_RE))
+    d = spread(df).withColumn("__toks", F.split(F.trim(c), WS_RE))
     sh = spark_word_shingles(c, k, toks=F.col("__toks"))
     # full-width hash: a mod-P (31-bit) hash would zero every vote above
     # bit 30, collapsing wide fingerprints (see spark_hash_raw60)

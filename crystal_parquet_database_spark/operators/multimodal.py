@@ -13,8 +13,8 @@ exist; nothing else changes.
 
 Scale notes: mapInPandas streams Arrow batches — content bytes never
 materialize as one driver object; CPU-heavy decode parallelizes per
-partition, so `repartition(n)` before these ops is the knob (same pattern as
-operators/dedup.shingle_hashes).
+partition, so `repartition(n)` before these ops is the knob (what
+operators/spread.spread does for the text operators).
 """
 
 from __future__ import annotations

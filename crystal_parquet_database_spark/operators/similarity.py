@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from crystal_parquet_database_spark.functions.literals import lit_matrix, lit_vector
 from crystal_parquet_database_spark.operators.dedup import bucket_pairs
+from crystal_parquet_database_spark.operators.spread import spread
 
 # Deterministic "random" hyperplane component: w(j, k) for hyperplane j,
 # dimension k — an LCG step mapped to [-1000, 1000]. Integer-exact in both
@@ -578,10 +579,8 @@ def label_centroid_outliers(
         # contribute to only SOME per-(label, pos) centroid sums, skewing
         # every same-label member's distance — and engine-ambiguously so
         df = df.filter(F.size(F.col(vec_col)) == int(dim))
-    n_part = df.sparkSession.sparkContext.defaultParallelism
     q = (
-        df.repartition(n_part)
-        .select(
+        spread(df).select(
             F.col(id_col),
             F.col(label_col).alias("__lbl"),
             F.posexplode(F.col(vec_col)).alias("__pos", "__c"),
@@ -752,11 +751,8 @@ def semdedup(
     # re-spread across all cores BEFORE the per-pair dot-product fold, which
     # is where the compute lives. At production cell counts (∝ corpus size)
     # the join itself is already wide and the repartition is harmless.
-    n_part = df.sparkSession.sparkContext.defaultParallelism
     pairs = (
-        a.join(b, pair_key)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .repartition(n_part)
+        spread(a.join(b, pair_key).filter(F.col("id_a") < F.col("id_b")))
         .withColumn(
             "__cos", _cos_div(dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb"))
         )

@@ -22,6 +22,7 @@ from crystal_parquet_database_spark.functions.portable_hash import (
     spark_word_ngrams,
 )
 from crystal_parquet_database_spark.operators.prefix import exclusive_prefix
+from crystal_parquet_database_spark.operators.spread import spread
 
 # BPE-ish tokenizer: letter runs, digit runs, single non-space symbols.
 # The whitespace class is SPELLED OUT, never \s: the pattern runs under
@@ -65,16 +66,9 @@ def ws_tokens(text: Column) -> Column:
     return F.split(F.trim(text), WS_RE)  # explicit cross-engine class
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Regex/tokenize stages are CPU-bound; spread small scans across cores
-    (same pattern as operators/dedup.shingle_hashes — a small parquet file
-    otherwise arrives as one or two partitions)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def token_counts(df: DataFrame, text_col: str) -> DataFrame:
     """Whitespace token count + BPE-ish regex token count + char count."""
-    df = _spread(df)
+    df = spread(df)
     t = F.col(text_col)
     # size(split(NULL)) is -1 in Spark while LEN(NULL) is NULL in ANSI SQL
     # (the documented size(NULL) trap, guarded in repetition_features) — a
@@ -97,7 +91,7 @@ def quality_features(df: DataFrame, text_col: str, stopwords: list[str]) -> Data
     t = F.col(text_col)
     # materialize tokens once — inlining the split into every consumer
     # re-splits the text per expression (see functions/portable_hash PERF note)
-    df = _spread(df).withColumn("__toks", ws_tokens(t))
+    df = spread(df).withColumn("__toks", ws_tokens(t))
     toks = F.col("__toks")
     # NULL text → NULL counts/ratios (size(NULL) would give -1 and a
     # nonsense -1.0 stopword_ratio; the oracle's LEN(NULL) is NULL)
@@ -134,7 +128,7 @@ def language_id(df: DataFrame, text_col: str) -> DataFrame:
     LANG_ORDER preference).
     """
     # materialize tokens once (5 marker filters would otherwise each re-split)
-    df = _spread(df).withColumn("__toks", ws_tokens(F.col(text_col)))
+    df = spread(df).withColumn("__toks", ws_tokens(F.col(text_col)))
     toks = F.col("__toks")
     t = F.col(text_col)
 
@@ -226,7 +220,7 @@ def repetition_features(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # see SCALE.md); only (id, tokens) is checkpointed, source
     # columns are projected away first
     df = (
-        _spread(df)
+        spread(df)
         .select(F.col(id_col), ws_tokens(t).alias("__toks"))
         .localCheckpoint(eager=True)
     )
@@ -287,10 +281,9 @@ def fingerprint(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataFr
 
     Hashing every char k-gram is CPU-bound → spread the input first (a small
     single-file table otherwise runs on one core)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
     sh = spark_shingles(F.col(text_col), k)
     fp = F.array_min(F.transform(sh, lambda s: spark_hash64(s)))
-    return df.repartition(n).select(F.col(id_col), fp.alias("fingerprint"))
+    return spread(df).select(F.col(id_col), fp.alias("fingerprint"))
 
 
 def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str, top_k: int = 5) -> DataFrame:
@@ -308,7 +301,7 @@ def tfidf_top_terms(df: DataFrame, text_col: str, id_col: str, top_k: int = 5) -
     100 TB the (doc, term) aggregate dominates and partial aggregation keeps
     its shuffle proportional to distinct pairs, not tokens.
     """
-    df = _spread(df)
+    df = spread(df)
     tc = df.select(F.col(id_col), F.explode(ws_tokens(F.col(text_col))).alias("term"))
     c = tc.groupBy(id_col, "term").agg(F.count("*").alias("tc"))
     n_doc = F.sum("tc").over(W.partitionBy(id_col))
@@ -524,6 +517,96 @@ def token_budget_per_group(
     )
 
 
+def _block(tokens: Column, i: Column, width: int) -> Column:
+    """Block ``i`` (0-based) of a token array: its tokens ``i·width+1`` to
+    ``(i+1)·width``, space-joined — the split rule of the block-chunk family
+    (``chunk_dedup_stats``, ``dedup_chunks_keep_first``,
+    ``boilerplate_chunks``). Only full blocks are taken; the remainder is the
+    document's tail."""
+    return F.array_join(F.slice(tokens, i * width + 1, width), " ")
+
+
+def _blocks(
+    df: DataFrame, text_col: str, id_col: str, width: int
+) -> tuple[DataFrame, DataFrame]:
+    """The two frames the block-chunk rewrites share, both eagerly
+    checkpointed: ``base`` = (id, ``__tail``, ``__c``), one row per document
+    with its tail remainder (NULL for NULL text) and its (pos, ctext) blocks,
+    and ``ch`` = (id, pos, ctext, chash), one row per block.
+
+    Why materialize: ``base`` has two consumers (the block explode and the
+    reassembly join in ``_rebuilt``), and ``ch`` two more (the rule's
+    per-hash aggregate and the join probe against it). Un-materialized, each
+    consumer re-runs the tokenize→slice→hash stage over the raw corpus, the
+    most expensive expression in the plan (A/B-measured, see SCALE.md).
+
+    Why 60 bits: block identity is collision-sensitive. A collision between
+    two unrelated blocks marks one as a repeat and silently REMOVES it from
+    the rebuilt text (in ``chunk_dedup_stats`` it inflates ``n_shared``).
+    The 31-bit mod-P hash expects collisions by ~2^16 distinct blocks,
+    certain at corpus scale, and nothing here needs the mod-P reduction
+    MinHash's affine transforms require.
+    """
+    df = spread(df)
+    toks = ws_tokens(F.col(text_col))
+    d = df.select(F.col(id_col), toks.alias("__t")).withColumn(
+        "__nf", (F.size("__t") / width).cast("int")
+    )
+    t, nf = F.col("__t"), F.col("__nf")
+    chunks = F.when(
+        nf >= 1,
+        F.transform(
+            F.sequence(F.lit(0), nf - 1),
+            lambda i: F.struct(i.alias("pos"), _block(t, i, width).alias("ctext")),
+        ),
+    ).otherwise(F.array().cast("array<struct<pos:int,ctext:string>>"))
+    tail = F.array_join(
+        F.slice(t, nf * width + 1, F.greatest(F.size("__t") - nf * width, F.lit(0))),
+        " ",
+    )
+    base = d.select(
+        F.col(id_col), tail.alias("__tail"), chunks.alias("__c")
+    ).localCheckpoint(eager=True)
+    ch = (
+        base.select(F.col(id_col), F.explode("__c").alias("c"))
+        .select(
+            F.col(id_col),
+            F.col("c.pos").alias("pos"),
+            F.col("c.ctext").alias("ctext"),
+        )
+        .withColumn("chash", spark_hash_raw60(F.col("ctext")))
+        .localCheckpoint(eager=True)
+    )
+    return base, ch
+
+
+def _rebuilt(
+    base: DataFrame, flagged: DataFrame, id_col: str, keep: Column, **counts: Column
+) -> DataFrame:
+    """Reassemble each document from ``flagged`` (``ch`` plus the rule's
+    columns): the per-document ``counts`` aggregates, the blocks where
+    ``keep`` holds in position order, then the tail. Returns ``base`` left
+    joined with them — a document with no full block has NULL counts — plus
+    ``cleaned_md5``, the md5 of the rebuilt text (NULL for NULL text). The
+    md5 stands in for the text so the output stays canonicalizer-safe; a
+    write path would emit the text itself. The reassembly is a per-document
+    collect_list, bounded by document size, shuffled on the id."""
+    kept_blocks = F.collect_list(F.when(keep, F.struct(F.col("pos"), F.col("ctext"))))
+    per_doc = flagged.groupBy(id_col).agg(
+        *[agg.alias(name) for name, agg in counts.items()],
+        F.array_join(
+            F.transform(F.array_sort(kept_blocks), lambda s: s.getField("ctext")), " "
+        ).alias("__kept_text"),
+    )
+    kept, tail = F.col("__kept_text"), F.col("__tail")
+    cleaned = F.when(F.coalesce(kept, F.lit("")) == "", tail).otherwise(
+        F.when(tail == "", kept).otherwise(F.concat(kept, F.lit(" "), tail))
+    )
+    return base.join(per_doc, id_col, "left").withColumn(
+        "cleaned_md5", F.md5(cleaned)
+    )
+
+
 def chunk_dedup_stats(
     df: DataFrame, text_col: str, id_col: str, width: int = 16
 ) -> DataFrame:
@@ -540,27 +623,17 @@ def chunk_dedup_stats(
     hot boilerplate chunk to one reducer — groupBy+join is deliberate, same
     reasoning as tfidf_top_terms' document-frequency stage.
     """
-    df = _spread(df)
+    df = spread(df)
     d = df.select(F.col(id_col), ws_tokens(F.col(text_col)).alias("__t"))
     n_full = (F.size("__t") / width).cast("int")
-
-    def chunk(i: Column) -> Column:
-        # FULL-WIDTH 60-bit hash: chunk identity is collision-sensitive
-        # (a collision inflates n_shared for unrelated documents), and
-        # nothing here needs the mod-P reduction MinHash's affine
-        # transforms require — the 31-bit space expects collisions by
-        # ~2^16 distinct chunks (certain at corpus scale)
-        return spark_hash_raw60(
-            F.array_join(F.slice(F.col("__t"), i * width + 1, width), " ")
-        )
-
+    # the full-width block hash and the one checkpoint: see _blocks
     chunks = F.when(
-        n_full >= 1, F.transform(F.sequence(F.lit(0), n_full - 1), chunk)
+        n_full >= 1,
+        F.transform(
+            F.sequence(F.lit(0), n_full - 1),
+            lambda i: spark_hash_raw60(_block(F.col("__t"), i, width)),
+        ),
     ).otherwise(F.array().cast("array<bigint>"))
-    # materialize the tokenize→slice→hash→explode stream ONCE: both the df
-    # stage and the join probe consume it, and un-materialized it re-runs the
-    # most expensive stage twice (same pattern as ngram_decontaminate /
-    # bigram_fluency)
     ch = d.select(F.col(id_col), F.explode(chunks).alias("chunk_hash")).localCheckpoint(
         eager=True
     )
@@ -604,7 +677,7 @@ def ngram_topk(df: DataFrame, text_col: str, n: int = 2, k: int = 20) -> DataFra
     # TEXT column rides along as c: the ngrams variant's short-text branch
     # happens not to read c today, but its shingles sibling trims c in the
     # same position — passing the token ARRAY as c is a latent type error.
-    d = _spread(df).select(
+    d = spread(df).select(
         F.col(text_col).alias("__text"), ws_tokens(F.col(text_col)).alias("__t")
     )
     grams = spark_word_ngrams(F.col("__text"), n, toks=F.col("__t"))
@@ -634,7 +707,7 @@ def pii_redact(df: DataFrame, text_col: str) -> DataFrame:
     local part counts under both even though the chained replacement only
     redacts it once (as part of [EMAIL]). The counts are per-pattern
     exposure metrics, not a ledger of replacements made."""
-    df = _spread(df)
+    df = spread(df)
     t = F.col(text_col)
     redacted = F.regexp_replace(
         F.regexp_replace(t, EMAIL_PATTERN, "[EMAIL]"), PHONE_PATTERN, "[PHONE]"
@@ -672,57 +745,14 @@ def dedup_chunks_keep_first(
     are removed too), and rebuild the document from its surviving blocks plus
     its (always kept) tail remainder.
 
-    Returns (id, n_kept, n_removed, cleaned_md5) — the md5 stands in for the
-    rebuilt text so the output stays canonicalizer-safe; a write path would
-    emit the text itself.
+    Returns (id, n_kept, n_removed, cleaned_md5); the split, the block hash
+    and the rebuild are ``_blocks``/``_rebuilt``.
 
     Scale shape: same as ``chunk_dedup_stats`` — the 60-bit block hash is the
     one shuffle key (uniform; mass-duplicated boilerplate collapses in the
-    map-side partial min) — plus a per-document collect_list for reassembly,
-    bounded by document size, shuffled on the id.
+    map-side partial min) — plus the id-keyed reassembly.
     """
-    df = _spread(df)
-    toks = ws_tokens(F.col(text_col))
-    d = df.select(F.col(id_col), toks.alias("__t")).withColumn(
-        "__nf", (F.size("__t") / width).cast("int")
-    )
-
-    def block(i: Column) -> Column:
-        return F.array_join(F.slice(F.col("__t"), i * width + 1, width), " ")
-
-    chunks = F.when(
-        F.col("__nf") >= 1,
-        F.transform(
-            F.sequence(F.lit(0), F.col("__nf") - 1),
-            lambda i: F.struct(i.alias("pos"), block(i).alias("ctext")),
-        ),
-    ).otherwise(F.array().cast("array<struct<pos:int,ctext:string>>"))
-    tail = F.array_join(
-        F.slice(F.col("__t"), F.col("__nf") * width + 1, F.greatest(F.size("__t") - F.col("__nf") * width, F.lit(0))),
-        " ",
-    )
-    # base materialized: two consumers (the chunk explode below and the
-    # final reassembly join) otherwise EACH re-run the tokenize→slice over
-    # the raw corpus — the most expensive expression in the plan
-    # (A/B-measured, see SCALE.md)
-    base = d.select(
-        F.col(id_col), tail.alias("__tail"), chunks.alias("__c")
-    ).localCheckpoint(eager=True)
-
-    ch = base.select(F.col(id_col), F.explode("__c").alias("c")).select(
-        F.col(id_col),
-        F.col("c.pos").alias("pos"),
-        F.col("c.ctext").alias("ctext"),
-        # FULL-WIDTH 60-bit chunk identity (see chunk_dedup_stats): a 31-bit
-        # collision here doesn't just skew a statistic — it marks another
-        # document's unrelated block __keep=false and silently REMOVES it
-        # from the rebuilt text
-    ).withColumn("chash", spark_hash_raw60(F.col("ctext")))
-    # materialize the tokenize→slice→hash→explode stream ONCE (same
-    # two-consumer shape chunk_dedup_stats materializes for): the
-    # first-occurrence groupBy AND the flagged join probe both consume ch;
-    # un-materialized, the most expensive stage runs twice per call
-    ch = ch.localCheckpoint(eager=True)
+    base, ch = _blocks(df, text_col, id_col, width)
     first = ch.groupBy("chash").agg(
         F.min(F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p"))).alias("__f")
     )
@@ -730,34 +760,19 @@ def dedup_chunks_keep_first(
         "__keep",
         (F.col(id_col) == F.col("__f.d")) & (F.col("pos") == F.col("__f.p")),
     )
-    per_doc = flagged.groupBy(id_col).agg(
-        F.sum(F.when(F.col("__keep"), 1).otherwise(0)).alias("n_kept"),
-        F.sum(F.when(F.col("__keep"), 0).otherwise(1)).alias("n_removed"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(F.col("__keep"), F.struct(F.col("pos"), F.col("ctext")))
-                    )
-                ),
-                lambda s: s.getField("ctext"),
-            ),
-            " ",
-        ).alias("__kept_text"),
-    )
-    joined = base.join(per_doc, id_col, "left")
-    cleaned = F.when(
-        F.coalesce(F.col("__kept_text"), F.lit("")) == "", F.col("__tail")
-    ).otherwise(
-        F.when(F.col("__tail") == "", F.col("__kept_text")).otherwise(
-            F.concat(F.col("__kept_text"), F.lit(" "), F.col("__tail"))
-        )
-    )
-    return joined.select(
+    keep = F.col("__keep")
+    return _rebuilt(
+        base,
+        flagged,
+        id_col,
+        keep,
+        n_kept=F.sum(F.when(keep, 1).otherwise(0)),
+        n_removed=F.sum(F.when(keep, 0).otherwise(1)),
+    ).select(
         F.col(id_col),
         F.coalesce(F.col("n_kept"), F.lit(0)).cast("bigint").alias("n_kept"),
         F.coalesce(F.col("n_removed"), F.lit(0)).cast("bigint").alias("n_removed"),
-        F.md5(cleaned).alias("cleaned_md5"),
+        F.col("cleaned_md5"),
     )
 
 
@@ -774,88 +789,30 @@ def boilerplate_chunks(
 
     Returns (id, n_chunks, n_boiler, boiler_fraction, cleaned_md5) — counts
     per document, the removed-mass fraction (the per-doc filter signal), and
-    the md5 of the rebuilt text (surviving blocks in order plus the always-
-    kept tail remainder, the keep-first sibling's convention).
+    the md5 of the rebuilt text (``_rebuilt``: surviving blocks in order plus
+    the always-kept tail remainder).
 
     Scale shape: one chunk-hash-keyed shuffle for the document-frequency
     count (countDistinct's two-phase partial aggregation — mass-duplicated
     boilerplate collapses map-side), one equi-join of the exploded chunks
     against the per-hash frequencies, one id-keyed reassembly aggregation.
-    All linear; the 60-bit block hash is the full-width identity
-    (``dedup_chunks_keep_first``'s collision argument: a 31-bit collision
-    would delete another document's unrelated block).
+    All linear.
     """
-    df = _spread(df)
-    toks = ws_tokens(F.col(text_col))
-    d = df.select(F.col(id_col), toks.alias("__t")).withColumn(
-        "__nf", (F.size("__t") / width).cast("int")
-    )
-
-    def block(i: Column) -> Column:
-        return F.array_join(F.slice(F.col("__t"), i * width + 1, width), " ")
-
-    chunks = F.when(
-        F.col("__nf") >= 1,
-        F.transform(
-            F.sequence(F.lit(0), F.col("__nf") - 1),
-            lambda i: F.struct(i.alias("pos"), block(i).alias("ctext")),
-        ),
-    ).otherwise(F.array().cast("array<struct<pos:int,ctext:string>>"))
-    tail = F.array_join(
-        F.slice(
-            F.col("__t"),
-            F.col("__nf") * width + 1,
-            F.greatest(F.size("__t") - F.col("__nf") * width, F.lit(0)),
-        ),
-        " ",
-    )
-    # materialized once for the same two consumers as the keep-first sibling
-    # (chunk explode + reassembly join re-run tokenize→slice otherwise)
-    base = d.select(
-        F.col(id_col), tail.alias("__tail"), chunks.alias("__c")
-    ).localCheckpoint(eager=True)
-
-    ch = (
-        base.select(F.col(id_col), F.explode("__c").alias("c"))
-        .select(
-            F.col(id_col),
-            F.col("c.pos").alias("pos"),
-            F.col("c.ctext").alias("ctext"),
-        )
-        .withColumn("chash", spark_hash_raw60(F.col("ctext")))
-        .localCheckpoint(eager=True)
-    )
+    base, ch = _blocks(df, text_col, id_col, width)
     docfreq = ch.groupBy("chash").agg(
         F.countDistinct(F.col(id_col)).alias("__df")
     )
     flagged = ch.join(docfreq, "chash").withColumn(
         "__boiler", F.col("__df") >= int(min_docs)
     )
-    per_doc = flagged.groupBy(id_col).agg(
-        F.count("*").alias("n_chunks"),
-        F.sum(F.when(F.col("__boiler"), 1).otherwise(0)).alias("n_boiler"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~F.col("__boiler"),
-                            F.struct(F.col("pos"), F.col("ctext")),
-                        )
-                    )
-                ),
-                lambda s: s.getField("ctext"),
-            ),
-            " ",
-        ).alias("__kept_text"),
-    )
-    joined = base.join(per_doc, id_col, "left")
-    cleaned = F.when(
-        F.coalesce(F.col("__kept_text"), F.lit("")) == "", F.col("__tail")
-    ).otherwise(
-        F.when(F.col("__tail") == "", F.col("__kept_text")).otherwise(
-            F.concat(F.col("__kept_text"), F.lit(" "), F.col("__tail"))
-        )
+    boiler = F.col("__boiler")
+    joined = _rebuilt(
+        base,
+        flagged,
+        id_col,
+        ~boiler,
+        n_chunks=F.count("*"),
+        n_boiler=F.sum(F.when(boiler, 1).otherwise(0)),
     )
     n_chunks = F.coalesce(F.col("n_chunks"), F.lit(0)).cast("bigint")
     n_boiler = F.coalesce(F.col("n_boiler"), F.lit(0)).cast("bigint")
@@ -866,7 +823,37 @@ def boilerplate_chunks(
         F.when(
             n_chunks > 0, n_boiler.cast("double") / n_chunks.cast("double")
         ).alias("boiler_fraction"),
-        F.md5(cleaned).alias("cleaned_md5"),
+        F.col("cleaned_md5"),
+    )
+
+
+def chunk_windows(
+    df: DataFrame, text_col: str, id_col: str, width: int, stride: int
+) -> DataFrame:
+    """RAG / long-context chunker: each document exploded into overlapping
+    ``width``-token windows every ``stride`` tokens (the last window is the
+    first one covering the tail). Pure map-side explode — no shuffle at any
+    scale; emitted text is fingerprinted (md5) so the oracle compare stays
+    compact. Chunk offsets (start_tok/end_tok) are 1-based token positions,
+    the metadata a retriever needs to cite spans."""
+    n_chunks = F.greatest(
+        F.ceil((F.size(F.col("__w")) - F.lit(width)) / F.lit(float(stride))),
+        F.lit(0),
+    ).cast("int")
+    d = df.select(F.col(id_col), ws_tokens(F.col(text_col)).alias("__w")).select(
+        F.col(id_col),
+        F.size(F.col("__w")).alias("__n"),
+        F.col("__w"),
+        F.explode(F.sequence(F.lit(0), n_chunks)).alias("chunk_index"),
+    )
+    start = F.col("chunk_index") * stride + 1
+    chunk_text = F.array_join(F.slice(F.col("__w"), start, width), " ")
+    return d.select(
+        F.col(id_col),
+        F.col("chunk_index").cast("int").alias("chunk_index"),
+        start.cast("int").alias("start_tok"),
+        F.least(start + width - 1, F.col("__n")).cast("int").alias("end_tok"),
+        F.md5(chunk_text).alias("chunk_md5"),
     )
 
 
@@ -972,7 +959,7 @@ def quality_classifier_score(df: DataFrame, text_col: str, id_col: str) -> DataF
         F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint") % CLF_DIM
     ) * CLF_MULT % CLF_MOD - CLF_OFF
     d = (
-        _spread(df)
+        spread(df)
         .withColumn("__toks", ws_tokens(F.col(text_col)))
         .withColumn(
             "__score",
@@ -1041,7 +1028,7 @@ def bm25_topk(
     # trades one token-array materialization for two repeated full-corpus
     # tokenize passes (A/B-measured win, see SCALE.md)
     base = (
-        _spread(df)
+        spread(df)
         .withColumn("__toks", ws_tokens(F.col(text_col)))
         .select(
             F.col(id_col),
@@ -1127,7 +1114,7 @@ def bigram_fluency(
     skew-safe, no single hot key) and reduces per doc. Documents with < 2
     tokens have no bigrams and report (0, 0.0, 0.0).
     """
-    grams = _spread(df).select(
+    grams = spread(df).select(
         F.col(id_col),
         F.explode(spark_word_ngrams(F.col(text_col), 2)).alias("bg"),
     )
@@ -1224,7 +1211,7 @@ def importance_reweight(
     bucket = lambda t: (  # noqa: E731 — mirrors the SQL oracle 1:1
         F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("bigint") % IR_DIM
     )
-    base = _spread(df).select(
+    base = spread(df).select(
         F.col(id_col),
         F.col(text_col).alias("__txt"),
         F.coalesce(F.col(target_col).cast("int"), F.lit(0)).alias("is_target"),
@@ -1305,10 +1292,10 @@ def gopher_quality_flags(df: DataFrame, text_col: str, id_col: str) -> DataFrame
 
     100 TB shape: pure map stage — one pass over the text with no shuffle,
     joins or UDFs; every expression is whole-stage-codegen'd. The
-    deliberate `_spread` repartition is the module's small-file pattern.
+    deliberate `spread` repartition is the module's small-file pattern.
     """
     t = F.col(text_col)
-    df = _spread(df).withColumn(
+    df = spread(df).withColumn(
         "__w", F.filter(ws_tokens(t), lambda x: x != F.lit(""))
     )
     words = F.col("__w")

@@ -1198,11 +1198,18 @@ def sample_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CHUNK_W = 16
 
+
+def _sql_block(w: str, i: str, width: int) -> str:
+    """Block ``i`` (0-based) of token list ``w``: the split rule of
+    operators/text._block."""
+    return f"array_to_string({w}[{i}*{width}+1:{i}*{width}+{width}], ' ')"
+
+
 _CHUNK_ORACLE = f"""
 WITH t AS (SELECT doc_id, string_split_regex(trim(text, ' '), '\\s+') AS w FROM documents),
 c AS (
   SELECT doc_id,
-         unnest([{sql_hash_raw60(f"array_to_string(w[i*{_CHUNK_W}+1:i*{_CHUNK_W}+{_CHUNK_W}], ' ')")}
+         unnest([{sql_hash_raw60(_sql_block("w", "i", _CHUNK_W))}
                  for i in range(len(w) // {_CHUNK_W})]) AS chunk_hash
   FROM t
 ),
@@ -1564,47 +1571,61 @@ def llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # C4-style sub-document dedup with rewrite (keep first global occurrence)
 # ----------------------------------------------------------------------------
 
-_C4_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, w, len(w) // {_CHUNK_W} AS nf
+def _sql_blocks(width: int) -> str:
+    """The t/base/c/h CTEs of the block-chunk rewrites at ``width``
+    (operators/text._blocks): ``base`` = (doc_id, nf, tail), ``h`` = (doc_id,
+    pos, ctext, chash). NULL text keeps a NULL tail, so its rebuilt text and
+    ``cleaned_md5`` are NULL too (Spark's NULL ``__tail``)."""
+    return f"""t AS (
+  SELECT doc_id, w, len(w) // {width} AS nf
   FROM (SELECT doc_id, string_split_regex(trim(text, ' '), '\\s+') AS w FROM documents)
 ),
 base AS (
-  -- NULL text stays NULL end to end (module convention: no content, no
-  -- rebuilt text): the unconditional COALESCE('') rebuilt a NULL doc as
-  -- the EMPTY STRING and hashed it md5('') where Spark hashes NULL
   SELECT doc_id, nf,
          CASE WHEN w IS NULL THEN NULL
-              ELSE COALESCE(array_to_string(w[nf*{_CHUNK_W}+1:len(w)], ' '), '') END AS tail
+              ELSE COALESCE(array_to_string(w[nf*{width}+1:len(w)], ' '), '') END AS tail
   FROM t
 ),
 c AS (
-  SELECT doc_id, u.i AS pos,
-         array_to_string(w[u.i*{_CHUNK_W}+1:u.i*{_CHUNK_W}+{_CHUNK_W}], ' ') AS ctext
+  SELECT doc_id, u.i AS pos, {_sql_block("w", "u.i", width)} AS ctext
   FROM t, LATERAL unnest(range(nf)) AS u(i)
 ),
-h AS (SELECT doc_id, pos, ctext, {sql_hash_raw60('ctext')} AS chash FROM c),
+h AS (SELECT doc_id, pos, ctext, {sql_hash_raw60('ctext')} AS chash FROM c)"""
+
+
+def _sql_kept_text(keep: str) -> str:
+    """The blocks of ``h`` where ``keep`` holds, in position order."""
+    return (
+        f"COALESCE(string_agg(CASE WHEN {keep} THEN h.ctext END, ' ' ORDER BY h.pos), '')"
+        " AS kept_text"
+    )
+
+
+# the rebuilt text (kept blocks, then the tail) of base b and per-doc k
+_SQL_CLEANED_MD5 = """md5(CASE WHEN COALESCE(k.kept_text, '') = '' THEN b.tail
+                WHEN b.tail = '' THEN k.kept_text
+                ELSE k.kept_text || ' ' || b.tail END) AS cleaned_md5"""
+
+_C4_KEEP = "h.doc_id = fp.d AND h.pos = fp.p"
+
+_C4_ORACLE = f"""
+WITH {_sql_blocks(_CHUNK_W)},
 fd AS (SELECT chash, MIN(doc_id) AS d FROM h GROUP BY 1),
 fp AS (SELECT h.chash, fd.d, MIN(h.pos) AS p
        FROM h JOIN fd ON h.chash = fd.chash AND h.doc_id = fd.d
        GROUP BY h.chash, fd.d),
 k AS (
   SELECT h.doc_id,
-         CAST(SUM(CASE WHEN h.doc_id = fp.d AND h.pos = fp.p THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         CAST(SUM(CASE WHEN h.doc_id = fp.d AND h.pos = fp.p THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
-         COALESCE(string_agg(CASE WHEN h.doc_id = fp.d AND h.pos = fp.p THEN h.ctext END,
-                             ' ' ORDER BY h.pos), '') AS kept_text
+         CAST(SUM(CASE WHEN {_C4_KEEP} THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+         CAST(SUM(CASE WHEN {_C4_KEEP} THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
+         {_sql_kept_text(_C4_KEEP)}
   FROM h JOIN fp ON h.chash = fp.chash
   GROUP BY h.doc_id
 )
 SELECT b.doc_id,
        COALESCE(k.n_kept, 0) AS n_kept,
        COALESCE(k.n_removed, 0) AS n_removed,
-       md5(CASE WHEN COALESCE(k.kept_text, '') = '' THEN b.tail
-                WHEN b.tail = '' THEN k.kept_text
-                ELSE k.kept_text || ' ' || b.tail END) AS cleaned_md5
-       -- (b.tail NULL for NULL text -> first arm -> md5(NULL) = NULL,
-       --  matching Spark's NULL __tail)
+       {_SQL_CLEANED_MD5}
 FROM base b LEFT JOIN k USING (doc_id)
 """
 
@@ -1624,29 +1645,13 @@ def text_dedup_chunks_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BP_W, _BP_MIN = 8, 2
 
 _BP_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, w, len(w) // {_BP_W} AS nf
-  FROM (SELECT doc_id, string_split_regex(trim(text, ' '), '\\s+') AS w FROM documents)
-),
-base AS (
-  SELECT doc_id, nf,
-         CASE WHEN w IS NULL THEN NULL
-              ELSE COALESCE(array_to_string(w[nf*{_BP_W}+1:len(w)], ' '), '') END AS tail
-  FROM t
-),
-c AS (
-  SELECT doc_id, u.i AS pos,
-         array_to_string(w[u.i*{_BP_W}+1:u.i*{_BP_W}+{_BP_W}], ' ') AS ctext
-  FROM t, LATERAL unnest(range(nf)) AS u(i)
-),
-h AS (SELECT doc_id, pos, ctext, {sql_hash_raw60('ctext')} AS chash FROM c),
+WITH {_sql_blocks(_BP_W)},
 fq AS (SELECT chash, COUNT(DISTINCT doc_id) AS df FROM h GROUP BY 1),
 k AS (
   SELECT h.doc_id,
          CAST(COUNT(*) AS BIGINT) AS n_chunks,
          CAST(SUM(CASE WHEN fq.df >= {_BP_MIN} THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-         COALESCE(string_agg(CASE WHEN fq.df < {_BP_MIN} THEN h.ctext END,
-                             ' ' ORDER BY h.pos), '') AS kept_text
+         {_sql_kept_text(f"fq.df < {_BP_MIN}")}
   FROM h JOIN fq USING (chash)
   GROUP BY h.doc_id
 )
@@ -1656,9 +1661,7 @@ SELECT b.doc_id,
        CASE WHEN COALESCE(k.n_chunks, 0) > 0
             THEN CAST(k.n_boiler AS DOUBLE) / CAST(k.n_chunks AS DOUBLE)
        END AS boiler_fraction,
-       md5(CASE WHEN COALESCE(k.kept_text, '') = '' THEN b.tail
-                WHEN b.tail = '' THEN k.kept_text
-                ELSE k.kept_text || ' ' || b.tail END) AS cleaned_md5
+       {_SQL_CLEANED_MD5}
 FROM base b LEFT JOIN k USING (doc_id)
 """
 
@@ -2170,31 +2173,10 @@ FROM c
 @query("text_chunk_windows", _CHUNK_WINDOWS_ORACLE)
 def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG / long-context chunker: each document exploded into overlapping
-    64-token windows at stride 32 (``_CW_WIDTH``/``_CW_STRIDE``; the last
-    window is the first one covering the tail). Pure map-side explode — no
-    shuffle at any scale; emitted text is fingerprinted (md5) so the oracle
-    compare stays compact. Chunk offsets (start_tok/end_tok) are 1-based
-    token positions, the metadata a retriever needs to cite spans."""
+    64-token windows at stride 32 (``_CW_WIDTH``/``_CW_STRIDE``); see
+    operators/text.chunk_windows."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n_chunks = F.greatest(
-        F.ceil((F.size(F.col("__w")) - F.lit(_CW_WIDTH)) / F.lit(float(_CW_STRIDE))),
-        F.lit(0),
-    ).cast("int")
-    d = docs.select("doc_id", T.ws_tokens(F.col("text")).alias("__w")).select(
-        "doc_id",
-        F.size(F.col("__w")).alias("__n"),
-        F.col("__w"),
-        F.explode(F.sequence(F.lit(0), n_chunks)).alias("chunk_index"),
-    )
-    start = F.col("chunk_index") * _CW_STRIDE + 1
-    chunk_text = F.array_join(F.slice(F.col("__w"), start, _CW_WIDTH), " ")
-    return d.select(
-        "doc_id",
-        F.col("chunk_index").cast("int").alias("chunk_index"),
-        start.cast("int").alias("start_tok"),
-        F.least(start + _CW_WIDTH - 1, F.col("__n")).cast("int").alias("end_tok"),
-        F.md5(chunk_text).alias("chunk_md5"),
-    )
+    return T.chunk_windows(docs, "text", "doc_id", _CW_WIDTH, _CW_STRIDE)
 
 
 # ----------------------------------------------------------------------------

@@ -64,3 +64,26 @@ def py4j_commands(monkeypatch):
         return len(sent)
 
     return count
+
+
+@pytest.fixture()
+def jobs_run(spark):
+    """Call ``jobs_run(fn)`` to run ``fn`` and return (its result, the number
+    of Spark jobs it launched), counted in a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-run-{uuid.uuid4().hex}"
+        try:
+            sc.setJobGroup(group, group)
+            out = fn()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+    return run

@@ -198,24 +198,6 @@ def test_assign_contiguous_ids_multipartition(spark):
     assert ids == list(range(100, 1100))
 
 
-def _jobs_run(spark, fn):
-    """(fn's result, number of Spark jobs fn launched) — counted in a job
-    group of its own."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"pqdb-jobs-{uuid.uuid4().hex}"
-    try:
-        sc.setJobGroup(group, group)
-        out = fn()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc.setLocalProperty("spark.job.interruptOnCancel", None)
-
-
 # (partitions, predicate): empty partitions at the front, in the middle and
 # in runs; spark.range splits are deterministic, so the frame can be
 # evaluated again by the reference below
@@ -295,39 +277,39 @@ def test_create_write_plan_has_no_window_or_broadcast_join(spark, db, monkeypatc
     assert ops.count("Exchange") == 1
 
 
-def test_appending_create_job_budget(spark, db):
+def test_appending_create_job_budget(db, jobs_run):
     """An appending create runs the per-partition count and the write —
     at most 6 jobs; the next id and the row count come from footers
     without a job."""
     db.create([{"x": i} for i in range(20)])
-    n, jobs = _jobs_run(spark, lambda: db.create([{"x": i} for i in range(20, 30)]))
+    n, jobs = jobs_run(lambda: db.create([{"x": i} for i in range(20, 30)]))
     assert n == 10 and jobs <= 6
-    rows, jobs = _jobs_run(spark, lambda: db.n_rows)
+    rows, jobs = jobs_run(lambda: db.n_rows)
     assert rows == 30 and jobs == 0
 
 
-def test_opens_run_no_job(spark, sf_dir, db):
+def test_opens_run_no_job(spark, sf_dir, db, jobs_run):
     """A table open and a PqDB open read the schema from the footers on
     the driver: load_table, read() construction, get_schema and n_columns
     launch no Spark job."""
     from crystal_parquet_database_spark.tables import load_table
 
     for name in ("orders", "events"):
-        _, jobs = _jobs_run(spark, lambda: load_table(spark, sf_dir, name))
+        _, jobs = jobs_run(lambda: load_table(spark, sf_dir, name))
         assert jobs == 0, name
     db.create([{"x": i, "s": Row(a=i)} for i in range(5)])
     db.create([{"x": 5, "s": Row(a=5, b="new"), "y": 1.5}])
     for fn in (db.read, db.get_schema, lambda: db.n_columns):
-        _, jobs = _jobs_run(spark, fn)
+        _, jobs = jobs_run(fn)
         assert jobs == 0
     assert db.n_columns == 4
 
 
-def test_appending_create_runs_at_most_five_jobs(spark, db):
+def test_appending_create_runs_at_most_five_jobs(db, jobs_run):
     """With the open job-free, an appending create is the per-partition
     count and the write."""
     db.create([{"x": i} for i in range(20)])
-    n, jobs = _jobs_run(spark, lambda: db.create([{"x": i} for i in range(20, 30)]))
+    n, jobs = jobs_run(lambda: db.create([{"x": i} for i in range(20, 30)]))
     assert n == 10 and jobs <= 5
 
 
@@ -400,7 +382,7 @@ def test_empty_first_create_makes_the_dataset(spark, tmp_path, partition_by):
     assert [(r["id"], r["k"]) for r in db.read().collect()] == [(0, 1)]
 
 
-def test_scd2_merge_job_budget(spark, tmp_path):
+def test_scd2_merge_job_budget(spark, tmp_path, jobs_run):
     """One SCD2 merge runs at most 15 jobs: the open is job-free and the
     insert count comes from the id pass, not from a count() of the fresh
     keys (17 jobs when both ran)."""
@@ -410,14 +392,14 @@ def test_scd2_merge_job_budget(spark, tmp_path):
         "2024-01-01 00:00:00",
     )
     ups = [{"sku": "a", "p": 10}, {"sku": "b", "p": 2}, {"sku": "d", "p": 4}]
-    stats, jobs = _jobs_run(
-        spark, lambda: db.upsert_scd2(ups, on="sku", effective_ts="2024-02-01 00:00:00")
+    stats, jobs = jobs_run(
+        lambda: db.upsert_scd2(ups, on="sku", effective_ts="2024-02-01 00:00:00")
     )
     assert stats == {"closed": 1, "inserted": 2, "unchanged": 2}
     assert jobs <= 15
 
 
-def test_next_id_start_from_footers(spark, tmp_path):
+def test_next_id_start_from_footers(spark, tmp_path, jobs_run):
     """_next_id_start is max(id) + 1: from footer statistics with no job,
     through the max(id) aggregate for a file written without statistics,
     and 0 on the empty-rewrite marker."""
@@ -429,7 +411,7 @@ def test_next_id_start_from_footers(spark, tmp_path):
     db.create([{"x": i} for i in range(5)])
     db.delete(ids=[11])
     top = db.read().agg(F.max("id")).collect()[0][0]
-    start, jobs = _jobs_run(spark, lambda: db._next_id_start(db._data_files()))
+    start, jobs = jobs_run(lambda: db._next_id_start(db._data_files()))
     assert (start, jobs) == (top + 1, 0) == (11, 0)
 
     plain = tmp_path / "nostats"

@@ -1,6 +1,7 @@
 """UDF-surface equivalence: the pandas_udf quality scorer must agree with the
 pure-expression version (same formula, different execution path)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from crystal_parquet_database_spark.operators.text import (
@@ -152,11 +153,11 @@ def test_hll_sketch_estimates_close_to_exact(spark, sf_dir):
 
 
 def test_hll_sketch_estimates_golden(spark):
-    """Pin the EXACT estimate values (round-9 verdict ask #6): the 5%-bound
-    companion would pass a silent lgK/config regression forever, but for a
-    fixed input and lgK=14 DataSketches HLL is deterministic — so the
-    estimates themselves are a golden. If this fails with values still
-    within 5% of exact, the sketch config changed, not the data."""
+    """Pin the EXACT estimate values: the 5%-bound companion would pass a
+    silent lgK/config regression forever, but for a fixed input and lgK=14
+    DataSketches HLL is deterministic — so the estimates themselves are a
+    golden. If this fails with values still within 5% of exact, the sketch
+    config changed, not the data."""
     from crystal_parquet_database_spark.surface import QUERIES
 
     got = {
@@ -469,10 +470,10 @@ def test_bpe_pattern_vertical_tab_cross_engine(spark):
 
 
 def test_null_text_counts_are_null_not_minus_one(spark):
-    """Regression (round-7 final sweep): size(split(NULL)) is -1 in Spark
-    while LEN(NULL) is NULL in ANSI SQL — NULL text must yield NULL counts
-    and ratios, not -1 / -1.0 (the documented size(NULL) trap, previously
-    guarded only in repetition_features)."""
+    """Regression: size(split(NULL)) is -1 in Spark while LEN(NULL) is NULL in
+    ANSI SQL — NULL text must yield NULL counts and ratios, not -1 / -1.0 (the
+    documented size(NULL) trap, previously guarded only in
+    repetition_features)."""
     from crystal_parquet_database_spark.operators.text import (
         quality_features,
         token_counts,
@@ -498,12 +499,12 @@ def test_null_text_counts_are_null_not_minus_one(spark):
 
 
 def test_language_id_null_text_has_null_scores_and_pred(spark):
-    """Regression (round-7 review): language_id was the one text operator
-    with no NULL-text guard — unguarded size(filter(split(NULL))) is -1 or
-    NULL depending on the session's legacy/ANSI combo, and the oracle's
-    CASE fell through to the ELSE language while Spark's when-chain fell
-    through to NULL. NULL text has no language: all scores and lang_pred
-    must be NULL, and real docs must be unaffected."""
+    """Regression: language_id was the one text operator with no NULL-text
+    guard — unguarded size(filter(split(NULL))) is -1 or NULL depending on the
+    session's legacy/ANSI combo, and the oracle's CASE fell through to the
+    ELSE language while Spark's when-chain fell through to NULL. NULL text has
+    no language: all scores and lang_pred must be NULL, and real docs must be
+    unaffected."""
     from crystal_parquet_database_spark.operators.text import LANG_ORDER, language_id
 
     docs = spark.createDataFrame(
@@ -517,10 +518,10 @@ def test_language_id_null_text_has_null_scores_and_pred(spark):
 
 
 def test_chunk_hashes_are_full_width(spark):
-    """Regression (round-7 review): chunk identity used the 31-bit mod-P
-    hash while the docstrings claimed 60-bit — collisions expected by ~2^16
-    distinct chunks silently corrupt keep-first rewrites. The chunk hash
-    must now span the full 60-bit range (values above 2^31 appear)."""
+    """Regression: chunk identity used the 31-bit mod-P hash while the
+    docstrings claimed 60-bit — collisions expected by ~2^16 distinct chunks
+    silently corrupt keep-first rewrites. The chunk hash must now span the
+    full 60-bit range (values above 2^31 appear)."""
     from crystal_parquet_database_spark.operators.text import chunk_dedup_stats
 
     docs = spark.createDataFrame(
@@ -544,11 +545,11 @@ def test_chunk_hashes_are_full_width(spark):
 
 
 def test_sessionize_null_ts_gets_null_seq_and_shifts_nothing(spark):
-    """Regression (round-7 review): Spark windows order NULLS FIRST, so a
-    NULL-ts event sat at the HEAD of its user's window (becoming session 1
-    and shifting every real row), while DuckDB's mirror ordered it LAST and
-    extended the final session. Both sides now sort NULL-ts rows last, give
-    them a NULL session number, and open no session for them."""
+    """Regression: Spark windows order NULLS FIRST, so a NULL-ts event sat at
+    the HEAD of its user's window (becoming session 1 and shifting every real
+    row), while DuckDB's mirror ordered it LAST and extended the final
+    session. Both sides now sort NULL-ts rows last, give them a NULL session
+    number, and open no session for them."""
     import datetime as dt
 
     from crystal_parquet_database_spark.operators.sessionize import with_session_seq
@@ -746,6 +747,109 @@ def test_boilerplate_chunks_all_identical_corpus(spark):
         assert r["n_chunks"] == 2 and r["n_boiler"] == 2
         assert r["boiler_fraction"] == 1.0
         assert r["cleaned_md5"] == md5  # tail "e" survives
+
+
+def _py_rewrites(rows, width, min_docs):
+    """Pure-Python block-chunk rewrites: tokens are the whitespace split of
+    the space-trimmed text, blocks the full ``width``-token runs, the tail
+    the rest; the rebuilt text is the kept blocks, then the tail. Returns
+    {id: ((n_kept, n_removed, md5), (n_chunks, n_boiler, fraction, md5))}."""
+    import hashlib
+    import re
+
+    from crystal_parquet_database_spark.functions.portable_hash import WS_RE
+
+    split = {}
+    for i, text in rows:
+        if text is None:
+            split[i] = None
+            continue
+        toks = re.split(WS_RE, text.strip(" "))
+        nf = len(toks) // width
+        blocks = [" ".join(toks[j * width:(j + 1) * width]) for j in range(nf)]
+        split[i] = (blocks, " ".join(toks[nf * width:]))
+    docs_with = {}
+    for i, parts in split.items():
+        for b in parts[0] if parts else []:
+            docs_with.setdefault(b, set()).add(i)
+
+    def md5(blocks, tail):
+        kept = " ".join(blocks)
+        return hashlib.md5(" ".join(x for x in (kept, tail) if x).encode()).hexdigest()
+
+    seen, out = set(), {}
+    for i in sorted(split):
+        if split[i] is None:
+            out[i] = ((0, 0, None), (0, 0, None, None))
+            continue
+        blocks, tail = split[i]
+        first = []
+        for b in blocks:
+            if b not in seen:
+                seen.add(b)
+                first.append(b)
+        common = [b for b in blocks if len(docs_with[b]) < min_docs]
+        n, n_boiler = len(blocks), len(blocks) - len(common)
+        out[i] = (
+            (len(first), n - len(first), md5(first, tail)),
+            (n, n_boiler, n_boiler / n if n else None, md5(common, tail)),
+        )
+    return out
+
+
+@pytest.mark.parametrize("width", [1, 2, 3])
+def test_block_chunk_rewrites_match_python_reference(spark, width):
+    """Both rewrite operators share the block split, the tail and the
+    rebuild (text._blocks/_rebuilt): on the edge cases of each they agree
+    with a pure-Python reference, and keep-first's kept + removed blocks
+    are boilerplate's block count."""
+    from crystal_parquet_database_spark.operators.text import (
+        boilerplate_chunks,
+        dedup_chunks_keep_first,
+    )
+
+    rows = [
+        (1, None),               # NULL text: zero counts, NULL md5
+        (2, ""),                 # one empty token
+        (3, "   "),              # whitespace-only: trims to ""
+        (4, "a"),                # shorter than width: tail only
+        (5, "a b c d e f"),      # a multiple of widths 1, 2 and 3: empty tail
+        (6, "  a b x  "),        # leading/trailing spaces are trimmed
+        (7, "c d a b"),          # blocks shared with docs 5 and 6
+        (8, "\ta b"),            # a tab is not trimmed: an empty first token
+        (9, "e f e f"),          # a block repeated within one document
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _py_rewrites(rows, width, min_docs=2)
+    kf = {r["doc_id"]: r for r in dedup_chunks_keep_first(df, "text", "doc_id", width).collect()}
+    bp = {
+        r["doc_id"]: r
+        for r in boilerplate_chunks(df, "text", "doc_id", width, min_docs=2).collect()
+    }
+    for i, (want_kf, want_bp) in want.items():
+        k, b = kf[i], bp[i]
+        assert (k["n_kept"], k["n_removed"], k["cleaned_md5"]) == want_kf, i
+        got_bp = (b["n_chunks"], b["n_boiler"], b["boiler_fraction"], b["cleaned_md5"])
+        assert got_bp == want_bp, i
+        assert k["n_kept"] + k["n_removed"] == b["n_chunks"], i
+
+
+@pytest.mark.parametrize(
+    "name, jobs",
+    [
+        ("text_chunk_dedup_ratio", 2),
+        ("text_dedup_chunks_keep_first", 3),
+        ("text_boilerplate_chunks", 3),
+    ],
+)
+def test_block_chunk_construction_jobs(spark, sf_dir, jobs_run, name, jobs):
+    """Constructing a block-chunk query runs its eager checkpoints and
+    nothing more: one in chunk_dedup_stats, base and ch in the rewrites. A
+    shared stage that adds a checkpoint or a job fails this count."""
+    from crystal_parquet_database_spark.surface import QUERIES
+
+    _, got = jobs_run(lambda: QUERIES[name](spark, sf_dir))
+    assert got == jobs
 
 
 def test_temperature_mixture_single_group_gets_everything(spark):
