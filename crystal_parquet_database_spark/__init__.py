@@ -18,17 +18,26 @@ Parquet delegating storage/query to parquetdb), rebuilt Spark-first:
                          ``__spark_entry__.py`` and ``bench.py``.
 """
 
-from crystal_parquet_database_spark.db import PqDB
-from crystal_parquet_database_spark.schema import crystal_schema, to_canonical
-from crystal_parquet_database_spark.session import get_spark
-from crystal_parquet_database_spark.tables import TABLE_NAMES, load_table, register_views
+import importlib
 
-__all__ = [
-    "PqDB",
-    "crystal_schema",
-    "to_canonical",
-    "get_spark",
-    "TABLE_NAMES",
-    "load_table",
-    "register_views",
-]
+# The exports load on first use (PEP 562): importing the package imports no
+# pyspark, so the worker daemon (``pydaemon``) can fix ``sys.path`` first.
+_EXPORTS = {
+    "PqDB": "db",
+    "crystal_schema": "schema",
+    "to_canonical": "schema",
+    "get_spark": "session",
+    "TABLE_NAMES": "tables",
+    "load_table": "tables",
+    "register_views": "tables",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    globals()[name] = value
+    return value

@@ -20,6 +20,7 @@ operators/spread.spread does for the text operators).
 from __future__ import annotations
 
 import hashlib
+import sys
 from collections.abc import Iterator
 
 import numpy as np
@@ -194,6 +195,7 @@ def _decode_meta(data: bytes, use_pil: bool = DRIVER_HAS_PIL) -> dict:
         return _fake_decode_meta(data)
     import io
 
+    img = None
     try:
         img = Image.open(io.BytesIO(data))
         return {
@@ -202,8 +204,11 @@ def _decode_meta(data: bytes, use_pil: bool = DRIVER_HAS_PIL) -> dict:
             "height": img.height,
             "n_bytes": len(data),
         }
-    except Exception:
-        # undecodable bytes must not fail the whole job — mark, don't crash
+    except Exception as e:
+        # undecodable bytes must not fail the whole job — mark, report, don't crash
+        guess = Image.MIME.get(getattr(img, "format", None) or "", "image/unknown")
+        msg = str(e).replace("\n", " ")
+        print(f"image decode: marked undecodable (MIME guess {guess}): {type(e).__name__}: {msg}", file=sys.stderr)
         return {"mime": "image/undecodable", "width": None, "height": None, "n_bytes": len(data)}
 
 

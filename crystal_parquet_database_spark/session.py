@@ -25,6 +25,13 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
     ``local[*]``). On a real cluster pass ``master=None`` via spark-submit and
     these configs still apply.
+
+    On ``local*`` masters the Python workers start from this package's
+    daemon (``pydaemon``), which imports pyspark from the distribution's
+    unpacked tree instead of ``pyspark.zip``, and the package's parent
+    directory leads ``spark.executorEnv.PYTHONPATH`` so the workers find it
+    from any working directory. Other masters keep ``pyspark.daemon``: their
+    executors may not have the package installed.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -94,7 +101,13 @@ def get_spark(
         # embedding.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        pythonpath = (root, conf.get("spark.executorEnv.PYTHONPATH"))
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(p for p in pythonpath if p)
+        conf.setdefault("spark.python.daemon.module", "crystal_parquet_database_spark.pydaemon")
+    for k, v in conf.items():
         if k == "spark.driver.extraJavaOptions":
             continue  # already merged with the pre-touch flags above
         builder = builder.config(k, v)

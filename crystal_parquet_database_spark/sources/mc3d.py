@@ -18,6 +18,7 @@ from __future__ import annotations
 import math
 import os
 import re
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
@@ -170,50 +171,47 @@ def parse_cif_minimal(text: str) -> dict | None:
 
 
 def _parse_cif(text: str) -> dict | None:
+    """One CIF's record, or None; a malformed file may also raise, and
+    ``_parse_partition`` skips it either way."""
     try:  # pymatgen path (A8) — not present in this container
         from pymatgen.core import Structure  # type: ignore
     except ImportError:
         return parse_cif_minimal(text)
-    try:
-        s = Structure.from_str(text, fmt="cif")
-        d = s.as_dict()
-        # the canonical schema declares species occupancy int64 (reference
-        # parity: site_struct, /root/reference/crystpqdb/db.py:5-19), but
-        # pymatgen emits floats (0.5 for partial occupancy). Quantize HERE,
-        # explicitly and deterministically — otherwise Spark's unsafe Arrow
-        # conversion silently truncates 0.5 → 0 with no error. Partial
-        # occupancies are genuinely lossy under the reference's own schema;
-        # round-to-nearest is the least-wrong deterministic choice
-        # (half-UP via floor(x+0.5), not Python round()'s half-to-even —
-        # banker's rounding would quantize the canonical 0.5 partial
-        # occupancy to 0, erasing the species from the site entirely).
-        for site in d.get("sites", []):
-            for sp in site.get("species", []):
-                if "occu" in sp and sp["occu"] is not None:
-                    sp["occu"] = _quantize_occu(sp["occu"])
-        # per-site dominant species, disordered-safe: s.species (one specie
-        # per site) raises AttributeError for ANY disordered site, which the
-        # blanket except below turned into a silent drop of every
-        # partial-occupancy structure — the exact files the occupancy
-        # quantization above exists for (and the minimal parser ingests the
-        # same file, so results differed by environment). site.species is a
-        # Composition for ordered and disordered sites alike; take the
-        # max-occupancy species, ties broken by symbol (deterministic).
-        def _site_symbol(site) -> str:
-            items = sorted(site.species.items(), key=lambda kv: (-kv[1], str(kv[0])))
-            return str(items[0][0])
+    s = Structure.from_str(text, fmt="cif")
+    d = s.as_dict()
+    # the canonical schema declares species occupancy int64 (reference
+    # parity: the reference's site_struct, crystpqdb/db.py:5-19), but
+    # pymatgen emits floats (0.5 for partial occupancy). Quantize HERE,
+    # explicitly and deterministically — otherwise Spark's unsafe Arrow
+    # conversion silently truncates 0.5 → 0 with no error. Partial
+    # occupancies are genuinely lossy under the reference's own schema;
+    # round-to-nearest is the least-wrong deterministic choice
+    # (half-UP via floor(x+0.5), not Python round()'s half-to-even —
+    # banker's rounding would quantize the canonical 0.5 partial
+    # occupancy to 0, erasing the species from the site entirely).
+    for site in d.get("sites", []):
+        for sp in site.get("species", []):
+            if "occu" in sp and sp["occu"] is not None:
+                sp["occu"] = _quantize_occu(sp["occu"])
+    # per-site dominant species, disordered-safe: s.species (one specie
+    # per site) raises AttributeError for ANY disordered site, which
+    # _parse_partition would turn into a skip of every
+    # partial-occupancy structure — the exact files the occupancy
+    # quantization above exists for (and the minimal parser ingests the
+    # same file, so results differed by environment). site.species is a
+    # Composition for ordered and disordered sites alike; take the
+    # max-occupancy species, ties broken by symbol (deterministic).
+    def _site_symbol(site) -> str:
+        items = sorted(site.species.items(), key=lambda kv: (-kv[1], str(kv[0])))
+        return str(items[0][0])
 
-        return {
-            "species": [_site_symbol(site) for site in s.sites],
-            "frac_coords": [list(map(float, fc)) for fc in s.frac_coords],
-            "cart_coords": [list(map(float, cc)) for cc in s.cart_coords],
-            "lattice": d["lattice"],
-            "structure": d,
-        }
-    except Exception:
-        # malformed CIF: skip the file (same contract as the minimal parser)
-        # rather than failing the whole ingest job
-        return None
+    return {
+        "species": [_site_symbol(site) for site in s.sites],
+        "frac_coords": [list(map(float, fc)) for fc in s.frac_coords],
+        "cart_coords": [list(map(float, cc)) for cc in s.cart_coords],
+        "lattice": d["lattice"],
+        "structure": d,
+    }
 
 
 _OUT_SCHEMA = T.StructType(
@@ -237,10 +235,12 @@ def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for path, content in zip(pdf["path"], pdf["content"]):
             try:
                 rec = _parse_cif(bytes(content).decode("utf-8", errors="replace"))
-            except Exception:
+            except Exception as e:
                 # e.g. esd notation '0.5(2)' passes the header regexes but
-                # fails float() in the minimal parser — skip the file, never
-                # fail the distributed ingest
+                # fails float() in the minimal parser, or pymatgen rejects
+                # the file — skip it and say why, never fail the ingest
+                msg = str(e).replace("\n", " ")
+                print(f"mc3d: skipped {path}: {type(e).__name__}: {msg}", file=sys.stderr)
                 rec = None
             if rec is None:
                 continue

@@ -688,6 +688,28 @@ def test_cif_parser_strips_oxidation_state_suffix():
     assert out is not None and out["species"] == ["Fe", "O", "Ca"]
 
 
+def test_cif_partition_skips_and_reports_a_malformed_file(capsys):
+    """A CIF whose parse raises is skipped, and the worker's stderr names
+    the file and the exception type; the good files still come out."""
+    import pandas as pd
+
+    from crystal_parquet_database_spark.sources.mc3d import _parse_partition
+
+    atoms = "loop_\n_atom_site_type_symbol\n_atom_site_fract_x\n_atom_site_fract_y\n_atom_site_fract_z\n"
+    bad = _CIF_HEAD + atoms + "Si 0.5(2) 0.25 0.25\n"  # esd notation: float() raises
+    batch = pd.DataFrame(
+        {
+            "path": ["file:/raw/a.cif", "file:/raw/bad.cif", "file:/raw/b.cif"],
+            "content": [_CIF.encode(), bad.encode(), _CIF.encode()],
+        }
+    )
+    out = pd.concat(list(_parse_partition(iter([batch]))))
+    assert list(out["source_id"]) == ["a", "b"]
+    err = capsys.readouterr().err.strip().splitlines()
+    assert len(err) == 1
+    assert "file:/raw/bad.cif" in err[0] and "ValueError" in err[0]
+
+
 def test_index_href_pattern_resolves_subdirs_and_page_urls():
     """Round-8 review: index links into subdirectories and index_url ending
     in a page filename both need browser-style urljoin resolution."""

@@ -74,6 +74,26 @@ def test_decode_meta_non_image_bytes():
     assert bad["n_bytes"] == 23
 
 
+def test_decode_meta_reports_what_it_marks_undecodable(monkeypatch, capsys):
+    """The full-decode path marks bytes its decoder rejects and writes one
+    stderr line with the MIME guess and the exception (a stand-in PIL here,
+    so the path runs with or without the library)."""
+    import sys
+    import types
+
+    def reject(_stream):
+        raise OSError("cannot identify image file")
+
+    fake = types.ModuleType("PIL")
+    fake.Image = types.SimpleNamespace(open=reject, MIME={})
+    monkeypatch.setitem(sys.modules, "PIL", fake)
+    meta = M._decode_meta(b"definitely not an image", use_pil=True)
+    assert meta == {"mime": "image/undecodable", "width": None, "height": None, "n_bytes": 23}
+    err = capsys.readouterr().err.strip().splitlines()
+    assert len(err) == 1
+    assert "image/unknown" in err[0] and "OSError: cannot identify image file" in err[0]
+
+
 def test_parse_png_ihdr_rejects_close_misses():
     assert M._parse_png_ihdr(b"") is None
     assert M._parse_png_ihdr(M._PNG_SIG) is None  # signature but no IHDR
